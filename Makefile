@@ -23,6 +23,10 @@ test-browser:	# REAL browser leg of the dynamic fetcher (S3); needs
 bench:	# one JSON line; SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS override
 	$(PY) bench.py
 
+.PHONY: digest
+digest:	# crawl digest 768bf8d782fb251d: window/bucketed/adaptive x driver/cluster/mixed plans
+	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-$$(nproc)} $(PY) scripts/digest_gate.py
+
 .PHONY: bench-history
 bench-history:	# per-round dequeue cost vs crawl history (flatness gate)
 	$(PY) scripts/dequeue_scale_bench.py history

@@ -22,6 +22,20 @@ a deterministic micro-batch over snapshot tables —
              round (snapshot isolation makes rollback free), so a crash
              mid-round replays identically.
 
+Round plan: each phase has at most one driver and one cluster
+implementation, and which one runs is decided once per round by
+round_plan(), the single size policy, from numbers the driver already
+holds (manifest file bytes, slab stats, the round's dequeued and new
+URL counts). The dequeue runs on the driver (pandas over the live files)
+while its input is under DRIVER_STATE_BYTES, else as a Spark job
+(bucketed or window). Rounds of at most DRIVER_ROWS URLs commit items,
+fetched, host_stats and new URLs from one collected Arrow table; larger
+rounds commit through Spark writes with a range-partitioned fetch_seq.
+The seen-set test broadcasts all slab filters until their estimated size
+passes SEEN_BROADCAST_BYTES, then runs partition-aligned; join sides
+under BROADCAST_JOIN_BYTES get a broadcast hint. Both sides of every
+phase produce byte-identical state (pytest-asserted per plan).
+
 Determinism: every ordering is an explicit sort key (priority, url,
 host); the virtual politeness clock is a pure function of the dequeue
 set; no wall-clock, partition-order, or hash-seed dependence — local[8]
@@ -40,14 +54,20 @@ from __future__ import annotations
 import logging
 import os
 import time
+import zlib
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from urllib.parse import urlsplit
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType, DoubleType, LongType, StringType, StructField, StructType,
     TimestampType,
@@ -58,7 +78,7 @@ from ..kernels.filters import filter_item, initialize_filters
 from ..kernels.robots import parse_robots
 from .fetchers import FetchError
 from ..kernels.scrape import scrape_page
-from .pipeline import _field_columns, _arrow_schema, item_spark_schema
+from .pipeline import _field_columns, item_spark_schema
 from .store import SnapshotStore
 
 logger = logging.getLogger("goskyr_spark.crawl")
@@ -78,6 +98,58 @@ ROBOTS_DISALLOW_ALL = b"User-agent: *\nDisallow: /\n"
 # next round, exactly as before.
 _ROBOTS_TTL_SECS = 24 * 3600.0
 _LIVE_ROBOTS_CACHE = {}  # (scheme, netloc, user_agent) -> (expiry, rules)
+
+# --- the size policy: read by round_plan() only ------------------------------
+# dequeued (or new) URLs per round up to which the round commits on the
+# driver: 8 B/hash, so 100k new URLs are 800 KB of slab input
+DRIVER_ROWS = 100_000
+# on-disk bytes of dequeue input (or of the seen table) the driver reads
+# itself: ~64 MB ≈ 10^6 pending rows, the crossover where one pandas
+# sort still beats a Spark job launch
+DRIVER_STATE_BYTES = 64 << 20
+# estimated slab filter bytes up to which the seen test broadcasts them
+SEEN_BROADCAST_BYTES = 64 << 20
+# join sides up to this many on-disk bytes get an explicit broadcast hint
+# (Catalyst overestimates multi-file unioned parquet reads)
+BROADCAST_JOIN_BYTES = 32 << 20
+
+
+@dataclass(frozen=True)
+class RoundPlan:
+    """Where each phase of one round runs (True = driver side) and which
+    join sides are broadcast. Made by round_plan() only."""
+    dequeue_driver: bool
+    commit_driver: bool      # items/fetched/host_stats from one collect
+    new_urls_driver: bool    # outlink flag + seen confirm + appends
+    seen_copy_driver: bool   # seen rows copied from the new frontier files
+    slabs_driver: bool       # Bloom+cuckoo slab update
+    seen_partitioned: bool   # seen test reads slabs per task, not broadcast
+    broadcast_fetched: bool
+    broadcast_host_stats: bool
+    broadcast_seen: bool
+
+
+def round_plan(dequeue_bytes=0, fetched_bytes=0, host_stats_bytes=0,
+               seen_bytes=0, slab_bytes=0, n_dequeued=0, n_new=0):
+    """The one size policy. Bytes are on-disk parquet sizes of the
+    dequeue input (live frontier + post-compaction fetched + adaptive
+    host_stats), of its fetched and host_stats parts and of the seen
+    table; slab_bytes is the slabs' estimated filter size. n_dequeued
+    and n_new are this round's counts, passed once known."""
+    partitioned = slab_bytes > SEEN_BROADCAST_BYTES
+    small_round = n_dequeued <= DRIVER_ROWS
+    small_new = n_new <= DRIVER_ROWS
+    return RoundPlan(
+        dequeue_driver=dequeue_bytes <= DRIVER_STATE_BYTES,
+        commit_driver=small_round,
+        new_urls_driver=(small_round and not partitioned
+                         and seen_bytes <= DRIVER_STATE_BYTES),
+        seen_copy_driver=small_new,
+        slabs_driver=small_new and not partitioned,
+        seen_partitioned=partitioned,
+        broadcast_fetched=fetched_bytes <= BROADCAST_JOIN_BYTES,
+        broadcast_host_stats=host_stats_bytes <= BROADCAST_JOIN_BYTES,
+        broadcast_seen=seen_bytes <= BROADCAST_JOIN_BYTES)
 
 FRONTIER_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -166,6 +238,25 @@ ROUNDS_SCHEMA = StructType([
     StructField("wall_secs", DoubleType()),
 ])
 
+FRONTIER_COLS = FRONTIER_SCHEMA.names
+_FRONTIER_ARROW = to_arrow_schema(FRONTIER_SCHEMA)
+_FETCHED_ARROW = to_arrow_schema(FETCHED_SCHEMA)
+_HOST_STATS_ARROW = to_arrow_schema(HOST_STATS_SCHEMA)
+_SEEN_ARROW = to_arrow_schema(SEEN_SCHEMA)
+_SLAB_ARROW = to_arrow_schema(SLAB_SCHEMA)
+_URL_ARROW = pa.schema([_SEEN_ARROW.field("url")])
+_URL_HASH_ARROW = pa.schema([_SEEN_ARROW.field("url"),
+                             _SEEN_ARROW.field("url_hash")])
+_HOST_SUMS_ARROW = pa.schema(list(_HOST_STATS_ARROW)[:4])
+
+
+def _read_parquet(paths, schema):
+    """pyarrow read of `schema`'s columns from `paths`, cast to it (files
+    from different rounds disagree on nullable flags)."""
+    return pa.concat_tables(
+        [pq.read_table(p, columns=schema.names).cast(schema)
+         for p in paths])
+
 
 # --- executor-side slab blob access -------------------------------------------
 # Worker-local cache of deserialization inputs: one (file, slab, round)
@@ -181,8 +272,6 @@ def _read_slab_blobs(path, sid, round_no):
     hit = _SLAB_BLOB_CACHE.get(key)
     if hit is not None:
         return hit
-    import pyarrow.parquet as pq
-
     t = pq.read_table(path, columns=["slab_id", "round", "bloom", "cuckoo"],
                       filters=[("slab_id", "==", int(sid)),
                                ("round", "==", int(round_no))])
@@ -195,29 +284,112 @@ def _read_slab_blobs(path, sid, round_no):
     return val
 
 
-def _flag_batch(batch, n_slabs, get_filters):
-    """Append maybe_seen (int64 0/1) to an Arrow batch: bloom 'absent' ⇒
-    definitely new; cuckoo refines bloom positives. get_filters(sid) →
-    (BloomFilter, CuckooFilter) or None."""
-    hs = batch.column(batch.schema.get_field_index("url_hash"))
-    arr = np.asarray(hs.to_numpy(zero_copy_only=False),
-                     dtype=np.int64).view(np.uint64)
+def _filter_loader(blobs):
+    """get(sid) → decoded (BloomFilter, CuckooFilter) or None, decoding
+    each slab once; blobs(sid) → its (bloom, cuckoo) bytes or None."""
+    loaded = {}
+
+    def get(sid):
+        if sid not in loaded:
+            v = blobs(sid)
+            loaded[sid] = None if v is None else (
+                BloomFilter.from_bytes(v[0]), CuckooFilter.from_bytes(v[1]))
+        return loaded[sid]
+
+    return get
+
+
+def _maybe_seen(hashes, n_slabs, get_filters):
+    """Bool mask over int64 url hashes: bloom 'absent' ⇒ definitely new;
+    cuckoo refines bloom positives."""
+    arr = _u64(hashes)
     sids = (arr % np.uint64(n_slabs)).astype(np.int64)
     maybe = np.zeros(len(arr), dtype=bool)
     for sid in np.unique(sids):
         pair = get_filters(int(sid))
-        if pair is None:
-            continue
-        sel = sids == sid
-        sub = arr[sel]
-        m = pair[0].contains_many(sub)
-        m &= pair[1].contains_many(sub)  # cuckoo refines bloom positives
-        maybe[sel] = m
-    return pa.RecordBatch.from_arrays(
-        list(batch.columns) +
-        [pa.array(maybe.astype(np.int64), pa.int64())],
-        schema=pa.schema(list(batch.schema) +
-                         [pa.field("maybe_seen", pa.int64())]))
+        if pair is not None:
+            sel = sids == sid
+            maybe[sel] = (pair[0].contains_many(arr[sel])
+                          & pair[1].contains_many(arr[sel]))
+    return maybe
+
+
+# --- slab filters: one build / insert / growth rule for both sides -----------
+
+def _grow_cap(stat, n):
+    """Doubled capacity for a slab with stat = (count, capacity) that
+    receives n more hashes (amortized doubling, like a hash table)."""
+    return max(2 * stat[1], 2 * (stat[0] + n))
+
+
+def _build_cap(stat, n, slab_capacity):
+    """Capacity at which a slab receiving n new hashes is built from
+    scratch, or None when they insert into its current filters. stat is
+    the (count, capacity) of its latest row, None for a new slab; a slab
+    that would pass 80% load is rebuilt at double size."""
+    if stat is None:
+        return max(slab_capacity, 2 * n)
+    if stat[0] + n > 0.8 * stat[1]:
+        return _grow_cap(stat, n)
+    return None
+
+
+def _fresh_filters(arr, cap):
+    """Bloom+cuckoo pair holding exactly the uint64 hashes `arr`."""
+    while True:
+        bloom, cuckoo = BloomFilter.sized_for(cap), CuckooFilter.sized_for(cap)
+        if len(arr) == 0 or cuckoo.insert_many(arr) == len(arr):
+            if len(arr):
+                bloom.add_many(arr)
+            return bloom, cuckoo
+        cap *= 2  # eviction overflow: double and retry
+
+
+def _insert_filters(blobs, arr):
+    """The previous slab blobs plus `arr`, or None when the cuckoo
+    overflows: an eviction loop can drop a VICTIM fingerprint (a false
+    negative — forbidden), so the caller rebuilds exactly from seen."""
+    bloom = BloomFilter.from_bytes(blobs[0])
+    cuckoo = CuckooFilter.from_bytes(blobs[1])
+    bloom.add_many(arr)
+    if cuckoo.insert_many(arr) != len(arr):
+        return None
+    return bloom, cuckoo
+
+
+def _slab_row(sid, round_no, filters):
+    bloom, cuckoo = filters
+    return (sid, round_no, bloom.to_bytes(), cuckoo.to_bytes(),
+            cuckoo.count, cuckoo.nbuckets * CuckooFilter.SLOTS)
+
+
+# --- dequeue: the pandas arithmetic, once --------------------------------------
+
+def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
+    """The dequeue over Arrow tables, run by the driver over all live
+    files and by the bucketed kernel over one bucket: pending = frontier
+    rows whose url is not in `fetched`; _eff = priority plus, with
+    weights = (error, yield), the adaptive per-host adjustment from the
+    host_stats deltas (integer sums then one float64 expression —
+    bit-identical to the window path's JVM arithmetic); per-host top-k
+    by (_eff, url); then the round budget. pandas, (_eff, url) order."""
+    pdf = frontier.to_pandas()
+    if fetched is not None and fetched.num_rows:
+        pdf = pdf[~pdf["url"].isin(set(fetched.column("url").to_pylist()))]
+    eff = pdf["priority"].to_numpy(dtype="float64")
+    if weights is not None and host_stats is not None \
+            and host_stats.num_rows:
+        g = host_stats.to_pandas().groupby("host", sort=False).agg(
+            _nf=("n_fetched", "sum"), _nok=("n_ok", "sum"),
+            _ni=("n_items", "sum"))
+        nf, nok, ni = (g[c].to_numpy(dtype="float64")
+                       for c in ("_nf", "_nok", "_ni"))
+        adj = (weights[0] * ((nf - nok) / nf)
+               - weights[1] * np.minimum(1.0, ni / np.maximum(nok, 1.0)))
+        eff = eff + pdf["host"].map(dict(zip(g.index, adj))) \
+            .fillna(0.0).to_numpy(dtype="float64")
+    pdf = pdf.assign(_eff=eff).sort_values(["_eff", "url"])
+    return pdf.groupby("host", sort=False).head(per_host).head(budget)
 
 
 def url_host(url: str) -> str:
@@ -237,9 +409,7 @@ class CrawlEngine:
                  per_host_budget=64, round_budget=100_000, user_agent="*",
                  n_slabs=8, slab_capacity=4096, salt_threshold=512,
                  salt_factor=4, now=None, fetch_partitions=None,
-                 slab_driver_threshold=100_000, seen_mode="auto",
-                 seen_broadcast_max_bytes=64 << 20,
-                 broadcast_join_bytes=32 << 20, debug=False,
+                 debug=False,
                  live_fetcher=None, compact_every=None,
                  frontier_buckets=None, adaptive_priority=False,
                  adaptive_yield_weight=0.5, adaptive_error_weight=2.0,
@@ -274,33 +444,6 @@ class CrawlEngine:
         self.now = now or datetime.now(timezone.utc)
         self.fetch_partitions = fetch_partitions or max(
             4, spark.sparkContext.defaultParallelism)
-        # seen-set scale knobs: above slab_driver_threshold new urls per
-        # round the slab update runs executor-side (slab-aligned shuffle);
-        # seen_mode auto switches the per-round membership test from
-        # broadcast-all-slabs to partition-aligned (each task reads only
-        # its slab from parquet) once the estimated filter bytes exceed
-        # seen_broadcast_max_bytes. Modes: auto | broadcast | partitioned.
-        assert seen_mode in ("auto", "broadcast", "partitioned")
-        self.slab_driver_threshold = slab_driver_threshold
-        self.seen_mode = seen_mode
-        self.seen_broadcast_max_bytes = seen_broadcast_max_bytes
-        # size gate (on-disk parquet bytes, driver-known from the
-        # manifest — no job) under which the small side of the frontier/
-        # seen anti-joins gets an explicit broadcast hint: Catalyst's
-        # estimates for multi-file unioned parquet reads routinely
-        # overshoot the 10 MB auto threshold, leaving a shuffle join on
-        # a side that is actually a few MB. Above the gate the joins
-        # fall back to shuffle — scale-adaptive, never wrong.
-        self.broadcast_join_bytes = broadcast_join_bytes
-        # when the ENTIRE dequeue input state (live frontier + post-
-        # compaction fetched + host_stats) is under this many on-disk
-        # bytes, the dequeue runs driver-side with the same pyarrow/
-        # pandas kernel the bucketed path executes per bucket — one
-        # Spark job (and its Python-worker round trip) replaced by a
-        # sub-ms local pass. ~64 MB ≈ 10^6 pending rows, the empirical
-        # crossover where a single-core pandas sort still beats a Spark
-        # job launch; beyond it the distributed dequeues take over.
-        self.dequeue_driver_bytes = 64 << 20
         # frontier_buckets=N turns on host-hash-BUCKETED frontier/fetched
         # storage (bucket = crc32(host) mod N, Iceberg bucket-transform
         # analog): every append/compaction writes one file per bucket,
@@ -378,10 +521,17 @@ class CrawlEngine:
             logger.info("live crawl with on_subpage fields: retaining "
                         "fetched html in debug_pages for stage-2 "
                         "extraction")
-        # per-round SparkContext broadcasts (slab blobs/files); released
-        # at the end of run_round so a months-long crawl (the 10^10
-        # design point) cannot accumulate broadcast blocks
+        # per-round SparkContext broadcasts (slab blobs/files) and cached
+        # DataFrames; released at the end of run_round so a months-long
+        # crawl (the 10^10 design point) cannot accumulate blocks
         self._round_bcs = []
+        self._round_cached = []
+        # slab-derived values keyed by the slab table HEAD (_slab_memo)
+        # and immutable table files read driver-side (_read_file_cached)
+        self._slab_cache = {}
+        self._file_cache = {}
+        self._sizes = {}
+        self.last_phases, self._mark_t = [], time.time()
         self.t_debug = self.store.table("debug_pages")
         self.t_frontier = self.store.table("frontier")
         self.t_fetched = self.store.table("fetched")
@@ -394,7 +544,7 @@ class CrawlEngine:
 
     def _files_bytes(self, table, rel_files=None):
         """On-disk bytes of a table's (or a subset of its) files —
-        driver-side stat calls, no Spark job; drives broadcast gates."""
+        driver-side stat calls, no Spark job; an input of round_plan()."""
         files = (rel_files if rel_files is not None
                  else table.manifest()["files"])
         total = 0
@@ -424,294 +574,68 @@ class CrawlEngine:
         self._round_bcs.append(b)
         return b
 
-    def _release_round_broadcasts(self):
+    def _cache(self, df):
+        """Round-scoped DataFrame cache, released with the broadcasts."""
+        df = df.cache()
+        self._round_cached.append(df)
+        return df
+
+    def _release_round(self):
+        for df in self._round_cached:
+            df.unpersist()
         for b in self._round_bcs:
             try:
                 b.unpersist(blocking=False)
             except Exception:  # already released / context gone
                 pass
-        self._round_bcs = []
+        self._round_bcs, self._round_cached = [], []
+
+    def _read_file_cached(self, dirpath, rel, schema):
+        """Driver-side pyarrow read of ONE table file, memoized by path:
+        table files are immutable (uuid names) and the driver-side
+        phases re-read the same live files every round. Only files read
+        while round_plan() kept their phase on the driver get cached, and
+        _measure_sizes drops each one once it leaves the live inputs."""
+        key = (os.path.join(dirpath, rel), tuple(schema.names))
+        t = self._file_cache.get(key)
+        if t is None:
+            t = self._file_cache[key] = _read_parquet([key[0]], schema)
+        return t
 
     # ---------------------------------------------------- bucketed frontier
 
     def _hostpart_write(self, table, df, meta, mode="append",
                         coalesce=None):
-        """Append/overwrite a host-keyed table; with frontier_buckets
-        the write is bucketed by crc32(host) mod N (one file per bucket,
-        file→bucket map in the manifest)."""
+        """Spark append/overwrite (or "append_counted") of a host-keyed
+        table; with frontier_buckets the write is bucketed by
+        crc32(host) mod N (one file per bucket, file→bucket map in the
+        manifest), repartitioned by bucket WITHOUT a pinned partition
+        count — AQE coalesces the exchange by size, so a 65-row tail
+        round shuffles into one task while a fat round still spreads."""
         if not self.frontier_buckets:
-            if coalesce:
-                df = df.coalesce(coalesce)
-            getattr(table, mode)(df, meta)
-            return
-        getattr(table, mode)(self._bucketed_df(df),
-                             dict(meta or {},
-                                  bucket_mod=self.frontier_buckets),
-                             partition_by="_bucket")
-
-    def _bucketed_df(self, df):
-        """df + _bucket column, repartitioned by bucket WITHOUT a pinned
-        partition count — AQE coalesces the exchange by size, so a
-        65-row tail round shuffles into one task while a fat round still
-        spreads (the file set per bucket value is identical either way:
-        partitionBy splits by value, not by task)."""
-        return df.withColumn(
-            "_bucket", F.pmod(F.crc32(F.col("host")),
-                              F.lit(self.frontier_buckets))) \
+            return getattr(table, mode)(
+                df.coalesce(coalesce) if coalesce else df, meta)
+        df = df.withColumn("_bucket", F.pmod(
+            F.crc32(F.col("host")), F.lit(self.frontier_buckets))) \
             .repartition("_bucket")
-
-    def _hostpart_append_counted(self, table, df, meta):
-        """Append a host-keyed table and return (n_rows, new file paths)
-        — row count from the written footers, no count() job."""
-        if not self.frontier_buckets:
-            return table.append_counted(df, meta)
-        return table.append_counted(
-            self._bucketed_df(df),
-            dict(meta or {}, bucket_mod=self.frontier_buckets),
+        return getattr(table, mode)(
+            df, dict(meta or {}, bucket_mod=self.frontier_buckets),
             partition_by="_bucket")
 
-    def _append_seen_from_files(self, new_files, round_no, n_new):
-        """Seen-table append derived from the frontier files the round
-        just wrote. Under slab_driver_threshold the copy is a driver-side
-        pyarrow read+write (no Spark job) and the url hashes are returned
-        for the slab update to reuse; above it, one cheap Spark re-scan
-        of the written files. Row content is identical either way."""
-        import pyarrow.parquet as pq
-
-        if n_new <= self.slab_driver_threshold:
-            t = pa.concat_tables(
-                [pq.read_table(p, columns=["url", "url_hash"])
-                 .cast(pa.schema([pa.field("url", pa.string()),
-                                  pa.field("url_hash", pa.int64())]))
-                 for p in new_files])
-            self.t_seen.append_arrow(
-                pa.table({"url": t.column("url"),
-                          "url_hash": t.column("url_hash"),
-                          "round": pa.array([round_no] * t.num_rows,
-                                            pa.int64())}),
-                {"round": round_no})
-            return t.column("url_hash").to_numpy(zero_copy_only=False)
-        self.t_seen.append(
-            self.spark.read.parquet(*new_files)
-            .select("url", "url_hash",
-                    F.lit(round_no).cast("long").alias("round")),
-            {"round": round_no})
-        return None
-
-    def _commit_new_urls_driver(self, outlinks, round_no):
-        """Small-round new-url commit: one Spark job aggregates the
-        outlinks and collects them (hash/host/canonicalization computed
-        by the SAME Spark expressions as the distributed path); the
-        Bloom+cuckoo membership flag, the exact seen confirm and the
-        frontier/seen/slab appends then run driver-side. Returns n_new.
-        Gated by the caller on broadcast seen mode + seen-table bytes +
-        round size."""
-        import zlib
-
-        import pyarrow.parquet as pq
-
-        pdf = outlinks.toPandas()
-        if pdf.empty:
-            for t in (self.t_frontier, self.t_seen, self.t_slabs):
-                t.commit_meta({"round": round_no})
-            self._mark("frontier(new_urls)")
-            return 0
-        n_slabs = self.n_slabs
-        arr = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-        sids = (arr % np.uint64(n_slabs)).astype(np.int64)
-        maybe = np.zeros(len(arr), dtype=bool)
-        for sid, pair in self._slabs_cached().items():
-            sel = sids == sid
-            if not sel.any():
-                continue
-            sub = arr[sel]
-            m = BloomFilter.from_bytes(pair[0]).contains_many(sub)
-            m &= CuckooFilter.from_bytes(pair[1]).contains_many(sub)
-            maybe[sel] = m
-        keep = ~maybe
-        if maybe.any() and self.t_seen.exists():
-            url_schema = pa.schema([pa.field("url", pa.string())])
-            seen_urls = set()
-            for f in self.t_seen.manifest()["files"]:
-                seen_urls.update(
-                    self._read_file_cached(self.t_seen.dir, f, ["url"],
-                                           url_schema)
-                    .column("url").to_pylist())
-            # bloom/cuckoo positives that are NOT in the exact seen set
-            # are false positives — keep them (never drop a real URL)
-            keep = keep | ~pdf["url"].isin(seen_urls).to_numpy()
-        new_pdf = pdf[keep]
-        n_new = len(new_pdf)
-        if n_new == 0:
-            for t in (self.t_frontier, self.t_seen, self.t_slabs):
-                t.commit_meta({"round": round_no})
-            self._mark("frontier(new_urls)")
-            return 0
-        tbl = pa.table(
-            {f.name: pa.array(new_pdf[f.name], type=f.type)
-             for f in self._FRONTIER_ARROW}, schema=self._FRONTIER_ARROW)
+    def _append_host_keyed(self, table, tbl, round_no):
+        """Driver-side append of a host-keyed Arrow table: one file, or
+        with frontier_buckets one file per bucket under the same
+        crc32(host) modulus as the Spark writer."""
+        meta = {"round": round_no}
         if not self.frontier_buckets:
-            self.t_frontier.append_arrow(tbl, {"round": round_no})
-        else:
-            n_b = self.frontier_buckets
-            buckets = new_pdf["host"].map(
-                lambda h: zlib.crc32(h.encode()) % n_b)
-            tables = {int(b): pa.table(
-                {f.name: pa.array(sub[f.name], type=f.type)
-                 for f in self._FRONTIER_ARROW},
-                schema=self._FRONTIER_ARROW)
-                for b, sub in new_pdf.groupby(buckets)}
-            self.t_frontier.append_arrow_bucketed(
-                tables, {"round": round_no, "bucket_mod": n_b})
-        self._mark("frontier(new_urls)")
-        self.t_seen.append_arrow(
-            pa.table({"url": pa.array(new_pdf["url"], pa.string()),
-                      "url_hash": pa.array(new_pdf["url_hash"],
-                                           pa.int64()),
-                      "round": pa.array([round_no] * n_new, pa.int64())}),
-            {"round": round_no})
-        self._mark("seen")
-        self._update_slabs(None, round_no, n_new=n_new,
-                           hashes=new_pdf["url_hash"]
-                           .to_numpy(dtype=np.int64))
-        self._mark("slabs")
-        return n_new
-
-    _FETCHED_ARROW = pa.schema([
-        pa.field("url", pa.string()),
-        pa.field("url_hash", pa.int64()),
-        pa.field("host", pa.string()),
-        pa.field("round", pa.int64()),
-        pa.field("fetch_seq", pa.int64()),
-        pa.field("fetch_ts", pa.float64()),
-        pa.field("status", pa.string()),
-        pa.field("n_items", pa.int64()),
-        pa.field("n_errors", pa.int64()),
-    ])
-
-    def _commit_fetched_driver(self, pdf, round_no):
-        """Small-round fetched commit from the sorted collected frame:
-        assign fetch_seq positionally, write parquet driver-side (one
-        file; per-bucket files under the same crc32(host) modulus in
-        bucketed mode), and return the round-summary stats — all with
-        zero further Spark jobs."""
-        import zlib
-
-        n = len(pdf)
-        pdf = pdf.assign(fetch_seq=np.arange(1, n + 1, dtype=np.int64))
-
-        def to_arrow(sub):
-            return pa.table(
-                {f.name: pa.array(sub[f.name], type=f.type)
-                 for f in self._FETCHED_ARROW},
-                schema=self._FETCHED_ARROW)
-
-        if not self.frontier_buckets:
-            self.t_fetched.append_arrow(to_arrow(pdf), {"round": round_no})
-        else:
-            n_b = self.frontier_buckets
-            buckets = pdf["host"].map(
-                lambda h: zlib.crc32(h.encode()) % n_b)
-            tables = {int(b): to_arrow(sub)
-                      for b, sub in pdf.groupby(buckets)}
-            self.t_fetched.append_arrow_bucketed(
-                tables, {"round": round_no, "bucket_mod": n_b})
-        return [{"_pid": 0,
-                 "n_fetched": n,
-                 "n_ok": int((pdf["status"] == "ok").sum()),
-                 "n_items": int(pdf["n_items"].sum()),
-                 "n_errors": int(pdf["n_errors"].sum())}]
-
-    def _commit_host_stats_driver(self, pdf, round_no):
-        """Adaptive host-feedback delta from the already-collected
-        fetched frame (small rounds): pandas groupby + pyarrow append —
-        no per-round Spark write job."""
-        import zlib
-
-        g = pdf.assign(_ok=(pdf["status"] == "ok").astype("int64")) \
-            .groupby("host", sort=False) \
-            .agg(n_fetched=("host", "size"), n_ok=("_ok", "sum"),
-                 n_items=("n_items", "sum")).reset_index()
-        if not self.frontier_buckets:
-            self.t_host_stats.append_rows(
-                [(r.host, int(r.n_fetched), int(r.n_ok), int(r.n_items),
-                  round_no) for r in g.itertuples()],
-                HOST_STATS_SCHEMA, {"round": round_no})
+            table.append_arrow(tbl, meta)
             return
         n_b = self.frontier_buckets
-        buckets = g["host"].map(lambda h: zlib.crc32(h.encode()) % n_b)
-        tables = {}
-        for b, sub in g.groupby(buckets):
-            tables[int(b)] = pa.table({
-                "host": pa.array(sub["host"], pa.string()),
-                "n_fetched": pa.array(sub["n_fetched"], pa.int64()),
-                "n_ok": pa.array(sub["n_ok"], pa.int64()),
-                "n_items": pa.array(sub["n_items"], pa.int64()),
-                "round": pa.array([round_no] * len(sub), pa.int64())})
-        self.t_host_stats.append_arrow_bucketed(
-            tables, {"round": round_no, "bucket_mod": n_b})
-
-    def _commit_items_driver(self, coll, round_no, fcols):
-        """Items append from the already-collected kernel output (small
-        rounds): slice the Arrow table driver-side and write one parquet
-        file — no separate Spark write job. Column order, names and
-        logical types match the Spark path's select exactly (field
-        columns are cast back to the kernel's own Arrow types, which is
-        what the Spark writer serialized them from)."""
-        import pyarrow.compute as pc
-
-        it = coll.filter(pc.equal(coll["_kind"], "item"))
-        kernel_fields = {f.name: f for f in self._crawl_arrow_schema()}
-        cols = {"page_url": it["_page_url"].cast(pa.string()),
-                "item_idx": it["_item_idx"].cast(pa.int64())}
-        fields = [pa.field("page_url", pa.string()),
-                  pa.field("item_idx", pa.int64())]
-        for name, _ in fcols:
-            t = kernel_fields[name].type
-            cols[name] = it[name].cast(t)
-            fields.append(pa.field(name, t))
-        cols["round"] = pa.array(
-            np.full(len(it), round_no, dtype=np.int64), pa.int64())
-        fields.append(pa.field("round", pa.int64()))
-        self.t_items.append_arrow(
-            pa.table(cols, schema=pa.schema(fields)), {"round": round_no})
-
-    def _fetch_pdf_from_arrow(self, coll, round_no):
-        """Fetch-row frame for _commit_fetched_driver, from the already-
-        collected kernel output: renamed, round-stamped and sorted by the
-        SAME total order the Spark sort produced — (fetch_ts, host, url)
-        with strings compared as UTF-8 bytes (Spark's string ordering),
-        so fetch_seq — and the crawl digest — are byte-identical."""
-        import pyarrow.compute as pc
-
-        pdf = (coll.filter(pc.equal(coll["_kind"], "fetch"))
-               .select(["_page_url", "_url_hash", "_host", "_fetch_ts",
-                        "_status", "_n_items", "_n_errors"])
-               .rename_columns(["url", "url_hash", "host", "fetch_ts",
-                                "status", "n_items", "n_errors"])
-               .to_pandas())
-        pdf["round"] = np.int64(round_no)
-
-        def _key(s):
-            return s.map(lambda x: x.encode()) if s.dtype == object else s
-
-        return pdf.sort_values(["fetch_ts", "host", "url"], key=_key,
-                               kind="mergesort", ignore_index=True)
-
-    def _outlink_df_from_arrow(self, coll):
-        """Rebuild the tiny outlink relation from the collected kernel
-        output as a LOCAL-relation DataFrame (no kernel lineage, so the
-        new-url job never recomputes the fetch/extract pass). The
-        hash / host / canonicalization stay Spark expressions downstream
-        — no semantic re-implementation."""
-        import pyarrow.compute as pc
-
-        ot = (coll.filter(pc.equal(coll["_kind"], "outlink"))
-              .select(["_outlink", "_depth", "_page_no"]))
-        schema = StructType([StructField("_outlink", StringType()),
-                             StructField("_depth", LongType()),
-                             StructField("_page_no", LongType())])
-        return self.spark.createDataFrame(ot.to_pandas(), schema)
+        b = np.array([zlib.crc32(h.encode()) % n_b
+                      for h in tbl.column("host").to_pylist()])
+        table.append_arrow_bucketed(
+            {int(k): tbl.filter(pa.array(b == k)) for k in np.unique(b)},
+            dict(meta, bucket_mod=n_b))
 
     def _buckets_complete(self):
         """True when EVERY live frontier/fetched file has a bucket
@@ -769,129 +693,87 @@ class CrawlEngine:
         return sorted(f for f, r in fr.items()
                       if r is None or r > c), c
 
+    # --------------------------------------------------------------- dequeue
+
+    def _adaptive_weights(self):
+        if not self.adaptive_priority:
+            return None
+        return (float(self.adaptive_error_weight),
+                float(self.adaptive_yield_weight))
+
+    def _dequeue_driver(self):
+        """Driver-side dequeue: _dequeue_frame once over all live
+        frontier files, the post-compaction fetched files and (adaptive)
+        the host_stats files — zero Spark jobs. pandas, FRONTIER_COLS."""
+        fr = self.t_frontier.manifest()["files"]
+        if not fr:
+            return pd.DataFrame(columns=FRONTIER_COLS)
+        aj, _c = self._antijoin_fetched_files()
+        hs = (self.t_host_stats.manifest()["files"]
+              if self.adaptive_priority else [])
+
+        def read(table, files, schema):
+            return pa.concat_tables(
+                [self._read_file_cached(table.dir, f, schema)
+                 for f in files]) if files else None
+
+        pdf = _dequeue_frame(read(self.t_frontier, fr, _FRONTIER_ARROW),
+                             read(self.t_fetched, aj, _URL_ARROW),
+                             read(self.t_host_stats, hs, _HOST_SUMS_ARROW),
+                             self.per_host_budget, self.round_budget,
+                             self._adaptive_weights())
+        return pdf[FRONTIER_COLS].reset_index(drop=True)
+
     def _dequeue_bucketed(self):
         """Shuffle-free dequeue: one task per host-hash bucket reads its
         own frontier + fetched files (pyarrow, task-local — the slab
-        access pattern), anti-joins, ranks per host, and caps at the
-        round budget; the only exchange is the final global
-        TakeOrdered merge over ≤ n_buckets × round_budget survivors.
-        Produces the identical row set as the window dequeue (a host is
-        entirely inside one bucket)."""
+        access pattern) and runs _dequeue_frame over them; the only
+        exchange is the final global TakeOrdered merge over ≤ n_buckets
+        × round_budget survivors. Produces the identical row set as the
+        window dequeue (a host is entirely inside one bucket)."""
         mod = self.frontier_buckets
-        adaptive = self.adaptive_priority
         fmap = self.t_frontier.bucket_map(expect_mod=mod)
         gmap = self.t_fetched.bucket_map(expect_mod=mod)
         # anti-join only needs fetched files newer than the effective
         # frontier compaction — the kernel's task memory and read
         # volume track work since the last compaction, not history
-        aj_keep, _c = self._antijoin_fetched_files()
-        aj_keep = set(aj_keep)
+        aj_keep = set(self._antijoin_fetched_files()[0])
         hmap = (self.t_host_stats.bucket_map(expect_mod=mod)
-                if adaptive and self.t_host_stats.exists() else {})
-        fdir, gdir = self.t_frontier.dir, self.t_fetched.dir
-        hdir = self.t_host_stats.dir
+                if self.adaptive_priority and self.t_host_stats.exists()
+                else {})
         by_bucket = {}
-        for rel, b in fmap.items():
-            by_bucket.setdefault(b, ([], [], []))[0].append(
-                os.path.join(fdir, rel))
-        for rel, b in gmap.items():
-            if rel in aj_keep:
-                by_bucket.setdefault(b, ([], [], []))[1].append(
-                    os.path.join(gdir, rel))
-        for rel, b in hmap.items():
-            by_bucket.setdefault(b, ([], [], []))[2].append(
-                os.path.join(hdir, rel))
+        for i, (table, bmap) in enumerate(((self.t_frontier, fmap),
+                                           (self.t_fetched, gmap),
+                                           (self.t_host_stats, hmap))):
+            for rel, b in bmap.items():
+                if i != 1 or rel in aj_keep:
+                    by_bucket.setdefault(b, ([], [], []))[i].append(
+                        os.path.join(table.dir, rel))
         buckets = sorted(b for b, (ff, _, _) in by_bucket.items() if ff)
         if not buckets:
             return self.spark.createDataFrame([], FRONTIER_SCHEMA)
         bc = self._bc(by_bucket)
         per_host, budget = self.per_host_budget, self.round_budget
-        err_w = float(self.adaptive_error_weight)
-        yld_w = float(self.adaptive_yield_weight)
-        cols = [f.name for f in FRONTIER_SCHEMA.fields]
-        arrow_schema = pa.schema([
-            pa.field("url", pa.string()),
-            pa.field("url_hash", pa.int64()),
-            pa.field("host", pa.string()),
-            pa.field("priority", pa.float64()),
-            pa.field("depth", pa.int64()),
-            pa.field("discovered_round", pa.int64()),
-            pa.field("page_no", pa.int64()),
-        ])
-        out_cols = cols + ["_eff"] if adaptive else cols
-        out_arrow = (arrow_schema.append(pa.field("_eff", pa.float64()))
-                     if adaptive else arrow_schema)
-        out_spark = (StructType(FRONTIER_SCHEMA.fields +
-                                [StructField("_eff", DoubleType())])
-                     if adaptive else FRONTIER_SCHEMA)
+        weights = self._adaptive_weights()
+        out_spark = StructType(FRONTIER_SCHEMA.fields +
+                               [StructField("_eff", DoubleType())])
+        out_arrow = to_arrow_schema(out_spark)
 
         def kernel(batches):
-            import numpy as np
-            import pyarrow.parquet as pq
-
             for batch in batches:
                 for b in batch.column(0).to_pylist():
                     f_files, g_files, h_files = bc.value[b]
-                    # files from different rounds disagree on nullable
-                    # flags — cast to the uniform schema before concat
-                    fr = pa.concat_tables(
-                        [pq.read_table(p, columns=cols).cast(arrow_schema)
-                         for p in f_files])
-                    pdf = fr.to_pandas()
-                    if g_files:
-                        # membership test needs ONLY the url column of
-                        # the post-compaction fetched files
-                        gpdf = pa.concat_tables(
-                            [pq.read_table(p, columns=["url"])
-                             .cast(pa.schema([pa.field("url",
-                                                       pa.string())]))
-                             for p in g_files]).to_pandas()
-                        if len(gpdf):
-                            pdf = pdf[~pdf["url"].isin(set(gpdf["url"]))]
-                    if pdf.empty:
-                        continue
-                    if adaptive:
-                        # task-local host feedback from the bucket's
-                        # host_stats DELTA files (never raw fetched
-                        # history): integer sums then ONE float64
-                        # expression — bit-identical to the window
-                        # path's JVM arithmetic
-                        eff = pdf["priority"].to_numpy(dtype="float64")
-                        hpdf = None
-                        if h_files:
-                            hpdf = pa.concat_tables(
-                                [pq.read_table(
-                                    p, columns=["host", "n_fetched",
-                                                "n_ok", "n_items"])
-                                 .cast(pa.schema(
-                                     [pa.field("host", pa.string()),
-                                      pa.field("n_fetched", pa.int64()),
-                                      pa.field("n_ok", pa.int64()),
-                                      pa.field("n_items", pa.int64())]))
-                                 for p in h_files]).to_pandas()
-                        if hpdf is not None and len(hpdf):
-                            g = hpdf.groupby("host", sort=False).agg(
-                                _nf=("n_fetched", "sum"),
-                                _nok=("n_ok", "sum"),
-                                _ni=("n_items", "sum"))
-                            nf = g["_nf"].to_numpy(dtype="float64")
-                            nok = g["_nok"].to_numpy(dtype="float64")
-                            ni = g["_ni"].to_numpy(dtype="float64")
-                            adj = (err_w * ((nf - nok) / nf)
-                                   - yld_w * np.minimum(
-                                       1.0, ni / np.maximum(nok, 1.0)))
-                            amap = dict(zip(g.index, adj))
-                            eff = eff + pdf["host"].map(amap) \
-                                .fillna(0.0).to_numpy(dtype="float64")
-                        pdf = pdf.assign(_eff=eff)
-                        pdf = pdf.sort_values(["_eff", "url"])
-                    else:
-                        pdf = pdf.sort_values(["priority", "url"])
-                    pdf = pdf.groupby("host", sort=False).head(per_host)
-                    pdf = pdf.head(budget)
-                    yield pa.RecordBatch.from_pandas(
-                        pdf[out_cols], schema=out_arrow,
-                        preserve_index=False)
+                    pdf = _dequeue_frame(
+                        _read_parquet(f_files, _FRONTIER_ARROW),
+                        _read_parquet(g_files, _URL_ARROW)
+                        if g_files else None,
+                        _read_parquet(h_files, _HOST_SUMS_ARROW)
+                        if h_files else None,
+                        per_host, budget, weights)
+                    if len(pdf):
+                        yield pa.RecordBatch.from_pandas(
+                            pdf[out_arrow.names], schema=out_arrow,
+                            preserve_index=False)
 
         spec = self.spark.createDataFrame([(b,) for b in buckets],
                                           "bucket long")
@@ -901,21 +783,85 @@ class CrawlEngine:
         # (the kernel loops over every bucket in its batch) instead of
         # paying fetch_partitions Python-worker launches; fat frontiers
         # still fan out to one task per ~4 MB bucket group.
-        total_bytes = 0
-        for ff, gg, hh in by_bucket.values():
-            for p in (*ff, *gg, *hh):
-                try:
-                    total_bytes += os.path.getsize(p)
-                except OSError:
-                    pass
+        total_bytes = sum(os.path.getsize(p) for lists in by_bucket.values()
+                          for files in lists for p in files
+                          if os.path.exists(p))
         n_parts = max(1, min(len(buckets), self.fetch_partitions,
                              total_bytes // (4 << 20) + 1))
-        work = (spec.repartition(n_parts, "bucket")
-                .mapInArrow(kernel, out_spark))
-        if adaptive:
-            return (work.orderBy("_eff", "url").limit(self.round_budget)
-                    .drop("_eff"))
-        return work.orderBy("priority", "url").limit(self.round_budget)
+        return (spec.repartition(n_parts, "bucket")
+                .mapInArrow(kernel, out_spark)
+                .orderBy("_eff", "url").limit(budget).drop("_eff"))
+
+    def _dequeue_window(self, plan):
+        """Shuffle-based dequeue (the non-bucketed cluster side):
+        compaction-pruned anti-join, optional adaptive host feedback,
+        per-host top-k window, global budget."""
+        spark = self.spark
+        frontier = self.t_frontier.read(spark, schema=FRONTIER_SCHEMA)
+        # anti-join right side: only fetched files from rounds AFTER the
+        # effective frontier compaction — a compacted frontier already
+        # excludes everything fetched up to that round, so the anti-join
+        # cost tracks work since the last compaction, not crawl history
+        aj_files, _c = self._antijoin_fetched_files()
+        if aj_files:
+            fetched_aj = spark.read.parquet(
+                *[os.path.join(self.t_fetched.dir, f) for f in aj_files])
+        else:
+            fetched_aj = spark.createDataFrame([], FETCHED_SCHEMA)
+        fa = fetched_aj.select("url_hash", "url")
+        if plan.broadcast_fetched:
+            # the frontier scan is never shuffled just to drop
+            # already-fetched rows
+            fa = F.broadcast(fa)
+        pending = frontier.join(fa, on=["url_hash", "url"], how="left_anti")
+
+        if self.adaptive_priority:
+            # per-host feedback from the INCREMENTAL host_stats table
+            # (delta rows per round, compacted to one row per host) —
+            # never a re-aggregation of the full fetched history.
+            # Integer delta sums then one double expression:
+            # bit-identical to aggregating fetched directly, at a cost
+            # proportional to active hosts.
+            adj = (self.t_host_stats.read(spark, schema=HOST_STATS_SCHEMA)
+                   .groupBy("host")
+                   .agg(F.sum("n_fetched").alias("_nf"),
+                        F.sum("n_ok").alias("_nok"),
+                        F.sum("n_items").alias("_ni"))
+                   .select("host", self._adaptive_adj_expr()))
+            if plan.broadcast_host_stats:
+                adj = F.broadcast(adj)
+            pending = (pending.join(adj, "host", "left")
+                       .withColumn("_eff",
+                                   F.col("priority")
+                                   + F.coalesce(F.col("_adj"), F.lit(0.0)))
+                       .drop("_adj"))
+        else:
+            pending = pending.withColumn("_eff", F.col("priority"))
+
+        # per-host top-k dequeue, then global budget — explicit sorts
+        w = Window.partitionBy("host").orderBy("_eff", "url")
+        return (pending
+                .withColumn("_rank", F.row_number().over(w))
+                .filter(F.col("_rank") <= self.per_host_budget)
+                .drop("_rank")
+                .orderBy("_eff", "url")
+                .limit(self.round_budget)
+                .drop("_eff"))
+
+    def _adaptive_adj_expr(self):
+        """Per-host priority adjustment from cumulative fetch history
+        (columns _nf, _nok, _ni): positive for failing hosts (later),
+        negative for item-yielding hosts (earlier). Bounded in
+        [-yield_weight, +error_weight]; integer sums + one double
+        expression keep it bit-deterministic across dequeue paths."""
+        fail_rate = (F.col("_nf") - F.col("_nok")) / F.col("_nf")
+        yield_norm = F.least(
+            F.lit(1.0),
+            F.col("_ni") / F.greatest(F.col("_nok"), F.lit(1)))
+        return (F.lit(float(self.adaptive_error_weight)) * fail_rate
+                - F.lit(float(self.adaptive_yield_weight)) * yield_norm) \
+            .alias("_adj")
+
 
     # ------------------------------------------------------------------ state
 
@@ -970,240 +916,199 @@ class CrawlEngine:
         """Round -1: seed the frontier + seen set. ONE Spark job (the
         frontier write, which computes the JVM xxhash64); the seen copy
         and slab build derive from the written files driver-side."""
+        self._sizes = self._measure_sizes()
         rows = [(u, None, url_host(u), 0.0, 0, -1, 1) for u in self.seeds]
         df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA) \
             .withColumn("url_hash", F.xxhash64("url"))
-        n, files = self._hostpart_append_counted(self.t_frontier, df,
-                                                 {"round": -1})
+        n, files = self._hostpart_write(self.t_frontier, df, {"round": -1},
+                                        mode="append_counted")
         if n:
-            hashes = self._append_seen_from_files(files, -1, n)
-            self._update_slabs(None, -1, n_new=n, hashes=hashes,
-                               files=files)
+            self._commit_seen(-1, n, files=files)
         self.t_rounds.append_rows(
             [(-1, 0, 0, 0, 0, len(self.seeds), 0.0)], ROUNDS_SCHEMA,
             {"round": -1})
-        self._release_round_broadcasts()
+        self._release_round()
 
     # ------------------------------------------------------------------ seen
 
-    def _load_slabs(self):
-        df = self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
-        w = Window.partitionBy("slab_id").orderBy(F.desc("round"))
-        latest = (df.withColumn("_rn", F.row_number().over(w))
-                  .filter("_rn = 1").drop("_rn"))
-        return {int(r["slab_id"]): (r["bloom"], r["cuckoo"])
-                for r in latest.select("slab_id", "bloom", "cuckoo")
-                .collect()}
-
-    def _slabs_cached(self):
-        """Current slab BLOBS, via the driver cache when it matches the
-        table HEAD; falls back to disk after restart/rollback. Only used
-        on the broadcast seen-test path and the driver update path —
-        partitioned mode never materializes blobs on the driver."""
-        mem = getattr(self, "_slabs_mem", None)
+    def _slab_memo(self, key, load=None):
+        """A value derived from the slab table, kept until its HEAD
+        moves (new slab rows, rollback, compaction all commit). A miss
+        calls load(), or returns None without one; an absent table
+        yields {} with no job."""
         head = self.t_slabs.head()
-        if mem is not None and mem[0] == head:
-            return mem[1]
-        slabs = self._load_slabs()
-        self._slabs_mem = (head, slabs)
-        return slabs
+        hit = self._slab_cache.get(key)
+        if hit is not None and hit[0] == head:
+            return hit[1]
+        if load is None:
+            return None
+        val = load() if self.t_slabs.exists() else {}
+        self._slab_cache[key] = (head, val)
+        return val
+
+    def _slab_blobs(self):
+        """{sid: (bloom, cuckoo) blobs} of each slab's latest row. Only
+        the broadcast seen test and the driver-side phases read blobs —
+        partitioned mode never materializes them on the driver."""
+        def load():
+            w = Window.partitionBy("slab_id").orderBy(F.desc("round"))
+            latest = (self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
+                      .withColumn("_rn", F.row_number().over(w))
+                      .filter("_rn = 1"))
+            return {int(r["slab_id"]): (r["bloom"], r["cuckoo"])
+                    for r in latest.select("slab_id", "bloom", "cuckoo")
+                    .collect()}
+        return self._slab_memo("blobs", load)
 
     def _slab_stats(self):
         """{sid: (count, capacity)} of each slab's LATEST row — a pruned
-        (slab_id, round, count, capacity) columnar read; the filter blobs
-        are never touched. Drives rebuild/capacity decisions at any
-        scale."""
-        head = self.t_slabs.head()
-        mem = getattr(self, "_stats_mem", None)
-        if mem is not None and mem[0] == head:
-            return mem[1]
-        stats = {}
-        if self.t_slabs.exists():
-            df = self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
-            latest = (df.groupBy("slab_id")
+        columnar read; the filter blobs are never touched. Drives
+        rebuild/capacity decisions and the plan at any scale."""
+        def load():
+            latest = (self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
+                      .groupBy("slab_id")
                       .agg(F.max(F.struct("round", "count", "capacity"))
                            .alias("m")))
-            stats = {int(r["slab_id"]):
-                     (int(r["m"]["count"]), int(r["m"]["capacity"]))
-                     for r in latest.collect()}
-        self._stats_mem = (head, stats)
-        return stats
+            return {int(r["slab_id"]):
+                    (int(r["m"]["count"]), int(r["m"]["capacity"]))
+                    for r in latest.collect()}
+        return self._slab_memo("stats", load)
 
     def _slab_latest_files(self):
         """{sid: (parquet_path, round)} locating each slab's latest row,
         so an executor task can read exactly its slab's bytes (predicate
         pushdown on slab_id/round). One tiny pruned job per commit."""
-        head = self.t_slabs.head()
-        mem = getattr(self, "_files_mem", None)
-        if mem is not None and mem[0] == head:
-            return mem[1]
-        out = {}
-        if self.t_slabs.exists():
-            df = (self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
-                  .select("slab_id", "round",
-                          F.input_file_name().alias("f")))
-            latest = (df.groupBy("slab_id")
+        def load():
+            from urllib.parse import unquote, urlparse
+
+            latest = (self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
+                      .select("slab_id", "round",
+                              F.input_file_name().alias("f"))
+                      .groupBy("slab_id")
                       .agg(F.max(F.struct("round", "f")).alias("m")))
+            out = {}
             for r in latest.collect():
                 p = r["m"]["f"]
                 if p.startswith("file:"):
-                    from urllib.parse import unquote, urlparse
-
                     p = unquote(urlparse(p).path)
                 out[int(r["slab_id"])] = (p, int(r["m"]["round"]))
-        self._files_mem = (head, out)
-        return out
+            return out
+        return self._slab_memo("files", load)
 
-    def _est_slab_bytes(self):
-        # bloom ≈ 1.5 B/slot (12 bits/item) + cuckoo 2 B/slot at capacity
-        return sum(int(3.5 * cap)
-                   for _, cap in self._slab_stats().values())
+    def _append_seen(self, new, round_no):
+        """Driver-side seen append of an Arrow table of (url, url_hash);
+        returns the hashes for the slab update."""
+        n = new.num_rows
+        self.t_seen.append_arrow(
+            pa.table([new.column("url"), new.column("url_hash"),
+                      pa.array(np.full(n, round_no, dtype=np.int64))],
+                     schema=_SEEN_ARROW),
+            {"round": round_no})
+        return new.column("url_hash").to_numpy()
 
-    def _seen_partitioned(self) -> bool:
-        if self.seen_mode == "partitioned":
-            return True
-        if self.seen_mode == "broadcast":
-            return False
-        return self._est_slab_bytes() > self.seen_broadcast_max_bytes
+    def _commit_seen(self, round_no, n_new, new=None, files=None):
+        """Seen append + slab update for this round's n_new new urls:
+        `new` is an Arrow table of them the driver holds, else `files`
+        are the frontier files the round just wrote (copied driver-side
+        or by one cheap Spark re-scan, as the plan says; row content is
+        identical either way)."""
+        if not n_new:
+            # still mark the round on the tables for rollback bookkeeping
+            for t in (self.t_seen, self.t_slabs):
+                t.commit_meta({"round": round_no})
+            return
+        plan = self._plan(n_new=n_new)
+        if new is None and plan.seen_copy_driver:
+            new = _read_parquet(files, _URL_HASH_ARROW)
+        if new is not None:
+            hashes = self._append_seen(new, round_no)
+        else:
+            hashes = None
+            self.t_seen.append(
+                self.spark.read.parquet(*files)
+                .select("url", "url_hash",
+                        F.lit(round_no).cast("long").alias("round")),
+                {"round": round_no})
+        self._mark("seen")
+        self._update_slabs(plan, round_no, hashes, files)
+        self._mark("slabs")
 
     # --- slab update ---------------------------------------------------------
 
-    def _update_slabs(self, new_urls_df, round_no, n_new=None, hashes=None,
-                      files=None):
+    def _update_slabs(self, plan, round_no, hashes, files):
         """Insert new url hashes into their slab's bloom+cuckoo filters.
 
         Filters must never have FALSE NEGATIVES (a seen url missing from
         its slab would re-enter the frontier), so persistence is strictly
         per-round. Capacity adapts: a slab nearing its bound is rebuilt
-        at double size from the authoritative seen table (amortized
-        doubling, like a hash table).
-
-        Small rounds in broadcast mode update driver-side (from
-        ``hashes`` when the caller already holds them — e.g. read from
-        the round's written frontier files — else one collect); big
-        discovery rounds — and ALL rounds once the seen test is
-        partition-aligned — go through the distributed slab-aligned
-        path, where blobs are built and written entirely executor-side
-        (``files`` supplies the input as a cheap parquet re-scan so the
-        flag/anti-join lineage is never recomputed).
-        """
-        if n_new is None:
-            n_new = (len(hashes) if hashes is not None
-                     else new_urls_df.count())
-        if n_new > self.slab_driver_threshold or \
-                (self._seen_partitioned() and self.t_slabs.exists()):
-            if new_urls_df is None:
-                if files:
-                    new_urls_df = self.spark.read.parquet(*files) \
-                        .select("url", "url_hash")
-                else:
-                    # hashes held driver-side (the distributed build
-                    # only consumes url_hash)
-                    new_urls_df = self.spark.createDataFrame(
-                        [(int(h),) for h in hashes], "url_hash long")
-            self._update_slabs_distributed(new_urls_df, round_no,
-                                           hashes=hashes)
-        else:
-            if hashes is None:
-                if new_urls_df is not None:
-                    hashes = [r["url_hash"] for r in
-                              new_urls_df.select("url_hash").collect()]
-                else:
-                    import pyarrow.parquet as pq
-
-                    hashes = pa.concat_tables(
-                        [pq.read_table(p, columns=["url_hash"])
-                         for p in files]).column("url_hash") \
-                        .to_numpy(zero_copy_only=False)
+        at double size from the authoritative seen table (_build_cap).
+        The cluster side reads its input from the driver-held hashes or,
+        when the seen copy ran in Spark, as a re-scan of `files`."""
+        if plan.slabs_driver:
             self._update_slabs_driver(hashes, round_no)
+            return
+        if hashes is not None:
+            new = self.spark.createDataFrame(
+                pd.DataFrame({"url_hash": np.asarray(hashes, np.int64)}),
+                "url_hash long")
+        else:
+            new = self.spark.read.parquet(*files).select("url_hash")
+        self._update_slabs_distributed(new, round_no, hashes)
+
+    def _rebuild_from_seen(self, sid, cap):
+        """Exact filters for one slab from the seen table slice, which
+        ALREADY includes this round's new urls (seen commits first)."""
+        seen = self.t_seen.read(self.spark, schema=SEEN_SCHEMA)
+        old = [r["url_hash"] for r in seen.filter(
+            F.pmod(F.col("url_hash"), F.lit(self.n_slabs)) == sid)
+            .select("url_hash").collect()]
+        return _fresh_filters(_u64(old), cap)
 
     def _update_slabs_driver(self, hashes, round_no):
-        n_slabs = self.n_slabs
-        slabs = dict(self._slabs_cached())
+        hashes = np.asarray(hashes, dtype=np.int64)
+        sids = hashes % np.int64(self.n_slabs)
+        slabs = dict(self._slab_blobs())
         stats = dict(self._slab_stats())
-
-        # driver-side update: new-url hash volume per round is bounded by
-        # slab_driver_threshold (8 bytes/url — 100k new urls = 800 KB)
-        by_slab = {}
-        for h in hashes:
-            by_slab.setdefault(int(h) % n_slabs, []).append(h)
-
-        out_rows = []
-        for sid, hs in sorted(by_slab.items()):
-            prev = slabs.get(sid)
-            if prev is None:
-                cap = max(self.slab_capacity, 2 * len(hs))
-                bloom = BloomFilter.sized_for(cap)
-                cuckoo = CuckooFilter.sized_for(cap)
+        rows = []
+        for sid in np.unique(sids).tolist():
+            arr = _u64(hashes[sids == sid])
+            stat = stats.get(sid)
+            cap = _build_cap(stat, len(arr), self.slab_capacity)
+            if cap is None:
+                f = (_insert_filters(slabs[sid], arr)
+                     or self._rebuild_from_seen(sid,
+                                                _grow_cap(stat, len(arr))))
+            elif stat is None:
+                f = _fresh_filters(arr, cap)
             else:
-                bloom = BloomFilter.from_bytes(prev[0])
-                cuckoo = CuckooFilter.from_bytes(prev[1])
-                cap = cuckoo.nbuckets * CuckooFilter.SLOTS
-
-            def _rebuild(min_cap):
-                # rebuild from the seen table slice — the exact source,
-                # which at this point ALREADY includes this round's new
-                # urls (seen is committed before slabs), so no re-add
-                seen = self.t_seen.read(self.spark, schema=SEEN_SCHEMA)
-                old = [r["url_hash"] for r in seen.filter(
-                    F.pmod(F.col("url_hash"), F.lit(n_slabs)) == sid)
-                    .select("url_hash").collect()]
-                while True:
-                    nb = BloomFilter.sized_for(min_cap)
-                    nc = CuckooFilter.sized_for(min_cap)
-                    if not old or nc.insert_many(_u64(old)) == len(old):
-                        if old:
-                            nb.add_many(_u64(old))
-                        return nb, nc
-                    min_cap *= 2  # eviction overflow: double and retry
-
-            if prev is not None and cuckoo.count + len(hs) > 0.8 * cap:
-                bloom, cuckoo = _rebuild(
-                    max(2 * cap, 2 * (cuckoo.count + len(hs))))
-            else:
-                arr = _u64(hs)
-                bloom.add_many(arr)
-                if cuckoo.insert_many(arr) != len(arr):
-                    # eviction-loop overflow can silently drop a VICTIM
-                    # fingerprint (a false negative — forbidden): rebuild
-                    # exactly from seen
-                    bloom, cuckoo = _rebuild(
-                        2 * cuckoo.nbuckets * CuckooFilter.SLOTS)
-            cap_now = cuckoo.nbuckets * CuckooFilter.SLOTS
-            out_rows.append((sid, round_no, bloom.to_bytes(),
-                             cuckoo.to_bytes(), cuckoo.count, cap_now))
-            slabs[sid] = (out_rows[-1][2], out_rows[-1][3])
-            stats[sid] = (cuckoo.count, cap_now)
-
-        if out_rows:
-            # driver-known rows (the blobs were just built here): pyarrow
-            # append, no Spark job
-            self.t_slabs.append_rows(out_rows, SLAB_SCHEMA,
-                                     {"round": round_no})
+                f = self._rebuild_from_seen(sid, cap)
+            rows.append(_slab_row(sid, round_no, f))
+            slabs[sid], stats[sid] = rows[-1][2:4], rows[-1][4:6]
+        if rows:
+            # driver-known rows: pyarrow append, no Spark job
+            self.t_slabs.append_rows(rows, SLAB_SCHEMA, {"round": round_no})
+        # the blobs were just built here: keep them warm for next round
         head = self.t_slabs.head()
-        self._slabs_mem = (head, slabs)
-        self._stats_mem = (head, stats)
-        self._files_mem = None
+        self._slab_cache = {"blobs": (head, slabs), "stats": (head, stats)}
 
-    def _update_slabs_distributed(self, new_urls_df, round_no,
-                                  hashes=None):
+    def _update_slabs_distributed(self, new_urls_df, round_no, hashes):
         """Slab-aligned executor-side update (the 10^10-URL path): new
         url hashes shuffle by slab id; each task builds its slabs' new
         Bloom+cuckoo bytes and writes them straight to slab parquet —
         blobs never touch the driver. Slabs that would exceed 80% load
         are rebuilt exactly from the seen-table slice, shipped through
         the same shuffle, at a capacity fixed driver-side from the
-        pruned stats read. When the caller already holds the hashes
-        (small partitioned-mode rounds) the per-sid count job is a
+        pruned stats read. Driver-held hashes make the per-sid count a
         numpy bincount instead of a Spark aggregation."""
         stats = self._slab_stats()
-        sid_col = F.pmod(F.col("url_hash"), F.lit(self.n_slabs)).alias("sid")
         if hashes is not None:
-            sids = np.asarray(hashes, dtype=np.int64) \
-                % np.int64(self.n_slabs)
-            vals, cnts = np.unique(sids, return_counts=True)
-            new_counts = {int(v): int(c) for v, c in zip(vals, cnts)}
+            vals, cnts = np.unique(np.asarray(hashes, dtype=np.int64)
+                                   % np.int64(self.n_slabs),
+                                   return_counts=True)
+            new_counts = dict(zip(vals.tolist(), cnts.tolist()))
         else:
+            sid_col = F.pmod(F.col("url_hash"),
+                             F.lit(self.n_slabs)).alias("sid")
             new_counts = {int(r["sid"]): int(r["c"])
                           for r in new_urls_df.select(sid_col).groupBy("sid")
                           .agg(F.count("*").alias("c")).collect()}
@@ -1211,13 +1116,11 @@ class CrawlEngine:
             return
         build_caps, incr_sids = {}, []
         for sid, n in sorted(new_counts.items()):
-            st = stats.get(sid)
-            if st is None:
-                build_caps[sid] = max(self.slab_capacity, 2 * n)
-            elif st[0] + n > 0.8 * st[1]:
-                build_caps[sid] = max(2 * st[1], 2 * (st[0] + n))
-            else:
+            cap = _build_cap(stats.get(sid), n, self.slab_capacity)
+            if cap is None:
                 incr_sids.append(sid)
+            else:
+                build_caps[sid] = cap
         out = self._run_slab_build(new_urls_df, round_no, build_caps,
                                    incr_sids).cache()
         # incremental tasks that overflow their cuckoo emit a NULL blob
@@ -1228,21 +1131,13 @@ class CrawlEngine:
                   out.filter("cuckoo IS NULL").select("slab_id").collect()]
         ok = out.filter("cuckoo IS NOT NULL")
         if failed:
-            retry_caps = {}
-            for sid in failed:
-                st = stats.get(sid, (0, self.slab_capacity))
-                n = new_counts.get(sid, 0)
-                retry_caps[sid] = max(2 * st[1], 2 * (st[0] + n))
+            retry_caps = {sid: _grow_cap(
+                stats.get(sid, (0, self.slab_capacity)),
+                new_counts.get(sid, 0)) for sid in failed}
             ok = ok.unionByName(
                 self._run_slab_build(new_urls_df, round_no, retry_caps, []))
         self.t_slabs.append(ok, {"round": round_no})
         out.unpersist()
-        # blobs stayed on executors: drop driver caches (stats/files
-        # reload lazily via their tiny pruned jobs; blobs only if the
-        # broadcast path asks for them)
-        self._slabs_mem = None
-        self._stats_mem = None
-        self._files_mem = None
 
     def _run_slab_build(self, new_urls_df, round_no, build_caps, incr_sids):
         """One slab-aligned shuffle + mapInArrow producing SLAB_SCHEMA
@@ -1268,14 +1163,12 @@ class CrawlEngine:
         for other in inputs[1:]:
             inp = inp.unionByName(other)
 
-        bc_prev = None
-        mem = getattr(self, "_slabs_mem", None)
-        if incr_sids and mem is not None and mem[0] == self.t_slabs.head():
-            bc_prev = self._bc(
-                {sid: mem[1][sid] for sid in incr_sids if sid in mem[1]})
+        warm = self._slab_memo("blobs") or {}
+        bc_prev = self._bc({sid: warm[sid] for sid in incr_sids
+                            if sid in warm})
         files = self._slab_latest_files()
-        bc_files = self._bc(
-            {sid: files[sid] for sid in incr_sids if sid in files})
+        bc_files = self._bc({sid: files[sid] for sid in incr_sids
+                             if sid in files})
         caps = dict(build_caps)
 
         def build(batches):
@@ -1288,81 +1181,50 @@ class CrawlEngine:
                 for sid in np.unique(sids):
                     by_sid.setdefault(int(sid), []).append(hs[sids == sid])
 
-            def fresh(arr, cap):
-                while True:
-                    nb = BloomFilter.sized_for(cap)
-                    nc = CuckooFilter.sized_for(cap)
-                    if len(arr) == 0 or nc.insert_many(arr) == len(arr):
-                        if len(arr):
-                            nb.add_many(arr)
-                        return nb, nc
-                    cap *= 2  # eviction overflow: double and retry
-
             rows = []
             for sid, chunks in sorted(by_sid.items()):
                 arr = np.concatenate(chunks).view(np.uint64)
+                prev = bc_prev.value.get(sid)
+                info = bc_files.value.get(sid)
+                if prev is None and info is not None:
+                    prev = _read_slab_blobs(info[0], sid, info[1])
                 if sid in caps:
-                    nb, nc = fresh(arr, caps[sid])
-                    rows.append((sid, round_no, nb.to_bytes(),
-                                 nc.to_bytes(), nc.count,
-                                 nc.nbuckets * CuckooFilter.SLOTS))
-                    continue
-                prev = bc_prev.value.get(sid) if bc_prev is not None \
-                    else None
-                if prev is None:
-                    info = bc_files.value.get(sid)
-                    if info is not None:
-                        prev = _read_slab_blobs(info[0], sid, info[1])
-                if prev is None:
+                    f = _fresh_filters(arr, caps[sid])
+                elif prev is None:
                     # no prior slab row (shouldn't happen for incr sids;
                     # exactness first): fresh build from the new hashes
-                    nb, nc = fresh(arr, max(slab_capacity, 2 * len(arr)))
-                    rows.append((sid, round_no, nb.to_bytes(),
-                                 nc.to_bytes(), nc.count,
-                                 nc.nbuckets * CuckooFilter.SLOTS))
-                    continue
-                bloom = BloomFilter.from_bytes(prev[0])
-                cuckoo = CuckooFilter.from_bytes(prev[1])
-                bloom.add_many(arr)
-                if cuckoo.insert_many(arr) == len(arr):
-                    rows.append((sid, round_no, bloom.to_bytes(),
-                                 cuckoo.to_bytes(), cuckoo.count,
-                                 cuckoo.nbuckets * CuckooFilter.SLOTS))
+                    f = _fresh_filters(
+                        arr, _build_cap(None, len(arr), slab_capacity))
                 else:
-                    # overflow marker: driver retries via rebuild path
-                    rows.append((sid, round_no, None, None, 0, 0))
+                    f = _insert_filters(prev, arr)
+                # a NULL blob marks an overflow: the driver retries it
+                # through the rebuild path
+                rows.append(_slab_row(sid, round_no, f) if f is not None
+                            else (sid, round_no, None, None, 0, 0))
             if rows:
-                cols = list(zip(*rows))
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[0], pa.int64()),
-                     pa.array(cols[1], pa.int64()),
-                     pa.array(cols[2], pa.binary()),
-                     pa.array(cols[3], pa.binary()),
-                     pa.array(cols[4], pa.int64()),
-                     pa.array(cols[5], pa.int64())],
-                    names=[f.name for f in SLAB_SCHEMA.fields])
+                    [pa.array(c, f.type)
+                     for c, f in zip(zip(*rows), _SLAB_ARROW)],
+                    schema=_SLAB_ARROW)
 
         n_parts = max(1, min(n_slabs, self.fetch_partitions))
         return inp.repartition(n_parts, "sid").mapInArrow(build, SLAB_SCHEMA)
 
     # --- seen-set membership test ---------------------------------------------
 
-    def _filter_new_urls(self, candidates, round_no):
+    def _filter_new_urls(self, candidates, plan):
         """candidates(url, url_hash, ...) → truly-new rows.
 
         Bloom/cuckoo 'absent' ⇒ definitely new (no join); 'maybe seen' ⇒
         exact LEFT ANTI JOIN against the seen table. False positives can
         never drop a real URL; false negatives are structurally
         impossible (per-round slab persistence)."""
-        if self._seen_partitioned() and self.t_slabs.exists():
-            flagged = self._flag_partitioned(candidates)
-        else:
-            flagged = self._flag_broadcast(candidates)
+        flagged = self._flag_seen(candidates, plan.seen_partitioned)
         definitely_new = flagged.filter("maybe_seen = 0").drop("maybe_seen")
         maybe_seen = flagged.filter("maybe_seen = 1").drop("maybe_seen")
         seen = self.t_seen.read(self.spark, schema=SEEN_SCHEMA) \
             .select("url_hash", "url")
-        if self._files_bytes(self.t_seen) <= self.broadcast_join_bytes:
+        if plan.broadcast_seen:
             seen = F.broadcast(seen)
         # exact join on BOTH hash and url: a 64-bit hash collision must not
         # drop a distinct url (exactness of the seen set)
@@ -1370,67 +1232,44 @@ class CrawlEngine:
                                         how="left_anti")
         return definitely_new.unionByName(confirmed_new)
 
-    def _flag_broadcast(self, candidates):
-        """Broadcast-all-slabs test — no shuffle of the candidates; right
-        up to tens of MB of filter bytes."""
+    def _flag_seen(self, candidates, partitioned):
+        """Append maybe_seen to the candidates. Broadcast: every task
+        gets all slab blobs (no shuffle of the candidates; right up to
+        tens of MB of filter bytes — broadcast, not closure capture, or
+        the blobs would be pickled into every task). Partitioned (the
+        10^10-URL path): candidates shuffle by slab id and each task
+        loads ONLY its slabs' blobs from slab parquet (worker-cached,
+        predicate-pushdown read)."""
         n_slabs = self.n_slabs
-        # broadcast, not closure capture: slab blobs would otherwise be
-        # pickled into every task
-        bc_slabs = self._bc(self._slabs_cached())
-
         flag_schema = StructType(candidates.schema.fields +
                                  [StructField("maybe_seen", LongType())])
+        if partitioned:
+            bc = self._bc(self._slab_latest_files())
+
+            def blobs(sid):
+                v = bc.value.get(sid)
+                return None if v is None else _read_slab_blobs(v[0], sid,
+                                                                v[1])
+            n_parts = max(1, min(n_slabs, self.fetch_partitions))
+            candidates = (candidates
+                          .withColumn("_sid", F.pmod(F.col("url_hash"),
+                                                     F.lit(n_slabs)))
+                          .repartition(n_parts, "_sid").drop("_sid"))
+        else:
+            bc = self._bc(self._slab_blobs())
+
+            def blobs(sid):
+                return bc.value.get(sid)
 
         def flag(batches):
-            filters = {sid: (BloomFilter.from_bytes(b),
-                             CuckooFilter.from_bytes(c))
-                       for sid, (b, c) in bc_slabs.value.items()}
+            get = _filter_loader(blobs)
             for batch in batches:
-                yield _flag_batch(batch, n_slabs,
-                                  lambda sid: filters.get(sid))
+                maybe = _maybe_seen(batch.column("url_hash"), n_slabs, get)
+                yield pa.RecordBatch.from_arrays(
+                    [*batch.columns, pa.array(maybe.astype(np.int64))],
+                    names=[*batch.schema.names, "maybe_seen"])
 
         return candidates.mapInArrow(flag, flag_schema)
-
-    def _flag_partitioned(self, candidates):
-        """Partition-aligned test (the 10^10-URL path): candidates are
-        shuffled by slab id and each task loads ONLY its slabs' blobs
-        from slab parquet (worker-cached, predicate-pushdown read) — no
-        broadcast of the full filter set."""
-        n_slabs = self.n_slabs
-        bc_files = self._bc(self._slab_latest_files())
-
-        flag_schema = StructType(candidates.schema.fields +
-                                 [StructField("maybe_seen", LongType())])
-
-        def flag(batches):
-            loaded = {}
-
-            def get(sid):
-                if sid not in loaded:
-                    info = bc_files.value.get(sid)
-                    blobs = (_read_slab_blobs(info[0], sid, info[1])
-                             if info is not None else None)
-                    loaded[sid] = None if blobs is None else (
-                        BloomFilter.from_bytes(blobs[0]),
-                        CuckooFilter.from_bytes(blobs[1]))
-                return loaded[sid]
-
-            for batch in batches:
-                yield _flag_batch(batch, n_slabs, get)
-
-        n_parts = max(1, min(n_slabs, self.fetch_partitions))
-        return (candidates
-                .withColumn("_sid",
-                            F.pmod(F.col("url_hash"), F.lit(n_slabs)))
-                .repartition(n_parts, "_sid").drop("_sid")
-                .mapInArrow(flag, flag_schema))
-
-    def _host_stats_df(self):
-        """The incremental per-host feedback table (delta rows; sum per
-        host = cumulative history). Always safe to read: legacy
-        workdirs are backfilled once in recover()."""
-        return self.t_host_stats.read(self.spark,
-                                      schema=HOST_STATS_SCHEMA)
 
     def _host_stats_delta(self, fetch_df):
         """One round's per-host delta rows from that round's fetch
@@ -1440,20 +1279,6 @@ class CrawlEngine:
                      F.sum(F.when(F.col("status") == "ok", 1)
                            .otherwise(0)).alias("n_ok"),
                      F.sum("n_items").alias("n_items")))
-
-    def _adaptive_adj_expr(self):
-        """Per-host priority adjustment from cumulative fetch history
-        (columns _nf, _nok, _ni): positive for failing hosts (later),
-        negative for item-yielding hosts (earlier). Bounded in
-        [-yield_weight, +error_weight]; integer sums + one double
-        expression keep it bit-deterministic across dequeue paths."""
-        fail_rate = (F.col("_nf") - F.col("_nok")) / F.col("_nf")
-        yield_norm = F.least(
-            F.lit(1.0),
-            F.col("_ni") / F.greatest(F.col("_nok"), F.lit(1)))
-        return (F.lit(float(self.adaptive_error_weight)) * fail_rate
-                - F.lit(float(self.adaptive_yield_weight)) * yield_norm) \
-            .alias("_adj")
 
     def _robots_df(self):
         """Per-host robots.txt bodies — computed once per engine and
@@ -1478,179 +1303,8 @@ class CrawlEngine:
                         F.col("html").alias("_robots"))).cache()
         return self._robots_cache_df
 
+
     # ------------------------------------------------------------------ round
-
-    def _read_file_cached(self, dirpath, rel, columns, schema):
-        """Driver-side pyarrow read of ONE table file, memoized by path:
-        table files are immutable (uuid names) and the small-state
-        driver paths re-read the same live files every round. Memory is
-        bounded by the dequeue_driver_bytes gate that admits those
-        paths at all."""
-        import pyarrow.parquet as pq
-
-        cache = getattr(self, "_deq_read_cache", None)
-        if cache is None:
-            cache = self._deq_read_cache = {}
-        p = os.path.join(dirpath, rel)
-        key = (p, tuple(columns))
-        t = cache.get(key)
-        if t is None:
-            t = cache[key] = pq.read_table(p, columns=columns).cast(schema)
-        return t
-
-    _FRONTIER_ARROW = pa.schema([
-        pa.field("url", pa.string()),
-        pa.field("url_hash", pa.int64()),
-        pa.field("host", pa.string()),
-        pa.field("priority", pa.float64()),
-        pa.field("depth", pa.int64()),
-        pa.field("discovered_round", pa.int64()),
-        pa.field("page_no", pa.int64()),
-    ])
-
-    def _dequeue_driver(self):
-        """Driver-side dequeue fast path: when the ENTIRE dequeue input
-        (live frontier files + post-compaction fetched files + host
-        stats) fits ``dequeue_driver_bytes``, run the anti-join, the
-        optional adaptive adjustment, the per-host top-k and the global
-        budget as one local pyarrow/pandas pass — the same arithmetic
-        the bucketed mapInArrow kernel executes per bucket (whose
-        digest-parity with the JVM window path is pytest-asserted) —
-        and return the dequeued rows as a pandas frame. Returns None
-        above the gate (callers fall through to the distributed
-        dequeues). Replaces a multi-stage Spark job + count + hot-host
-        detection job with zero jobs for small open frontiers."""
-        import pyarrow.parquet as pq
-
-        fr_rel = self.t_frontier.manifest()["files"]
-        if not fr_rel:
-            import pandas as pd
-
-            return pd.DataFrame(
-                columns=[f.name for f in FRONTIER_SCHEMA.fields])
-        aj_rel, _c = self._antijoin_fetched_files()
-        adaptive = self.adaptive_priority
-        hs_rel = (self.t_host_stats.manifest()["files"]
-                  if adaptive and self.t_host_stats.exists() else [])
-        total = (self._files_bytes(self.t_frontier, fr_rel)
-                 + self._files_bytes(self.t_fetched, aj_rel)
-                 + self._files_bytes(self.t_host_stats, hs_rel))
-        if total > self.dequeue_driver_bytes:
-            return None
-        read = self._read_file_cached
-        cols = [f.name for f in FRONTIER_SCHEMA.fields]
-        fr = pa.concat_tables(
-            [read(self.t_frontier.dir, f, cols, self._FRONTIER_ARROW)
-             for f in fr_rel])
-        pdf = fr.to_pandas()
-        if aj_rel:
-            url_schema = pa.schema([pa.field("url", pa.string())])
-            fetched_urls = pa.concat_tables(
-                [read(self.t_fetched.dir, f, ["url"], url_schema)
-                 for f in aj_rel])
-            if fetched_urls.num_rows:
-                pdf = pdf[~pdf["url"].isin(
-                    set(fetched_urls.column("url").to_pylist()))]
-        if pdf.empty:
-            return pdf
-        if adaptive:
-            # identical float64 arithmetic to the bucketed kernel /
-            # the window path's JVM expression (integer sums then one
-            # double expression)
-            eff = pdf["priority"].to_numpy(dtype="float64")
-            if hs_rel:
-                hpdf = pa.concat_tables(
-                    [pq.read_table(
-                        os.path.join(self.t_host_stats.dir, f),
-                        columns=["host", "n_fetched", "n_ok", "n_items"])
-                     .cast(pa.schema(
-                         [pa.field("host", pa.string()),
-                          pa.field("n_fetched", pa.int64()),
-                          pa.field("n_ok", pa.int64()),
-                          pa.field("n_items", pa.int64())]))
-                     for f in hs_rel]).to_pandas()
-                if len(hpdf):
-                    g = hpdf.groupby("host", sort=False).agg(
-                        _nf=("n_fetched", "sum"), _nok=("n_ok", "sum"),
-                        _ni=("n_items", "sum"))
-                    nf = g["_nf"].to_numpy(dtype="float64")
-                    nok = g["_nok"].to_numpy(dtype="float64")
-                    ni = g["_ni"].to_numpy(dtype="float64")
-                    adj = (float(self.adaptive_error_weight)
-                           * ((nf - nok) / nf)
-                           - float(self.adaptive_yield_weight)
-                           * np.minimum(1.0, ni / np.maximum(nok, 1.0)))
-                    amap = dict(zip(g.index, adj))
-                    eff = eff + pdf["host"].map(amap) \
-                        .fillna(0.0).to_numpy(dtype="float64")
-            pdf = pdf.assign(_eff=eff).sort_values(["_eff", "url"])
-        else:
-            pdf = pdf.sort_values(["priority", "url"])
-        pdf = pdf.groupby("host", sort=False).head(self.per_host_budget)
-        pdf = pdf.head(self.round_budget)
-        return pdf[cols].reset_index(drop=True)
-
-    def _dequeue_window(self):
-        """Shuffle-based dequeue (the non-bucketed path): compaction-
-        pruned anti-join, optional adaptive host feedback, per-host
-        top-k window, global budget."""
-        spark = self.spark
-        frontier = self.t_frontier.read(spark, schema=FRONTIER_SCHEMA)
-        # anti-join right side: only fetched files from rounds
-        # AFTER the effective frontier compaction — a compacted
-        # frontier already excludes everything fetched up to that
-        # round, so the anti-join cost tracks work since the last
-        # compaction, not total crawl history
-        aj_files, _c = self._antijoin_fetched_files()
-        if aj_files:
-            fetched_aj = spark.read.parquet(
-                *[os.path.join(self.t_fetched.dir, f)
-                  for f in aj_files])
-        else:
-            fetched_aj = spark.createDataFrame([], FETCHED_SCHEMA)
-        fa = fetched_aj.select("url_hash", "url")
-        if self._files_bytes(self.t_fetched,
-                             aj_files) <= self.broadcast_join_bytes:
-            # small anti-join side → broadcast: the frontier scan is
-            # never shuffled just to drop already-fetched rows
-            fa = F.broadcast(fa)
-        pending = frontier.join(fa, on=["url_hash", "url"],
-                                how="left_anti")
-
-        if self.adaptive_priority:
-            # per-host feedback from the INCREMENTAL host_stats
-            # table (delta rows per round, compacted to one row per
-            # host) — never a re-aggregation of the full fetched
-            # history. Integer delta sums then one double
-            # expression: bit-identical to aggregating fetched
-            # directly, at a cost proportional to active hosts.
-            adj = (self._host_stats_df()
-                   .groupBy("host")
-                   .agg(F.sum("n_fetched").alias("_nf"),
-                        F.sum("n_ok").alias("_nok"),
-                        F.sum("n_items").alias("_ni"))
-                   .select("host", self._adaptive_adj_expr()))
-            if self._files_bytes(self.t_host_stats) \
-                    <= self.broadcast_join_bytes:
-                adj = F.broadcast(adj)
-            pending = (pending.join(adj, "host", "left")
-                       .withColumn(
-                           "_eff",
-                           F.col("priority")
-                           + F.coalesce(F.col("_adj"), F.lit(0.0)))
-                       .drop("_adj"))
-        else:
-            pending = pending.withColumn("_eff", F.col("priority"))
-
-        # per-host top-k dequeue, then global budget — explicit sorts
-        w = Window.partitionBy("host").orderBy("_eff", "url")
-        return (pending
-                .withColumn("_rank", F.row_number().over(w))
-                .filter(F.col("_rank") <= self.per_host_budget)
-                .drop("_rank")
-                .orderBy("_eff", "url")
-                .limit(self.round_budget)
-                .drop("_eff"))
 
     def _mark(self, name):
         """Phase checkpoint for profiling: records (name, secs since the
@@ -1660,39 +1314,80 @@ class CrawlEngine:
         self.last_phases.append((name, now - self._mark_t))
         self._mark_t = now
 
+    def _measure_sizes(self):
+        """round_plan() inputs that exist at round start: on-disk bytes
+        from the manifests (stat calls, no job) and the slabs' estimated
+        filter bytes from their stats. Also evicts _file_cache entries
+        whose files are no longer among these live inputs (compacted
+        away, or pruned from the dequeue anti-join)."""
+        aj, _c = self._antijoin_fetched_files()
+        hs = (self.t_host_stats.manifest()["files"]
+              if self.adaptive_priority else [])
+        live = [(self.t_frontier, self.t_frontier.manifest()["files"]),
+                (self.t_fetched, aj), (self.t_host_stats, hs),
+                (self.t_seen, self.t_seen.manifest()["files"])]
+        paths = {os.path.join(t.dir, f) for t, files in live for f in files}
+        self._file_cache = {k: v for k, v in self._file_cache.items()
+                            if k[0] in paths}
+        frontier_bytes, fetched_bytes, host_stats_bytes, seen_bytes = (
+            self._files_bytes(t, files) for t, files in live)
+        return dict(
+            dequeue_bytes=frontier_bytes + fetched_bytes + host_stats_bytes,
+            fetched_bytes=fetched_bytes, host_stats_bytes=host_stats_bytes,
+            seen_bytes=seen_bytes,
+            # bloom ≈ 1.5 B/slot (12 bits/item) + cuckoo 2 B/slot
+            slab_bytes=sum(int(3.5 * cap)
+                           for _, cap in self._slab_stats().values()))
+
+    def _plan(self, **counts):
+        """This round's plan from its start-of-round sizes and the
+        counts known so far (n_dequeued, n_new)."""
+        return round_plan(**self._sizes, **counts)
+
     def run_round(self, round_no: int):
         t0 = time.time()
-        self.last_phases = []
-        self._mark_t = t0
-        spark = self.spark
-        deq_pdf = self._dequeue_driver()
-        deq_cached = False
-        if deq_pdf is not None:
-            n_dequeued = len(deq_pdf)
-            dequeued = (spark.createDataFrame(deq_pdf, FRONTIER_SCHEMA)
-                        if n_dequeued else None)
-        else:
-            if self.frontier_buckets and self._buckets_complete():
-                dequeued = self._dequeue_bucketed()
-            else:
-                dequeued = self._dequeue_window()
-            dequeued = dequeued.cache()
-            deq_cached = True
-            n_dequeued = dequeued.count()
+        self.last_phases, self._mark_t = [], t0
+        self._sizes = self._measure_sizes()
+        dequeued, deq_pdf, n_dequeued = self._dequeue_phase(self._plan())
         self._mark("dequeue")
         if n_dequeued == 0:
-            if deq_cached:
-                dequeued.unpersist()
-            self._release_round_broadcasts()  # bucketed dequeue's file map
+            self._release_round()  # bucketed dequeue's file map
             self.t_rounds.append_rows(
                 [(round_no, 0, 0, 0, 0, 0, time.time() - t0)],
                 ROUNDS_SCHEMA, {"round": round_no})
             return {"round": round_no, "n_dequeued": 0}
+        plan = self._plan(n_dequeued=n_dequeued)
+        kernel = self._fetch_extract_phase(dequeued, deq_pdf, n_dequeued,
+                                           round_no)
+        commit = (self._commit_round_driver if plan.commit_driver
+                  else self._commit_round_cluster)
+        stats, outlink_rows, started, ended = commit(kernel, round_no,
+                                                     n_dequeued)
+        n_new = self._new_urls_phase(plan, outlink_rows, round_no)
+        return self._tail_phase(round_no, t0, n_dequeued, stats, n_new,
+                                started, ended)
 
+    def _dequeue_phase(self, plan):
+        """(dequeued DataFrame, its pandas frame when dequeued on the
+        driver, row count)."""
+        if plan.dequeue_driver:
+            pdf = self._dequeue_driver()
+            df = (self.spark.createDataFrame(pdf, FRONTIER_SCHEMA)
+                  if len(pdf) else None)
+            return df, pdf, len(pdf)
+        if self.frontier_buckets and self._buckets_complete():
+            df = self._cache(self._dequeue_bucketed())
+        else:
+            df = self._cache(self._dequeue_window(plan))
+        return df, None, df.count()
+
+    def _fetch_extract_phase(self, dequeued, deq_pdf, n_dequeued, round_no):
+        """The fetch/extract kernel over the dequeued rows, as a lazy
+        DataFrame of _crawl_schema() rows (_kind fetch/item/outlink)."""
         # skew: hot hosts get salted sub-partitions AFTER the politeness
         # schedule is fixed (salting only parallelizes fetch/parse). The
-        # detection groupBy only pays for itself when a host COULD exceed
-        # the threshold.
+        # detection only pays for itself when a host COULD exceed the
+        # threshold.
         hot_hosts = set()
         # live mode NEVER salts: politeness is enforced with wall-clock
         # sleeps that only work while a host lives in exactly one task
@@ -1703,8 +1398,8 @@ class CrawlEngine:
                 vc = deq_pdf["host"].value_counts()
                 hot_hosts = set(vc[vc > self.salt_threshold].index)
             else:
-                host_counts = dequeued.groupBy("host").count()
-                hot_hosts = {r["host"] for r in host_counts
+                hot_hosts = {r["host"] for r in dequeued.groupBy("host")
+                             .count()
                              .filter(F.col("count") > self.salt_threshold)
                              .collect()}
             self._mark("salt_detect")
@@ -1714,18 +1409,14 @@ class CrawlEngine:
                    .join(self.pages.select("url", "html"), "url", "left")
                    .select("url", "host", "html",
                            F.lit(round_no).cast("long").alias("round")))
-            self.t_debug.append(
-                dbg.coalesce(max(1, n_dequeued // 50_000 + 1)),
-                {"round": round_no})
+            self.t_debug.append(dbg.coalesce(n_dequeued // 50_000 + 1),
+                                {"round": round_no})
 
         # politeness schedule: deterministic virtual clock per host —
         # computed with window functions (rank within host by priority,url)
         # so it is independent of physical partitioning. Computed on the
         # DEQUEUED rows BEFORE html is attached: the window's exchange
         # then moves only (url, host, priority, ...) — not page payloads.
-        # (Previously it ran after the pages join, so every html byte
-        # crossed one extra shuffle; at the 100 TB design point that is
-        # a full corpus pass over the network per round.)
         wseq = Window.partitionBy("host").orderBy("priority", "url")
         work = dequeued.withColumn("_host_seq",
                                    F.row_number().over(wseq).cast("long"))
@@ -1755,7 +1446,7 @@ class CrawlEngine:
         now = self.now
         proto = self._proto
         out_schema = self._crawl_schema()
-        arrow_out = self._crawl_arrow_schema()
+        arrow_out = to_arrow_schema(out_schema)
         fcols = _field_columns(proto)
         retain_html = self._retain_html
         round_base = float(round_no) * 1e6
@@ -1896,186 +1587,186 @@ class CrawlEngine:
         # which hash-partitioning on (host, _salt) gives at any width
         n_fetch_parts = max(1, min(self.fetch_partitions,
                                    (n_dequeued + 15) // 16))
-        kernel = (work.repartition(n_fetch_parts, "host", "_salt")
-                  .sortWithinPartitions("host", "priority", "url")
-                  .mapInArrow(fetch_extract, out_schema))
-        out_coalesce = max(1, min(n_fetch_parts, n_dequeued // 50_000 + 1))
-        small_round = n_dequeued <= self.slab_driver_threshold
-        # SMALL-ROUND SINGLE-COLLECT: below the same driver-
-        # materialization bound the seen set uses, ONE job runs the
-        # fetch/extract kernel and collects its (html-free) output as
-        # Arrow — the JVM xxhash64 rides along as a column so no hash is
-        # ever recomputed off-JVM. Items, fetched (+ fetch_seq), host
-        # stats and the round metrics all derive driver-side from that
-        # table; the outlink rows are re-lifted as a LOCAL relation so
-        # the new-url job (Spark expressions) never re-runs the kernel.
-        # Replaces three jobs (items append, fetched collect, outlink
-        # collect-from-cache) with one collect + one local-relation job,
-        # and drops the result cache entirely. retain_html rounds keep
-        # the distributed path (page payloads must not be collected).
-        driver_commit = small_round and not self._retain_html
-        if driver_commit:
-            started = datetime.now(timezone.utc)
-            coll = (kernel
-                    .withColumn("_url_hash", F.xxhash64("_page_url"))
-                    .toArrow())
-            if deq_cached:
-                dequeued.unpersist()
-            self._commit_items_driver(coll, round_no, fcols)
-            self._mark("fetch_extract+items")
-            fpdf = self._fetch_pdf_from_arrow(coll, round_no)
-            stats = self._commit_fetched_driver(fpdf, round_no)
-            ended = datetime.now(timezone.utc)
-            self._mark("fetched_write")
-            if self.adaptive_priority or self.t_host_stats.exists():
-                self._commit_host_stats_driver(fpdf, round_no)
-                self._mark("host_stats")
-            result = None
-            outlink_rows = self._outlink_df_from_arrow(coll)
-        else:
-            result = kernel.cache()
-            # first consumer (items append) fills the result cache; only
-            # THEN is the dequeue cache safe to drop (result's lineage
-            # includes it)
+        return (work.repartition(n_fetch_parts, "host", "_salt")
+                .sortWithinPartitions("host", "priority", "url")
+                .mapInArrow(fetch_extract, out_schema))
 
-            # --- commit: items
-            items = (result.filter("_kind = 'item'")
-                     .select(F.col("_page_url").alias("page_url"),
-                             F.col("_item_idx").alias("item_idx"),
-                             *[n for n, _ in fcols],
-                             F.lit(round_no).cast("long").alias("round")))
-            self.t_items.append(items.coalesce(out_coalesce),
-                                {"round": round_no})
-            self._mark("fetch_extract+items")
+    def _append_html(self, result, round_no, n_dequeued):
+        """Live-mode html retention (debug sink / on_subpage stage-2
+        source): kernel-fetched html is only reachable through the
+        kernel's output rows, so persist it to debug_pages from there."""
+        dbg = (result.filter("_kind = 'fetch'")
+               .filter(F.col("_status") == "ok")
+               .select(F.col("_page_url").alias("url"),
+                       F.col("_host").alias("host"),
+                       F.encode(F.col("_html_out"), "UTF-8").alias("html"),
+                       F.lit(round_no).cast("long").alias("round")))
+        self.t_debug.append(dbg.coalesce(n_dequeued // 50_000 + 1),
+                            {"round": round_no})
 
-            # --- commit: live-mode html retention (debug sink /
-            # on_subpage stage-2 source): kernel-fetched html is only
-            # reachable through the result rows, so persist it to
-            # debug_pages from there
-            if self._retain_html:
-                dbg = (result.filter("_kind = 'fetch'")
-                       .filter(F.col("_status") == "ok")
-                       .select(F.col("_page_url").alias("url"),
-                               F.col("_host").alias("host"),
-                               F.encode(F.col("_html_out"), "UTF-8")
-                               .alias("html"),
-                               F.lit(round_no).cast("long").alias("round")))
-                self.t_debug.append(dbg.coalesce(out_coalesce),
-                                    {"round": round_no})
+    def _commit_round_driver(self, kernel, round_no, n_dequeued):
+        """Driver-side round commit: ONE job runs the fetch/extract kernel
+        and collects its html-free output as Arrow — the JVM xxhash64
+        rides along as a column so no hash is ever recomputed off-JVM.
+        Items, fetched (+ fetch_seq), host stats and the round metrics
+        derive driver-side from that table; the outlink rows come back
+        as a LOCAL relation so the new-url job never re-runs the kernel.
+        When html is retained the kernel output is cached first, its
+        html appended to debug_pages, and the rest collected from the
+        cache. Returns (stats, outlink rows, started, ended)."""
+        started = datetime.now(timezone.utc)
+        if self._retain_html:
+            kernel = self._cache(kernel)
+            self._append_html(kernel, round_no, n_dequeued)
+            kernel = kernel.drop("_html_out")
+        coll = (kernel.withColumn("_url_hash", F.xxhash64("_page_url"))
+                .toArrow())
+        self._commit_items_driver(coll, round_no)
+        self._mark("fetch_extract+items")
+        fetched = self._fetched_from_arrow(coll, round_no)
+        self._append_host_keyed(self.t_fetched, fetched, round_no)
+        ended = datetime.now(timezone.utc)
+        self._mark("fetched_write")
+        ok = pc.cast(pc.equal(fetched["status"], "ok"), pa.int64())
+        if self.adaptive_priority or self.t_host_stats.exists():
+            g = (fetched.append_column("_ok", ok).group_by("host")
+                 .aggregate([("host", "count"), ("_ok", "sum"),
+                             ("n_items", "sum")]))
+            self._append_host_keyed(self.t_host_stats, pa.table(
+                [g["host"], g["host_count"], g["_ok_sum"], g["n_items_sum"],
+                 pa.array(np.full(g.num_rows, round_no, dtype=np.int64))],
+                schema=_HOST_STATS_ARROW), round_no)
+            self._mark("host_stats")
+        stats = [{"_pid": 0, "n_fetched": fetched.num_rows,
+                  "n_ok": pc.sum(ok).as_py(),
+                  "n_items": pc.sum(fetched["n_items"]).as_py(),
+                  "n_errors": pc.sum(fetched["n_errors"]).as_py()}]
+        ot = coll.filter(pc.equal(coll["_kind"], "outlink"))
+        outlinks = self.spark.createDataFrame(
+            ot.select(["_outlink", "_depth", "_page_no"]).to_pandas(),
+            "_outlink string, _depth long, _page_no long")
+        return stats, outlinks, started, ended
 
-            # --- commit: fetched (+ deterministic global fetch_seq).
-            # The global sequence over (fetch_ts, host, url) is computed
-            # WITHOUT a single-partition Window (the scale-killer flagged
-            # in round 1): range-partition on the sort key, take the
-            # partition-LOCAL position from monotonically_increasing_id
-            # (pid<<33 + local row number — no shuffle, no Python), then
-            # add an exclusive prefix-sum of per-partition counts (one
-            # tiny n_parts-row collect). The sort key is unique per round
-            # (one fetch row per dequeued url), so the ranking — and the
-            # crawl digest — is identical at any parallelism.
-            fetch_base = (result.filter("_kind = 'fetch'")
-                          .select(F.col("_page_url").alias("url"),
-                                  F.col("_host").alias("host"),
-                                  F.col("_fetch_ts").alias("fetch_ts"),
-                                  F.col("_status").alias("status"),
-                                  F.col("_n_items").alias("n_items"),
-                                  F.col("_n_errors").alias("n_errors"))
-                          .withColumn("url_hash", F.xxhash64("url"))
-                          .withColumn("round",
-                                      F.lit(round_no).cast("long")))
-            started = datetime.now(timezone.utc)
-            if small_round:
-                # SMALL-ROUND FAST PATH (retain_html rounds — the
-                # html-free ones take the single-collect branch above):
-                # the fetch set has exactly n_dequeued rows (one per
-                # dequeued url), bounded by slab_driver_threshold — the
-                # same driver-materialization bound the seen set uses.
-                # ONE job collects it sorted (Arrow path); fetch_seq is
-                # then a plain position in the sorted frame, the parquet
-                # append is a driver-side pyarrow write (per-bucket
-                # files in bucketed mode, same crc32 modulus as the JVM
-                # writer), and the round summary / lineage metrics /
-                # adaptive host_stats delta all come from the frame
-                # already in hand — no range sampling, no offset-collect
-                # job, no committer temp-dir dance, no re-read.
-                # Identical fetch_seq values: the sort key is unique per
-                # round, so position-in-sorted-order is the same ranking
-                # the range-partitioned path computes.
-                pdf = (fetch_base
-                       .coalesce(1)
-                       .sortWithinPartitions("fetch_ts", "host", "url")
-                       .toPandas())
-                stats = self._commit_fetched_driver(pdf, round_no)
-                ended = datetime.now(timezone.utc)
-                self._mark("fetched_write")
-                if self.adaptive_priority or self.t_host_stats.exists():
-                    self._commit_host_stats_driver(pdf, round_no)
-                    self._mark("host_stats")
-            else:
-                n_seq_parts = max(1, min(n_fetch_parts,
-                                         (n_dequeued + 4095) // 4096))
-                seq_sorted = (fetch_base
-                              .repartitionByRange(n_seq_parts,
-                                                  "fetch_ts", "host",
-                                                  "url")
-                              .sortWithinPartitions("fetch_ts", "host",
-                                                    "url")
-                              .withColumn("_pid", F.spark_partition_id())
-                              .withColumn("_local",
-                                          F.monotonically_increasing_id()
-                                          .bitwiseAND(
-                                              F.lit((1 << 33) - 1)))
-                              ).cache()
-                # ONE tiny aggregation serves both the fetch_seq offsets
-                # AND the per-partition lineage metrics/round summary
-                stats = (seq_sorted.groupBy("_pid")
-                         .agg(F.count("*").alias("n_fetched"),
-                              F.sum(F.when(F.col("status") == "ok", 1)
-                                    .otherwise(0)).alias("n_ok"),
-                              F.sum("n_items").alias("n_items"),
-                              F.sum("n_errors").alias("n_errors"))
-                         ).collect()
-                ended = datetime.now(timezone.utc)
-                self._mark("seq_stats")
-                pid_counts = {int(r["_pid"]): int(r["n_fetched"])
-                              for r in stats}
-                offs, acc = {}, 0
-                for pid in sorted(pid_counts):  # range parts key-ordered
-                    offs[pid] = acc
-                    acc += pid_counts[pid]
-                off_map = F.create_map(*[F.lit(v) for pid in sorted(offs)
-                                         for v in (pid, offs[pid])])
-                fetch_rows = (seq_sorted
-                              .withColumn(
-                                  "fetch_seq",
+    def _commit_items_driver(self, coll, round_no):
+        """Items append from the collected kernel output: one parquet
+        file written driver-side, with the names and logical types of
+        the Spark path's select exactly."""
+        it = coll.filter(pc.equal(coll["_kind"], "item"))
+        schema = to_arrow_schema(self.items_table_schema())
+        cols = [it["_page_url"], it["_item_idx"],
+                *[it[n] for n in schema.names[2:-1]],
+                pa.array(np.full(it.num_rows, round_no, dtype=np.int64))]
+        self.t_items.append_arrow(
+            pa.Table.from_arrays(cols, names=schema.names).cast(schema),
+            {"round": round_no})
+
+    @staticmethod
+    def _fetched_from_arrow(coll, round_no):
+        """Fetched rows from the collected kernel output, sorted by the
+        SAME total order the cluster side ranks by — (fetch_ts, host,
+        url), strings compared as UTF-8 bytes like Spark's — with
+        fetch_seq their position, so the crawl digest is identical."""
+        f = coll.filter(pc.equal(coll["_kind"], "fetch"))
+        f = f.take(pc.sort_indices(f, sort_keys=[
+            ("_fetch_ts", "ascending"), ("_host", "ascending"),
+            ("_page_url", "ascending")]))
+        n = f.num_rows
+        return pa.table(
+            [f["_page_url"], f["_url_hash"], f["_host"],
+             pa.array(np.full(n, round_no, dtype=np.int64)),
+             pa.array(np.arange(1, n + 1, dtype=np.int64)), f["_fetch_ts"],
+             f["_status"], f["_n_items"], f["_n_errors"]],
+            schema=_FETCHED_ARROW)
+
+    def _commit_round_cluster(self, kernel, round_no, n_dequeued):
+        """Cluster-side round commit (rounds above DRIVER_ROWS): the
+        kernel output is cached and items / fetched / host stats are
+        Spark writes. The global fetch_seq over (fetch_ts, host, url) is
+        computed WITHOUT a single-partition Window (the scale-killer
+        flagged in round 1): range-partition on the sort key, take the
+        partition-LOCAL position from monotonically_increasing_id
+        (pid<<33 + local row number — no shuffle, no Python), then add
+        an exclusive prefix-sum of per-partition counts (one tiny
+        n_parts-row collect). The sort key is unique per round (one
+        fetch row per dequeued url), so the ranking — and the crawl
+        digest — is identical at any parallelism."""
+        result = self._cache(kernel)
+        out_files = n_dequeued // 50_000 + 1
+        items = (result.filter("_kind = 'item'")
+                 .select(F.col("_page_url").alias("page_url"),
+                         F.col("_item_idx").alias("item_idx"),
+                         *[n for n, _ in _field_columns(self._proto)],
+                         F.lit(round_no).cast("long").alias("round")))
+        self.t_items.append(items.coalesce(out_files), {"round": round_no})
+        self._mark("fetch_extract+items")
+        if self._retain_html:
+            self._append_html(result, round_no, n_dequeued)
+
+        fetch_base = (result.filter("_kind = 'fetch'")
+                      .select(F.col("_page_url").alias("url"),
+                              F.col("_host").alias("host"),
+                              F.col("_fetch_ts").alias("fetch_ts"),
+                              F.col("_status").alias("status"),
+                              F.col("_n_items").alias("n_items"),
+                              F.col("_n_errors").alias("n_errors"))
+                      .withColumn("url_hash", F.xxhash64("url"))
+                      .withColumn("round", F.lit(round_no).cast("long")))
+        started = datetime.now(timezone.utc)
+        n_seq_parts = max(1, min(self.fetch_partitions,
+                                 (n_dequeued + 4095) // 4096))
+        seq_sorted = (fetch_base
+                      .repartitionByRange(n_seq_parts,
+                                          "fetch_ts", "host", "url")
+                      .sortWithinPartitions("fetch_ts", "host", "url")
+                      .withColumn("_pid", F.spark_partition_id())
+                      .withColumn("_local",
+                                  F.monotonically_increasing_id()
+                                  .bitwiseAND(F.lit((1 << 33) - 1)))
+                      ).cache()
+        # ONE tiny aggregation serves both the fetch_seq offsets AND the
+        # per-partition lineage metrics/round summary
+        stats = (seq_sorted.groupBy("_pid")
+                 .agg(F.count("*").alias("n_fetched"),
+                      F.sum(F.when(F.col("status") == "ok", 1)
+                            .otherwise(0)).alias("n_ok"),
+                      F.sum("n_items").alias("n_items"),
+                      F.sum("n_errors").alias("n_errors"))
+                 ).collect()
+        ended = datetime.now(timezone.utc)
+        self._mark("seq_stats")
+        offs, acc = {}, 0
+        for r in sorted(stats, key=lambda r: r["_pid"]):  # key-ordered
+            offs[int(r["_pid"])] = acc
+            acc += int(r["n_fetched"])
+        off_map = F.create_map(*[F.lit(v) for pid in sorted(offs)
+                                 for v in (pid, offs[pid])])
+        fetch_rows = (seq_sorted
+                      .withColumn("fetch_seq",
                                   (F.col("_local") + 1 +
                                    F.element_at(off_map, F.col("_pid")))
                                   .cast("long"))
-                              .select(*[f.name
-                                        for f in FETCHED_SCHEMA.fields]))
-                # single consumer (the append) — reads seq_sorted cache
-                self._hostpart_write(self.t_fetched, fetch_rows,
-                                     {"round": round_no},
-                                     coalesce=out_coalesce)
-                self._mark("fetched_write")
-                # incremental host feedback: THIS round's per-host delta
-                # (from the same seq_sorted cache — no rescan), so the
-                # adaptive dequeue never re-aggregates fetched history.
-                if self.adaptive_priority or self.t_host_stats.exists():
-                    self._hostpart_write(
-                        self.t_host_stats,
-                        self._host_stats_delta(seq_sorted)
-                        .withColumn("round",
-                                    F.lit(round_no).cast("long")),
-                        {"round": round_no}, coalesce=1)
-                    self._mark("host_stats")
-                seq_sorted.unpersist()
-            if deq_cached:
-                dequeued.unpersist()
-            outlink_rows = result.filter("_kind = 'outlink'").select(
-                "_outlink", "_depth", "_page_no")
+                      .select(*FETCHED_SCHEMA.names))
+        # single consumer (the append) — reads seq_sorted cache
+        self._hostpart_write(self.t_fetched, fetch_rows, {"round": round_no},
+                             coalesce=out_files)
+        self._mark("fetched_write")
+        # incremental host feedback: THIS round's per-host delta (from
+        # the same seq_sorted cache — no rescan), so the adaptive
+        # dequeue never re-aggregates fetched history.
+        if self.adaptive_priority or self.t_host_stats.exists():
+            self._hostpart_write(
+                self.t_host_stats,
+                self._host_stats_delta(seq_sorted)
+                .withColumn("round", F.lit(round_no).cast("long")),
+                {"round": round_no}, coalesce=1)
+            self._mark("host_stats")
+        seq_sorted.unpersist()
+        outlinks = result.filter("_kind = 'outlink'").select(
+            "_outlink", "_depth", "_page_no")
+        return stats, outlinks, started, ended
 
-        # --- outlinks → seen-set → new frontier rows
+    def _new_urls_phase(self, plan, outlink_rows, round_no):
+        """outlinks → seen-set → new frontier rows; returns n_new."""
         out_url = F.col("_outlink")
         if self.canonicalize_outlinks:
             out_url = self._canon_expr(out_url)
@@ -2088,61 +1779,71 @@ class CrawlEngine:
                     .withColumn("url_hash", F.xxhash64("url"))
                     # lower() matches url_host() (urlsplit().hostname is
                     # lowercased) — one host identity per site everywhere
-                    .withColumn("host",
-                                F.lower(F.expr("parse_url(url, 'HOST')")))
+                    .withColumn("host", F.lower(
+                        F.expr("try_parse_url(url, 'HOST')")))
+                    # a link without a host (opaque like http:x, or not a
+                    # valid URL at all) has no politeness or robots
+                    # identity: it is never enqueued
+                    .filter(F.col("host").isNotNull())
                     .withColumn("priority", F.col("depth").cast("double"))
                     .withColumn("discovered_round",
                                 F.lit(round_no).cast("long"))
-                    .select(*[f.name for f in FRONTIER_SCHEMA.fields]))
-        if (small_round
-                and not (self._seen_partitioned()
-                         and self.t_slabs.exists())
-                and self._files_bytes(self.t_seen)
-                <= self.dequeue_driver_bytes):
-            # SMALL-ROUND DRIVER COMMIT: ONE job computes the aggregated
-            # outlinks (url hash / host / optional canonicalization stay
-            # Spark expressions — no semantic re-implementation) and
-            # collects them; the Bloom+cuckoo flag (the same numpy code
-            # the executor kernel runs), the exact seen confirm (url
-            # membership over a bytes-gated pyarrow read — stricter-
-            # equivalent to the [url_hash, url] anti-join) and the
-            # frontier/seen/slab commits all run driver-side.
-            n_new = self._commit_new_urls_driver(outlinks, round_no)
+                    .select(*FRONTIER_COLS))
+        if plan.new_urls_driver:
+            return self._commit_new_urls_driver(outlinks, round_no)
+        # WRITE-FIRST commit: the new-url set is appended straight to the
+        # frontier (ONE job — no count() pass, no cache); n_new comes
+        # from the written parquet footers, and the seen append + slab
+        # update derive FROM THE WRITTEN FILES instead of recomputing
+        # the flag/anti-join lineage per consumer.
+        n_new, new_files = self._hostpart_write(
+            self.t_frontier, self._filter_new_urls(outlinks, plan),
+            {"round": round_no}, mode="append_counted")
+        self._mark("frontier(new_urls)")
+        self._commit_seen(round_no, n_new, files=new_files)
+        return n_new
+
+    def _commit_new_urls_driver(self, outlinks, round_no):
+        """Driver-side new-url commit: one Spark job aggregates the
+        outlinks and collects them (hash/host/canonicalization computed
+        by the SAME Spark expressions as the cluster side); the
+        Bloom+cuckoo flag, the exact seen confirm (url membership over
+        the driver-read seen files — stricter-equivalent to the
+        [url_hash, url] anti-join) and the frontier/seen/slab appends
+        then run driver-side. Returns n_new."""
+        t = outlinks.toArrow()
+        maybe = _maybe_seen(t.column("url_hash"), self.n_slabs,
+                            _filter_loader(self._slab_blobs().get))
+        keep = ~maybe
+        if maybe.any() and self.t_seen.exists():
+            seen_urls = pa.concat_tables(
+                [self._read_file_cached(self.t_seen.dir, f, _URL_ARROW)
+                 for f in self.t_seen.manifest()["files"]]) \
+                .column("url").combine_chunks()
+            # bloom/cuckoo positives that are NOT in the exact seen set
+            # are false positives — keep them (never drop a real URL)
+            keep |= ~pc.is_in(t.column("url"), value_set=seen_urls) \
+                .to_numpy(zero_copy_only=False)
+        new = t.filter(pa.array(keep)).cast(_FRONTIER_ARROW)
+        if new.num_rows:
+            self._append_host_keyed(self.t_frontier, new, round_no)
         else:
-            # WRITE-FIRST commit: the new-url set is appended straight
-            # to the frontier (ONE job — no count() pass, no cache);
-            # n_new comes from the written parquet footers, and the seen
-            # append + slab update are derived FROM THE WRITTEN FILES
-            # (driver-side pyarrow under slab_driver_threshold, a cheap
-            # file re-scan above it) instead of recomputing the
-            # flag/anti-join lineage per consumer.
-            new_urls = self._filter_new_urls(outlinks, round_no)
-            n_new, new_files = self._hostpart_append_counted(
-                self.t_frontier, new_urls, {"round": round_no})
-            self._mark("frontier(new_urls)")
-            if n_new:
-                hashes = self._append_seen_from_files(new_files, round_no,
-                                                      n_new)
-                self._mark("seen")
-                self._update_slabs(None, round_no, n_new=n_new,
-                                   hashes=hashes, files=new_files)
-                self._mark("slabs")
-            else:
-                # still mark the round on the tables for rollback
-                # bookkeeping (append_counted already meta-committed
-                # the frontier)
-                for t in (self.t_seen, self.t_slabs):
-                    t.commit_meta({"round": round_no})
+            self.t_frontier.commit_meta({"round": round_no})
+        self._mark("frontier(new_urls)")
+        self._commit_seen(round_no, new.num_rows, new=new)
+        return new.num_rows
 
-        # --- per-partition lineage metrics: from the SAME aggregation
-        # that produced the fetch_seq offsets (no extra job)
-        metrics_rows = [(round_no, int(r["_pid"]), int(r["n_fetched"]),
-                         int(r["n_items"] or 0), int(r["n_errors"] or 0),
-                         started, ended) for r in stats]
+    def _tail_phase(self, round_no, t0, n_dequeued, stats, n_new, started,
+                    ended):
+        """Per-partition lineage metrics (from the same rows that gave
+        the fetch_seq), the round summary row, and the round's
+        broadcast/cache release."""
         # driver-known tiny row sets: pyarrow write, no Spark job
-        self.t_metrics.append_rows(metrics_rows, METRICS_SCHEMA,
-                                   {"round": round_no})
-
+        self.t_metrics.append_rows(
+            [(round_no, int(r["_pid"]), int(r["n_fetched"]),
+              int(r["n_items"] or 0), int(r["n_errors"] or 0),
+              started, ended) for r in stats],
+            METRICS_SCHEMA, {"round": round_no})
         summary = {
             "round": round_no,
             "n_dequeued": n_dequeued,
@@ -2154,9 +1855,7 @@ class CrawlEngine:
         }
         self.t_rounds.append_rows([tuple(summary.values())],
                                   ROUNDS_SCHEMA, {"round": round_no})
-        if result is not None:
-            result.unpersist()
-        self._release_round_broadcasts()
+        self._release_round()
         self._mark("commit_tail")
         return summary
 
@@ -2244,10 +1943,6 @@ class CrawlEngine:
             self._hostpart_write(self.t_host_stats, merged,
                                  {"round": last, "compacted": True},
                                  mode="overwrite", coalesce=1)
-        # driver caches key on table HEAD, which just changed
-        self._slabs_mem = None
-        self._stats_mem = None
-        self._files_mem = None
 
     def items_table_schema(self):
         fields = [StructField("page_url", StringType()),
@@ -2291,6 +1986,7 @@ class CrawlEngine:
                                       now=self.now)
         return finalize_items_df(raw, self._proto, now=self.now)
 
+
     # ------------------------------------------------------------------ schema
 
     def _crawl_schema(self):
@@ -2316,28 +2012,7 @@ class CrawlEngine:
                 fields.append(f)
         return StructType(fields)
 
-    def _crawl_arrow_schema(self):
-        import pyarrow as pa
 
-        base = [
-            pa.field("_kind", pa.string()),
-            pa.field("_page_url", pa.string()),
-            pa.field("_host", pa.string()),
-            pa.field("_fetch_ts", pa.float64()),
-            pa.field("_status", pa.string()),
-            pa.field("_n_items", pa.int64()),
-            pa.field("_n_errors", pa.int64()),
-            pa.field("_item_idx", pa.int64()),
-            pa.field("_outlink", pa.string()),
-            pa.field("_depth", pa.int64()),
-            pa.field("_page_no", pa.int64()),
-        ]
-        if self._retain_html:
-            base.append(pa.field("_html_out", pa.string()))
-        for f in _arrow_schema(self._proto):
-            if f.name not in ("page_url", "item_idx", "nr_errors"):
-                base.append(f)
-        return pa.schema(base)
 
 
 def _blank_fields(fcols):

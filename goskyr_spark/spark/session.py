@@ -31,6 +31,10 @@ def get_spark(app="goskyr_spark", master=None, shuffle_partitions=None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # the crawl writes one table from both pyarrow (driver side of
+        # the round plan) and Spark; pin Spark to pyarrow's INT64
+        # microsecond timestamps instead of the legacy INT96 default
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # html-heavy tables: a 128 MB parquet split explodes to minutes of
         # kernel CPU — smaller input splits keep every core fed

@@ -15,7 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from goskyr_spark.spark.crawl import (CrawlEngine, FETCHED_SCHEMA,
-                                      FRONTIER_SCHEMA)
+                                      FRONTIER_SCHEMA, round_plan)
 from goskyr_spark.spark.session import get_spark
 from goskyr_spark.synth import event_scraper
 
@@ -109,13 +109,14 @@ def history_phase():
                     e.t_frontier.read(spark, schema=FRONTIER_SCHEMA),
                     {"round": rnd, "compacted": True}, mode="overwrite")
             aj, _ = e._antijoin_fetched_files()
-            for kind, fn in (("win", e._dequeue_window),
+            plan = round_plan(**e._measure_sizes())
+            for kind, fn in (("win", lambda: e._dequeue_window(plan)),
                              ("bkt", e._dequeue_bucketed)):
                 t0 = time.time()
                 n = fn().count()
                 times[(label, kind)].append(time.time() - t0)
                 counts[(label, kind)] = n
-            e._release_round_broadcasts()
+            e._release_round()
             if rnd in (1, R):
                 print(f"RESULT {label} r{rnd}: aj_files={len(aj)} "
                       f"win={times[(label, 'win')][-1]:.2f}s "

@@ -1,27 +1,55 @@
 """Digest gate: run the exact bench-spec crawl in window / bucketed /
-adaptive modes and assert the historical state digest 768bf8d782fb251d
+adaptive modes, each on the driver and on the cluster side of every
+round phase and on the two mixed plans the size policy produces first
+(cluster dequeue + driver commit; driver commit + cluster new-url
+commit with the partition-aligned seen test), and assert the historical state digest 768bf8d782fb251d
 (fetch order + statuses + seen set, unchanged since round 1). Run after
-any crawl-engine change. Uses bench.py's own spec/digest code so the
-gate can never drift from the frozen measurement."""
+any crawl-engine change (`make digest`). Uses bench.py's own
+spec/digest code so the gate can never drift from the frozen
+measurement."""
+import os
 import sys
+from dataclasses import fields
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
+from goskyr_spark.spark import crawl  # noqa: E402
 
 EXPECTED = "768bf8d782fb251d"
+
+
+def whole_round(driver):
+    """A plan with every phase on one side (seen test broadcast)."""
+    return crawl.RoundPlan(**{f.name: driver for f in fields(crawl.RoundPlan)
+                              if f.name != "seen_partitioned"},
+                           seen_partitioned=False)
+
 
 if __name__ == "__main__":
     cores = min(bench.CPUS, 16)
     spark = bench.make_spark(cores)
+    policy = crawl.round_plan
+    plans = {
+        "driver": whole_round(True),
+        "cluster": whole_round(False),
+        "dequeue_cluster": policy(
+            dequeue_bytes=crawl.DRIVER_STATE_BYTES + 1),
+        "seen_partitioned": policy(
+            slab_bytes=crawl.SEEN_BROADCAST_BYTES + 1),
+    }
     ok = True
-    for name, kw in [("window", {}),
-                     ("bucketed", {"frontier_buckets": 32}),
-                     ("adaptive", {"adaptive_priority": True})]:
-        out = bench.bench_crawl(spark, cores, digest=True, **kw)
-        good = out["digest"] == EXPECTED
-        ok &= good
-        print(f"{name}: digest={out['digest']} urls={out['urls']} "
-              f"items={out['items']} wall={out['wall']:.2f}s "
-              f"{'OK' if good else 'MISMATCH (expected ' + EXPECTED + ')'}")
+    for plan_name, forced in plans.items():
+        crawl.round_plan = lambda _forced=forced, **_: _forced
+        for name, kw in [("window", {}),
+                         ("bucketed", {"frontier_buckets": 32}),
+                         ("adaptive", {"adaptive_priority": True})]:
+            out = bench.bench_crawl(spark, cores, digest=True, **kw)
+            good = out["digest"] == EXPECTED
+            ok &= good
+            print(f"{plan_name}/{name}: digest={out['digest']} "
+                  f"urls={out['urls']} items={out['items']} "
+                  f"wall={out['wall']:.2f}s "
+                  f"{'OK' if good else 'MISMATCH (expected ' + EXPECTED + ')'}",
+                  flush=True)
     spark.stop()
     sys.exit(0 if ok else 1)

@@ -168,10 +168,14 @@ def subpage_site():
     srv.shutdown()
 
 
-def test_live_crawl_on_subpage_items_final(subpage_site, spark, tmp_path):
+@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+def test_live_crawl_on_subpage_items_final(subpage_site, spark, tmp_path,
+                                           plan):
     """Live mode with an on_subpage config retains fetched html in
     debug_pages and items_final() extracts the subpage field from it
-    (previously crashed: self.pages was None)."""
+    (previously crashed: self.pages was None) — on both sides of the
+    round commit (the driver side caches the kernel output and appends
+    the html from it before collecting)."""
     from goskyr_spark.spark.crawl import DEBUG_SCHEMA
     from goskyr_spark.spark.fetchers import StaticFetcher
 
@@ -210,21 +214,21 @@ def test_cli_crawl_config_requires_page_source(tmp_path):
 
 # --- per-round broadcast release -------------------------------------------------
 
-def test_round_broadcasts_released(spark, tmp_path):
+def test_round_broadcasts_released(spark, tmp_path, monkeypatch):
+    from conftest import force_plan
     from goskyr_spark.synth import (SynthSpec, event_scraper, host_name,
                                     synth_pages_df)
 
     spec = SynthSpec(n_hosts=2, pages_per_host=2, items_per_page=2,
                      hot_hosts=0, hot_factor=1)
     pages = synth_pages_df(spark, spec, include_fixtures=False)
-    # slab_driver_threshold=0 forces the DISTRIBUTED seen/slab paths —
-    # since round 7 the small-round driver fast paths create no
+    # the cluster plan: the driver side of the round creates no
     # broadcasts at all (nothing to release), so the release contract
-    # is exercised on the code paths that still broadcast
+    # is exercised on the phases that still broadcast
+    force_plan(monkeypatch, "cluster")
     eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
                       [f"https://{host_name(h)}/list/1"
-                       for h in range(spec.n_hosts)], now=NOW,
-                      slab_driver_threshold=0)
+                       for h in range(spec.n_hosts)], now=NOW)
     seen_any = []
     orig = eng._bc
 

@@ -169,7 +169,9 @@ def test_host_stats_incremental_matches_fetched(spark, tmp_path):
 
     eng = _mini_engine(spark, tmp_path, adaptive_priority=True)
     eng.run(max_rounds=6)
-    hs = eng._host_stats_df()
+    from goskyr_spark.spark.crawl import HOST_STATS_SCHEMA
+
+    hs = eng.t_host_stats.read(spark, schema=HOST_STATS_SCHEMA)
     assert hs.select("round").distinct().count() > 1
     got = {(r["host"]): (r["nf"], r["nok"], r["ni"])
            for r in hs.groupBy("host")

@@ -1,7 +1,7 @@
-"""Round-7 optimization pins: the small-round DRIVER fast paths
-(dequeue, new-url commit, fetched commit) must be bit-identical to the
-distributed paths they bypass, and the de-duplicated query lineages must
-match their reference formulations exactly."""
+"""Round-7 optimization pins: the driver side of every round phase
+(dequeue, round commit, new-url commit, seen/slabs) must be
+bit-identical to the cluster side it bypasses, and the de-duplicated
+query lineages must match their reference formulations exactly."""
 
 import hashlib
 import shutil
@@ -66,41 +66,33 @@ def _run(spark, pages, spec, **kw):
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def _force_distributed(eng_kw):
-    """Gates that push EVERY round onto the distributed code paths the
-    fast paths bypass (dequeue job, flag/anti-join lineage, range-
-    partitioned fetch_seq, executor-side slab build)."""
-    return dict(eng_kw, slab_driver_threshold=0)
-
-
-@pytest.mark.parametrize("mode_kw", [
+MODES = [
     {},                            # window dequeue
     {"frontier_buckets": 8},       # bucketed dequeue
     {"adaptive_priority": True},   # adaptive window dequeue
-])
-def test_driver_fast_paths_match_distributed(spark, pages, spec, mode_kw):
-    fast_digest, fast_sum, fast_items = _run(spark, pages, spec, **mode_kw)
-    slow_digest, slow_sum, slow_items = _run(
-        spark, pages, spec, **_force_distributed(mode_kw))
-    # also force the distributed dequeue specifically
-    wd = tempfile.mkdtemp(prefix="r7fp-")
-    try:
-        eng = CrawlEngine(spark, wd, pages, event_scraper,
-                          [f"https://{host_name(h)}/list/1"
-                           for h in range(spec.n_hosts)],
-                          now=NOW, fetch_partitions=4,
-                          round_budget=10_000, **mode_kw)
-        eng.dequeue_driver_bytes = 0
-        eng.run(max_rounds=30)
-        nodeq_digest = _digest(eng, spark)
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-    assert fast_digest == slow_digest == nodeq_digest
-    assert fast_items == slow_items
-    assert [s.get("n_dequeued") for s in fast_sum] == \
-        [s.get("n_dequeued") for s in slow_sum]
-    assert [s.get("n_items") for s in fast_sum] == \
-        [s.get("n_items") for s in slow_sum]
+]
+
+
+@pytest.fixture(scope="module")
+def reference(spark, pages, spec):
+    """Crawl state per mode under the real size policy (every phase on
+    the driver at this scale), computed before any plan is forced."""
+    return [_run(spark, pages, spec, **kw) for kw in MODES]
+
+
+@pytest.mark.parametrize("mode", range(len(MODES)),
+                         ids=["mode_kw0", "mode_kw1", "mode_kw2"])
+def test_driver_fast_paths_match_distributed(spark, pages, spec, reference,
+                                             plan, mode):
+    """Every side of every phase, forced through the round plan, ends
+    in the state the size policy's choice produces: digest, items and
+    per-round counts."""
+    ref_digest, ref_sum, ref_items = reference[mode]
+    digest, summaries, items = _run(spark, pages, spec, **MODES[mode])
+    assert digest == ref_digest
+    assert items == ref_items
+    assert [(s.get("n_dequeued"), s.get("n_items")) for s in summaries] == \
+        [(s.get("n_dequeued"), s.get("n_items")) for s in ref_sum]
 
 
 def test_append_counted_empty_append_is_meta_only(spark, tmp_path):

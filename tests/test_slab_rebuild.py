@@ -39,7 +39,7 @@ def test_rebuild_keeps_seen_exact(spark, tmp_path):
     assert len(urls) == len(set(urls)), "duplicate urls in seen set"
 
     # slabs grew beyond the initial capacity and contain every seen hash
-    slabs = eng._slabs_cached()
+    slabs = eng._slab_blobs()
     assert any(CuckooFilter.from_bytes(c).nbuckets * 4 > 8
                for _, c in slabs.values())
     import numpy as np
@@ -75,50 +75,50 @@ def _state(eng, spark):
     return seen, fetched
 
 
-def test_distributed_slab_update_matches_driver_path(spark, tmp_path):
-    """slab_driver_threshold=0 forces EVERY update (incl. rebuilds at
-    slab_capacity=8) through the executor-side slab-aligned path; the
-    crawl's observable state must be identical to the driver path."""
-    ref = _run_engine(spark, tmp_path, "drv", n_slabs=2, slab_capacity=8,
-                      fetch_partitions=4)
-    dist = _run_engine(spark, tmp_path, "dist", n_slabs=2, slab_capacity=8,
-                       fetch_partitions=4, slab_driver_threshold=0)
-    assert _state(ref, spark) == _state(dist, spark)
+@pytest.fixture(scope="module")
+def policy_state(spark, tmp_path_factory):
+    """Crawl state under the real size policy (driver side at this
+    scale), computed before any plan is forced."""
+    eng = _run_engine(spark, tmp_path_factory.mktemp("policy"), "ref",
+                      n_slabs=2, slab_capacity=8, fetch_partitions=4)
+    return _state(eng, spark)
 
-    # the distributed slabs contain every seen hash (no false negatives)
+
+def test_slab_paths_match_size_policy(spark, tmp_path, policy_state, plan):
+    """Every forced plan — driver, cluster (executor-side slab-aligned
+    update, incl. rebuilds at slab_capacity=8), cluster with the
+    partition-aligned seen test, and the policy's mixed plans — ends in
+    the size policy's crawl state, at a different parallelism, and its
+    slabs hold every seen hash (no false negatives)."""
+    eng = _run_engine(spark, tmp_path, "forced", n_slabs=2,
+                      slab_capacity=8, fetch_partitions=7)
+    assert _state(eng, spark) == policy_state
+
     import numpy as np
 
-    slabs = dist._slabs_cached()
-    for r in dist.t_seen.read(spark).collect():
+    slabs = eng._slab_blobs()
+    for r in eng.t_seen.read(spark).collect():
         sid = int(r["url_hash"]) % 2
         cf = CuckooFilter.from_bytes(slabs[sid][1])
         h = np.array([r["url_hash"]], dtype=np.int64).view(np.uint64)
         assert cf.contains_many(h)[0], f"false negative for {r['url']}"
     # seen set exact: no url fetched twice
-    fetched = [r["url"] for r in dist.t_fetched.read(spark).collect()]
+    fetched = [r["url"] for r in eng.t_fetched.read(spark).collect()]
     assert len(fetched) == len(set(fetched))
 
 
-def test_partitioned_seen_test_matches_broadcast(spark, tmp_path):
-    """seen_mode='partitioned' (tasks read only their slab from parquet,
-    nothing broadcast) must be observationally identical to broadcast
-    mode, at different parallelism."""
-    ref = _run_engine(spark, tmp_path, "bc", n_slabs=4, slab_capacity=64,
-                      fetch_partitions=4, seen_mode="broadcast")
-    part = _run_engine(spark, tmp_path, "part", n_slabs=4, slab_capacity=64,
-                       fetch_partitions=7, seen_mode="partitioned")
-    assert _state(ref, spark) == _state(part, spark)
+def test_partitioned_seen_resume(spark, tmp_path, monkeypatch):
+    """Partitioned seen test + cluster slab update + crash-resume:
+    rollback must replay identically (slab files of rolled-back rounds
+    are ignored via round filtering)."""
+    from conftest import force_plan
 
-
-def test_partitioned_seen_resume(spark, tmp_path):
-    """Partitioned mode + crash-resume: rollback must replay identically
-    (slab files of rolled-back rounds are ignored via round filtering)."""
+    force_plan(monkeypatch, "cluster_partitioned")
     spec = SynthSpec(n_hosts=3, pages_per_host=3, items_per_page=2,
                      hot_hosts=1, hot_factor=2)
     pages = synth_pages_df(spark, spec, include_fixtures=False).cache()
     seeds = [f"https://{host_name(h)}/list/1" for h in range(spec.n_hosts)]
-    kw = dict(now=NOW, n_slabs=2, slab_capacity=16, fetch_partitions=3,
-              seen_mode="partitioned", slab_driver_threshold=0)
+    kw = dict(now=NOW, n_slabs=2, slab_capacity=16, fetch_partitions=3)
     ref = CrawlEngine(spark, str(tmp_path / "ref"), pages, event_scraper,
                       seeds, **kw)
     ref.run(max_rounds=20)

@@ -73,6 +73,22 @@ def crawl_state_digest(eng, spark):
     return h.hexdigest()[:16]
 
 
+def slab_digest(eng, spark):
+    """Digest of every slab row (slab_id, round, bloom, cuckoo, count,
+    capacity): equal across round plans, since every plan builds the
+    same slab rows."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for r in eng.t_slabs.read(spark).orderBy("slab_id", "round").select(
+            "slab_id", "round", "bloom", "cuckoo", "count", "capacity") \
+            .collect():
+        h.update(f"{r['slab_id']}|{r['round']}|{r['count']}|"
+                 f"{r['capacity']}|".encode())
+        h.update(bytes(r["bloom"]) + b"|" + bytes(r["cuckoo"]))
+    return h.hexdigest()[:16]
+
+
 def bench_crawl(spark, cores, digest=False, **engine_kw):
     from goskyr_spark.spark.crawl import CrawlEngine
     from goskyr_spark.synth import event_scraper, host_name, synth_pages_df
@@ -96,6 +112,7 @@ def bench_crawl(spark, cores, digest=False, **engine_kw):
                "urls_per_sec": n_fetched / wall if wall else 0.0}
         if digest:
             out["digest"] = crawl_state_digest(eng, spark)
+            out["slab_digest"] = slab_digest(eng, spark)
         return out
     finally:
         pages.unpersist()

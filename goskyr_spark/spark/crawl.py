@@ -36,6 +36,16 @@ passes SEEN_BROADCAST_BYTES, then runs partition-aligned; join sides
 under BROADCAST_JOIN_BYTES get a broadcast hint. Both sides of every
 phase produce byte-identical state (pytest-asserted per plan).
 
+Slabs: the driver reads slab metadata (each slab's latest file, round,
+count and capacity) with pyarrow from the stat columns of the live slab
+files, never through Spark (_slab_latest). _update_slabs picks on the
+driver, per slab, fresh build / rebuild from the seen slice / insert;
+one builder, _slab_build, makes every slab row — in-process while the
+round's new URLs are under DRIVER_ROWS and the seen test broadcasts,
+else once per partition of a slab-aligned shuffle whose tasks read and
+write the blobs themselves. Hashes are sorted before insert, so every
+plan writes the same slab rows.
+
 Determinism: every ordering is an explicit sort key (priority, url,
 host); the virtual politeness clock is a pure function of the dequeue
 set; no wall-clock, partition-order, or hash-seed dependence — local[8]
@@ -247,6 +257,9 @@ _SLAB_ARROW = to_arrow_schema(SLAB_SCHEMA)
 _URL_ARROW = pa.schema([_SEEN_ARROW.field("url")])
 _URL_HASH_ARROW = pa.schema([_SEEN_ARROW.field("url"),
                              _SEEN_ARROW.field("url_hash")])
+_HASH_ARROW = pa.schema([_SEEN_ARROW.field("url_hash")])
+_SLAB_STATS_ARROW = pa.schema([_SLAB_ARROW.field(n) for n in
+                               ("slab_id", "round", "count", "capacity")])
 _HOST_SUMS_ARROW = pa.schema(list(_HOST_STATS_ARROW)[:4])
 
 
@@ -258,12 +271,12 @@ def _read_parquet(paths, schema):
          for p in paths])
 
 
-# --- executor-side slab blob access -------------------------------------------
-# Worker-local cache of deserialization inputs: one (file, slab, round)
-# triple is read at most once per Python worker per slab generation. The
-# parquet read prunes to the single matching row (predicate pushdown on
-# slab_id/round), so a task touches only its own slabs' bytes — never the
-# whole filter set.
+# --- slab blob access (executors and driver) ----------------------------------
+# Process-local cache of deserialization inputs: one (file, slab, round)
+# triple is read at most once per Python worker (or driver) per slab
+# generation. The parquet read prunes to the single matching row
+# (predicate pushdown on slab_id/round), so a task touches only its own
+# slabs' bytes — never the whole filter set.
 _SLAB_BLOB_CACHE = {}
 
 
@@ -282,6 +295,16 @@ def _read_slab_blobs(path, sid, round_no):
         _SLAB_BLOB_CACHE.clear()
     _SLAB_BLOB_CACHE[key] = val
     return val
+
+
+def _latest_blobs(latest):
+    """blobs(sid) over a _slab_latest() map {sid: (path, round, ...)}:
+    the (bloom, cuckoo) bytes of that slab's latest row, or None."""
+    def blobs(sid):
+        at = latest.get(sid)
+        return None if at is None else _read_slab_blobs(at[0], sid, at[1])
+
+    return blobs
 
 
 def _filter_loader(blobs):
@@ -357,10 +380,33 @@ def _insert_filters(blobs, arr):
     return bloom, cuckoo
 
 
-def _slab_row(sid, round_no, filters):
-    bloom, cuckoo = filters
-    return (sid, round_no, bloom.to_bytes(), cuckoo.to_bytes(),
-            cuckoo.count, cuckoo.nbuckets * CuckooFilter.SLOTS)
+def _by_slab(hashes, n_slabs):
+    """{sid: int64 hashes} of `hashes` grouped by url_hash mod n_slabs."""
+    hashes = np.asarray(hashes, dtype=np.int64)
+    sids = hashes % np.int64(n_slabs)
+    return {int(s): hashes[sids == s] for s in np.unique(sids)}
+
+
+def _slab_build(groups, prev, caps, round_no):
+    """SLAB_SCHEMA Arrow table of one round's slab rows — the one
+    builder, run in-process by the driver and once per partition by the
+    cluster kernel. groups = {sid: int64 hashes}; a sid with a capacity
+    in caps is built fresh from its hashes at it, any other inserts them
+    into prev(sid), its previous (bloom, cuckoo) blobs. Hashes are
+    sorted first, so a row depends only on the slab's hash set, previous
+    blobs and capacity, never on arrival order. An insert whose cuckoo
+    overflows gives a row with NULL blobs."""
+    rows = []
+    for sid in sorted(groups):
+        arr = np.sort(_u64(groups[sid]))
+        cap = caps.get(sid)
+        f = (_fresh_filters(arr, cap) if cap is not None
+             else _insert_filters(prev(sid), arr))
+        rows.append((sid, round_no, None, None, 0, 0) if f is None else
+                    (sid, round_no, f[0].to_bytes(), f[1].to_bytes(),
+                     f[1].count, f[1].nbuckets * CuckooFilter.SLOTS))
+    return pa.Table.from_pylist(
+        [dict(zip(_SLAB_ARROW.names, r)) for r in rows], schema=_SLAB_ARROW)
 
 
 # --- dequeue: the pandas arithmetic, once --------------------------------------
@@ -406,8 +452,8 @@ def _u64(int64_array):
 
 class CrawlEngine:
     def __init__(self, spark, workdir, pages_df, scraper_factory, seeds,
-                 per_host_budget=64, round_budget=100_000, user_agent="*",
-                 n_slabs=8, slab_capacity=4096, salt_threshold=512,
+                 per_host_budget=64, round_budget=100_000, n_slabs=8,
+                 slab_capacity=4096, salt_threshold=512,
                  salt_factor=4, now=None, fetch_partitions=None,
                  debug=False,
                  live_fetcher=None, compact_every=None,
@@ -436,7 +482,6 @@ class CrawlEngine:
         self.seeds = sorted(set(seeds))
         self.per_host_budget = per_host_budget
         self.round_budget = round_budget
-        self.user_agent = user_agent
         self.n_slabs = n_slabs
         self.slab_capacity = slab_capacity
         self.salt_threshold = salt_threshold
@@ -526,9 +571,9 @@ class CrawlEngine:
         # crawl (the 10^10 design point) cannot accumulate blocks
         self._round_bcs = []
         self._round_cached = []
-        # slab-derived values keyed by the slab table HEAD (_slab_memo)
-        # and immutable table files read driver-side (_read_file_cached)
-        self._slab_cache = {}
+        # (slab table HEAD, _slab_latest()) and immutable table files
+        # read driver-side (_read_file_cached)
+        self._slab_head = (None, {})
         self._file_cache = {}
         self._sizes = {}
         self.last_phases, self._mark_t = [], time.time()
@@ -593,9 +638,10 @@ class CrawlEngine:
     def _read_file_cached(self, dirpath, rel, schema):
         """Driver-side pyarrow read of ONE table file, memoized by path:
         table files are immutable (uuid names) and the driver-side
-        phases re-read the same live files every round. Only files read
-        while round_plan() kept their phase on the driver get cached, and
-        _measure_sizes drops each one once it leaves the live inputs."""
+        phases re-read the same live files every round. Only the slab
+        stats and files read while round_plan() kept their phase on the
+        driver get cached, and _measure_sizes drops each one once it
+        leaves the live inputs."""
         key = (os.path.join(dirpath, rel), tuple(schema.names))
         t = self._file_cache.get(key)
         if t is None:
@@ -931,69 +977,25 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ seen
 
-    def _slab_memo(self, key, load=None):
-        """A value derived from the slab table, kept until its HEAD
-        moves (new slab rows, rollback, compaction all commit). A miss
-        calls load(), or returns None without one; an absent table
-        yields {} with no job."""
+    def _slab_latest(self):
+        """{sid: (path, round, count, capacity)} of each slab's latest
+        row: the slab metadata behind every slab decision, the plan's
+        slab_bytes and each blob read. One pyarrow read of the four stat
+        columns of the live slab files (immutable, so each is read once,
+        through _read_file_cached), redone when the slab HEAD moves — no
+        Spark job, and the filter blobs are never touched."""
         head = self.t_slabs.head()
-        hit = self._slab_cache.get(key)
-        if hit is not None and hit[0] == head:
-            return hit[1]
-        if load is None:
-            return None
-        val = load() if self.t_slabs.exists() else {}
-        self._slab_cache[key] = (head, val)
-        return val
-
-    def _slab_blobs(self):
-        """{sid: (bloom, cuckoo) blobs} of each slab's latest row. Only
-        the broadcast seen test and the driver-side phases read blobs —
-        partitioned mode never materializes them on the driver."""
-        def load():
-            w = Window.partitionBy("slab_id").orderBy(F.desc("round"))
-            latest = (self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
-                      .withColumn("_rn", F.row_number().over(w))
-                      .filter("_rn = 1"))
-            return {int(r["slab_id"]): (r["bloom"], r["cuckoo"])
-                    for r in latest.select("slab_id", "bloom", "cuckoo")
-                    .collect()}
-        return self._slab_memo("blobs", load)
-
-    def _slab_stats(self):
-        """{sid: (count, capacity)} of each slab's LATEST row — a pruned
-        columnar read; the filter blobs are never touched. Drives
-        rebuild/capacity decisions and the plan at any scale."""
-        def load():
-            latest = (self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
-                      .groupBy("slab_id")
-                      .agg(F.max(F.struct("round", "count", "capacity"))
-                           .alias("m")))
-            return {int(r["slab_id"]):
-                    (int(r["m"]["count"]), int(r["m"]["capacity"]))
-                    for r in latest.collect()}
-        return self._slab_memo("stats", load)
-
-    def _slab_latest_files(self):
-        """{sid: (parquet_path, round)} locating each slab's latest row,
-        so an executor task can read exactly its slab's bytes (predicate
-        pushdown on slab_id/round). One tiny pruned job per commit."""
-        def load():
-            from urllib.parse import unquote, urlparse
-
-            latest = (self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
-                      .select("slab_id", "round",
-                              F.input_file_name().alias("f"))
-                      .groupBy("slab_id")
-                      .agg(F.max(F.struct("round", "f")).alias("m")))
-            out = {}
-            for r in latest.collect():
-                p = r["m"]["f"]
-                if p.startswith("file:"):
-                    p = unquote(urlparse(p).path)
-                out[int(r["slab_id"])] = (p, int(r["m"]["round"]))
-            return out
-        return self._slab_memo("files", load)
+        if self._slab_head[0] != head:
+            latest = {}
+            for f in self.t_slabs.manifest()["files"]:
+                path = os.path.join(self.t_slabs.dir, f)
+                t = self._read_file_cached(self.t_slabs.dir, f,
+                                           _SLAB_STATS_ARROW)
+                for sid, rnd, n, cap in zip(*t.to_pydict().values()):
+                    if sid not in latest or rnd > latest[sid][1]:
+                        latest[sid] = (path, rnd, n, cap)
+            self._slab_head = (head, latest)
+        return self._slab_head[1]
 
     def _append_seen(self, new, round_no):
         """Driver-side seen append of an Arrow table of (url, url_hash);
@@ -1036,179 +1038,92 @@ class CrawlEngine:
     # --- slab update ---------------------------------------------------------
 
     def _update_slabs(self, plan, round_no, hashes, files):
-        """Insert new url hashes into their slab's bloom+cuckoo filters.
+        """Insert this round's new url hashes into their slabs'
+        Bloom+cuckoo filters. Filters must never have FALSE NEGATIVES (a
+        seen url missing from its slab would re-enter the frontier), so
+        every touched slab is persisted each round.
 
-        Filters must never have FALSE NEGATIVES (a seen url missing from
-        its slab would re-enter the frontier), so persistence is strictly
-        per-round. Capacity adapts: a slab nearing its bound is rebuilt
-        at double size from the authoritative seen table (_build_cap).
-        The cluster side reads its input from the driver-held hashes or,
-        when the seen copy ran in Spark, as a re-scan of `files`."""
-        if plan.slabs_driver:
-            self._update_slabs_driver(hashes, round_no)
-            return
+        The per-slab choice is made here, once, for both sides: a new
+        slab is built from its new hashes; one that would pass 80% load
+        is rebuilt at double size from its seen slice (seen commits
+        first, so the slice already holds this round's hashes); any
+        other takes an insert, and an insert whose cuckoo overflows is
+        retried once as a rebuild at _grow_cap. The plan only says where
+        _slab_build runs. `hashes` are the new hashes when the driver
+        holds them (always when the plan puts slabs on the driver), else
+        `files` are the round's new frontier files."""
+        latest = self._slab_latest()
         if hashes is not None:
-            new = self.spark.createDataFrame(
+            counts = {sid: len(h)
+                      for sid, h in _by_slab(hashes, self.n_slabs).items()}
+        else:
+            sid = F.pmod(F.col("url_hash"), F.lit(self.n_slabs))
+            counts = {int(r[0]): int(r[1]) for r in self.spark.read
+                      .parquet(*files).groupBy(sid).count().collect()}
+        caps = {sid: _build_cap(latest[sid][2:] if sid in latest else None,
+                                n, self.slab_capacity)
+                for sid, n in counts.items()}
+        rebuild = {sid for sid in caps
+                   if caps[sid] is not None and sid in latest}
+        write = self._slabs_driver if plan.slabs_driver else self._slabs_cluster
+        write(round_no, caps, rebuild, latest, hashes, files)
+        done = self._slab_latest()
+        failed = {sid for sid in caps if done[sid][1] != round_no}
+        if failed:
+            write(round_no, {sid: _grow_cap(latest[sid][2:], counts[sid])
+                             for sid in failed}, failed, latest, hashes, files)
+
+    def _slabs_driver(self, round_no, caps, rebuild, latest, hashes, files):
+        """_slab_build in-process over the driver-held hashes and, for
+        the `rebuild` slabs, their seen slices read by pyarrow; one
+        pyarrow append of the rows that did not overflow."""
+        groups = _by_slab(hashes, self.n_slabs)
+        if rebuild:
+            seen = _read_parquet(
+                [os.path.join(self.t_seen.dir, f)
+                 for f in self.t_seen.manifest()["files"]], _HASH_ARROW)
+            by_sid = _by_slab(seen.column(0).to_numpy(), self.n_slabs)
+            groups.update({sid: by_sid[sid] for sid in rebuild})
+        t = _slab_build({sid: groups[sid] for sid in caps},
+                        _latest_blobs(latest), caps, round_no)
+        self.t_slabs.append_arrow(t.filter(pc.is_valid(t["cuckoo"])),
+                                  {"round": round_no})
+
+    def _slabs_cluster(self, round_no, caps, rebuild, latest, hashes, files):
+        """_slab_build in Spark tasks, once per partition of a
+        slab-aligned shuffle of the new hashes (driver-held, or re-read
+        from `files`) and, for the `rebuild` slabs, their seen slices. Each
+        task reads its slabs' previous blobs from slab parquet and the
+        rows are written from the executors: blobs never reach the
+        driver."""
+        spark, n_slabs = self.spark, self.n_slabs
+        sid = F.pmod(F.col("url_hash"), F.lit(n_slabs))
+        if hashes is not None:
+            new = spark.createDataFrame(
                 pd.DataFrame({"url_hash": np.asarray(hashes, np.int64)}),
                 "url_hash long")
         else:
-            new = self.spark.read.parquet(*files).select("url_hash")
-        self._update_slabs_distributed(new, round_no, hashes)
-
-    def _rebuild_from_seen(self, sid, cap):
-        """Exact filters for one slab from the seen table slice, which
-        ALREADY includes this round's new urls (seen commits first)."""
-        seen = self.t_seen.read(self.spark, schema=SEEN_SCHEMA)
-        old = [r["url_hash"] for r in seen.filter(
-            F.pmod(F.col("url_hash"), F.lit(self.n_slabs)) == sid)
-            .select("url_hash").collect()]
-        return _fresh_filters(_u64(old), cap)
-
-    def _update_slabs_driver(self, hashes, round_no):
-        hashes = np.asarray(hashes, dtype=np.int64)
-        sids = hashes % np.int64(self.n_slabs)
-        slabs = dict(self._slab_blobs())
-        stats = dict(self._slab_stats())
-        rows = []
-        for sid in np.unique(sids).tolist():
-            arr = _u64(hashes[sids == sid])
-            stat = stats.get(sid)
-            cap = _build_cap(stat, len(arr), self.slab_capacity)
-            if cap is None:
-                f = (_insert_filters(slabs[sid], arr)
-                     or self._rebuild_from_seen(sid,
-                                                _grow_cap(stat, len(arr))))
-            elif stat is None:
-                f = _fresh_filters(arr, cap)
-            else:
-                f = self._rebuild_from_seen(sid, cap)
-            rows.append(_slab_row(sid, round_no, f))
-            slabs[sid], stats[sid] = rows[-1][2:4], rows[-1][4:6]
-        if rows:
-            # driver-known rows: pyarrow append, no Spark job
-            self.t_slabs.append_rows(rows, SLAB_SCHEMA, {"round": round_no})
-        # the blobs were just built here: keep them warm for next round
-        head = self.t_slabs.head()
-        self._slab_cache = {"blobs": (head, slabs), "stats": (head, stats)}
-
-    def _update_slabs_distributed(self, new_urls_df, round_no, hashes):
-        """Slab-aligned executor-side update (the 10^10-URL path): new
-        url hashes shuffle by slab id; each task builds its slabs' new
-        Bloom+cuckoo bytes and writes them straight to slab parquet —
-        blobs never touch the driver. Slabs that would exceed 80% load
-        are rebuilt exactly from the seen-table slice, shipped through
-        the same shuffle, at a capacity fixed driver-side from the
-        pruned stats read. Driver-held hashes make the per-sid count a
-        numpy bincount instead of a Spark aggregation."""
-        stats = self._slab_stats()
-        if hashes is not None:
-            vals, cnts = np.unique(np.asarray(hashes, dtype=np.int64)
-                                   % np.int64(self.n_slabs),
-                                   return_counts=True)
-            new_counts = dict(zip(vals.tolist(), cnts.tolist()))
-        else:
-            sid_col = F.pmod(F.col("url_hash"),
-                             F.lit(self.n_slabs)).alias("sid")
-            new_counts = {int(r["sid"]): int(r["c"])
-                          for r in new_urls_df.select(sid_col).groupBy("sid")
-                          .agg(F.count("*").alias("c")).collect()}
-        if not new_counts:
-            return
-        build_caps, incr_sids = {}, []
-        for sid, n in sorted(new_counts.items()):
-            cap = _build_cap(stats.get(sid), n, self.slab_capacity)
-            if cap is None:
-                incr_sids.append(sid)
-            else:
-                build_caps[sid] = cap
-        out = self._run_slab_build(new_urls_df, round_no, build_caps,
-                                   incr_sids).cache()
-        # incremental tasks that overflow their cuckoo emit a NULL blob
-        # (they don't hold the seen slice needed for an exact rebuild):
-        # retry those through the rebuild path. Rare — the 80% driver
-        # pre-check bounds the load.
-        failed = [int(r["slab_id"]) for r in
-                  out.filter("cuckoo IS NULL").select("slab_id").collect()]
-        ok = out.filter("cuckoo IS NOT NULL")
-        if failed:
-            retry_caps = {sid: _grow_cap(
-                stats.get(sid, (0, self.slab_capacity)),
-                new_counts.get(sid, 0)) for sid in failed}
-            ok = ok.unionByName(
-                self._run_slab_build(new_urls_df, round_no, retry_caps, []))
-        self.t_slabs.append(ok, {"round": round_no})
-        out.unpersist()
-
-    def _run_slab_build(self, new_urls_df, round_no, build_caps, incr_sids):
-        """One slab-aligned shuffle + mapInArrow producing SLAB_SCHEMA
-        rows for build_caps slabs (fresh build from the seen slice at the
-        given capacity) and incr_sids slabs (insert new hashes into the
-        previous blobs, read task-side from slab parquet or taken from
-        the warm driver broadcast)."""
-        spark = self.spark
-        n_slabs = self.n_slabs
-        slab_capacity = self.slab_capacity
-        sid_expr = F.pmod(F.col("url_hash"), F.lit(n_slabs)).alias("sid")
-        inputs = []
-        if incr_sids:
-            inputs.append(new_urls_df.select(sid_expr, "url_hash")
-                          .filter(F.col("sid").isin(incr_sids)))
-        if build_caps:
-            # seen ALREADY includes this round's new urls (committed
-            # first), so the slice alone is the slab's exact content
-            seen = self.t_seen.read(spark, schema=SEEN_SCHEMA)
-            inputs.append(seen.select(sid_expr, "url_hash")
-                          .filter(F.col("sid").isin(sorted(build_caps))))
-        inp = inputs[0]
-        for other in inputs[1:]:
-            inp = inp.unionByName(other)
-
-        warm = self._slab_memo("blobs") or {}
-        bc_prev = self._bc({sid: warm[sid] for sid in incr_sids
-                            if sid in warm})
-        files = self._slab_latest_files()
-        bc_files = self._bc({sid: files[sid] for sid in incr_sids
-                             if sid in files})
-        caps = dict(build_caps)
+            new = spark.read.parquet(*files).select("url_hash")
+        inp = new.filter(sid.isin([s for s in caps if s not in rebuild]))
+        if rebuild:
+            inp = inp.unionByName(
+                self.t_seen.read(spark, schema=SEEN_SCHEMA)
+                .select("url_hash").filter(sid.isin(sorted(rebuild))))
+        bc = self._bc({s: latest[s] for s in caps if caps[s] is None})
 
         def build(batches):
-            by_sid = {}
-            for batch in batches:
-                sids = np.asarray(batch.column(0).to_numpy(
-                    zero_copy_only=False), dtype=np.int64)
-                hs = np.asarray(batch.column(1).to_numpy(
-                    zero_copy_only=False), dtype=np.int64)
-                for sid in np.unique(sids):
-                    by_sid.setdefault(int(sid), []).append(hs[sids == sid])
-
-            rows = []
-            for sid, chunks in sorted(by_sid.items()):
-                arr = np.concatenate(chunks).view(np.uint64)
-                prev = bc_prev.value.get(sid)
-                info = bc_files.value.get(sid)
-                if prev is None and info is not None:
-                    prev = _read_slab_blobs(info[0], sid, info[1])
-                if sid in caps:
-                    f = _fresh_filters(arr, caps[sid])
-                elif prev is None:
-                    # no prior slab row (shouldn't happen for incr sids;
-                    # exactness first): fresh build from the new hashes
-                    f = _fresh_filters(
-                        arr, _build_cap(None, len(arr), slab_capacity))
-                else:
-                    f = _insert_filters(prev, arr)
-                # a NULL blob marks an overflow: the driver retries it
-                # through the rebuild path
-                rows.append(_slab_row(sid, round_no, f) if f is not None
-                            else (sid, round_no, None, None, 0, 0))
-            if rows:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, f.type)
-                     for c, f in zip(zip(*rows), _SLAB_ARROW)],
-                    schema=_SLAB_ARROW)
+            hs = [np.asarray(b.column(0).to_numpy(zero_copy_only=False),
+                             dtype=np.int64) for b in batches]
+            if hs:
+                yield from _slab_build(
+                    _by_slab(np.concatenate(hs), n_slabs),
+                    _latest_blobs(bc.value), caps, round_no).to_batches()
 
         n_parts = max(1, min(n_slabs, self.fetch_partitions))
-        return inp.repartition(n_parts, "sid").mapInArrow(build, SLAB_SCHEMA)
+        self.t_slabs.append(inp.repartition(n_parts, sid)
+                            .mapInArrow(build, SLAB_SCHEMA)
+                            .filter("cuckoo IS NOT NULL"),
+                            {"round": round_no})
 
     # --- seen-set membership test ---------------------------------------------
 
@@ -1243,26 +1158,21 @@ class CrawlEngine:
         n_slabs = self.n_slabs
         flag_schema = StructType(candidates.schema.fields +
                                  [StructField("maybe_seen", LongType())])
+        latest = self._slab_latest()
         if partitioned:
-            bc = self._bc(self._slab_latest_files())
-
-            def blobs(sid):
-                v = bc.value.get(sid)
-                return None if v is None else _read_slab_blobs(v[0], sid,
-                                                                v[1])
+            bc = self._bc(latest)
             n_parts = max(1, min(n_slabs, self.fetch_partitions))
             candidates = (candidates
                           .withColumn("_sid", F.pmod(F.col("url_hash"),
                                                      F.lit(n_slabs)))
                           .repartition(n_parts, "_sid").drop("_sid"))
         else:
-            bc = self._bc(self._slab_blobs())
-
-            def blobs(sid):
-                return bc.value.get(sid)
+            blobs = _latest_blobs(latest)
+            bc = self._bc({sid: blobs(sid) for sid in latest})
 
         def flag(batches):
-            get = _filter_loader(blobs)
+            get = _filter_loader(_latest_blobs(bc.value) if partitioned
+                                 else bc.value.get)
             for batch in batches:
                 maybe = _maybe_seen(batch.column("url_hash"), n_slabs, get)
                 yield pa.RecordBatch.from_arrays(
@@ -1291,7 +1201,7 @@ class CrawlEngine:
                 # exact concat equality (not pushdown-able) then only
                 # refines the ~one-row-per-host remainder
                 .filter(F.col("url").endswith("/robots.txt"))
-                .withColumn("_h", F.expr("parse_url(url, 'HOST')"))
+                .withColumn("_h", F.expr("try_parse_url(url, 'HOST')"))
                 .filter(F.col("url") == F.concat(F.lit("https://"),
                                                  F.col("_h"),
                                                  F.lit("/robots.txt")))
@@ -1318,15 +1228,18 @@ class CrawlEngine:
         """round_plan() inputs that exist at round start: on-disk bytes
         from the manifests (stat calls, no job) and the slabs' estimated
         filter bytes from their stats. Also evicts _file_cache entries
-        whose files are no longer among these live inputs (compacted
-        away, or pruned from the dequeue anti-join)."""
+        whose files are no longer among these live inputs or the live
+        slab files (compacted away, or pruned from the dequeue
+        anti-join)."""
         aj, _c = self._antijoin_fetched_files()
         hs = (self.t_host_stats.manifest()["files"]
               if self.adaptive_priority else [])
         live = [(self.t_frontier, self.t_frontier.manifest()["files"]),
                 (self.t_fetched, aj), (self.t_host_stats, hs),
                 (self.t_seen, self.t_seen.manifest()["files"])]
-        paths = {os.path.join(t.dir, f) for t, files in live for f in files}
+        slabs = (self.t_slabs, self.t_slabs.manifest()["files"])
+        paths = {os.path.join(t.dir, f)
+                 for t, files in live + [slabs] for f in files}
         self._file_cache = {k: v for k, v in self._file_cache.items()
                             if k[0] in paths}
         frontier_bytes, fetched_bytes, host_stats_bytes, seen_bytes = (
@@ -1336,8 +1249,8 @@ class CrawlEngine:
             fetched_bytes=fetched_bytes, host_stats_bytes=host_stats_bytes,
             seen_bytes=seen_bytes,
             # bloom ≈ 1.5 B/slot (12 bits/item) + cuckoo 2 B/slot
-            slab_bytes=sum(int(3.5 * cap)
-                           for _, cap in self._slab_stats().values()))
+            slab_bytes=sum(int(3.5 * v[3])
+                           for v in self._slab_latest().values()))
 
     def _plan(self, **counts):
         """This round's plan from its start-of-round sizes and the
@@ -1441,7 +1354,6 @@ class CrawlEngine:
             .otherwise(F.lit(0)))
 
         scraper_factory = self.scraper_factory
-        user_agent = self.user_agent
         live_factory = self.live_fetcher
         now = self.now
         proto = self._proto
@@ -1455,6 +1367,9 @@ class CrawlEngine:
             scrapers = {}
             robots_cache = {}
             fetcher = live_factory() if live_factory is not None else None
+            # robots.txt groups are matched against the User-Agent the
+            # live fetcher sends; mock mode reads the "*" group
+            user_agent = getattr(fetcher, "user_agent", None) or "*"
             last_at = {}  # host -> monotonic time of last live request
 
             def polite_get(host, u, delay):
@@ -1813,7 +1728,7 @@ class CrawlEngine:
         then run driver-side. Returns n_new."""
         t = outlinks.toArrow()
         maybe = _maybe_seen(t.column("url_hash"), self.n_slabs,
-                            _filter_loader(self._slab_blobs().get))
+                            _filter_loader(_latest_blobs(self._slab_latest())))
         keep = ~maybe
         if maybe.any() and self.t_seen.exists():
             seen_urls = pa.concat_tables(

@@ -12,16 +12,15 @@ reference factory (fetcher.go:17-78) for live use:
 - MockFetcher: url→content map from config mock_pages
   (mockfetcher.go:15-35).
 
-``fetch_partition`` is the executor-side hook: given an iterator of
-(url, host, delay) within ONE host-partition, it enforces the per-host
-crawl-delay with real sleeps (live mode) — the virtual-clock politeness
-used by the mock path becomes wall-clock here.
+In live mode the crawl engine's fetch kernel creates one fetcher per
+host-partition task and enforces the per-host crawl-delay with real
+sleeps — the virtual-clock politeness used by the mock path becomes
+wall-clock there.
 """
 
 from __future__ import annotations
 
 import logging
-import time
 from dataclasses import dataclass, field as dc_field
 
 logger = logging.getLogger("goskyr_spark.fetchers")
@@ -72,7 +71,7 @@ def write_html_debug(url: str, html: str, debug_dir: str) -> str:
 class StaticFetcher:
     """HTTP fetch with connection KEEP-ALIVE: one ``requests.Session``
     per fetcher instance. The fetcher lives for the whole host-aligned
-    partition (fetch_partition), so consecutive requests to the same
+    partition (one per fetch task), so consecutive requests to the same
     host reuse the TCP (+TLS) connection instead of paying a handshake
     per URL — on hosts with small/zero crawl-delay the handshake, not
     politeness, is otherwise the throughput floor. Headers and non-200
@@ -212,21 +211,3 @@ def new_fetcher(fetcher_config):
         return MockFetcher(fetcher_config.mock_pages,
                            debug_dir=fetcher_config.debug_dir)
     raise ValueError(f"fetcher type '{ftype}' does not exist")
-
-
-def fetch_partition(rows, fetcher, default_delay: float = 0.0):
-    """Live-mode partition fetch loop: rows of (url, host, crawl_delay);
-    sleeps enforce politeness because host-hash partitioning guarantees
-    a host lives in exactly one partition. Yields (url, html|None, error)."""
-    last_at = {}
-    for url, host, delay in rows:
-        d = delay if delay is not None else default_delay
-        now = time.monotonic()
-        wait = last_at.get(host, -1e18) + d - now
-        if wait > 0:
-            time.sleep(wait)
-        last_at[host] = time.monotonic()
-        try:
-            yield url, fetcher.fetch(url), None
-        except Exception as e:  # per-scraper isolation (main.go:198-202)
-            yield url, None, str(e)

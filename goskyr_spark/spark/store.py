@@ -218,21 +218,11 @@ class SnapshotTable:
         task launch. Spark reads pyarrow's int64-microsecond timestamps
         alongside its own files transparently."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        _ARROW = {"long": pa.int64(), "double": pa.float64(),
-                  "string": pa.string(), "binary": pa.binary(),
-                  "timestamp": pa.timestamp("us", tz="UTC")}
-        fields = [(f.name, _ARROW[f.dataType.typeName()])
-                  for f in spark_schema.fields]
-        cols = list(zip(*rows)) if rows else [[] for _ in fields]
-        table = pa.table(
-            {name: pa.array(list(col), type=typ)
-             for (name, typ), col in zip(fields, cols)})
-        snap = self.head() + 1
-        fn = f"part-{snap:06d}-{uuid.uuid4().hex}.parquet"
-        pq.write_table(table, os.path.join(self.files_dir, fn))
-        return self._commit([os.path.join("files", fn)], meta, "append")
+        schema = to_arrow_schema(spark_schema)
+        return self.append_arrow(pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema), meta)
 
     def append_arrow_bucketed(self, tables, meta=None):
         """Driver-side bucketed append: ``tables`` is {bucket: pyarrow

@@ -2,11 +2,12 @@
 adaptive modes, each on the driver and on the cluster side of every
 round phase and on the two mixed plans the size policy produces first
 (cluster dequeue + driver commit; driver commit + cluster new-url
-commit with the partition-aligned seen test), and assert the historical state digest 768bf8d782fb251d
-(fetch order + statuses + seen set, unchanged since round 1). Run after
-any crawl-engine change (`make digest`). Uses bench.py's own
-spec/digest code so the gate can never drift from the frozen
-measurement."""
+commit with the partition-aligned seen test), and assert the historical
+state digest 768bf8d782fb251d (fetch order + statuses + seen set,
+unchanged since round 1) for every run, and that the four plans of a
+mode write the same slab rows (bench.slab_digest). Run after any
+crawl-engine change (`make digest`). Uses bench.py's own spec/digest
+code so the gate can never drift from the frozen measurement."""
 import os
 import sys
 from dataclasses import fields
@@ -38,6 +39,7 @@ if __name__ == "__main__":
             slab_bytes=crawl.SEEN_BROADCAST_BYTES + 1),
     }
     ok = True
+    slabs = {}
     for plan_name, forced in plans.items():
         crawl.round_plan = lambda _forced=forced, **_: _forced
         for name, kw in [("window", {}),
@@ -46,10 +48,16 @@ if __name__ == "__main__":
             out = bench.bench_crawl(spark, cores, digest=True, **kw)
             good = out["digest"] == EXPECTED
             ok &= good
+            slabs.setdefault(name, set()).add(out["slab_digest"])
             print(f"{plan_name}/{name}: digest={out['digest']} "
+                  f"slabs={out['slab_digest']} "
                   f"urls={out['urls']} items={out['items']} "
                   f"wall={out['wall']:.2f}s "
                   f"{'OK' if good else 'MISMATCH (expected ' + EXPECTED + ')'}",
                   flush=True)
+    for name, digests in slabs.items():
+        ok &= len(digests) == 1
+        print(f"{name}: slab rows " + ("agree across plans" if len(digests)
+              == 1 else "DIFFER: " + " ".join(sorted(digests))), flush=True)
     spark.stop()
     sys.exit(0 if ok else 1)

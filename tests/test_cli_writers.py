@@ -146,20 +146,6 @@ def test_fetcher_factory_defaults():
         new_fetcher(FetcherConfig(type="bogus"))
 
 
-def test_politeness_sleep_partition():
-    import time
-
-    from goskyr_spark.spark.fetchers import MockFetcher, fetch_partition
-
-    f = MockFetcher([{"url": f"https://h/{i}", "content": "x"}
-                     for i in range(3)])
-    rows = [(f"https://h/{i}", "h", 0.05) for i in range(3)]
-    t0 = time.monotonic()
-    out = list(fetch_partition(rows, f))
-    assert time.monotonic() - t0 >= 0.10  # 2 gaps × 50 ms
-    assert all(err is None for _, _, err in out)
-
-
 def test_api_writer_dry_run_never_writes(api_server):
     """Reference api.go:139-149: dry run skips DELETE and POSTs nothing
     to the real endpoint; with uri_dryrun set it validates there only."""

@@ -131,6 +131,46 @@ def test_live_crawl_end_to_end(site, tmp_path):
         n_before
 
 
+class _AgentSite(BaseHTTPRequestHandler):
+    """Disallows everything to goskyr's User-Agent, nothing to others."""
+
+    def do_GET(self):
+        body = (b"User-agent: goskyr\nDisallow: /\n\n"
+                b"User-agent: *\nAllow: /\n"
+                if self.path == "/robots.txt" else _page(1, 1).encode())
+        self.send_response(200)
+        self.send_header("Content-Type", "text/html")
+        self.end_headers()
+        self.wfile.write(body)
+
+    def log_message(self, *a):
+        pass
+
+
+def test_live_robots_group_follows_fetcher_user_agent(tmp_path):
+    """The kernel picks the robots.txt group with the User-Agent the
+    live fetcher sends (StaticFetcher's default goskyr agent), not "*"."""
+    from goskyr_spark.spark.fetchers import StaticFetcher
+    from goskyr_spark.spark.session import get_spark
+
+    spark = get_spark(app="live-crawl", master="local[2]",
+                      shuffle_partitions=2)
+    srv = HTTPServer(("127.0.0.1", 0), _AgentSite)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    seed = f"http://127.0.0.1:{srv.server_port}/list/1"
+    try:
+        eng = CrawlEngine(spark, str(tmp_path / "wd"), None,
+                          lambda host: loads_config(CFG).scrapers[0],
+                          [seed], now=NOW,
+                          live_fetcher=lambda: StaticFetcher(timeout=5))
+        eng.run(max_rounds=2)
+    finally:
+        srv.shutdown()
+    rows = {r["url"]: r["status"] for r in
+            eng.t_fetched.read(spark, schema=FETCHED_SCHEMA).collect()}
+    assert rows == {seed: "robots"}
+
+
 def test_cli_live_crawl(site, tmp_path, capsys):
     """`goskyr_spark crawl --live -c config.yml` crawls a real site with
     the config's scraper + url as seed."""

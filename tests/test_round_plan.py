@@ -74,6 +74,24 @@ def test_null_host_outlink_never_enqueued(spark, pages, tmp_path, plan,
     assert frontier.filter("host IS NULL").count() == 0
 
 
+def test_invalid_page_url_skipped_by_robots_scan(spark, pages, tmp_path):
+    """The mock robots scan reads page hosts with try_parse_url: a pages
+    row whose URL is not valid (ANSI parse_url fails the crawl on it
+    with INVALID_URL) is skipped, and the crawl ends in the same state
+    as over the same table without it."""
+    bad = pages.unionByName(spark.createDataFrame(
+        [("https://bad host/robots.txt", b"User-agent: *\nDisallow: /\n")],
+        "url string, html binary"))
+
+    def state(eng):
+        return (sorted((r["round"], r["fetch_seq"], r["url"], r["status"])
+                       for r in eng.t_fetched.read(spark).collect()),
+                sorted(r["url"] for r in eng.t_seen.read(spark).collect()))
+
+    assert state(_crawl(spark, bad, tmp_path / "bad")) == \
+        state(_crawl(spark, pages, tmp_path / "ref"))
+
+
 def test_item_timestamps_one_physical_type(spark, pages, tmp_path,
                                            monkeypatch):
     """Items written by the driver commit (pyarrow) and by the cluster

@@ -7,10 +7,16 @@ from datetime import datetime, timezone
 import pytest
 
 from goskyr_spark.kernels.cuckoo import CuckooFilter
-from goskyr_spark.spark.crawl import CrawlEngine
+from goskyr_spark.spark.crawl import CrawlEngine, _read_slab_blobs
 from goskyr_spark.synth import SynthSpec, event_scraper, host_name, synth_pages_df
 
 NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
+
+
+def _blobs(eng):
+    """{sid: (bloom, cuckoo) bytes} of each slab's latest row."""
+    return {sid: _read_slab_blobs(at[0], sid, at[1])
+            for sid, at in eng._slab_latest().items()}
 
 
 @pytest.fixture(scope="session")
@@ -39,7 +45,7 @@ def test_rebuild_keeps_seen_exact(spark, tmp_path):
     assert len(urls) == len(set(urls)), "duplicate urls in seen set"
 
     # slabs grew beyond the initial capacity and contain every seen hash
-    slabs = eng._slab_blobs()
+    slabs = _blobs(eng)
     assert any(CuckooFilter.from_bytes(c).nbuckets * 4 > 8
                for _, c in slabs.values())
     import numpy as np
@@ -69,10 +75,21 @@ def _run_engine(spark, tmp_path, name, **kw):
 
 
 def _state(eng, spark):
+    """Seen urls, fetched rows and every round's slab rows."""
     seen = sorted(r["url"] for r in eng.t_seen.read(spark).collect())
     fetched = sorted((r["round"], r["fetch_seq"], r["url"], r["status"])
                      for r in eng.t_fetched.read(spark).collect())
-    return seen, fetched
+    slabs = sorted((r["slab_id"], r["round"], bytes(r["bloom"]),
+                    bytes(r["cuckoo"]), r["count"], r["capacity"])
+                   for r in eng.t_slabs.read(spark).collect())
+    return seen, fetched, slabs
+
+
+def _latest_slabs(state):
+    """`state` with only each slab's latest row: what compact() keeps of
+    the slab table (superseded generations are dropped by design)."""
+    seen, fetched, slabs = state
+    return seen, fetched, sorted({r[0]: r for r in slabs}.values())
 
 
 @pytest.fixture(scope="module")
@@ -88,15 +105,16 @@ def test_slab_paths_match_size_policy(spark, tmp_path, policy_state, plan):
     """Every forced plan — driver, cluster (executor-side slab-aligned
     update, incl. rebuilds at slab_capacity=8), cluster with the
     partition-aligned seen test, and the policy's mixed plans — ends in
-    the size policy's crawl state, at a different parallelism, and its
-    slabs hold every seen hash (no false negatives)."""
+    the size policy's crawl state, slab rows of every round included,
+    at a different parallelism, and its slabs hold every seen hash (no
+    false negatives)."""
     eng = _run_engine(spark, tmp_path, "forced", n_slabs=2,
                       slab_capacity=8, fetch_partitions=7)
     assert _state(eng, spark) == policy_state
 
     import numpy as np
 
-    slabs = eng._slab_blobs()
+    slabs = _blobs(eng)
     for r in eng.t_seen.read(spark).collect():
         sid = int(r["url_hash"]) % 2
         cf = CuckooFilter.from_bytes(slabs[sid][1])
@@ -105,6 +123,38 @@ def test_slab_paths_match_size_policy(spark, tmp_path, policy_state, plan):
     # seen set exact: no url fetched twice
     fetched = [r["url"] for r in eng.t_fetched.read(spark).collect()]
     assert len(fetched) == len(set(fetched))
+
+
+@pytest.mark.parametrize("plan", ["driver"], indirect=True)
+def test_insert_overflow_retried_as_rebuild(spark, tmp_path, policy_state,
+                                            plan, monkeypatch):
+    """An insert whose cuckoo overflows (forced here for every insert)
+    is retried as a rebuild from the seen slice: the crawl ends in the
+    size policy's seen/fetched state, every slab row has its blobs, and
+    the slabs hold every seen hash."""
+    from goskyr_spark.spark import crawl
+
+    overflows = []
+    monkeypatch.setattr(crawl, "_insert_filters",
+                        lambda blobs, arr: overflows.append(len(arr)))
+    eng = _run_engine(spark, tmp_path, "overflow", n_slabs=2,
+                      slab_capacity=8, fetch_partitions=4)
+    assert overflows
+    seen, fetched, slabs = _state(eng, spark)
+    assert (seen, fetched) == policy_state[:2]
+    assert slabs and all(r[2] and r[3] for r in slabs)
+    # every touched slab still gets exactly one row per round
+    assert {(r[0], r[1]) for r in slabs} == \
+        {(r[0], r[1]) for r in policy_state[2]}
+
+    import numpy as np
+
+    blobs = _blobs(eng)
+    for r in eng.t_seen.read(spark).collect():
+        sid = int(r["url_hash"]) % 2
+        cf = CuckooFilter.from_bytes(blobs[sid][1])
+        h = np.array([r["url_hash"]], dtype=np.int64).view(np.uint64)
+        assert cf.contains_many(h)[0], f"false negative for {r['url']}"
 
 
 def test_partitioned_seen_resume(spark, tmp_path, monkeypatch):
@@ -150,7 +200,7 @@ def test_compact_preserves_state_and_resume(spark, tmp_path):
     n_slab_rows_before = eng.t_slabs.read(spark).count()
     n_frontier_before = eng.t_frontier.read(spark).count()
     eng.compact()
-    assert _state(eng, spark) == before
+    assert _state(eng, spark) == _latest_slabs(before)
     assert eng.t_slabs.read(spark).count() == 2  # latest per slab only
     assert n_slab_rows_before > 2
     # frontier compacted to the PENDING set (everything was fetched)
@@ -170,7 +220,7 @@ def test_compact_preserves_state_and_resume(spark, tmp_path):
                      seeds, now=NOW, n_slabs=2, slab_capacity=8,
                      fetch_partitions=4)
     e2.run(max_rounds=30)
-    assert _state(e2, spark) == before
+    assert _state(e2, spark) == _latest_slabs(before)
 
 
 def test_auto_compaction_mid_run_equivalent(spark, tmp_path):
@@ -180,4 +230,5 @@ def test_auto_compaction_mid_run_equivalent(spark, tmp_path):
                       fetch_partitions=4)
     auto = _run_engine(spark, tmp_path, "ac", n_slabs=2, slab_capacity=16,
                        fetch_partitions=4, compact_every=2)
-    assert _state(ref, spark) == _state(auto, spark)
+    assert _latest_slabs(_state(ref, spark)) == \
+        _latest_slabs(_state(auto, spark))

@@ -253,8 +253,13 @@ def bench_live_crawl(spark, cores, crawl_delay=0.02):
     fetches, and extraction, i.e. the number a production operator
     would see. With crawl_delay=0 the sleeps vanish and the connection
     path itself is the floor — the row that shows the keep-alive
-    (requests.Session) gain: each host's chain rides ONE TCP
-    connection instead of a handshake per URL."""
+    (requests.Session) gain: a fetcher lives for one fetch task, so the
+    GETs of one round to one host share a TCP connection; each round
+    opens new ones (a host's chain takes one page per round).
+
+    The server sends each response in one write with Nagle's algorithm
+    off: headers and body written separately stall every reused
+    keep-alive connection on the client's delayed ACK (~40 ms a GET)."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -268,8 +273,10 @@ def bench_live_crawl(spark, cores, crawl_delay=0.02):
 
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
+        disable_nagle_algorithm = True
 
         def do_GET(self):
+            status, body = "200 OK", b""
             if self.path == "/robots.txt":
                 body = robots
             elif self.path.startswith("/list/"):
@@ -282,15 +289,11 @@ def bench_live_crawl(spark, cores, crawl_delay=0.02):
                        if p < pages_per_host else "")
                 body = (items + nxt).encode()
             else:
-                self.send_response(404)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
-                return
-            self.send_response(200)
-            self.send_header("Content-Type", "text/html")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+                status = "404 Not Found"
+            self.wfile.write(f"HTTP/1.1 {status}\r\n"
+                             f"Content-Type: text/html\r\n"
+                             f"Content-Length: {len(body)}\r\n\r\n"
+                             .encode() + body)
 
         def log_message(self, *a):
             pass

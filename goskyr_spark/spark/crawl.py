@@ -50,6 +50,20 @@ Determinism: every ordering is an explicit sort key (priority, url,
 host); the virtual politeness clock is a pure function of the dequeue
 set; no wall-clock, partition-order, or hash-seed dependence — local[8]
 and local[32] produce identical crawl order and seen set (tested).
+Inside a fetch task rows run round-robin across hosts, sorted by
+(_host_seq, host); fetched rows are committed in (fetch_ts, host, url)
+order, so only the order of item rows inside a round's file follows it.
+
+Live mode: the engine, not the Python workers, holds each host's
+robots.txt body, its expiry and the wall time of the last request
+(CrawlEngine._live_hosts). Each round broadcasts it to the kernel; a
+task first resolves robots for every host of an Arrow batch (from the
+broadcast, or by GET when the host has no unexpired body), then fetches
+round-robin, so one host's crawl-delay sleep overlaps the other hosts'
+GETs, and every host's first request waits from its last request of an
+earlier round. The task reports one _kind='host' row per host it
+contacted (robots body it fetched, last request time), which the round
+commit folds back into the state.
 
 Skew: hot hosts (large news domains) are bounded by per_host_budget at
 dequeue; the fetch stage salts any host whose dequeued count exceeds
@@ -98,16 +112,15 @@ logger = logging.getLogger("goskyr_spark.crawl")
 # UNREACHABLE (5xx / network error) MUST be assumed complete disallow.
 ROBOTS_DISALLOW_ALL = b"User-agent: *\nDisallow: /\n"
 
-# Live-mode robots cache, worker-global across tasks AND rounds (a
-# reused Python worker keeps module globals): RFC 9309 §2.4 says
-# crawlers SHOULD cache robots.txt up to 24 hours — re-fetching every
-# host's robots every round paid one extra GET + one crawl-delay
-# alignment per host per round for nothing. Only resolvable outcomes
-# are cached (2xx bodies and 4xx allow-all); 5xx/network-failure
-# disallow-all stays per-round so an unreachable host is re-probed the
-# next round, exactly as before.
+# Live-mode robots.txt lifetime in the engine's host state: RFC 9309
+# §2.4 says crawlers SHOULD cache robots.txt up to 24 hours. Only
+# resolvable outcomes are cached (2xx bodies and 4xx allow-all);
+# 5xx/network-failure disallow-all holds for one round, so an
+# unreachable host is re-probed the next round.
 _ROBOTS_TTL_SECS = 24 * 3600.0
-_LIVE_ROBOTS_CACHE = {}  # (scheme, netloc, user_agent) -> (expiry, rules)
+# bound on the live host state; past it the least recently contacted
+# half is dropped (those hosts fetch robots.txt again)
+_LIVE_HOSTS_MAX = 100_000
 
 # --- the size policy: read by round_plan() only ------------------------------
 # dequeued (or new) URLs per round up to which the round commits on the
@@ -470,8 +483,17 @@ class CrawlEngine:
         # same politeness identities; the virtual clock stays the
         # deterministic ORDER key while real sleeps pace requests
         # (host-hash partitioning keeps a host inside one task, so
-        # per-host crawl-delay is enforceable with wall-clock sleeps).
+        # per-host crawl-delay is enforceable with wall-clock sleeps;
+        # _live_hosts carries it from one round's task to the next).
         self.live_fetcher = live_fetcher
+        # live per-host state, {host: (robots.txt body, its expiry, wall
+        # time of the last request)}: broadcast to each round's kernel,
+        # which reports back what it fetched and when (_kind='host'
+        # rows), so robots.txt is fetched once per host per TTL and the
+        # crawl-delay holds across round boundaries. In memory only: a
+        # resumed engine fetches each host's robots.txt again.
+        self._live_hosts = {}
+        self._live_since = 0.0  # wall time the last broadcast was taken
         if pages_df is None and live_fetcher is None:
             raise ValueError("need pages_df (mock web) or live_fetcher")
         # run() calls compact() every N completed rounds (None = never):
@@ -1362,85 +1384,82 @@ class CrawlEngine:
         fcols = _field_columns(proto)
         retain_html = self._retain_html
         round_base = float(round_no) * 1e6
+        live_hosts = None
+        if live_factory is not None:
+            self._live_since = time.time()
+            live_hosts = self._bc(self._live_hosts)
 
         def fetch_extract(batches):
             scrapers = {}
-            robots_cache = {}
+            robots_cache = {}  # host -> parsed rules, for this task
             fetcher = live_factory() if live_factory is not None else None
             # robots.txt groups are matched against the User-Agent the
             # live fetcher sends; mock mode reads the "*" group
             user_agent = getattr(fetcher, "user_agent", None) or "*"
-            last_at = {}  # host -> monotonic time of last live request
+            known = live_hosts.value if live_hosts is not None else {}
+            last_at = {}  # host -> wall time of this task's last request
+            robots_out = {}  # host -> cacheable robots body fetched here
 
             def polite_get(host, u, delay):
                 # wall-clock politeness: the host lives in THIS partition
                 # (host-hash partitioning), so a local sleep enforces the
-                # crawl-delay budget exactly
-                wait = last_at.get(host, float("-inf")) + delay \
-                    - time.monotonic()
+                # crawl-delay budget; the first request to a host waits
+                # from its last request of an earlier round
+                prev = last_at.get(
+                    host, known.get(host, (None, 0.0, float("-inf")))[2])
+                wait = prev + delay - time.time()
                 if wait > 0:
                     time.sleep(wait)
-                last_at[host] = time.monotonic()
+                last_at[host] = time.time()
                 return fetcher.fetch(u)
+
+            def resolve_robots(host, url, rb):
+                if fetcher is None or rb is not None:
+                    return parse_robots(rb or b"", user_agent)
+                body, expiry, _ = known.get(host, (None, 0.0, None))
+                if body is not None and expiry > time.time():
+                    return parse_robots(body, user_agent)
+                # a re-fetch after the TTL keeps the expired rules'
+                # crawl-delay
+                delay = (parse_robots(body, user_agent).crawl_delay or 0.0
+                         if body is not None else 0.0)
+                # robots URL keeps the original NETLOC (the host key
+                # strips ports; the request must not)
+                sp = urlsplit(url)
+                scheme = sp.scheme or "https"
+                try:
+                    body = polite_get(host, f"{scheme}://{sp.netloc}"
+                                      "/robots.txt", delay).encode()
+                    robots_out[host] = body
+                except FetchError as e:
+                    # RFC 9309: 4xx (unavailable) ⇒ allow-all
+                    # (cacheable); 5xx (unreachable) ⇒ complete
+                    # disallow, not cached — re-probed next round
+                    if e.status is not None and 400 <= e.status < 500:
+                        body = robots_out[host] = b""
+                    else:
+                        body = ROBOTS_DISALLOW_ALL
+                except Exception:
+                    # network-level failure = unreachable
+                    body = ROBOTS_DISALLOW_ALL
+                return parse_robots(body, user_agent)
 
             for batch in batches:
                 d = batch.to_pydict()
+                # pass 1: robots for every host of the batch before any
+                # page GET, so pass 2 (rows round-robin across hosts by
+                # the (_host_seq, host) sort) never waits on a robots GET
+                # and one host's crawl-delay overlaps the others' GETs
+                for host, url, rb in zip(d["host"], d["url"], d["_robots"]):
+                    if host not in robots_cache:
+                        robots_cache[host] = resolve_robots(host, url, rb)
                 rows = []
                 for r in range(batch.num_rows):
                     url = d["url"][r]
                     host = d["host"][r]
-                    prio = d["priority"][r]
                     depth = d["depth"][r]
                     page_no = d["page_no"][r] or 1
                     host_seq = d["_host_seq"][r]
-                    rb = d["_robots"][r]
-                    if host not in robots_cache:
-                        if rb is None and fetcher is not None:
-                            # robots URL keeps the original NETLOC (the
-                            # host key strips ports; the request must not)
-                            sp = urlsplit(url)
-                            ck = (sp.scheme or "https", sp.netloc,
-                                  user_agent)
-                            hit = _LIVE_ROBOTS_CACHE.get(ck)
-                            if hit is not None and \
-                                    hit[0] > time.monotonic():
-                                robots_cache[host] = hit[1]
-                            else:
-                                cacheable = True
-                                try:
-                                    rb = polite_get(
-                                        host,
-                                        f"{sp.scheme or 'https'}://"
-                                        f"{sp.netloc}/robots.txt",
-                                        0.0).encode()
-                                except FetchError as e:
-                                    # RFC 9309: 4xx (unavailable) ⇒
-                                    # allow-all (cacheable); 5xx
-                                    # (unreachable) ⇒ complete disallow,
-                                    # NOT cached — the host is re-probed
-                                    # next round, as before
-                                    if e.status is not None \
-                                            and 400 <= e.status < 500:
-                                        rb = b""
-                                    else:
-                                        rb = ROBOTS_DISALLOW_ALL
-                                        cacheable = False
-                                except Exception:
-                                    # network-level failure = unreachable
-                                    rb = ROBOTS_DISALLOW_ALL
-                                    cacheable = False
-                                rules = parse_robots(rb, user_agent)
-                                robots_cache[host] = rules
-                                if cacheable:
-                                    if len(_LIVE_ROBOTS_CACHE) > 100_000:
-                                        _LIVE_ROBOTS_CACHE.clear()
-                                    _LIVE_ROBOTS_CACHE[ck] = (
-                                        time.monotonic()
-                                        + _ROBOTS_TTL_SECS, rules)
-                        else:
-                            robots_cache[host] = parse_robots(
-                                rb if rb is not None else b"",
-                                user_agent)
                     rules = robots_cache[host]
                     delay = rules.crawl_delay or 0.0
                     fetch_ts = round_base + (host_seq - 1) * delay
@@ -1496,15 +1515,41 @@ class CrawlEngine:
                                            else None))
                 if rows:
                     yield _crawl_batch(rows, arrow_out)
+            # one row per host this task contacted, folded into the
+            # engine's live host state by the round commit
+            hosts = [{"_kind": "host", "_host": h, "_last_at": at,
+                      "_robots_out": robots_out.get(h)}
+                     for h, at in last_at.items()]
+            if hosts:
+                yield _crawl_batch(hosts, arrow_out)
 
         # partition count adapts to the round size (a 700-url round must
         # not pay 64 task launches); politeness only needs host-locality,
-        # which hash-partitioning on (host, _salt) gives at any width
+        # which hash-partitioning on (host, _salt) gives at any width.
+        # Within a task rows go round-robin across hosts: every host's
+        # first page, then every host's second, ...
         n_fetch_parts = max(1, min(self.fetch_partitions,
                                    (n_dequeued + 15) // 16))
         return (work.repartition(n_fetch_parts, "host", "_salt")
-                .sortWithinPartitions("host", "priority", "url")
+                .sortWithinPartitions("_host_seq", "host")
                 .mapInArrow(fetch_extract, out_schema))
+
+    def _fold_live_hosts(self, rows):
+        """Fold the kernel's (host, robots body, last request time) rows
+        into the live host state: a fetched body is cached for
+        _ROBOTS_TTL_SECS from the broadcast's time (before its GET); a
+        NULL body keeps the host's earlier one."""
+        expiry = self._live_since + _ROBOTS_TTL_SECS
+        state = self._live_hosts
+        for host, body, at in rows:
+            if body is not None:
+                state[host] = (bytes(body), expiry, at)
+            else:
+                state[host] = state.get(host, (None, 0.0, at))[:2] + (at,)
+        if len(state) > _LIVE_HOSTS_MAX:
+            keep = sorted(state, key=lambda h: state[h][2])
+            self._live_hosts = {h: state[h]
+                                for h in keep[-_LIVE_HOSTS_MAX // 2:]}
 
     def _append_html(self, result, round_no, n_dequeued):
         """Live-mode html retention (debug sink / on_subpage stage-2
@@ -1536,6 +1581,11 @@ class CrawlEngine:
             kernel = kernel.drop("_html_out")
         coll = (kernel.withColumn("_url_hash", F.xxhash64("_page_url"))
                 .toArrow())
+        if self.live_fetcher is not None:
+            h = coll.filter(pc.equal(coll["_kind"], "host"))
+            self._fold_live_hosts(zip(
+                *(h[c].to_pylist() for c in
+                  ("_host", "_robots_out", "_last_at"))))
         self._commit_items_driver(coll, round_no)
         self._mark("fetch_extract+items")
         fetched = self._fetched_from_arrow(coll, round_no)
@@ -1616,6 +1666,10 @@ class CrawlEngine:
         self._mark("fetch_extract+items")
         if self._retain_html:
             self._append_html(result, round_no, n_dequeued)
+        if self.live_fetcher is not None:
+            self._fold_live_hosts(
+                tuple(r) for r in result.filter("_kind = 'host'")
+                .select("_host", "_robots_out", "_last_at").collect())
 
         fetch_base = (result.filter("_kind = 'fetch'")
                       .select(F.col("_page_url").alias("url"),
@@ -1922,6 +1976,9 @@ class CrawlEngine:
         ]
         if self._retain_html:
             fields.append(StructField("_html_out", StringType()))
+        if self.live_fetcher is not None:  # _kind='host' rows only
+            fields += [StructField("_robots_out", BinaryType()),
+                       StructField("_last_at", DoubleType())]
         for f in item_spark_schema(self._proto).fields:
             if f.name not in ("page_url", "item_idx", "nr_errors"):
                 fields.append(f)
@@ -1956,12 +2013,11 @@ def _item_row(url, host, idx, item, fcols):
            "_fetch_ts": None, "_status": None, "_n_items": None,
            "_n_errors": None, "_item_idx": idx, "_outlink": None,
            "_depth": None, "_page_no": None}
-    from datetime import timezone as _tz
-
     for name, kind in fcols:
         v = item.get(name)
         if kind == "ts" and v is not None:
-            v = v.astimezone(_tz.utc) if v.tzinfo else v.replace(tzinfo=_tz.utc)
+            v = (v.astimezone(timezone.utc) if v.tzinfo
+                 else v.replace(tzinfo=timezone.utc))
         row[name] = v
     return row
 

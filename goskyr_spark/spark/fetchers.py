@@ -13,21 +13,32 @@ reference factory (fetcher.go:17-78) for live use:
   (mockfetcher.go:15-35).
 
 In live mode the crawl engine's fetch kernel creates one fetcher per
-host-partition task and enforces the per-host crawl-delay with real
-sleeps — the virtual-clock politeness used by the mock path becomes
-wall-clock there.
+fetch task and enforces the per-host crawl-delay with real sleeps — the
+virtual-clock politeness used by the mock path becomes wall-clock there.
+The engine, not the fetcher, keeps each host's robots.txt body and last
+request time across tasks and rounds (``CrawlEngine._live_hosts``).
+StaticFetcher decodes bodies (pages and robots.txt) with the
+Content-Type charset when there is one, else as UTF-8 with replacement,
+the way mock pages are decoded.
 """
 
 from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field as dc_field
+from email.message import Message
 
 logger = logging.getLogger("goskyr_spark.fetchers")
 
 DEFAULT_USER_AGENT = "goskyr web scraper (github.com/jakopako/goskyr)"
 DEFAULT_PAGE_LOAD_WAIT_MS = 2000   # dynamicfetcher.go:44-46
 DEFAULT_INTERACTION_DELAY_MS = 500  # dynamicfetcher.go:91-93
+# hosts whose idle keep-alive connection one StaticFetcher keeps
+# (requests keeps 10). The crawl kernel fetches round-robin across its
+# task's hosts, so a host's next GET comes after one GET to every other
+# host; past a few hundred hosts that gap outlasts common server
+# keep-alive timeouts anyway, and each kept host holds one socket.
+HOST_POOLS = 256
 
 
 class FetchError(Exception):
@@ -68,13 +79,29 @@ def write_html_debug(url: str, html: str, debug_dir: str) -> str:
     return path
 
 
+def decode_body(content: bytes, content_type: str = None) -> str:
+    """Response bytes as text: the Content-Type charset when it names a
+    known codec, else UTF-8 with replacement. (requests' ``resp.text``
+    falls back to ISO-8859-1 for any text/* type without a charset, so a
+    UTF-8 page would reach the kernel garbled.)"""
+    msg = Message()
+    msg["Content-Type"] = content_type or ""
+    try:
+        return content.decode(msg.get_content_charset() or "utf-8",
+                              errors="replace")
+    except LookupError:  # unknown charset name
+        return content.decode("utf-8", errors="replace")
+
+
 class StaticFetcher:
     """HTTP fetch with connection KEEP-ALIVE: one ``requests.Session``
-    per fetcher instance. The fetcher lives for the whole host-aligned
-    partition (one per fetch task), so consecutive requests to the same
-    host reuse the TCP (+TLS) connection instead of paying a handshake
-    per URL — on hosts with small/zero crawl-delay the handshake, not
-    politeness, is otherwise the throughput floor. Headers and non-200
+    per fetcher instance, keeping a connection for up to HOST_POOLS
+    hosts. The fetcher lives for the whole host-aligned partition (one
+    per fetch task), so requests to the same host — round-robin with
+    the task's other hosts — reuse the TCP (+TLS) connection instead
+    of paying a handshake per URL — on hosts with small/zero
+    crawl-delay the handshake, not politeness, is otherwise the
+    throughput floor. Headers and non-200
     behavior are unchanged (staticfetcher.go:24-54)."""
 
     def __init__(self, user_agent: str = "", timeout: float = 30.0,
@@ -87,8 +114,12 @@ class StaticFetcher:
     def _get_session(self):
         if self._session is None:
             import requests
+            from requests.adapters import HTTPAdapter
 
             self._session = requests.Session()
+            for prefix in ("http://", "https://"):
+                self._session.mount(
+                    prefix, HTTPAdapter(pool_connections=HOST_POOLS))
         return self._session
 
     def fetch(self, url: str, opts: FetchOpts = None) -> str:
@@ -101,9 +132,10 @@ class StaticFetcher:
             raise FetchError(
                 f"status code error: {resp.status_code} {resp.reason}",
                 status=resp.status_code)
+        text = decode_body(resp.content, resp.headers.get("Content-Type"))
         if self.debug_dir:  # staticfetcher.go:49-51
-            write_html_debug(url, resp.text, self.debug_dir)
-        return resp.text
+            write_html_debug(url, text, self.debug_dir)
+        return text
 
 
 class DynamicFetcher:

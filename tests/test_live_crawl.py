@@ -183,3 +183,95 @@ def test_cli_live_crawl(site, tmp_path, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "'n_dequeued': 1" in out  # round 0: the seed
+
+
+class _Utf8Site(BaseHTTPRequestHandler):
+    """A UTF-8 page served as `text/html` with no charset."""
+    body = ('<div class="e"><span class="t">café – naïve</span></div>'
+            .encode("utf-8"))
+
+    def do_GET(self):
+        if self.path == "/robots.txt":
+            self.send_response(404)
+            self.end_headers()
+            return
+        self.send_response(200)
+        self.send_header("Content-Type", "text/html")
+        self.end_headers()
+        self.wfile.write(_Utf8Site.body)
+
+    def log_message(self, *a):
+        pass
+
+
+def test_live_page_decoded_like_mock_page(tmp_path):
+    """A live page without a charset is decoded as UTF-8, like a mock
+    page: the crawl's items equal scrape_page on the UTF-8 text."""
+    from goskyr_spark.kernels.scrape import scrape_page
+    from goskyr_spark.spark.fetchers import StaticFetcher
+    from goskyr_spark.spark.session import get_spark
+
+    spark = get_spark(app="live-crawl", master="local[2]",
+                      shuffle_partitions=2)
+    srv = HTTPServer(("127.0.0.1", 0), _Utf8Site)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    seed = f"http://127.0.0.1:{srv.server_port}/p"
+    scraper = loads_config(CFG).scrapers[0]
+    try:
+        eng = CrawlEngine(spark, str(tmp_path / "wd"), None,
+                          lambda host: scraper, [seed], now=NOW,
+                          live_fetcher=lambda: StaticFetcher(timeout=5))
+        eng.run(max_rounds=2)
+    finally:
+        srv.shutdown()
+    got = [r["t"] for r in eng.items_final().collect()]
+    want = [i["t"] for i in scrape_page(
+        scraper, seed, _Utf8Site.body.decode("utf-8"), now=NOW).items]
+    assert got == want == ["café – naïve"]
+
+
+def test_decode_body_charset():
+    from goskyr_spark.spark.fetchers import decode_body
+
+    latin = "café".encode("latin-1")
+    assert decode_body(latin, "text/html; charset=ISO-8859-1") == "café"
+    assert decode_body("café".encode(), "text/html") == "café"
+    assert decode_body("café".encode(), None) == "café"
+    # an unknown charset name falls back to UTF-8 with replacement
+    assert decode_body(latin, "text/html; charset=x-nope") == "caf�"
+
+
+def test_static_fetcher_keeps_a_connection_per_host():
+    """Round-robin GETs over 20 loopback hosts (the kernel's in-task
+    order) reuse one keep-alive connection per host; requests' default
+    of 10 host pools would open a connection for every GET."""
+    from http.server import ThreadingHTTPServer
+
+    from goskyr_spark.spark.fetchers import StaticFetcher
+
+    peers = set()
+
+    class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
+        def do_GET(self):
+            peers.add(self.client_address)
+            self.wfile.write(b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n"
+                             b"\r\nok")
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("0.0.0.0", 0), Handler)
+    srv.daemon_threads = True
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    f = StaticFetcher(timeout=5)
+    try:
+        for _ in range(3):
+            for i in range(20):
+                assert f.fetch(f"http://127.0.0.{i + 1}:"
+                               f"{srv.server_port}/p") == "ok"
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert len(peers) == 20

@@ -152,7 +152,8 @@ def test_static_fetcher_uses_one_session():
         def __init__(self, status):
             self.status_code = status
             self.reason = "OK" if status == 200 else "ERR"
-            self.text = "<html>ok</html>"
+            self.content = b"<html>ok</html>"
+            self.headers = {"Content-Type": "text/html"}
 
     class FakeSession:
         instances = 0
@@ -160,6 +161,9 @@ def test_static_fetcher_uses_one_session():
         def __init__(self):
             FakeSession.instances += 1
             self.headers = {}
+
+        def mount(self, prefix, adapter):
+            pass
 
         def get(self, url, headers=None, timeout=None):
             calls.append((url, dict(headers or {}), timeout))

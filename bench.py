@@ -245,7 +245,7 @@ def bench_live_crawl(spark, cores, crawl_delay=0.02):
     robots.txt per host, wall-clock crawl-delay sleeps) against a local
     multi-host site. Distinct hosts are distinct 127.0.0.0/8 loopback
     addresses served by ONE threading server bound to 0.0.0.0 —
-    url_host() keys politeness by hostname, so each address is an
+    the engine keys politeness by host, so each address is an
     independent politeness domain, exactly like distinct servers.
 
     With the default Crawl-delay 0.02 the reported urls/sec is a

@@ -4,8 +4,9 @@ North-rule architecture (BASELINE.json, SURVEY §3.1): each crawl round is
 a deterministic micro-batch over snapshot tables —
 
   pending  = frontier ANTI JOIN fetched            (append-only tables)
-  dequeue  = robots-filter → per-host top-k (Window host / priority,url)
-             → global ORDER BY (priority, url) LIMIT round_budget
+  dequeue  = per-host rank _host_seq by (priority, url) → per-host top-k
+             → global ORDER BY (priority, url) LIMIT round_budget; the
+             rank rides along as the politeness clock and salting key
   fetch    = hash join against the pages table on url (the mock "web";
              a real HTTP fetcher plugs in behind the same join contract),
              repartitioned BY HOST so per-host politeness (crawl-delay
@@ -66,11 +67,11 @@ contacted (robots body it fetched, last request time), which the round
 commit folds back into the state.
 
 Skew: hot hosts (large news domains) are bounded by per_host_budget at
-dequeue; the fetch stage salts any host whose dequeued count exceeds
-salt_threshold across `salt_factor` sub-partitions while keeping the
-politeness chain correct by computing the virtual clock per host BEFORE
-salting (the delay schedule is part of the dequeue output, not the
-fetch partition).
+dequeue. In mock mode the fetch stage also hash-partitions each host's
+rows in runs of SALT_ROWS by their dequeue rank, a fixed rule with no
+counting pass; the virtual politeness clock is that same rank, so it
+does not depend on the fetch partition. Live mode never splits a host:
+its wall-clock sleeps only hold while a host lives in one task.
 """
 
 from __future__ import annotations
@@ -121,6 +122,10 @@ _ROBOTS_TTL_SECS = 24 * 3600.0
 # bound on the live host state; past it the least recently contacted
 # half is dropped (those hosts fetch robots.txt again)
 _LIVE_HOSTS_MAX = 100_000
+# mock-mode fetch salting: each run of SALT_ROWS consecutive dequeue
+# ranks of one host is its own fetch partition key (per_host_budget
+# caps a host below this at the defaults, so no host is split)
+SALT_ROWS = 512
 
 # --- the size policy: read by round_plan() only ------------------------------
 # dequeued (or new) URLs per round up to which the round commits on the
@@ -261,7 +266,13 @@ ROUNDS_SCHEMA = StructType([
     StructField("wall_secs", DoubleType()),
 ])
 
+# a dequeue's output: frontier rows plus each row's rank within its host
+# by (priority, url), 1..k — the virtual politeness clock and salt key
+DEQUEUED_SCHEMA = StructType(FRONTIER_SCHEMA.fields +
+                             [StructField("_host_seq", LongType())])
+
 FRONTIER_COLS = FRONTIER_SCHEMA.names
+DEQUEUED_COLS = DEQUEUED_SCHEMA.names
 _FRONTIER_ARROW = to_arrow_schema(FRONTIER_SCHEMA)
 _FETCHED_ARROW = to_arrow_schema(FETCHED_SCHEMA)
 _HOST_STATS_ARROW = to_arrow_schema(HOST_STATS_SCHEMA)
@@ -431,7 +442,8 @@ def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
     weights = (error, yield), the adaptive per-host adjustment from the
     host_stats deltas (integer sums then one float64 expression —
     bit-identical to the window path's JVM arithmetic); per-host top-k
-    by (_eff, url); then the round budget. pandas, (_eff, url) order."""
+    by (_eff, url), ranked 1..k per host as _host_seq; then the round
+    budget. pandas, (_eff, url) order."""
     pdf = frontier.to_pandas()
     if fetched is not None and fetched.num_rows:
         pdf = pdf[~pdf["url"].isin(set(fetched.column("url").to_pylist()))]
@@ -448,15 +460,16 @@ def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
         eff = eff + pdf["host"].map(dict(zip(g.index, adj))) \
             .fillna(0.0).to_numpy(dtype="float64")
     pdf = pdf.assign(_eff=eff).sort_values(["_eff", "url"])
-    return pdf.groupby("host", sort=False).head(per_host).head(budget)
+    pdf = pdf.assign(_host_seq=pdf.groupby("host", sort=False).cumcount() + 1)
+    return pdf[pdf["_host_seq"] <= per_host].head(budget)
 
 
-def url_host(url: str) -> str:
-    # hostname (no port, LOWERCASED) — the single host identity. Spark
-    # sides use lower(parse_url(url, 'HOST')) for outlinks/robots so all
-    # three agree; a mismatch would split one site into two
-    # politeness/robots identities (silently unenforced robots)
-    return urlsplit(url).hostname or ""
+def _host_col():
+    """The one host identity of the `url` column: its lowercased HOST as
+    Spark parses it (IPv6 keeps its brackets; NULL when there is none).
+    Seeds, outlinks and the mock robots.txt join all key on it, so one
+    site never splits into two politeness/robots identities."""
+    return F.lower(F.expr("try_parse_url(url, 'HOST')"))
 
 
 def _u64(int64_array):
@@ -466,8 +479,7 @@ def _u64(int64_array):
 class CrawlEngine:
     def __init__(self, spark, workdir, pages_df, scraper_factory, seeds,
                  per_host_budget=64, round_budget=100_000, n_slabs=8,
-                 slab_capacity=4096, salt_threshold=512,
-                 salt_factor=4, now=None, fetch_partitions=None,
+                 slab_capacity=4096, now=None, fetch_partitions=None,
                  debug=False,
                  live_fetcher=None, compact_every=None,
                  frontier_buckets=None, adaptive_priority=False,
@@ -506,8 +518,6 @@ class CrawlEngine:
         self.round_budget = round_budget
         self.n_slabs = n_slabs
         self.slab_capacity = slab_capacity
-        self.salt_threshold = salt_threshold
-        self.salt_factor = salt_factor
         self.now = now or datetime.now(timezone.utc)
         self.fetch_partitions = fetch_partitions or max(
             4, spark.sparkContext.defaultParallelism)
@@ -573,17 +583,14 @@ class CrawlEngine:
 
         # S8 debug dump, Spark-first: instead of one html file per fetch
         # (reference fetcher.go:80-111), debug mode appends the fetched
-        # pages to a debug_pages snapshot table with round lineage
-        self.debug = debug
-        # live mode fetches html inside the Arrow kernel, so it is not a
-        # joinable column; when the html must outlive the fetch task
-        # (debug sink, or on_subpage stage-2 extraction at items_final)
-        # the kernel emits it as an extra output column and run_round
-        # persists it to debug_pages. on_subpage therefore implies
-        # retention in live mode — without it items_final could never
-        # join the detail-page html back.
-        self._retain_html = pages_df is None and (debug or
-                                                  self._has_subpage)
+        # (ok) pages to a debug_pages snapshot table with round lineage.
+        # The kernel emits their html as an extra output column and the
+        # round commit persists it, in mock and live mode alike. Live
+        # mode fetches html inside the kernel, so on_subpage there also
+        # implies retention — without it items_final could never join
+        # the detail-page html back.
+        self._retain_html = debug or (pages_df is None and
+                                      self._has_subpage)
         if pages_df is None and self._has_subpage and not debug:
             logger.info("live crawl with on_subpage fields: retaining "
                         "fetched html in debug_pages for stage-2 "
@@ -772,10 +779,10 @@ class CrawlEngine:
     def _dequeue_driver(self):
         """Driver-side dequeue: _dequeue_frame once over all live
         frontier files, the post-compaction fetched files and (adaptive)
-        the host_stats files — zero Spark jobs. pandas, FRONTIER_COLS."""
+        the host_stats files — zero Spark jobs. pandas, DEQUEUED_COLS."""
         fr = self.t_frontier.manifest()["files"]
         if not fr:
-            return pd.DataFrame(columns=FRONTIER_COLS)
+            return pd.DataFrame(columns=DEQUEUED_COLS)
         aj, _c = self._antijoin_fetched_files()
         hs = (self.t_host_stats.manifest()["files"]
               if self.adaptive_priority else [])
@@ -790,7 +797,7 @@ class CrawlEngine:
                              read(self.t_host_stats, hs, _HOST_SUMS_ARROW),
                              self.per_host_budget, self.round_budget,
                              self._adaptive_weights())
-        return pdf[FRONTIER_COLS].reset_index(drop=True)
+        return pdf[DEQUEUED_COLS].reset_index(drop=True)
 
     def _dequeue_bucketed(self):
         """Shuffle-free dequeue: one task per host-hash bucket reads its
@@ -819,11 +826,11 @@ class CrawlEngine:
                         os.path.join(table.dir, rel))
         buckets = sorted(b for b, (ff, _, _) in by_bucket.items() if ff)
         if not buckets:
-            return self.spark.createDataFrame([], FRONTIER_SCHEMA)
+            return self.spark.createDataFrame([], DEQUEUED_SCHEMA)
         bc = self._bc(by_bucket)
         per_host, budget = self.per_host_budget, self.round_budget
         weights = self._adaptive_weights()
-        out_spark = StructType(FRONTIER_SCHEMA.fields +
+        out_spark = StructType(DEQUEUED_SCHEMA.fields +
                                [StructField("_eff", DoubleType())])
         out_arrow = to_arrow_schema(out_spark)
 
@@ -909,9 +916,8 @@ class CrawlEngine:
         # per-host top-k dequeue, then global budget — explicit sorts
         w = Window.partitionBy("host").orderBy("_eff", "url")
         return (pending
-                .withColumn("_rank", F.row_number().over(w))
-                .filter(F.col("_rank") <= self.per_host_budget)
-                .drop("_rank")
+                .withColumn("_host_seq", F.row_number().over(w).cast("long"))
+                .filter(F.col("_host_seq") <= self.per_host_budget)
                 .orderBy("_eff", "url")
                 .limit(self.round_budget)
                 .drop("_eff"))
@@ -961,7 +967,7 @@ class CrawlEngine:
         tables = [self.t_frontier, self.t_fetched, self.t_seen,
                   self.t_slabs, self.t_items, self.t_metrics,
                   self.t_host_stats]
-        if self.debug or self._retain_html:
+        if self._retain_html:
             tables.append(self.t_debug)
         for t in tables:
             self._rollback_table(t, last)
@@ -983,18 +989,24 @@ class CrawlEngine:
     def bootstrap(self):
         """Round -1: seed the frontier + seen set. ONE Spark job (the
         frontier write, which computes the JVM xxhash64); the seen copy
-        and slab build derive from the written files driver-side."""
+        and slab build derive from the written files driver-side. A
+        seed's host comes from the outlinks' expression; a seed without
+        one is dropped, like an outlink."""
         self._sizes = self._measure_sizes()
-        rows = [(u, None, url_host(u), 0.0, 0, -1, 1) for u in self.seeds]
-        df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA) \
-            .withColumn("url_hash", F.xxhash64("url"))
+        rows = [(u, None, None, 0.0, 0, -1, 1) for u in self.seeds]
+        df = (self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
+              .withColumn("host", _host_col())
+              .filter(F.col("host").isNotNull())
+              .withColumn("url_hash", F.xxhash64("url")))
         n, files = self._hostpart_write(self.t_frontier, df, {"round": -1},
                                         mode="append_counted")
+        if n < len(rows):
+            logger.warning("dropped %d seed(s) without a host",
+                           len(rows) - n)
         if n:
             self._commit_seen(-1, n, files=files)
         self.t_rounds.append_rows(
-            [(-1, 0, 0, 0, 0, len(self.seeds), 0.0)], ROUNDS_SCHEMA,
-            {"round": -1})
+            [(-1, 0, 0, 0, 0, n, 0.0)], ROUNDS_SCHEMA, {"round": -1})
         self._release_round()
 
     # ------------------------------------------------------------------ seen
@@ -1228,9 +1240,8 @@ class CrawlEngine:
                                                  F.col("_h"),
                                                  F.lit("/robots.txt")))
                 # join key is the LOWERCASED host — must agree with
-                # url_host() (seeds) and the outlink host column, else a
-                # mixed-case host splits into two robots/politeness
-                # identities
+                # _host_col() (seeds and outlinks), else a mixed-case
+                # host splits into two robots/politeness identities
                 .select(F.lower(F.col("_h")).alias("host"),
                         F.col("html").alias("_robots"))).cache()
         return self._robots_cache_df
@@ -1283,7 +1294,7 @@ class CrawlEngine:
         t0 = time.time()
         self.last_phases, self._mark_t = [], t0
         self._sizes = self._measure_sizes()
-        dequeued, deq_pdf, n_dequeued = self._dequeue_phase(self._plan())
+        dequeued, n_dequeued = self._dequeue_phase(self._plan())
         self._mark("dequeue")
         if n_dequeued == 0:
             self._release_round()  # bucketed dequeue's file map
@@ -1292,8 +1303,7 @@ class CrawlEngine:
                 ROUNDS_SCHEMA, {"round": round_no})
             return {"round": round_no, "n_dequeued": 0}
         plan = self._plan(n_dequeued=n_dequeued)
-        kernel = self._fetch_extract_phase(dequeued, deq_pdf, n_dequeued,
-                                           round_no)
+        kernel = self._fetch_extract_phase(dequeued, n_dequeued, round_no)
         commit = (self._commit_round_driver if plan.commit_driver
                   else self._commit_round_cluster)
         stats, outlink_rows, started, ended = commit(kernel, round_no,
@@ -1303,77 +1313,34 @@ class CrawlEngine:
                                 started, ended)
 
     def _dequeue_phase(self, plan):
-        """(dequeued DataFrame, its pandas frame when dequeued on the
-        driver, row count)."""
+        """(dequeued DataFrame of DEQUEUED_SCHEMA rows, row count)."""
         if plan.dequeue_driver:
             pdf = self._dequeue_driver()
-            df = (self.spark.createDataFrame(pdf, FRONTIER_SCHEMA)
+            df = (self.spark.createDataFrame(pdf, DEQUEUED_SCHEMA)
                   if len(pdf) else None)
-            return df, pdf, len(pdf)
+            return df, len(pdf)
         if self.frontier_buckets and self._buckets_complete():
             df = self._cache(self._dequeue_bucketed())
         else:
             df = self._cache(self._dequeue_window(plan))
-        return df, None, df.count()
+        return df, df.count()
 
-    def _fetch_extract_phase(self, dequeued, deq_pdf, n_dequeued, round_no):
+    def _fetch_extract_phase(self, dequeued, n_dequeued, round_no):
         """The fetch/extract kernel over the dequeued rows, as a lazy
-        DataFrame of _crawl_schema() rows (_kind fetch/item/outlink)."""
-        # skew: hot hosts get salted sub-partitions AFTER the politeness
-        # schedule is fixed (salting only parallelizes fetch/parse). The
-        # detection only pays for itself when a host COULD exceed the
-        # threshold.
-        hot_hosts = set()
-        # live mode NEVER salts: politeness is enforced with wall-clock
-        # sleeps that only work while a host lives in exactly one task
-        # (mock mode's virtual clock is partition-independent, so salting
-        # stays on there). per_host_budget still bounds hot hosts.
-        if self.live_fetcher is None and n_dequeued > self.salt_threshold:
-            if deq_pdf is not None:
-                vc = deq_pdf["host"].value_counts()
-                hot_hosts = set(vc[vc > self.salt_threshold].index)
-            else:
-                hot_hosts = {r["host"] for r in dequeued.groupBy("host")
-                             .count()
-                             .filter(F.col("count") > self.salt_threshold)
-                             .collect()}
-            self._mark("salt_detect")
-
-        if self.debug and self.pages is not None:
-            dbg = (dequeued
-                   .join(self.pages.select("url", "html"), "url", "left")
-                   .select("url", "host", "html",
-                           F.lit(round_no).cast("long").alias("round")))
-            self.t_debug.append(dbg.coalesce(n_dequeued // 50_000 + 1),
-                                {"round": round_no})
-
-        # politeness schedule: deterministic virtual clock per host —
-        # computed with window functions (rank within host by priority,url)
-        # so it is independent of physical partitioning. Computed on the
-        # DEQUEUED rows BEFORE html is attached: the window's exchange
-        # then moves only (url, host, priority, ...) — not page payloads.
-        wseq = Window.partitionBy("host").orderBy("priority", "url")
-        work = dequeued.withColumn("_host_seq",
-                                   F.row_number().over(wseq).cast("long"))
-
+        DataFrame of _crawl_schema() rows (_kind fetch/item/outlink).
+        The politeness clock is the dequeue's per-host rank _host_seq,
+        so it does not depend on physical partitioning."""
         if self.pages is not None:
             robots_df = self._robots_df()
-            work = (work
+            work = (dequeued
                     .join(self.pages.select(F.col("url"),
                                             F.col("html").alias("_html")),
                           on="url", how="left")
                     .join(robots_df, on="host", how="left"))
         else:  # live mode: html + robots arrive inside the kernel
-            work = (work
+            work = (dequeued
                     .withColumn("_html", F.lit(None).cast("binary"))
                     .withColumn("_robots", F.lit(None).cast("binary")))
-
-        salt_factor = self.salt_factor
-        hot = F.col("host").isin(list(hot_hosts)) if hot_hosts else F.lit(False)
-        work = work.withColumn(
-            "_salt",
-            F.when(hot, F.pmod(F.xxhash64("url"), F.lit(salt_factor)))
-            .otherwise(F.lit(0)))
 
         scraper_factory = self.scraper_factory
         live_factory = self.live_fetcher
@@ -1524,13 +1491,18 @@ class CrawlEngine:
                 yield _crawl_batch(hosts, arrow_out)
 
         # partition count adapts to the round size (a 700-url round must
-        # not pay 64 task launches); politeness only needs host-locality,
-        # which hash-partitioning on (host, _salt) gives at any width.
-        # Within a task rows go round-robin across hosts: every host's
-        # first page, then every host's second, ...
+        # not pay 64 task launches). Live politeness needs host-locality,
+        # which hash-partitioning on host gives at any width, so live
+        # mode never salts; mock mode's virtual clock is partition-free,
+        # so a host is split into runs of SALT_ROWS ranks. Within a task
+        # rows go round-robin across hosts: every host's first page,
+        # then every host's second, ...
         n_fetch_parts = max(1, min(self.fetch_partitions,
                                    (n_dequeued + 15) // 16))
-        return (work.repartition(n_fetch_parts, "host", "_salt")
+        keys = [F.col("host")]
+        if live_factory is None:
+            keys.append(F.floor((F.col("_host_seq") - 1) / SALT_ROWS))
+        return (work.repartition(n_fetch_parts, *keys)
                 .sortWithinPartitions("_host_seq", "host")
                 .mapInArrow(fetch_extract, out_schema))
 
@@ -1552,9 +1524,9 @@ class CrawlEngine:
                                 for h in keep[-_LIVE_HOSTS_MAX // 2:]}
 
     def _append_html(self, result, round_no, n_dequeued):
-        """Live-mode html retention (debug sink / on_subpage stage-2
-        source): kernel-fetched html is only reachable through the
-        kernel's output rows, so persist it to debug_pages from there."""
+        """html retention (debug sink / live on_subpage stage-2
+        source): the ok pages' html from the kernel's output rows, the
+        one debug_pages writer for mock and live mode."""
         dbg = (result.filter("_kind = 'fetch'")
                .filter(F.col("_status") == "ok")
                .select(F.col("_page_url").alias("url"),
@@ -1746,10 +1718,7 @@ class CrawlEngine:
                     .groupBy("url").agg(F.min("depth").alias("depth"),
                                         F.min("page_no").alias("page_no"))
                     .withColumn("url_hash", F.xxhash64("url"))
-                    # lower() matches url_host() (urlsplit().hostname is
-                    # lowercased) — one host identity per site everywhere
-                    .withColumn("host", F.lower(
-                        F.expr("try_parse_url(url, 'HOST')")))
+                    .withColumn("host", _host_col())
                     # a link without a host (opaque like http:x, or not a
                     # valid URL at all) has no politeness or robots
                     # identity: it is never enqueued
@@ -1993,7 +1962,7 @@ def _blank_fields(fcols):
 
 def _fetch_row(url, host, ts, status, n_items, n_errors, fcols, html=None):
     # _html_out only exists in the output schema when the engine retains
-    # html (live debug / on_subpage); _crawl_batch drops unknown keys
+    # html (debug / live on_subpage); _crawl_batch drops unknown keys
     return {"_kind": "fetch", "_page_url": url, "_host": host,
             "_fetch_ts": ts, "_status": status, "_n_items": n_items,
             "_n_errors": n_errors, "_item_idx": None, "_outlink": None,

@@ -1,17 +1,18 @@
-"""Dequeue microbench at a LARGE pending set: 2M frontier rows over
-20k hosts — time the window dequeue vs the bucketed per-bucket dequeue
-on identical tables, and verify identical results.
+"""Dequeue microbench at a LARGE pending set: 8M frontier rows over
+80k hosts — time the window dequeue vs the bucketed per-bucket dequeue
+on identical tables, and verify they dequeue the same (url, _host_seq)
+pairs.
 
 ``python dequeue_scale_bench.py history`` runs the crawl-length
 independence phase instead: per-round dequeue cost as fetched history
 accumulates, with and without a trailing frontier compaction — the
 compaction-pruned anti-join (window AND bucketed paths) must stay FLAT
 while the unpruned cost grows with history."""
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import Window
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from goskyr_spark.spark.crawl import (CrawlEngine, FETCHED_SCHEMA,
@@ -176,15 +177,11 @@ eng._hostpart_write(eng.t_frontier, base, {"round": 0})
 eng._hostpart_write(eng.t_fetched, fetched, {"round": 0})
 
 
+plan = round_plan(**eng._measure_sizes())
+
+
 def window_dequeue():
-    frontier = eng.t_frontier.read(spark, schema=FRONTIER_SCHEMA)
-    fet = eng.t_fetched.read(spark, schema=FETCHED_SCHEMA)
-    pending = frontier.join(fet.select("url_hash", "url"),
-                            on=["url_hash", "url"], how="left_anti")
-    w = Window.partitionBy("host").orderBy("priority", "url")
-    return (pending.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= eng.per_host_budget).drop("_rank")
-            .orderBy("priority", "url").limit(eng.round_budget))
+    return eng._dequeue_window(plan)
 
 
 def timed(fn, label):
@@ -203,7 +200,13 @@ tw = timed(window_dequeue, "window")
 tb = timed(eng._dequeue_bucketed, "bucketed")
 print(f"RESULT speedup: {tw / tb:.2f}x", flush=True)
 
-# identical result sets
-a = sorted(r["url"] for r in window_dequeue().collect())
-b = sorted(r["url"] for r in eng._dequeue_bucketed().collect())
-print("RESULT identical:", a == b, flush=True)
+
+
+def pairs(df):
+    return sorted((r["url"], r["_host_seq"])
+                  for r in df.select("url", "_host_seq").collect())
+
+
+# identical (url, per-host rank) pairs
+print("RESULT identical:",
+      pairs(window_dequeue()) == pairs(eng._dequeue_bucketed()), flush=True)

@@ -241,3 +241,44 @@ def test_parallelism_invariance_crawl(spark, pages, spec, engine_run,
     b = [(r["round"], r["fetch_seq"], r["url"]) for r in
          ref.t_fetched.read(spark).orderBy("round", "fetch_seq").collect()]
     assert a == b
+
+
+def _crawl_pages(spark, wd, rows, seeds, **kw):
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    eng = CrawlEngine(spark, wd, pages, event_scraper, seeds, now=NOW, **kw)
+    eng.run(max_rounds=3)
+    status = {r["url"]: (r["host"], r["status"])
+              for r in eng.t_fetched.read(spark).collect()}
+    return eng, status
+
+
+def test_seed_host_matches_robots_host(spark, tmp_path):
+    """A seed's host comes from the same parser as the outlinks' and the
+    robots.txt join's: an IPv6 seed keeps its brackets, so its robots
+    rules apply; a seed Spark finds no host in is dropped, as an outlink
+    would be."""
+    v6 = "https://[::1]/list/1"
+    _, status = _crawl_pages(
+        spark, str(tmp_path / "wd"),
+        [("https://[::1]/robots.txt", b"User-agent: *\nDisallow: /list/1\n"),
+         (v6, b"<p>x</p>"), ("https://h_x.test/a", b"<p>x</p>")],
+        [v6, "https://h_x.test/a"])
+    assert status == {v6: ("[::1]", "robots")}
+
+
+def test_debug_pages_hold_fetched_pages_only(spark, tmp_path):
+    """Mock-mode debug_pages is written from the kernel output, like live
+    mode: only the ok page lands there, with its html bytes; the
+    robots-blocked and the missing page do not."""
+    ok, blocked, gone = (f"https://d.test/{p}/1"
+                         for p in ("list", "blocked", "gone"))
+    eng, status = _crawl_pages(
+        spark, str(tmp_path / "wd"),
+        [("https://d.test/robots.txt", b"User-agent: *\nDisallow: /blocked\n"),
+         (ok, b"<p>ok</p>"), (blocked, b"<p>blocked</p>")],
+        [ok, blocked, gone], debug=True)
+    assert {u: s for u, (_, s) in status.items()} == {
+        ok: "ok", blocked: "robots", gone: "missing"}
+    rows = eng.t_debug.read(spark).collect()
+    assert [(r["url"], r["html"], r["round"]) for r in rows] == [
+        (ok, b"<p>ok</p>", 0)]

@@ -194,3 +194,20 @@ def test_crawl_delay_overlapped_across_hosts(web, spark, tmp_path):
     pages = [(h, t) for h, p, t in w.hits if p != "/robots.txt"]
     assert [h for h, _ in pages] == [A, B] * 3
     assert pages[-1][1] - pages[0][1] < 1.5
+
+
+def test_live_never_salts(web, spark, tmp_path, monkeypatch):
+    """With salting forced on every row, a live round still fetches one
+    host from one task: the 18 page GETs (two fetch partitions) of one
+    host with `Crawl-delay: 0.2` stay about a crawl-delay apart."""
+    monkeypatch.setattr(crawl, "SALT_ROWS", 1)
+    w = web({A: (200, "User-agent: *\nCrawl-delay: 0.2\n")})
+    seeds = [w.url(A, f"/d/{n}") for n in range(1, 19)]
+    _, rounds, status = _crawl(spark, str(tmp_path / "wd"), seeds)
+    assert [r["n_dequeued"] for r in rounds] == [18]
+    assert set(status.values()) == {"ok"}
+    times = sorted(w.gets(A, robots=False))
+    assert len(times) == 18, w.hits
+    # two tasks each pacing 0.2 s would interleave to a gap <= 0.1 s
+    gaps = [b - a for a, b in zip(times, times[1:])]
+    assert min(gaps) >= 0.75 * 0.2, gaps

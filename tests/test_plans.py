@@ -157,6 +157,33 @@ def test_bucketed_dequeue_no_pending_shuffle(spark, tmp_path):
     assert "TakeOrderedAndProject" in plan, plan
 
 
+def test_fetch_extract_phase_has_no_window(spark, tmp_path):
+    """The fetch/extract phase of a driver-dequeued mock round takes its
+    politeness clock (_host_seq) from the dequeue as it stands: no
+    Window over host re-ranks the dequeued rows."""
+    from datetime import datetime, timezone
+
+    from goskyr_spark.spark.crawl import CrawlEngine, round_plan
+    from goskyr_spark.synth import (SynthSpec, event_scraper, host_name,
+                                    synth_pages_df)
+
+    spec = SynthSpec(n_hosts=3, pages_per_host=2, items_per_page=2,
+                     hot_hosts=0, hot_factor=1)
+    pages = synth_pages_df(spark, spec, include_fixtures=False)
+    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
+                      [f"https://{host_name(h)}/list/1" for h in range(3)],
+                      now=datetime(2026, 3, 1, tzinfo=timezone.utc))
+    eng.bootstrap()
+    eng._sizes = eng._measure_sizes()
+    plan = round_plan(**eng._sizes)
+    assert plan.dequeue_driver
+    dequeued, n = eng._dequeue_phase(plan)
+    assert n == 3
+    plan_text = _plan(eng._fetch_extract_phase(dequeued, n, 0))
+    assert "Window" not in plan_text, plan_text
+    assert "MapInArrow" in plan_text, plan_text
+
+
 def test_curate_keep_single_corpus_pass(spark):
     """The curation keep-list computes quality + language as column
     expressions over ONE documents pass, and the keeper join carries NO

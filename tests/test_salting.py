@@ -1,11 +1,13 @@
-"""Hot-host salting: when one host dominates a round, the fetch stage
-splits it across sub-partitions — results (items, seen set, politeness
-schedule) must be identical with salting forced on vs off."""
+"""Hot-host salting: mock mode splits each host's dequeued rows into
+runs of SALT_ROWS by their dequeue rank across fetch sub-partitions —
+results (items, seen set, politeness schedule) must be identical with
+salting forced on every row vs off."""
 
 from datetime import datetime, timezone
 
 import pytest
 
+from goskyr_spark.spark import crawl
 from goskyr_spark.spark.crawl import CrawlEngine
 from goskyr_spark.synth import SynthSpec, event_scraper, host_name, synth_pages_df
 
@@ -20,7 +22,7 @@ def spark():
                      shuffle_partitions=4)
 
 
-def test_salted_crawl_identical(spark, tmp_path):
+def test_salted_crawl_identical(spark, tmp_path, monkeypatch):
     # host 0 is hot: 6 list pages vs 2 for the others
     spec = SynthSpec(n_hosts=3, pages_per_host=2, items_per_page=3,
                      hot_hosts=1, hot_factor=3)
@@ -28,9 +30,9 @@ def test_salted_crawl_identical(spark, tmp_path):
     pages.count()
     seeds = [f"https://{host_name(h)}/list/1" for h in range(spec.n_hosts)]
 
-    def run(wd, salt_threshold):
+    def run(wd, salt_rows):
+        monkeypatch.setattr(crawl, "SALT_ROWS", salt_rows)
         eng = CrawlEngine(spark, wd, pages, event_scraper, seeds, now=NOW,
-                          salt_threshold=salt_threshold, salt_factor=3,
                           fetch_partitions=6)
         eng.run(max_rounds=20)
         fetched = [(r["round"], r["fetch_seq"], r["url"], r["fetch_ts"],
@@ -42,7 +44,7 @@ def test_salted_crawl_identical(spark, tmp_path):
         seen = sorted(r["url"] for r in eng.t_seen.read(spark).collect())
         return fetched, items, seen
 
-    # threshold 1 → every host with >1 dequeued url gets salted
-    a = run(str(tmp_path / "salted"), salt_threshold=1)
-    b = run(str(tmp_path / "unsalted"), salt_threshold=10**9)
+    # 1 → every dequeued row of a host is its own salt key
+    a = run(str(tmp_path / "salted"), salt_rows=1)
+    b = run(str(tmp_path / "unsalted"), salt_rows=10**9)
     assert a == b

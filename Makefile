@@ -24,7 +24,7 @@ bench:	# one JSON line; SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS override
 	$(PY) bench.py
 
 .PHONY: digest
-digest:	# crawl digest 768bf8d782fb251d: window/bucketed/adaptive x driver/cluster/mixed plans
+digest:	# crawl digest 768bf8d782fb251d: default/small-bucket/adaptive x driver/cluster/mixed plans
 	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-$$(nproc)} $(PY) scripts/digest_gate.py
 
 .PHONY: bench-history

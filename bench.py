@@ -24,6 +24,7 @@ import shutil
 import sys
 import tempfile
 import time
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -56,6 +57,25 @@ def crawl_spec():
     n_hosts = max(8, int(500 * SF / 0.1))
     return SynthSpec(n_hosts=n_hosts, pages_per_host=2, items_per_page=12,
                      hot_hosts=max(1, n_hosts // 100), hot_factor=4)
+
+
+# BUCKET_BYTES for the small-bucket crawl: the ~0.6 MB dequeue input of
+# crawl_spec() at sf0.1 then grows the host-bucket modulus 1 → 32
+SMALL_BUCKET_BYTES = 32 << 10
+
+
+@contextmanager
+def small_buckets(n=SMALL_BUCKET_BYTES):
+    """Run the crawl engine with BUCKET_BYTES = n inside the block, so
+    its host-keyed tables are written under a modulus that doubles
+    several times mid-crawl."""
+    from goskyr_spark.spark import crawl
+
+    saved, crawl.BUCKET_BYTES = crawl.BUCKET_BYTES, n
+    try:
+        yield
+    finally:
+        crawl.BUCKET_BYTES = saved
 
 
 def crawl_state_digest(eng, spark):
@@ -446,11 +466,11 @@ def main():
     crawl_a = bench_crawl(spark, crawl_cores, digest=True)
     crawl_b = bench_crawl(spark, crawl_cores, digest=True)
     crawl_big = min(crawl_a, crawl_b, key=lambda c: c["wall"])
-    # the 10^10 dequeue path: host-hash-bucketed frontier storage with
-    # the shuffle-free per-bucket dequeue — measured at the same scale
-    # and REQUIRED to reproduce the window-mode crawl digest exactly
-    crawl_bucketed = bench_crawl(spark, crawl_cores, digest=True,
-                                 frontier_buckets=32)
+    # the 10^10 layout: host-keyed tables written under a host-bucket
+    # modulus that grows mid-crawl (small BUCKET_BYTES) — measured at
+    # the same scale and REQUIRED to reproduce the default digest
+    with small_buckets():
+        crawl_bucketed = bench_crawl(spark, crawl_cores, digest=True)
     # adaptive host priority: same crawl with the fetch-history feedback
     # fold-in — measures the per-round host-aggregation overhead (the
     # digest legitimately differs: scheduling changes by design)

@@ -4,7 +4,7 @@ frozen — this file holds the measurement tooling the guide §1 asks for:
 per-phase crawl timing, noop-sink query isolation, plan captures).
 
 Usage:
-  python bench_extra.py crawl [window|bucketed|adaptive] [--rounds N]
+  python bench_extra.py crawl [default|bucketed|adaptive] [--rounds N]
   python bench_extra.py queries <name> [name...]   # noop-sink isolation
   python bench_extra.py plans <name> [name...]     # explain(formatted)
 
@@ -45,7 +45,7 @@ def make_spark(cores):
                      shuffle_partitions=max(cores, 8))
 
 
-def profile_crawl(mode="window"):
+def profile_crawl(mode="default"):
     """Same spec as bench.py's bench_crawl, but reports per-round AND
     per-phase wall times (CrawlEngine.last_phases)."""
     from goskyr_spark.spark.crawl import CrawlEngine
@@ -63,7 +63,10 @@ def profile_crawl(mode="window"):
     seeds = [f"https://{host_name(h)}/list/1" for h in range(spec.n_hosts)]
     kw = {}
     if mode == "bucketed":
-        kw["frontier_buckets"] = 32
+        from bench import SMALL_BUCKET_BYTES
+        from goskyr_spark.spark import crawl
+
+        crawl.BUCKET_BYTES = SMALL_BUCKET_BYTES  # for this process
     elif mode == "adaptive":
         kw["adaptive_priority"] = True
     for attempt in ("warm", "timed"):
@@ -167,7 +170,7 @@ def dump_plans(names, outdir="plans/r07", suffix="before"):
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "crawl"
     if cmd == "crawl":
-        profile_crawl(sys.argv[2] if len(sys.argv) > 2 else "window")
+        profile_crawl(sys.argv[2] if len(sys.argv) > 2 else "default")
     elif cmd == "queries":
         profile_queries(sys.argv[2:])
     elif cmd == "plans":

@@ -12,7 +12,7 @@ _goskyr_spark_completions() {
         --config | --pages | --seeds | --workdir | -c)
           COMPREPLY=($(compgen -A file -- "$cur")) ;;
         *)
-          COMPREPLY=($(compgen -W "-h --help --workdir -c --config --live --pages --seeds --hosts --max-rounds --buckets --canonicalize --adaptive" -- "$cur")) ;;
+          COMPREPLY=($(compgen -W "-h --help --workdir -c --config --live --pages --seeds --hosts --max-rounds --canonicalize --adaptive" -- "$cur")) ;;
       esac ;;
     'extract'*)
       case "$prev" in

@@ -11,7 +11,6 @@ complete -c goskyr-spark -n '__fish_seen_subcommand_from crawl' -l pages -r -F
 complete -c goskyr-spark -n '__fish_seen_subcommand_from crawl' -l seeds -r -F
 complete -c goskyr-spark -n '__fish_seen_subcommand_from crawl' -l hosts
 complete -c goskyr-spark -n '__fish_seen_subcommand_from crawl' -l max-rounds
-complete -c goskyr-spark -n '__fish_seen_subcommand_from crawl' -l buckets
 complete -c goskyr-spark -n '__fish_seen_subcommand_from crawl' -l canonicalize -r -F
 complete -c goskyr-spark -n '__fish_seen_subcommand_from crawl' -l adaptive
 complete -c goskyr-spark -n '__fish_use_subcommand' -a extract

@@ -153,7 +153,6 @@ def cmd_crawl(args):
     eng = CrawlEngine(spark, args.workdir, pages, factory, seeds,
                       now=datetime(2026, 3, 1, tzinfo=timezone.utc),
                       live_fetcher=live_fetcher,
-                      frontier_buckets=args.buckets or None,
                       adaptive_priority=args.adaptive,
                       canonicalize_outlinks=args.canonicalize)
     for s in eng.run(max_rounds=args.max_rounds):
@@ -460,9 +459,6 @@ def build_parser():
     pc.add_argument("--hosts", type=int, default=10,
                     help="synthetic web size when --pages is not given")
     pc.add_argument("--max-rounds", type=int, default=20)
-    pc.add_argument("--buckets", type=int, default=0,
-                    help="host-hash-bucket the frontier into N buckets "
-                         "(shuffle-free dequeue; 0 = window dequeue)")
     pc.add_argument("--canonicalize", action="store_true",
                     help="RFC 3986-normalize outlinks and seeds before "
                          "the seen-set test (frontier hygiene)")

@@ -28,14 +28,29 @@ implementation, and which one runs is decided once per round by
 round_plan(), the single size policy, from numbers the driver already
 holds (manifest file bytes, slab stats, the round's dequeued and new
 URL counts). The dequeue runs on the driver (pandas over the live files)
-while its input is under DRIVER_STATE_BYTES, else as a Spark job
-(bucketed or window). Rounds of at most DRIVER_ROWS URLs commit items,
-fetched, host_stats and new URLs from one collected Arrow table; larger
-rounds commit through Spark writes with a range-partitioned fetch_seq.
+while its input is under DRIVER_STATE_BYTES, else as one shuffle-free
+Spark job over the host buckets. Rounds of at most DRIVER_ROWS URLs
+commit items, fetched, host_stats and new URLs from one collected Arrow
+table; larger rounds commit through Spark writes with a
+range-partitioned fetch_seq.
 The seen-set test broadcasts all slab filters until their estimated size
 passes SEEN_BROADCAST_BYTES, then runs partition-aligned; join sides
 under BROADCAST_JOIN_BYTES get a broadcast hint. Both sides of every
 phase produce byte-identical state (pytest-asserted per plan).
+
+Layout: the host-keyed tables (frontier, fetched, host_stats) have one
+layout, crc32(host) mod M buckets (the Iceberg bucket-transform
+analog), with each file's (bucket, M) in the manifest. M is the
+smallest power of two that puts at most BUCKET_BYTES of the measured
+dequeue input in one bucket, so it follows the data: 1 (one plain file
+per append, no entry, counted as (0, 1)) until the input passes
+BUCKET_BYTES, then it doubles as the input grows. The cluster dequeue
+runs T tasks (a power of two); task t reads file (b, n) when
+t ≡ b mod min(n, T) and, when n < T, keeps only the rows with
+crc32(host) mod T = t. Every host reaches exactly one task whatever
+moduli its files were written under (a linear-hashing split read), so
+a flat legacy workdir, a crash inside compact() or a modulus that grew
+between rounds all dequeue the same rows.
 
 Slabs: the driver reads slab metadata (each slab's latest file, round,
 count and capacity) with pyarrow from the stat columns of the live slab
@@ -126,6 +141,10 @@ _LIVE_HOSTS_MAX = 100_000
 # ranks of one host is its own fetch partition key (per_host_budget
 # caps a host below this at the defaults, so no host is split)
 SALT_ROWS = 512
+# on-disk dequeue input per host bucket, and per cluster dequeue task:
+# host-keyed writes use the smallest power-of-two modulus that keeps a
+# bucket under it, so one bucket's pending rows fit a task
+BUCKET_BYTES = 4 << 20
 
 # --- the size policy: read by round_plan() only ------------------------------
 # dequeued (or new) URLs per round up to which the round commits on the
@@ -144,26 +163,25 @@ BROADCAST_JOIN_BYTES = 32 << 20
 
 @dataclass(frozen=True)
 class RoundPlan:
-    """Where each phase of one round runs (True = driver side) and which
-    join sides are broadcast. Made by round_plan() only."""
+    """Where each phase of one round runs (True = driver side) and
+    whether the seen join side is broadcast. Made by round_plan()
+    only."""
     dequeue_driver: bool
     commit_driver: bool      # items/fetched/host_stats from one collect
     new_urls_driver: bool    # outlink flag + seen confirm + appends
     seen_copy_driver: bool   # seen rows copied from the new frontier files
     slabs_driver: bool       # Bloom+cuckoo slab update
     seen_partitioned: bool   # seen test reads slabs per task, not broadcast
-    broadcast_fetched: bool
-    broadcast_host_stats: bool
     broadcast_seen: bool
 
 
-def round_plan(dequeue_bytes=0, fetched_bytes=0, host_stats_bytes=0,
-               seen_bytes=0, slab_bytes=0, n_dequeued=0, n_new=0):
+def round_plan(dequeue_bytes=0, seen_bytes=0, slab_bytes=0, n_dequeued=0,
+               n_new=0):
     """The one size policy. Bytes are on-disk parquet sizes of the
     dequeue input (live frontier + post-compaction fetched + adaptive
-    host_stats), of its fetched and host_stats parts and of the seen
-    table; slab_bytes is the slabs' estimated filter size. n_dequeued
-    and n_new are this round's counts, passed once known."""
+    host_stats) and of the seen table; slab_bytes is the slabs'
+    estimated filter size. n_dequeued and n_new are this round's counts,
+    passed once known."""
     partitioned = slab_bytes > SEEN_BROADCAST_BYTES
     small_round = n_dequeued <= DRIVER_ROWS
     small_new = n_new <= DRIVER_ROWS
@@ -175,8 +193,6 @@ def round_plan(dequeue_bytes=0, fetched_bytes=0, host_stats_bytes=0,
         seen_copy_driver=small_new,
         slabs_driver=small_new and not partitioned,
         seen_partitioned=partitioned,
-        broadcast_fetched=fetched_bytes <= BROADCAST_JOIN_BYTES,
-        broadcast_host_stats=host_stats_bytes <= BROADCAST_JOIN_BYTES,
         broadcast_seen=seen_bytes <= BROADCAST_JOIN_BYTES)
 
 FRONTIER_SCHEMA = StructType([
@@ -437,13 +453,13 @@ def _slab_build(groups, prev, caps, round_no):
 
 def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
     """The dequeue over Arrow tables, run by the driver over all live
-    files and by the bucketed kernel over one bucket: pending = frontier
-    rows whose url is not in `fetched`; _eff = priority plus, with
-    weights = (error, yield), the adaptive per-host adjustment from the
-    host_stats deltas (integer sums then one float64 expression —
-    bit-identical to the window path's JVM arithmetic); per-host top-k
-    by (_eff, url), ranked 1..k per host as _host_seq; then the round
-    budget. pandas, (_eff, url) order."""
+    files and by each cluster dequeue task over its hosts' rows:
+    pending = frontier rows whose url is not in `fetched`; _eff =
+    priority plus, with weights = (error, yield), the adaptive per-host
+    adjustment from the host_stats deltas (integer sums then one float64
+    expression, so every task computes a host's value bit-identically);
+    per-host top-k by (_eff, url), ranked 1..k per host as _host_seq;
+    then the round budget. pandas, (_eff, url) order."""
     pdf = frontier.to_pandas()
     if fetched is not None and fetched.num_rows:
         pdf = pdf[~pdf["url"].isin(set(fetched.column("url").to_pylist()))]
@@ -464,6 +480,45 @@ def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
     return pdf[pdf["_host_seq"] <= per_host].head(budget)
 
 
+# --- the host-bucketed layout: one write rule, one read rule -----------------
+
+def _host_bucket(hosts, mod):
+    """crc32(host) mod `mod` of an Arrow host column, as int64 numpy —
+    the same CRC-32 of the UTF-8 bytes as Spark's pmod(crc32(host),
+    mod) in the Spark writer."""
+    return np.array([zlib.crc32(h.encode()) % mod for h in hosts.to_pylist()],
+                    dtype=np.int64)
+
+
+def _dequeue_reads(buckets, n_tasks):
+    """The cluster dequeue's read rule over buckets = {file: (b, n)}, a
+    file written as crc32(host) bucket b of modulus n (powers of two):
+    {task: [(file, whole)]} for tasks 0..n_tasks-1. Task t reads (b, n)
+    when t ≡ b mod min(n, n_tasks); whole=False (n < n_tasks) means it
+    keeps only the rows with crc32(host) mod n_tasks = t. So every
+    host's rows reach exactly one task."""
+    reads = {t: [] for t in range(n_tasks)}
+    for f, (b, n) in sorted(buckets.items()):
+        k = min(n, n_tasks)
+        for t in range(b % k, n_tasks, k):
+            reads[t].append((f, n >= n_tasks))
+    return reads
+
+
+def _read_share(files, schema, t, n_tasks):
+    """pyarrow read of task t's share of `files` [(path, whole)] as
+    `schema` (a file read in part is filtered on its host column), or
+    None when the task reads no file."""
+    parts = []
+    for path, whole in files:
+        cols = schema.names if whole else sorted({*schema.names, "host"})
+        tbl = pq.read_table(path, columns=cols)
+        if not whole:
+            tbl = tbl.filter(pa.array(_host_bucket(tbl["host"], n_tasks) == t))
+        parts.append(tbl.select(schema.names).cast(schema))
+    return pa.concat_tables(parts) if parts else None
+
+
 def _host_col():
     """The one host identity of the `url` column: its lowercased HOST as
     Spark parses it (IPv6 keeps its brackets; NULL when there is none).
@@ -482,7 +537,7 @@ class CrawlEngine:
                  slab_capacity=4096, now=None, fetch_partitions=None,
                  debug=False,
                  live_fetcher=None, compact_every=None,
-                 frontier_buckets=None, adaptive_priority=False,
+                 adaptive_priority=False,
                  adaptive_yield_weight=0.5, adaptive_error_weight=2.0,
                  canonicalize_outlinks=False):
         assert n_slabs & (n_slabs - 1) == 0, "n_slabs must be a power of two"
@@ -521,19 +576,6 @@ class CrawlEngine:
         self.now = now or datetime.now(timezone.utc)
         self.fetch_partitions = fetch_partitions or max(
             4, spark.sparkContext.defaultParallelism)
-        # frontier_buckets=N turns on host-hash-BUCKETED frontier/fetched
-        # storage (bucket = crc32(host) mod N, Iceberg bucket-transform
-        # analog): every append/compaction writes one file per bucket,
-        # and the dequeue becomes a task-local per-bucket job (each task
-        # reads ONLY its bucket's frontier+fetched files, anti-joins and
-        # ranks in memory) — the per-round Window + anti-join SHUFFLE of
-        # the full pending set disappears, which is the dominant dequeue
-        # cost at the 10^10-URL design point. A host always lives in
-        # exactly one bucket, so per-host top-k is bucket-local and the
-        # dequeued set (and crawl digest) is IDENTICAL to window mode
-        # (pytest-asserted). Size N so one bucket's pending rows fit a
-        # task (e.g. 4096 at 10^10). None = classic window dequeue.
-        self.frontier_buckets = frontier_buckets
         # adaptive_priority=True folds per-host crawl feedback into the
         # dequeue ranking (focused-crawl scheduling): hosts that yield
         # items get dequeued earlier, hosts that fail fetches later.
@@ -604,6 +646,13 @@ class CrawlEngine:
         # read driver-side (_read_file_cached)
         self._slab_head = (None, {})
         self._file_cache = {}
+        # the last _measure_sizes(): round_plan() inputs, and the
+        # dequeue bytes that set the modulus M of the HOST-HASH BUCKETED
+        # frontier, fetched and host_stats (_bucket_mod): small crawls
+        # write one plain file per append, large ones one file per
+        # bucket, so the cluster dequeue is a task-local job with no
+        # per-round shuffle of the full pending set — the dominant
+        # dequeue cost at the 10^10-URL design point
         self._sizes = {}
         self.last_phases, self._mark_t = [], time.time()
         self.t_debug = self.store.table("debug_pages")
@@ -677,59 +726,45 @@ class CrawlEngine:
             t = self._file_cache[key] = _read_parquet([key[0]], schema)
         return t
 
-    # ---------------------------------------------------- bucketed frontier
+    # ---------------------------------------------- host-bucketed layout
+
+    def _bucket_mod(self):
+        """M of every host-keyed write: the smallest power of two with
+        dequeue_bytes / M ≤ BUCKET_BYTES, dequeue_bytes as
+        _measure_sizes() took it at round start (or at compact())."""
+        need = -(-self._sizes.get("dequeue_bytes", 0) // BUCKET_BYTES)
+        return 1 << max(0, need - 1).bit_length()
 
     def _hostpart_write(self, table, df, meta, mode="append",
                         coalesce=None):
         """Spark append/overwrite (or "append_counted") of a host-keyed
-        table; with frontier_buckets the write is bucketed by
-        crc32(host) mod N (one file per bucket, file→bucket map in the
-        manifest), repartitioned by bucket WITHOUT a pinned partition
-        count — AQE coalesces the exchange by size, so a 65-row tail
-        round shuffles into one task while a fat round still spreads."""
-        if not self.frontier_buckets:
+        table under _bucket_mod() M: at M = 1 a plain write (coalesced
+        when asked), else one file per crc32(host) mod M bucket, each
+        file's (bucket, M) in the manifest, repartitioned by bucket
+        WITHOUT a pinned partition count — AQE coalesces the exchange
+        by size, so a 65-row tail round shuffles into one task while a
+        fat round still spreads."""
+        mod = self._bucket_mod()
+        if mod == 1:
             return getattr(table, mode)(
                 df.coalesce(coalesce) if coalesce else df, meta)
         df = df.withColumn("_bucket", F.pmod(
-            F.crc32(F.col("host")), F.lit(self.frontier_buckets))) \
-            .repartition("_bucket")
-        return getattr(table, mode)(
-            df, dict(meta or {}, bucket_mod=self.frontier_buckets),
-            partition_by="_bucket")
+            F.crc32(F.col("host")), F.lit(mod))).repartition("_bucket")
+        return getattr(table, mode)(df, dict(meta or {}, bucket_mod=mod),
+                                    partition_by="_bucket")
 
     def _append_host_keyed(self, table, tbl, round_no):
-        """Driver-side append of a host-keyed Arrow table: one file, or
-        with frontier_buckets one file per bucket under the same
-        crc32(host) modulus as the Spark writer."""
-        meta = {"round": round_no}
-        if not self.frontier_buckets:
+        """Driver-side append of a host-keyed Arrow table under the
+        Spark writer's rule: one file at M = 1, else one file per
+        crc32(host) mod M bucket."""
+        mod, meta = self._bucket_mod(), {"round": round_no}
+        if mod == 1:
             table.append_arrow(tbl, meta)
             return
-        n_b = self.frontier_buckets
-        b = np.array([zlib.crc32(h.encode()) % n_b
-                      for h in tbl.column("host").to_pylist()])
+        b = _host_bucket(tbl.column("host"), mod)
         table.append_arrow_bucketed(
             {int(k): tbl.filter(pa.array(b == k)) for k in np.unique(b)},
-            dict(meta, bucket_mod=n_b))
-
-    def _buckets_complete(self):
-        """True when EVERY live frontier/fetched file has a bucket
-        assignment UNDER THIS ENGINE'S MODULUS — resuming a workdir
-        written without bucketing, mid-migration, or with a different
-        frontier_buckets count falls back to the window dequeue for
-        correctness (a host is only guaranteed to live in one bucket
-        per modulus). The next compact() rewrites everything under the
-        current modulus, after which the bucketed path resumes."""
-        tables = [self.t_frontier, self.t_fetched]
-        # the adaptive bucketed kernel also reads its bucket's
-        # host_stats files task-locally
-        if self.adaptive_priority and self.t_host_stats.exists():
-            tables.append(self.t_host_stats)
-        for t in tables:
-            files = set(t.manifest()["files"])
-            if files - set(t.bucket_map(expect_mod=self.frontier_buckets)):
-                return False
-        return True
+            dict(meta, bucket_mod=mod))
 
     def _frontier_compact_round(self):
         """Round of the frontier compaction currently IN EFFECT, or
@@ -799,35 +834,38 @@ class CrawlEngine:
                              self._adaptive_weights())
         return pdf[DEQUEUED_COLS].reset_index(drop=True)
 
-    def _dequeue_bucketed(self):
-        """Shuffle-free dequeue: one task per host-hash bucket reads its
-        own frontier + fetched files (pyarrow, task-local — the slab
-        access pattern) and runs _dequeue_frame over them; the only
-        exchange is the final global TakeOrdered merge over ≤ n_buckets
-        × round_budget survivors. Produces the identical row set as the
-        window dequeue (a host is entirely inside one bucket)."""
-        mod = self.frontier_buckets
-        fmap = self.t_frontier.bucket_map(expect_mod=mod)
-        gmap = self.t_fetched.bucket_map(expect_mod=mod)
+    def _dequeue_cluster(self):
+        """Shuffle-free cluster dequeue: T tasks (a power of two, sized
+        by the bytes they read and fetch_partitions), task t reading its
+        share (_dequeue_reads) of the live frontier, the post-compaction
+        fetched and (adaptive) host_stats files with pyarrow and running
+        _dequeue_frame over it; the only exchange is the final global
+        TakeOrdered merge over ≤ T × round_budget survivors. A host's
+        rows reach exactly one task whatever moduli its files were
+        written under, so the rows equal the driver dequeue's."""
         # anti-join only needs fetched files newer than the effective
-        # frontier compaction — the kernel's task memory and read
-        # volume track work since the last compaction, not history
-        aj_keep = set(self._antijoin_fetched_files()[0])
-        hmap = (self.t_host_stats.bucket_map(expect_mod=mod)
-                if self.adaptive_priority and self.t_host_stats.exists()
-                else {})
-        by_bucket = {}
-        for i, (table, bmap) in enumerate(((self.t_frontier, fmap),
-                                           (self.t_fetched, gmap),
-                                           (self.t_host_stats, hmap))):
-            for rel, b in bmap.items():
-                if i != 1 or rel in aj_keep:
-                    by_bucket.setdefault(b, ([], [], []))[i].append(
-                        os.path.join(table.dir, rel))
-        buckets = sorted(b for b, (ff, _, _) in by_bucket.items() if ff)
-        if not buckets:
+        # frontier compaction — task memory and read volume track work
+        # since the last compaction, not history
+        aj = set(self._antijoin_fetched_files()[0])
+
+        def files(table, keep=None):
+            return {os.path.join(table.dir, f): bn
+                    for f, bn in table.bucket_map().items()
+                    if keep is None or f in keep}
+
+        maps = [files(self.t_frontier), files(self.t_fetched, aj),
+                files(self.t_host_stats) if self.adaptive_priority else {}]
+        if not maps[0]:
             return self.spark.createDataFrame([], DEQUEUED_SCHEMA)
-        bc = self._bc(by_bucket)
+        # task count from the BYTES the tasks will read (driver-side
+        # stat calls, no job): a tail round with a few KB of pending
+        # rows runs as ONE task instead of paying fetch_partitions
+        # Python-worker launches
+        total = sum(os.path.getsize(p) for m in maps for p in m)
+        cap = min(self.fetch_partitions, total // BUCKET_BYTES + 1)
+        n_tasks = 1 << (cap.bit_length() - 1)
+        bc = self._bc([_dequeue_reads(m, n_tasks) for m in maps])
+        schemas = (_FRONTIER_ARROW, _URL_ARROW, _HOST_SUMS_ARROW)
         per_host, budget = self.per_host_budget, self.round_budget
         weights = self._adaptive_weights()
         out_spark = StructType(DEQUEUED_SCHEMA.fields +
@@ -836,106 +874,23 @@ class CrawlEngine:
 
         def kernel(batches):
             for batch in batches:
-                for b in batch.column(0).to_pylist():
-                    f_files, g_files, h_files = bc.value[b]
-                    pdf = _dequeue_frame(
-                        _read_parquet(f_files, _FRONTIER_ARROW),
-                        _read_parquet(g_files, _URL_ARROW)
-                        if g_files else None,
-                        _read_parquet(h_files, _HOST_SUMS_ARROW)
-                        if h_files else None,
-                        per_host, budget, weights)
+                for t in batch.column(0).to_pylist():
+                    frontier, fetched, host_stats = (
+                        _read_share(reads[t], s, t, n_tasks)
+                        for reads, s in zip(bc.value, schemas))
+                    if frontier is None:
+                        continue
+                    pdf = _dequeue_frame(frontier, fetched, host_stats,
+                                         per_host, budget, weights)
                     if len(pdf):
                         yield pa.RecordBatch.from_pandas(
                             pdf[out_arrow.names], schema=out_arrow,
                             preserve_index=False)
 
-        spec = self.spark.createDataFrame([(b,) for b in buckets],
-                                          "bucket long")
-        # task count sized by the BYTES the kernel will actually read
-        # (driver-side stat of the per-bucket file lists — no job): a
-        # tail round with a few KB of pending rows runs as ONE task
-        # (the kernel loops over every bucket in its batch) instead of
-        # paying fetch_partitions Python-worker launches; fat frontiers
-        # still fan out to one task per ~4 MB bucket group.
-        total_bytes = sum(os.path.getsize(p) for lists in by_bucket.values()
-                          for files in lists for p in files
-                          if os.path.exists(p))
-        n_parts = max(1, min(len(buckets), self.fetch_partitions,
-                             total_bytes // (4 << 20) + 1))
-        return (spec.repartition(n_parts, "bucket")
+        # one task id per partition: task t runs in partition t
+        return (self.spark.range(0, n_tasks, 1, n_tasks)
                 .mapInArrow(kernel, out_spark)
                 .orderBy("_eff", "url").limit(budget).drop("_eff"))
-
-    def _dequeue_window(self, plan):
-        """Shuffle-based dequeue (the non-bucketed cluster side):
-        compaction-pruned anti-join, optional adaptive host feedback,
-        per-host top-k window, global budget."""
-        spark = self.spark
-        frontier = self.t_frontier.read(spark, schema=FRONTIER_SCHEMA)
-        # anti-join right side: only fetched files from rounds AFTER the
-        # effective frontier compaction — a compacted frontier already
-        # excludes everything fetched up to that round, so the anti-join
-        # cost tracks work since the last compaction, not crawl history
-        aj_files, _c = self._antijoin_fetched_files()
-        if aj_files:
-            fetched_aj = spark.read.parquet(
-                *[os.path.join(self.t_fetched.dir, f) for f in aj_files])
-        else:
-            fetched_aj = spark.createDataFrame([], FETCHED_SCHEMA)
-        fa = fetched_aj.select("url_hash", "url")
-        if plan.broadcast_fetched:
-            # the frontier scan is never shuffled just to drop
-            # already-fetched rows
-            fa = F.broadcast(fa)
-        pending = frontier.join(fa, on=["url_hash", "url"], how="left_anti")
-
-        if self.adaptive_priority:
-            # per-host feedback from the INCREMENTAL host_stats table
-            # (delta rows per round, compacted to one row per host) —
-            # never a re-aggregation of the full fetched history.
-            # Integer delta sums then one double expression:
-            # bit-identical to aggregating fetched directly, at a cost
-            # proportional to active hosts.
-            adj = (self.t_host_stats.read(spark, schema=HOST_STATS_SCHEMA)
-                   .groupBy("host")
-                   .agg(F.sum("n_fetched").alias("_nf"),
-                        F.sum("n_ok").alias("_nok"),
-                        F.sum("n_items").alias("_ni"))
-                   .select("host", self._adaptive_adj_expr()))
-            if plan.broadcast_host_stats:
-                adj = F.broadcast(adj)
-            pending = (pending.join(adj, "host", "left")
-                       .withColumn("_eff",
-                                   F.col("priority")
-                                   + F.coalesce(F.col("_adj"), F.lit(0.0)))
-                       .drop("_adj"))
-        else:
-            pending = pending.withColumn("_eff", F.col("priority"))
-
-        # per-host top-k dequeue, then global budget — explicit sorts
-        w = Window.partitionBy("host").orderBy("_eff", "url")
-        return (pending
-                .withColumn("_host_seq", F.row_number().over(w).cast("long"))
-                .filter(F.col("_host_seq") <= self.per_host_budget)
-                .orderBy("_eff", "url")
-                .limit(self.round_budget)
-                .drop("_eff"))
-
-    def _adaptive_adj_expr(self):
-        """Per-host priority adjustment from cumulative fetch history
-        (columns _nf, _nok, _ni): positive for failing hosts (later),
-        negative for item-yielding hosts (earlier). Bounded in
-        [-yield_weight, +error_weight]; integer sums + one double
-        expression keep it bit-deterministic across dequeue paths."""
-        fail_rate = (F.col("_nf") - F.col("_nok")) / F.col("_nf")
-        yield_norm = F.least(
-            F.lit(1.0),
-            F.col("_ni") / F.greatest(F.col("_nok"), F.lit(1)))
-        return (F.lit(float(self.adaptive_error_weight)) * fail_rate
-                - F.lit(float(self.adaptive_yield_weight)) * yield_norm) \
-            .alias("_adj")
-
 
     # ------------------------------------------------------------------ state
 
@@ -1227,23 +1182,30 @@ class CrawlEngine:
     def _robots_df(self):
         """Per-host robots.txt bodies — computed once per engine and
         cached (it is a tiny per-host table; rescanning pages per round
-        would be a full-table scan)."""
+        would be a full-table scan). Any pages row whose path is
+        /robots.txt with no query counts, at any scheme or port, as live
+        mode reads robots from the page's own scheme and netloc; of
+        several for one host, https wins over http, then the smallest
+        url."""
         if getattr(self, "_robots_cache_df", None) is None:
+            def part(name):
+                return F.expr(f"try_parse_url(url, '{name}')")
+
+            # StringEndsWith pushes down to the parquet scan; the parsed
+            # path/query checks (not pushdown-able) then only refine the
+            # ~one-row-per-host remainder
+            rows = (self.pages.filter(F.col("url").endswith("/robots.txt"))
+                    .filter((part("PATH") == "/robots.txt")
+                            & part("QUERY").isNull()))
+            pick = F.min(F.struct(
+                (F.lower(part("PROTOCOL")) != "https").alias("_http"),
+                F.col("url"), F.col("html")))
             self._robots_cache_df = (
-                self.pages
-                # StringEndsWith pushes down to the parquet scan; the
-                # exact concat equality (not pushdown-able) then only
-                # refines the ~one-row-per-host remainder
-                .filter(F.col("url").endswith("/robots.txt"))
-                .withColumn("_h", F.expr("try_parse_url(url, 'HOST')"))
-                .filter(F.col("url") == F.concat(F.lit("https://"),
-                                                 F.col("_h"),
-                                                 F.lit("/robots.txt")))
-                # join key is the LOWERCASED host — must agree with
+                # group key is the LOWERCASED host — must agree with
                 # _host_col() (seeds and outlinks), else a mixed-case
                 # host splits into two robots/politeness identities
-                .select(F.lower(F.col("_h")).alias("host"),
-                        F.col("html").alias("_robots"))).cache()
+                rows.groupBy(_host_col().alias("host"))
+                .agg(pick["html"].alias("_robots"))).cache()
         return self._robots_cache_df
 
 
@@ -1275,12 +1237,9 @@ class CrawlEngine:
                  for t, files in live + [slabs] for f in files}
         self._file_cache = {k: v for k, v in self._file_cache.items()
                             if k[0] in paths}
-        frontier_bytes, fetched_bytes, host_stats_bytes, seen_bytes = (
-            self._files_bytes(t, files) for t, files in live)
+        *dequeue, seen = (self._files_bytes(t, files) for t, files in live)
         return dict(
-            dequeue_bytes=frontier_bytes + fetched_bytes + host_stats_bytes,
-            fetched_bytes=fetched_bytes, host_stats_bytes=host_stats_bytes,
-            seen_bytes=seen_bytes,
+            dequeue_bytes=sum(dequeue), seen_bytes=seen,
             # bloom ≈ 1.5 B/slot (12 bits/item) + cuckoo 2 B/slot
             slab_bytes=sum(int(3.5 * v[3])
                            for v in self._slab_latest().values()))
@@ -1297,7 +1256,7 @@ class CrawlEngine:
         dequeued, n_dequeued = self._dequeue_phase(self._plan())
         self._mark("dequeue")
         if n_dequeued == 0:
-            self._release_round()  # bucketed dequeue's file map
+            self._release_round()  # cluster dequeue's read-rule broadcast
             self.t_rounds.append_rows(
                 [(round_no, 0, 0, 0, 0, 0, time.time() - t0)],
                 ROUNDS_SCHEMA, {"round": round_no})
@@ -1319,10 +1278,7 @@ class CrawlEngine:
             df = (self.spark.createDataFrame(pdf, DEQUEUED_SCHEMA)
                   if len(pdf) else None)
             return df, len(pdf)
-        if self.frontier_buckets and self._buckets_complete():
-            df = self._cache(self._dequeue_bucketed())
-        else:
-            df = self._cache(self._dequeue_window(plan))
+        df = self._cache(self._dequeue_cluster())
         return df, df.count()
 
     def _fetch_extract_phase(self, dequeued, n_dequeued, round_no):
@@ -1826,8 +1782,10 @@ class CrawlEngine:
         compacted snapshot carries the last complete round's meta and is
         itself a valid resume point. At the 10^10 design point this is
         the maintenance job a real Iceberg deployment schedules as
-        rewrite_data_files."""
+        rewrite_data_files. The host-keyed tables are rewritten under
+        the modulus of the dequeue input measured here."""
         last = self.last_complete_round()
+        self._sizes = self._measure_sizes()
         slabs = self.t_slabs.read(self.spark, schema=SLAB_SCHEMA)
         w = Window.partitionBy("slab_id").orderBy(F.desc("round"))
         latest = (slabs.withColumn("_rn", F.row_number().over(w))

@@ -171,27 +171,22 @@ class SnapshotTable:
         pq.write_table(table, os.path.join(self.files_dir, fn))
         return self._commit([os.path.join("files", fn)], meta, "append")
 
-    def bucket_map(self, expect_mod=None):
-        """{relative file path → bucket} for the CURRENT snapshot's
-        files, merged across the manifest chain (append-only commits
-        carry only their own new files' buckets; rollback/compaction
-        keep the chain intact, so every live file resolves).
-
-        ``expect_mod``: only files bucketed under THAT modulus count —
-        a file written as crc32(host) mod 8 does not partition hosts
-        the way mod 16 does, so a reader reconfigured to a different
-        bucket count must treat such files as unbucketed (and fall back
-        to a full-table path) until a compaction rewrites them."""
+    def bucket_map(self):
+        """{relative file path → (bucket, modulus)} for every file of
+        the CURRENT snapshot: a bucketed write records each file's
+        bucket and, as meta ``bucket_mod``, the modulus it was written
+        under. A file without both (a plain write) is (0, 1): it may
+        hold any bucket. Merged across the manifest chain (append-only
+        commits carry only their own new files' buckets;
+        rollback/compaction keep the chain intact, so every live file
+        resolves)."""
         merged = {}
         for m in self.snapshots():
-            fb = m["meta"].get("file_buckets") or {}
-            if (expect_mod is not None
-                    and fb
-                    and m["meta"].get("bucket_mod") != expect_mod):
-                continue
-            merged.update(fb)
-        live = set(self.manifest()["files"])
-        return {f: b for f, b in merged.items() if f in live}
+            mod = m["meta"].get("bucket_mod")
+            if mod:
+                merged.update((f, (b, mod)) for f, b in
+                              (m["meta"].get("file_buckets") or {}).items())
+        return {f: merged.get(f, (0, 1)) for f in self.manifest()["files"]}
 
     def file_rounds(self):
         """{relative file path → commit round} for the CURRENT

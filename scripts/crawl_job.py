@@ -27,10 +27,6 @@ def main():
     p.add_argument("--max-rounds", type=int, default=100)
     p.add_argument("--round-budget", type=int, default=100_000)
     p.add_argument("--per-host-budget", type=int, default=64)
-    p.add_argument("--buckets", type=int, default=4096,
-                   help="host-hash frontier buckets (shuffle-free "
-                        "dequeue); 0 = window dequeue. Size so one "
-                        "bucket's pending rows fit an executor task.")
     p.add_argument("--adaptive", action="store_true",
                    help="adaptive host priority (item-yield/failure "
                         "feedback from crawl history)")
@@ -86,7 +82,6 @@ def main():
     eng = CrawlEngine(spark, args.workdir, pages, event_scraper, seeds,
                       round_budget=args.round_budget,
                       per_host_budget=args.per_host_budget,
-                      frontier_buckets=args.buckets or None,
                       adaptive_priority=args.adaptive,
                       canonicalize_outlinks=args.canonicalize,
                       compact_every=args.compact_every,

@@ -1,14 +1,21 @@
-"""Dequeue microbench at a LARGE pending set: 8M frontier rows over
-80k hosts — time the window dequeue vs the bucketed per-bucket dequeue
-on identical tables, and verify they dequeue the same (url, _host_seq)
-pairs.
+"""Dequeue microbench at a LARGE pending set.
+
+``python dequeue_scale_bench.py [ROWS]`` (default 2,000,000): ROWS
+frontier rows over ROWS/100 hosts, 10% of them already fetched. Times
+the cluster dequeue (`CrawlEngine._dequeue_cluster`) on two layouts of
+the same rows — flat (one plain write, every file (0, 1)) and rewritten
+at the modulus the engine's rule picks for their bytes — warm-up then
+best of 2, and checks that each gives the driver dequeue's (url,
+_host_seq) pairs. `local[SPARK_GRAFT_CPUS]` (default: all cores) with
+fetch_partitions = cores.
 
 ``python dequeue_scale_bench.py history`` runs the crawl-length
-independence phase instead: per-round dequeue cost as fetched history
-accumulates, with and without a trailing frontier compaction — the
-compaction-pruned anti-join (window AND bucketed paths) must stay FLAT
-while the unpruned cost grows with history."""
+independence phase instead: per-round cluster dequeue cost as fetched
+history accumulates, with and without a trailing frontier compaction —
+the compaction-pruned anti-join must stay FLAT while the unpruned cost
+grows with history."""
 import os
+import shutil
 import sys
 import time
 
@@ -16,90 +23,89 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from goskyr_spark.spark.crawl import (CrawlEngine, FETCHED_SCHEMA,
-                                      FRONTIER_SCHEMA, round_plan)
+                                      FRONTIER_SCHEMA)
 from goskyr_spark.spark.session import get_spark
 from goskyr_spark.synth import event_scraper
 
-spark = get_spark(app="dq-scale", master="local[16]",
-                  shuffle_partitions=32)
+CORES = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+spark = get_spark(app="dq-scale", master=f"local[{CORES}]",
+                  shuffle_partitions=2 * CORES)
 spark.sparkContext.setLogLevel("ERROR")
 
 
+def engine(wd):
+    shutil.rmtree(wd, ignore_errors=True)
+    return CrawlEngine(spark, wd, None, event_scraper, ["https://seed.test/"],
+                       live_fetcher=lambda: None, per_host_budget=64,
+                       round_budget=100_000, fetch_partitions=CORES)
+
+
+def frontier_rows(n, hosts, path="p"):
+    return (spark.range(n)
+            .withColumn("host", F.concat(F.lit("h"),
+                                         (F.col("id") % hosts).cast("string"),
+                                         F.lit(".test")))
+            .withColumn("url", F.concat(F.lit("https://"), F.col("host"),
+                                        F.lit(f"/{path}/"), F.col("id")))
+            .withColumn("url_hash", F.xxhash64("url"))
+            .withColumn("priority", (F.col("id") % 7).cast("double"))
+            .withColumn("depth", (F.col("id") % 7))
+            .withColumn("discovered_round", F.lit(0).cast("long"))
+            .withColumn("page_no", F.lit(1).cast("long"))
+            .select(*FRONTIER_SCHEMA.names))
+
+
+def fetched_rows(frontier, rnd=0):
+    return (frontier.select("url", "url_hash", "host")
+            .withColumn("round", F.lit(rnd).cast("long"))
+            .withColumn("fetch_seq", F.lit(1).cast("long"))
+            .withColumn("fetch_ts", F.lit(0.0))
+            .withColumn("status", F.lit("ok"))
+            .withColumn("n_items", F.lit(0).cast("long"))
+            .withColumn("n_errors", F.lit(0).cast("long"))
+            .select(*FETCHED_SCHEMA.names))
+
+
+def rule_layout(eng):
+    """Set the engine's sizes from its tables and rewrite frontier and
+    fetched at the modulus its rule picks for them."""
+    eng._sizes = eng._measure_sizes()
+    for t, schema in ((eng.t_frontier, FRONTIER_SCHEMA),
+                      (eng.t_fetched, FETCHED_SCHEMA)):
+        eng._hostpart_write(t, t.read(spark, schema=schema), {"round": 0},
+                            mode="overwrite")
+    return eng._bucket_mod()
+
+
 def history_phase():
-    """Per-round dequeue cost vs accumulated fetched history.
+    """Per-round cluster dequeue cost vs accumulated fetched history.
 
     Frontier: FIXED 1M pending rows. Fetched: R append-commits of 1M
     rows each, all DISJOINT from the frontier (so the pending set — and
     the correct dequeue output — is identical every round; only the
-    history size changes). Two engines on two workdirs:
+    history size changes). Two engines on two workdirs, frontier at the
+    rule's modulus:
 
       grow: no compaction ever → anti-join reads ALL fetched files;
             per-round cost must grow with history.
       flat: after each round the frontier is rewritten with a
             compaction marker at that round → _antijoin_fetched_files
             prunes to rounds > r, i.e. ZERO files here; per-round cost
-            must stay flat however long the crawl ran.
-
-    Both the window and the bucketed dequeue are timed each round."""
-    import shutil
-
-    R = 8
-    NPEND = 1_000_000
-    NHIST = 1_000_000
-    HOSTS = 20_000
-
-    def mk_frontier(eng):
-        return (spark.range(NPEND)
-                .withColumn("host",
-                            F.concat(F.lit("h"),
-                                     (F.col("id") % HOSTS).cast("string"),
-                                     F.lit(".test")))
-                .withColumn("url", F.concat(F.lit("https://"),
-                                            F.col("host"), F.lit("/p/"),
-                                            F.col("id")))
-                .withColumn("url_hash", F.xxhash64("url"))
-                .withColumn("priority", (F.col("id") % 7).cast("double"))
-                .withColumn("depth", (F.col("id") % 7))
-                .withColumn("discovered_round", F.lit(0).cast("long"))
-                .withColumn("page_no", F.lit(1).cast("long"))
-                .select(*[f.name for f in FRONTIER_SCHEMA.fields]))
-
-    def mk_fetched(rnd):
-        # /f/ path space: disjoint from the frontier's /p/ URLs
-        return (spark.range(NHIST)
-                .withColumn("host",
-                            F.concat(F.lit("h"),
-                                     (F.col("id") % HOSTS).cast("string"),
-                                     F.lit(".test")))
-                .withColumn("url", F.concat(F.lit("https://"),
-                                            F.col("host"),
-                                            F.lit(f"/f/{rnd}/"),
-                                            F.col("id").cast("string")))
-                .withColumn("url_hash", F.xxhash64("url"))
-                .withColumn("round", F.lit(rnd).cast("long"))
-                .withColumn("fetch_seq", F.lit(1).cast("long"))
-                .withColumn("fetch_ts", F.lit(0.0))
-                .withColumn("status", F.lit("ok"))
-                .withColumn("n_items", F.lit(0).cast("long"))
-                .withColumn("n_errors", F.lit(0).cast("long"))
-                .select(*[f.name for f in FETCHED_SCHEMA.fields]))
-
+            must stay flat however long the crawl ran."""
+    R, NPEND, NHIST, HOSTS = 8, 1_000_000, 1_000_000, 20_000
     engines = {}
     for label in ("grow", "flat"):
-        wd = f"/tmp/goskyr-dqhist-{label}"
-        shutil.rmtree(wd, ignore_errors=True)
-        e = CrawlEngine(spark, wd, None, event_scraper,
-                        ["https://seed.test/"], live_fetcher=lambda: None,
-                        frontier_buckets=64, per_host_budget=64,
-                        round_budget=100_000, fetch_partitions=32)
-        e._hostpart_write(e.t_frontier, mk_frontier(e), {"round": 0})
+        e = engine(f"/tmp/goskyr-dqhist-{label}")
+        e._hostpart_write(e.t_frontier, frontier_rows(NPEND, HOSTS),
+                          {"round": 0})
+        rule_layout(e)
         engines[label] = e
 
-    times = {("grow", "win"): [], ("grow", "bkt"): [],
-             ("flat", "win"): [], ("flat", "bkt"): []}
+    times = {"grow": [], "flat": []}
     counts = {}
     for rnd in range(1, R + 1):
-        hist = mk_fetched(rnd)
+        # /f/ path space: disjoint from the frontier's /p/ URLs
+        hist = fetched_rows(frontier_rows(NHIST, HOSTS, f"f/{rnd}"), rnd)
         for label, e in engines.items():
             e._hostpart_write(e.t_fetched, hist, {"round": rnd})
             if label == "flat":
@@ -110,78 +116,23 @@ def history_phase():
                     e.t_frontier.read(spark, schema=FRONTIER_SCHEMA),
                     {"round": rnd, "compacted": True}, mode="overwrite")
             aj, _ = e._antijoin_fetched_files()
-            plan = round_plan(**e._measure_sizes())
-            for kind, fn in (("win", lambda: e._dequeue_window(plan)),
-                             ("bkt", e._dequeue_bucketed)):
-                t0 = time.time()
-                n = fn().count()
-                times[(label, kind)].append(time.time() - t0)
-                counts[(label, kind)] = n
+            t0 = time.time()
+            counts[label] = e._dequeue_cluster().count()
+            times[label].append(time.time() - t0)
             e._release_round()
             if rnd in (1, R):
                 print(f"RESULT {label} r{rnd}: aj_files={len(aj)} "
-                      f"win={times[(label, 'win')][-1]:.2f}s "
-                      f"bkt={times[(label, 'bkt')][-1]:.2f}s",
-                      flush=True)
+                      f"cluster={times[label][-1]:.2f}s", flush=True)
     assert len(set(counts.values())) == 1, counts   # same dequeue out
-    for key, ts in sorted(times.items()):
-        label, kind = key
-        # growth factor: mean of last two rounds vs first two (warm-up
-        # noise averaged out)
-        g = (ts[-1] + ts[-2]) / (ts[0] + ts[1])
-        print(f"RESULT {label}/{kind}: per-round "
+    growth = {}
+    for label, ts in sorted(times.items()):
+        # mean of last two rounds vs first two (warm-up noise averaged)
+        growth[label] = (ts[-1] + ts[-2]) / (ts[0] + ts[1])
+        print(f"RESULT {label}: per-round "
               + " ".join(f"{t:.2f}" for t in ts)
-              + f" | last/first growth {g:.2f}x", flush=True)
-    flat_g = max((times[('flat', k)][-1] + times[('flat', k)][-2])
-                 / (times[('flat', k)][0] + times[('flat', k)][1])
-                 for k in ("win", "bkt"))
-    print(f"RESULT history-independent: {flat_g:.2f}x (flat paths; "
-          f"pass if ~1.0 while grow paths climb)", flush=True)
-
-
-if len(sys.argv) > 1 and sys.argv[1] == "history":
-    history_phase()
-    sys.exit(0)
-
-N = 8_000_000
-HOSTS = 80_000
-eng = CrawlEngine(spark, "/tmp/goskyr-dqscale-wd", None, event_scraper,
-                  ["https://seed.test/"], live_fetcher=lambda: None,
-                  frontier_buckets=64, per_host_budget=64,
-                  round_budget=100_000, fetch_partitions=32)
-
-base = (spark.range(N)
-        .withColumn("host", F.concat(F.lit("h"),
-                                     (F.col("id") % HOSTS).cast("string"),
-                                     F.lit(".test")))
-        .withColumn("url", F.concat(F.lit("https://"), F.col("host"),
-                                    F.lit("/p/"), F.col("id")))
-        .withColumn("url_hash", F.xxhash64("url"))
-        .withColumn("priority", (F.col("id") % 7).cast("double"))
-        .withColumn("depth", (F.col("id") % 7))
-        .withColumn("discovered_round", F.lit(0).cast("long"))
-        .withColumn("page_no", F.lit(1).cast("long"))
-        .select(*[f.name for f in FRONTIER_SCHEMA.fields]))
-# 10% already fetched
-fetched = (base.filter(F.col("url_hash") % 10 == 0)
-           .select("url", "url_hash", "host")
-           .withColumn("round", F.lit(0).cast("long"))
-           .withColumn("fetch_seq", F.lit(1).cast("long"))
-           .withColumn("fetch_ts", F.lit(0.0))
-           .withColumn("status", F.lit("ok"))
-           .withColumn("n_items", F.lit(0).cast("long"))
-           .withColumn("n_errors", F.lit(0).cast("long"))
-           .select(*[f.name for f in FETCHED_SCHEMA.fields]))
-
-eng._hostpart_write(eng.t_frontier, base, {"round": 0})
-eng._hostpart_write(eng.t_fetched, fetched, {"round": 0})
-
-
-plan = round_plan(**eng._measure_sizes())
-
-
-def window_dequeue():
-    return eng._dequeue_window(plan)
+              + f" | last/first growth {growth[label]:.2f}x", flush=True)
+    print(f"RESULT history-independent: {growth['flat']:.2f}x (flat; "
+          f"pass if ~1.0 while grow climbs)", flush=True)
 
 
 def timed(fn, label):
@@ -196,17 +147,32 @@ def timed(fn, label):
     return best
 
 
-tw = timed(window_dequeue, "window")
-tb = timed(eng._dequeue_bucketed, "bucketed")
-print(f"RESULT speedup: {tw / tb:.2f}x", flush=True)
-
-
-
 def pairs(df):
     return sorted((r["url"], r["_host_seq"])
                   for r in df.select("url", "_host_seq").collect())
 
 
-# identical (url, per-host rank) pairs
-print("RESULT identical:",
-      pairs(window_dequeue()) == pairs(eng._dequeue_bucketed()), flush=True)
+def scale_phase(n):
+    eng = engine("/tmp/goskyr-dqscale-wd")
+    base = frontier_rows(n, max(1, n // 100))
+    eng._hostpart_write(eng.t_frontier, base, {"round": 0})
+    eng._hostpart_write(eng.t_fetched, fetched_rows(
+        base.filter(F.col("url_hash") % 10 == 0)), {"round": 0})
+    driver = eng._dequeue_driver()
+    want = sorted(zip(driver["url"], driver["_host_seq"]))
+    del driver
+    eng._file_cache = {}  # the driver dequeue's Arrow copies
+    for layout in ("flat", "rule"):
+        if layout == "rule":
+            print(f"RESULT modulus: {rule_layout(eng)}", flush=True)
+        timed(eng._dequeue_cluster, f"cluster_{layout}")
+        print(f"RESULT identical_{layout}:",
+              pairs(eng._dequeue_cluster()) == want, flush=True)
+        eng._release_round()
+
+
+if __name__ == "__main__":
+    if len(sys.argv) > 1 and sys.argv[1] == "history":
+        history_phase()
+    else:
+        scale_phase(int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000)

@@ -1,15 +1,18 @@
-"""Digest gate: run the exact bench-spec crawl in window / bucketed /
-adaptive modes, each on the driver and on the cluster side of every
-round phase and on the two mixed plans the size policy produces first
-(cluster dequeue + driver commit; driver commit + cluster new-url
-commit with the partition-aligned seen test), and assert the historical
-state digest 768bf8d782fb251d (fetch order + statuses + seen set,
-unchanged since round 1) for every run, and that the four plans of a
-mode write the same slab rows (bench.slab_digest). Run after any
+"""Digest gate: run the exact bench-spec crawl in three configurations
+— default; small buckets (bench.small_buckets(): BUCKET_BYTES patched
+so the host-bucket modulus grows 1 → 32 mid-crawl); adaptive — each
+on the driver and on the cluster side of every round phase and on the
+two mixed plans the size policy produces first (cluster dequeue +
+driver commit; driver commit + cluster new-url commit with the
+partition-aligned seen test), and assert the historical state digest
+768bf8d782fb251d (fetch order + statuses + seen set, unchanged since
+round 1) for every run, and that the four plans of a configuration
+write the same slab rows (bench.slab_digest). Run after any
 crawl-engine change (`make digest`). Uses bench.py's own spec/digest
 code so the gate can never drift from the frozen measurement."""
 import os
 import sys
+from contextlib import nullcontext
 from dataclasses import fields
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -42,10 +45,12 @@ if __name__ == "__main__":
     slabs = {}
     for plan_name, forced in plans.items():
         crawl.round_plan = lambda _forced=forced, **_: _forced
-        for name, kw in [("window", {}),
-                         ("bucketed", {"frontier_buckets": 32}),
-                         ("adaptive", {"adaptive_priority": True})]:
-            out = bench.bench_crawl(spark, cores, digest=True, **kw)
+        for name, ctx, kw in [
+                ("default", nullcontext, {}),
+                ("small_buckets", bench.small_buckets, {}),
+                ("adaptive", nullcontext, {"adaptive_priority": True})]:
+            with ctx():
+                out = bench.bench_crawl(spark, cores, digest=True, **kw)
             good = out["digest"] == EXPECTED
             ok &= good
             slabs.setdefault(name, set()).add(out["slab_digest"])

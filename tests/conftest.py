@@ -6,12 +6,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from goskyr_spark.spark import crawl  # noqa: E402
 
 _CLUSTER = crawl.RoundPlan(
     dequeue_driver=False, commit_driver=False, new_urls_driver=False,
     seen_copy_driver=False, slabs_driver=False, seen_partitioned=False,
-    broadcast_fetched=False, broadcast_host_stats=False,
     broadcast_seen=False)
 
 # Plans forced on every round whatever the table sizes (the real size
@@ -21,14 +21,12 @@ PLANS = {
     "driver": crawl.RoundPlan(
         dequeue_driver=True, commit_driver=True, new_urls_driver=True,
         seen_copy_driver=True, slabs_driver=True, seen_partitioned=False,
-        broadcast_fetched=True, broadcast_host_stats=True,
         broadcast_seen=True),
     "cluster": _CLUSTER,
     # partition-aligned seen test; the seen copy stays on the driver, so
     # the cluster slab update takes its input from driver-held hashes
     "cluster_partitioned": replace(
         _CLUSTER, seen_copy_driver=True, seen_partitioned=True,
-        broadcast_fetched=True, broadcast_host_stats=True,
         broadcast_seen=True),
     # the real policy just past a boundary, so each handoff production
     # reaches is covered: a cluster dequeue feeding the driver commit
@@ -53,3 +51,13 @@ def plan(request, monkeypatch):
     ``@pytest.mark.parametrize("plan", [...], indirect=True)``."""
     force_plan(monkeypatch, request.param)
     return request.param
+
+
+# BUCKET_BYTES at which a test-sized crawl (a few KB per parquet file)
+# grows its host-bucket modulus through several powers of two
+SMALL_BUCKET_BYTES = 4 << 10
+
+
+def small_buckets(n=SMALL_BUCKET_BYTES):
+    """Run crawl engines with crawl.BUCKET_BYTES = n inside the block."""
+    return bench.small_buckets(n)

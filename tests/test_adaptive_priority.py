@@ -1,14 +1,15 @@
 """Adaptive host-priority crawl scheduling (focused crawling): hosts
 that yield items are dequeued earlier, hosts that fail or yield nothing
 later. The feedback derives from the fetched-history table only, so it
-is deterministic, resume-safe, and identical across the window and
-bucketed dequeue paths."""
+is deterministic, resume-safe, and identical whatever the host-bucket
+modulus of the tables."""
 
 import functools
 from datetime import datetime, timezone
 
 import pytest
 
+from conftest import small_buckets
 from goskyr_spark.spark.crawl import CrawlEngine
 from goskyr_spark.synth import (SynthSpec, host_name, mixed_yield_factory,
                                 synth_pages_df)
@@ -90,10 +91,10 @@ def test_adaptive_deterministic_and_bucketed_identical(spark, pages,
                           adaptive_priority=True)
     b, seen_b = run_crawl(spark, pages, tmp_path / "b",
                           adaptive_priority=True)
-    c, seen_c = run_crawl(spark, pages, tmp_path / "c",
-                          adaptive_priority=True, frontier_buckets=8)
-    # same config twice -> identical order (determinism), and the
-    # bucketed dequeue's task-local numpy adjustment reproduces the
-    # window path's JVM arithmetic bit-for-bit
+    with small_buckets():
+        c, seen_c = run_crawl(spark, pages, tmp_path / "c",
+                              adaptive_priority=True)
+    # same config twice -> identical order (determinism), and a
+    # bucketed workdir (host_stats included) gives the same order
     assert a == b == c
     assert seen_a == seen_b == seen_c

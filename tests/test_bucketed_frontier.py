@@ -1,9 +1,12 @@
 """Host-hash-bucketed frontier/fetched storage (the 10^10 dequeue
-path): the bucketed dequeue must produce EXACTLY the same crawl as the
-window dequeue — same fetch order, same seen set, same items — while
-never shuffling the pending set (one task per bucket reads only its own
-files). Also: bucket files are per-bucket on disk, resume works, a
-legacy unbucketed workdir falls back to the window path."""
+path): host-keyed writes use a modulus M that follows the dequeue
+input (crawl.BUCKET_BYTES is patched small here, so M grows
+mid-crawl), and the crawl must be EXACTLY the same as at the default
+size — same fetch order, same seen set. Also: every file holds one
+(bucket, M) pair's rows, resume works, and a workdir resumed under a
+different modulus (a flat one included) crawls identically on the
+driver and on the cluster dequeue, which reads each host's rows from
+files of any modulus."""
 
 import hashlib
 import os
@@ -14,6 +17,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
 
+from conftest import small_buckets
 from goskyr_spark.spark.crawl import CrawlEngine, FETCHED_SCHEMA
 
 NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
@@ -60,15 +64,16 @@ def _run(spark, pages, wd, **kw):
 
 @pytest.fixture(scope="module")
 def ref_engine(spark, pages, tmp_path_factory):
-    """One window-mode reference crawl shared by every equality test."""
-    return _run(spark, pages, str(tmp_path_factory.mktemp("win")))
+    """One default-size reference crawl (one plain file per append at
+    this size) shared by every equality test."""
+    return _run(spark, pages, str(tmp_path_factory.mktemp("ref")))
 
 
 @pytest.fixture(scope="module")
 def bucketed_engine(spark, pages, tmp_path_factory):
-    """One bucketed crawl shared by the digest/file/resume tests."""
-    return _run(spark, pages, str(tmp_path_factory.mktemp("bkt")),
-                frontier_buckets=8)
+    """One small-bucket crawl shared by the digest/file/resume tests."""
+    with small_buckets():
+        return _run(spark, pages, str(tmp_path_factory.mktemp("bkt")))
 
 
 def test_bucketed_dequeue_identical_crawl(spark, pages, tmp_path,
@@ -77,28 +82,31 @@ def test_bucketed_dequeue_identical_crawl(spark, pages, tmp_path,
     # and with per-host budgets + compaction in the loop
     ref2 = _run(spark, pages, str(tmp_path / "win2"), per_host_budget=2,
                 round_budget=7)
-    got2 = _run(spark, pages, str(tmp_path / "bkt2"), per_host_budget=2,
-                round_budget=7, frontier_buckets=4, compact_every=2)
+    with small_buckets():
+        got2 = _run(spark, pages, str(tmp_path / "bkt2"), per_host_budget=2,
+                    round_budget=7, compact_every=2)
     assert _digest(got2, spark) == _digest(ref2, spark)
 
 
 def test_bucketed_files_are_per_bucket(spark, pages, bucketed_engine):
+    """Every live file holds only rows of its recorded (bucket, M), and
+    the modulus grew mid-crawl."""
+    import zlib
+
+    import pyarrow.parquet as pq
+
     eng = bucketed_engine
+    mods = set()
     for t in (eng.t_frontier, eng.t_fetched):
         bmap = t.bucket_map()
-        files = t.manifest()["files"]
-        assert set(bmap) == set(files), t.name
-        # each file holds exactly one bucket's rows: re-derive the
-        # bucket from the rows and compare
-        import pyarrow.parquet as pq
-        import zlib
-
-        for rel, b in bmap.items():
-            tbl = pq.read_table(os.path.join(t.dir, rel),
-                                columns=["host"])
-            got = {zlib.crc32(h.encode()) % 8
+        assert set(bmap) == set(t.manifest()["files"]), t.name
+        for rel, (b, n) in bmap.items():
+            tbl = pq.read_table(os.path.join(t.dir, rel), columns=["host"])
+            got = {zlib.crc32(h.encode()) % n
                    for h in tbl.column(0).to_pylist()}
             assert got == {b}, (t.name, rel)
+            mods.add(n)
+    assert len(mods) >= 3, mods
 
 
 def test_bucketed_resume(spark, pages, tmp_path, bucketed_engine):
@@ -108,53 +116,79 @@ def test_bucketed_resume(spark, pages, tmp_path, bucketed_engine):
     seeds = [f"https://{host_name(h)}/list/1" for h in range(6)]
     full = bucketed_engine
 
-    eng1 = CrawlEngine(spark, str(tmp_path / "part"), pages,
-                       event_scraper, seeds, now=NOW, frontier_buckets=8)
-    eng1.run(max_rounds=2)
-    eng2 = CrawlEngine(spark, str(tmp_path / "part"), pages,
-                       event_scraper, seeds, now=NOW, frontier_buckets=8)
-    eng2.run(max_rounds=15)
+    with small_buckets():
+        eng1 = CrawlEngine(spark, str(tmp_path / "part"), pages,
+                           event_scraper, seeds, now=NOW)
+        eng1.run(max_rounds=2)
+        eng2 = CrawlEngine(spark, str(tmp_path / "part"), pages,
+                           event_scraper, seeds, now=NOW)
+        eng2.run(max_rounds=15)
     assert _digest(eng2, spark) == _digest(full, spark)
 
 
-def test_legacy_workdir_falls_back_to_window(spark, pages, tmp_path,
-                                             ref_engine):
-    """A workdir written WITHOUT bucketing, resumed with
-    frontier_buckets set: the dequeue falls back to the window path for
-    the rounds whose files lack bucket assignments — the crawl is still
-    identical."""
+@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("first_small", [True, False],
+                         ids=["small_then_default", "default_then_small"])
+def test_resume_across_modulus_change(spark, pages, tmp_path, ref_engine,
+                                      plan, first_small):
+    """Two rounds under one modulus rule, then a fresh engine resumes
+    under the other: tiny BUCKET_BYTES then the default (bucketed files
+    followed by plain ones), and the reverse (a flat workdir followed by
+    a growing modulus). The crawl equals the reference on the driver
+    dequeue and on the cluster dequeue, which reads every live file by
+    its own (bucket, modulus)."""
+    from contextlib import nullcontext
+
     from goskyr_spark.synth import event_scraper, host_name
 
     seeds = [f"https://{host_name(h)}/list/1" for h in range(6)]
-    ref = ref_engine
+    wd = str(tmp_path / "mod")
+    for small, rounds in ((first_small, 2), (not first_small, 15)):
+        with small_buckets() if small else nullcontext():
+            eng = CrawlEngine(spark, wd, pages, event_scraper, seeds,
+                              now=NOW)
+            eng.run(max_rounds=rounds)
+    mods = {n for t in (eng.t_frontier, eng.t_fetched)
+            for _, n in t.bucket_map().values()}
+    assert 1 in mods and len(mods) > 1, mods
+    assert _digest(eng, spark) == _digest(ref_engine, spark)
 
-    eng1 = CrawlEngine(spark, str(tmp_path / "mix"), pages,
-                       event_scraper, seeds, now=NOW)
-    eng1.run(max_rounds=2)
-    eng2 = CrawlEngine(spark, str(tmp_path / "mix"), pages,
-                       event_scraper, seeds, now=NOW, frontier_buckets=8)
-    assert not eng2._buckets_complete()
-    eng2.run(max_rounds=15)
-    assert _digest(eng2, spark) == _digest(ref, spark)
 
+@pytest.mark.parametrize("n_tasks", [1, 2, 4, 8, 16])
+def test_read_rule_sends_each_host_to_one_task(tmp_path, n_tasks):
+    """The cluster dequeue's read rule, pure pyarrow: random hosts in
+    files written under moduli 1, 2, 4, 8 and 16 (one file per bucket);
+    every row reaches exactly one of n_tasks tasks, and all rows of one
+    host the same task."""
+    import random
+    import zlib
 
-def test_rebucketing_falls_back_then_heals(spark, pages, tmp_path,
-                                           ref_engine):
-    """Resuming with a DIFFERENT frontier_buckets count must not trust
-    the old bucket maps (a host only stays in one bucket per modulus):
-    the dequeue falls back to the window path, the crawl stays
-    identical, and the next compact() rewrites the tables under the new
-    modulus so the bucketed path resumes."""
-    from goskyr_spark.synth import event_scraper, host_name
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    seeds = [f"https://{host_name(h)}/list/1" for h in range(6)]
-    eng1 = CrawlEngine(spark, str(tmp_path / "re"), pages,
-                       event_scraper, seeds, now=NOW, frontier_buckets=8)
-    eng1.run(max_rounds=2)
-    eng2 = CrawlEngine(spark, str(tmp_path / "re"), pages,
-                       event_scraper, seeds, now=NOW, frontier_buckets=4)
-    assert not eng2._buckets_complete()  # mod mismatch → window path
-    eng2.run(max_rounds=15)
-    assert _digest(eng2, spark) == _digest(ref_engine, spark)
-    eng2.compact()
-    assert eng2._buckets_complete()  # rewritten under mod 4
+    from goskyr_spark.spark.crawl import _dequeue_reads, _read_share
+
+    rng = random.Random(n_tasks)
+    hosts = [f"h{rng.getrandbits(48):x}.test" for _ in range(300)]
+    schema = pa.schema([("host", pa.string()), ("rid", pa.int64())])
+    buckets, n_rows = {}, 0
+    for mod in (1, 2, 4, 8, 16):
+        rows = [(rng.choice(hosts), n_rows + i) for i in range(400)]
+        n_rows += len(rows)
+        for b in range(mod):
+            part = [r for r in rows if zlib.crc32(r[0].encode()) % mod == b]
+            if part:
+                path = str(tmp_path / f"m{mod}-b{b}.parquet")
+                pq.write_table(pa.Table.from_pylist(
+                    [dict(zip(schema.names, r)) for r in part],
+                    schema=schema), path)
+                buckets[path] = (b, mod)
+    reads = _dequeue_reads(buckets, n_tasks)
+    task_of_row, task_of_host = {}, {}
+    for t in range(n_tasks):
+        share = _read_share(reads[t], schema, t, n_tasks)
+        for host, rid in zip(*share.to_pydict().values()):
+            assert rid not in task_of_row, (rid, t)
+            task_of_row[rid] = t
+            assert task_of_host.setdefault(host, t) == t, host
+    assert sorted(task_of_row) == list(range(n_rows))

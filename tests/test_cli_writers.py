@@ -199,7 +199,7 @@ def test_completion_generated_from_parser_tree():
     fish = completion_script(parser, "fish")
     for sub in ("scrape", "list", "generate", "crawl", "completion"):
         assert f"'{sub}'*" in bash and f"-a {sub}" in fish
-    for opt in ("--workdir", "--buckets", "--adaptive", "--min-occ",
+    for opt in ("--workdir", "--canonicalize", "--adaptive", "--min-occ",
                 "--shell", "--name"):
         assert opt in bash
     r = subprocess.run(["bash", "-n"], input=bash, text=True,

@@ -8,9 +8,11 @@ from datetime import datetime, timezone
 import pyarrow as pa
 import pytest
 
+from conftest import small_buckets
+from goskyr_spark.spark import crawl
 from goskyr_spark.spark.crawl import (_FRONTIER_ARROW, _HOST_SUMS_ARROW,
                                       _URL_ARROW, CrawlEngine,
-                                      _dequeue_frame, round_plan)
+                                      _dequeue_frame)
 from goskyr_spark.synth import SynthSpec, event_scraper, host_name, synth_pages_df
 
 NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
@@ -65,19 +67,20 @@ def spark():
 
 
 @pytest.mark.parametrize("adaptive", [False, True])
-def test_dequeues_agree_on_host_seq(spark, tmp_path, adaptive):
-    """On one engine's tables the window, bucketed and driver dequeues
-    give the same (url, _host_seq) pairs, per-host and budget cuts
-    included."""
+def test_dequeues_agree_on_host_seq(spark, tmp_path, monkeypatch, adaptive):
+    """On one engine's tables (a plain seed file, round-0 files of a
+    larger modulus) the cluster dequeue, at 1, 2 and 4 tasks, and the
+    driver dequeue give the same (url, _host_seq) pairs, per-host and
+    budget cuts included."""
     spec = SynthSpec(n_hosts=3, pages_per_host=3, items_per_page=3,
                      hot_hosts=1, hot_factor=2)
     pages = synth_pages_df(spark, spec, include_fixtures=False)
-    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
-                      [f"https://{host_name(h)}/list/1" for h in range(3)],
-                      now=NOW, per_host_budget=3, round_budget=7,
-                      frontier_buckets=4, adaptive_priority=adaptive)
-    eng.run(max_rounds=1)
-    plan = round_plan(**eng._measure_sizes())
+    with small_buckets(512):  # round 0 appends under modulus > 1
+        eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
+                          [f"https://{host_name(h)}/list/1" for h in range(3)],
+                          now=NOW, per_host_budget=3, round_budget=7,
+                          adaptive_priority=adaptive)
+        eng.run(max_rounds=1)
 
     def pairs(df):
         return sorted((r["url"], r["_host_seq"])
@@ -86,6 +89,13 @@ def test_dequeues_agree_on_host_seq(spark, tmp_path, adaptive):
     driver = eng._dequeue_driver()
     want = sorted(zip(driver["url"], driver["_host_seq"]))
     assert len(want) == 7 and max(s for _, s in want) > 1
-    assert pairs(eng._dequeue_window(plan)) == want
-    assert pairs(eng._dequeue_bucketed()) == want
+    # the 4-task dequeue filters the seed file and reads the rest whole
+    mods = {n for _, n in eng.t_frontier.bucket_map().values()}
+    assert 1 in mods and max(mods) >= 4, mods
+    # tiny BUCKET_BYTES: the task count is fetch_partitions, floored to
+    # a power of two
+    monkeypatch.setattr(crawl, "BUCKET_BYTES", 1)
+    for n in (1, 2, 4):
+        eng.fetch_partitions = n
+        assert pairs(eng._dequeue_cluster()) == want, n
     eng._release_round()

@@ -129,11 +129,12 @@ def test_jaccard_no_self_join(spark):
 
 
 def test_bucketed_dequeue_no_pending_shuffle(spark, tmp_path):
-    """The bucketed dequeue must not shuffle the pending set: no Window,
-    no join of the frontier against fetched — the only exchanges are the
-    tiny bucket-spec repartition and the final TakeOrdered merge."""
+    """The cluster dequeue must not shuffle the pending set: no Window,
+    no join of the frontier against fetched — the only exchange is the
+    final TakeOrdered merge."""
     from datetime import datetime, timezone
 
+    from conftest import small_buckets
     from goskyr_spark.spark.crawl import CrawlEngine
     from goskyr_spark.synth import (SynthSpec, event_scraper, host_name,
                                     synth_pages_df)
@@ -141,18 +142,17 @@ def test_bucketed_dequeue_no_pending_shuffle(spark, tmp_path):
     spec = SynthSpec(n_hosts=3, pages_per_host=2, items_per_page=2,
                      hot_hosts=0, hot_factor=1)
     pages = synth_pages_df(spark, spec, include_fixtures=False)
-    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
-                      [f"https://{host_name(h)}/list/1" for h in range(3)],
-                      now=datetime(2026, 3, 1, tzinfo=timezone.utc),
-                      frontier_buckets=8)
-    eng.run(max_rounds=2)
-    plan = _plan(eng._dequeue_bucketed())
+    with small_buckets():
+        eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
+                          [f"https://{host_name(h)}/list/1" for h in range(3)],
+                          now=datetime(2026, 3, 1, tzinfo=timezone.utc))
+        eng.run(max_rounds=2)
+        plan = _plan(eng._dequeue_cluster())
     assert "Window" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" not in plan, plan
     # frontier/fetched parquet never enter the Spark plan at all — the
-    # kernel reads them task-locally (scan appears only for the
-    # in-memory bucket-spec dataframe)
+    # kernel reads them task-locally (its input is a range of task ids)
     assert plan.count(") Scan parquet") == 0, plan
     assert "TakeOrderedAndProject" in plan, plan
 

@@ -6,10 +6,12 @@ query lineages must match their reference formulations exactly."""
 import hashlib
 import shutil
 import tempfile
+from contextlib import nullcontext
 from datetime import datetime, timezone
 
 import pytest
 
+from conftest import small_buckets
 from goskyr_spark.spark.crawl import CrawlEngine
 from goskyr_spark.synth import SynthSpec, event_scraper, host_name, \
     synth_pages_df
@@ -49,15 +51,16 @@ def _digest(eng, spark):
     return h.hexdigest()
 
 
-def _run(spark, pages, spec, **kw):
+def _run(spark, pages, spec, bucketed=False, **kw):
     wd = tempfile.mkdtemp(prefix="r7fp-")
     try:
-        eng = CrawlEngine(spark, wd, pages, event_scraper,
-                          [f"https://{host_name(h)}/list/1"
-                           for h in range(spec.n_hosts)],
-                          now=NOW, fetch_partitions=4,
-                          round_budget=10_000, **kw)
-        summaries = eng.run(max_rounds=30)
+        with small_buckets() if bucketed else nullcontext():
+            eng = CrawlEngine(spark, wd, pages, event_scraper,
+                              [f"https://{host_name(h)}/list/1"
+                               for h in range(spec.n_hosts)],
+                              now=NOW, fetch_partitions=4,
+                              round_budget=10_000, **kw)
+            summaries = eng.run(max_rounds=30)
         # ALL item columns (incl. timestamp fields): the driver-side
         # items write must be value-identical to the Spark write path
         items = sorted(tuple(r) for r in eng.items_final().collect())
@@ -67,9 +70,9 @@ def _run(spark, pages, spec, **kw):
 
 
 MODES = [
-    {},                            # window dequeue
-    {"frontier_buckets": 8},       # bucketed dequeue
-    {"adaptive_priority": True},   # adaptive window dequeue
+    {},                            # default size: plain files
+    {"bucketed": True},            # small BUCKET_BYTES: growing modulus
+    {"adaptive_priority": True},   # adaptive dequeue
 ]
 
 
@@ -126,11 +129,13 @@ def test_append_arrow_bucketed_records_bucket_map(tmp_path):
     tables = {3: pa.table({"host": ["a"], "n": [1]}),
               7: pa.table({"host": ["b"], "n": [2]})}
     t.append_arrow_bucketed(tables, {"round": 0, "bucket_mod": 8})
-    bm = t.bucket_map(expect_mod=8)
-    assert sorted(bm.values()) == [3, 7]
-    assert t.row_count() == 2
-    # a reader expecting a different modulus must not trust these files
-    assert t.bucket_map(expect_mod=16) == {}
+    t.append_arrow(pa.table({"host": ["c"], "n": [3]}), {"round": 1})
+    t.append_arrow_bucketed({1: pa.table({"host": ["d"], "n": [4]})},
+                            {"round": 2, "bucket_mod": 2})
+    # (bucket, modulus) per live file; a plain write is (0, 1)
+    assert sorted(t.bucket_map().values()) == [(0, 1), (1, 2), (3, 8),
+                                               (7, 8)]
+    assert t.row_count() == 4
 
 
 def test_pq_train_joint_matches_per_subspace_reference(spark):

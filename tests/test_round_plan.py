@@ -2,11 +2,13 @@
 both sides agree on the edge cases the driver side used to handle
 differently (NULL-host outlinks, parquet timestamp types)."""
 
+from contextlib import nullcontext
 from datetime import datetime, timezone
 
 import pyarrow.parquet as pq
 import pytest
 
+from conftest import small_buckets
 from goskyr_spark.spark import crawl
 from goskyr_spark.spark.crawl import CrawlEngine, FRONTIER_SCHEMA
 from goskyr_spark.synth import event_scraper
@@ -54,15 +56,19 @@ def _crawl(spark, pages, workdir, **kw):
 
 
 @pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
-@pytest.mark.parametrize("mode", [{}, {"frontier_buckets": 4}],
+@pytest.mark.parametrize("bucketed", [False, True],
                          ids=["window", "bucketed"])
 def test_null_host_outlink_never_enqueued(spark, pages, tmp_path, plan,
-                                          mode):
+                                          bucketed):
     """Item links without a host (no politeness or robots identity) are
     dropped before the new-url commit on both sides, so every dequeue,
     bucketed writer and fetch_seq sort key sees only non-NULL hosts, and
-    an invalid URL does not fail the round (ANSI parse_url raises)."""
-    eng = _crawl(spark, pages, tmp_path / "wd", **mode)
+    an invalid URL does not fail the round (ANSI parse_url raises).
+    "window" is the default configuration (its historical id);
+    "bucketed" writes under a small BUCKET_BYTES, so the modulus grows
+    past 1."""
+    with small_buckets(512) if bucketed else nullcontext():
+        eng = _crawl(spark, pages, tmp_path / "wd")
     fetched = sorted((r["url"], r["status"])
                      for r in eng.t_fetched.read(spark).collect())
     assert fetched == [(f"https://{HOST}/event/1/1", "ok"),
@@ -90,6 +96,36 @@ def test_invalid_page_url_skipped_by_robots_scan(spark, pages, tmp_path):
 
     assert state(_crawl(spark, bad, tmp_path / "bad")) == \
         state(_crawl(spark, pages, tmp_path / "ref"))
+
+
+def test_mock_robots_at_any_scheme_and_port(spark, tmp_path):
+    """A mock robots.txt applies at http:// and at an explicit port, as
+    live mode reads it from the page's own scheme and netloc; of two for
+    one host the https one wins, and a robots.txt URL with a query is
+    not robots.txt."""
+    deny, allow = b"User-agent: *\nDisallow: /\n", b"User-agent: *\n"
+    page = b"<html><p>x</p></html>"
+    rows = [("http://a.test/robots.txt", deny),
+            ("http://a.test/list/1", page),
+            ("https://b.test:8443/robots.txt", deny),
+            ("https://b.test:8443/list/1", page),
+            ("http://c.test/robots.txt", deny),
+            ("https://c.test/robots.txt", allow),
+            ("https://c.test/list/1", page),
+            ("https://d.test/robots.txt?v=1", deny),
+            ("https://d.test/list/1", page)]
+    seeds = ["http://a.test/list/1", "https://b.test:8443/list/1",
+             "https://c.test/list/1", "https://d.test/list/1"]
+    eng = CrawlEngine(spark, str(tmp_path / "wd"),
+                      spark.createDataFrame(rows, "url string, html binary"),
+                      event_scraper, seeds, now=NOW, fetch_partitions=2)
+    eng.run(max_rounds=2)
+    assert sorted((r["url"], r["status"])
+                  for r in eng.t_fetched.read(spark).collect()) == [
+        ("http://a.test/list/1", "robots"),
+        ("https://b.test:8443/list/1", "robots"),
+        ("https://c.test/list/1", "ok"),
+        ("https://d.test/list/1", "ok")]
 
 
 def test_item_timestamps_one_physical_type(spark, pages, tmp_path,
@@ -127,4 +163,3 @@ def test_size_policy_thresholds():
     assert not part.slabs_driver and not part.new_urls_driver
     assert not plan(seen_bytes=crawl.BROADCAST_JOIN_BYTES + 1) \
         .broadcast_seen
-    assert plan(fetched_bytes=crawl.BROADCAST_JOIN_BYTES).broadcast_fetched

@@ -27,6 +27,10 @@ bench:	# one JSON line; SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS override
 digest:	# crawl digest 768bf8d782fb251d: default/small-bucket/adaptive x driver/cluster/mixed plans
 	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-$$(nproc)} $(PY) scripts/digest_gate.py
 
+.PHONY: floor
+floor:	# fixed cost of a Python task: trivial mapInArrow job wall + launch -> UDF call wait
+	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-$$(nproc)} $(PY) scripts/python_task_floor.py
+
 .PHONY: bench-history
 bench-history:	# per-round dequeue cost vs crawl history (flatness gate)
 	$(PY) scripts/dequeue_scale_bench.py history

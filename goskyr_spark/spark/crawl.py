@@ -485,9 +485,13 @@ def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
 def _host_bucket(hosts, mod):
     """crc32(host) mod `mod` of an Arrow host column, as int64 numpy —
     the same CRC-32 of the UTF-8 bytes as Spark's pmod(crc32(host),
-    mod) in the Spark writer."""
-    return np.array([zlib.crc32(h.encode()) % mod for h in hosts.to_pylist()],
-                    dtype=np.int64)
+    mod) in the Spark writer. Hashes each distinct host once."""
+    if isinstance(hosts, pa.ChunkedArray):
+        hosts = hosts.combine_chunks()
+    enc = hosts.dictionary_encode()
+    codes = np.array([zlib.crc32(h.encode()) % mod
+                      for h in enc.dictionary.to_pylist()], dtype=np.int64)
+    return codes[enc.indices.to_numpy(zero_copy_only=False)]
 
 
 def _dequeue_reads(buckets, n_tasks):

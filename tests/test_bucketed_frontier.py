@@ -192,3 +192,32 @@ def test_read_rule_sends_each_host_to_one_task(tmp_path, n_tasks):
             task_of_row[rid] = t
             assert task_of_host.setdefault(host, t) == t, host
     assert sorted(task_of_row) == list(range(n_rows))
+
+
+HOSTS = ["example.com", "[::1]", "[2001:db8::8a2e:370:7334]",
+         "under_score.example", "bücher.example", "例え.テスト",
+         "xn--bcher-kva.example", "", "a", "UPPER.example"]
+
+
+@pytest.mark.parametrize("mod", [1, 2, 8, 1024])
+def test_host_bucket_matches_crc32_and_spark(spark, mod):
+    """_host_bucket hashes each distinct host once and gives the bucket
+    per-row zlib.crc32 and Spark's pmod(crc32(host), mod) give: repeats,
+    several chunks, IPv6, underscore, non-ASCII and empty hosts."""
+    import zlib
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from goskyr_spark.spark.crawl import _host_bucket
+
+    rows = HOSTS + HOSTS[::-1] + HOSTS[:3]
+    col = pa.chunked_array([rows[:7], rows[7:], []], pa.string())
+    want = [zlib.crc32(h.encode()) % mod for h in rows]
+    assert _host_bucket(col, mod).tolist() == want
+    assert _host_bucket(pa.array(rows), mod).tolist() == want
+    df = spark.createDataFrame([(i, h) for i, h in enumerate(rows)],
+                               "i long, host string")
+    got = df.select("i", F.pmod(F.crc32("host"), F.lit(mod)).alias("b")) \
+        .orderBy("i").collect()
+    assert [r.b for r in got] == want

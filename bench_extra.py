@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Extra benchmarks / profiling for the optimization round (bench.py is
 frozen — this file holds the measurement tooling the guide §1 asks for:
-per-phase crawl timing, noop-sink query isolation, plan captures).
+per-phase crawl timing and per-round Spark job counts, noop-sink query
+isolation, plan captures).
 
 Usage:
   python bench_extra.py crawl [default|bucketed|adaptive] [--rounds N]
@@ -47,10 +48,12 @@ def make_spark(cores):
 
 def profile_crawl(mode="default"):
     """Same spec as bench.py's bench_crawl, but reports per-round AND
-    per-phase wall times (CrawlEngine.last_phases)."""
+    per-phase wall times (CrawlEngine.last_phases) and each round's
+    Spark job count (one job group per round)."""
     from goskyr_spark.spark.crawl import CrawlEngine
     from goskyr_spark.synth import SynthSpec, event_scraper, host_name, \
         synth_pages_df
+    from perfbench.jobledger import JobLedger
 
     cores = int(os.environ.get("GOSKYR_CRAWL_CORES", str(min(CPUS, 16))))
     spark = make_spark(cores)
@@ -69,6 +72,7 @@ def profile_crawl(mode="default"):
         crawl.BUCKET_BYTES = SMALL_BUCKET_BYTES  # for this process
     elif mode == "adaptive":
         kw["adaptive_priority"] = True
+    ledger = JobLedger(spark, "bench-extra")
     for attempt in ("warm", "timed"):
         wd = tempfile.mkdtemp(prefix="goskyr-prof-")
         try:
@@ -86,13 +90,14 @@ def profile_crawl(mode="default"):
                 last = -1
             r = last + 1
             while r < 50:
-                s = eng.run_round(r)
+                with ledger.group(f"{attempt}.round{r}") as gid:
+                    s = eng.run_round(r)
                 for name, secs in eng.last_phases:
                     phase_tot[name] += secs
                 rounds.append((r, s.get("n_dequeued", 0),
                                round(s.get("wall_secs", 0.0), 2),
                                [(n, round(x, 2)) for n, x in
-                                eng.last_phases]))
+                                eng.last_phases], gid))
                 if s["n_dequeued"] == 0:
                     break
                 r += 1
@@ -101,8 +106,9 @@ def profile_crawl(mode="default"):
                 n = sum(x[1] for x in rounds)
                 print(f"\n=== crawl mode={mode} wall={wall:.2f}s "
                       f"urls={n} ({n / wall:.1f}/s) ===")
-                for rr, nd, w, ph in rounds:
-                    print(f" round {rr}: n={nd} wall={w}s  {ph}")
+                for rr, nd, w, ph, gid in rounds:
+                    print(f" round {rr}: n={nd} wall={w}s "
+                          f"jobs={ledger.counts(gid)[0]}  {ph}")
                 print(" phase totals:",
                       json.dumps({k: round(v, 2) for k, v in
                                   sorted(phase_tot.items(),

@@ -29,10 +29,14 @@ round_plan(), the single size policy, from numbers the driver already
 holds (manifest file bytes, slab stats, the round's dequeued and new
 URL counts). The dequeue runs on the driver (pandas over the live files)
 while its input is under DRIVER_STATE_BYTES, else as one shuffle-free
-Spark job over the host buckets. Rounds of at most DRIVER_ROWS URLs
-commit items, fetched, host_stats and new URLs from one collected Arrow
-table; larger rounds commit through Spark writes with a
-range-partitioned fetch_seq.
+Spark job over the host buckets. The kernel job also computes each
+outlink's identity: one projection after the kernel adds its url
+(canonicalized when asked), xxhash64 and host, all JVM expressions.
+Rounds of at most DRIVER_ROWS URLs commit items, fetched, host_stats
+and new URLs from one collected Arrow table: the driver groups the
+outlinks in pyarrow, so the new-url commit launches no Spark job;
+larger rounds commit through Spark writes with a range-partitioned
+fetch_seq and group the outlinks with one Spark groupBy.
 The seen-set test broadcasts all slab filters until their estimated size
 passes SEEN_BROADCAST_BYTES, then runs partition-aligned; join sides
 under BROADCAST_JOIN_BYTES get a broadcast hint. Both sides of every
@@ -523,12 +527,36 @@ def _read_share(files, schema, t, n_tasks):
     return pa.concat_tables(parts) if parts else None
 
 
-def _host_col():
-    """The one host identity of the `url` column: its lowercased HOST as
+def _host_col(col="url"):
+    """The one host identity of a url column: its lowercased HOST as
     Spark parses it (IPv6 keeps its brackets; NULL when there is none).
     Seeds, outlinks and the mock robots.txt join all key on it, so one
     site never splits into two politeness/robots identities."""
-    return F.lower(F.expr("try_parse_url(url, 'HOST')"))
+    return F.lower(F.expr(f"try_parse_url({col}, 'HOST')"))
+
+
+def _frontier_rows(outlinks, round_no):
+    """The round's outlink rows (_out_url, _out_hash, _out_host, _depth,
+    _page_no), grouped on the driver into _FRONTIER_ARROW rows sorted by
+    url: one per url with the min of depth+1 and the min of page_no. A
+    link without a host (opaque like http:x, or not a valid URL at all)
+    has no politeness or robots identity: it is never enqueued. The
+    cluster commit's Spark groupBy computes the same rows."""
+    t = pa.table({"url": outlinks["_out_url"],
+                  "url_hash": outlinks["_out_hash"],
+                  "host": outlinks["_out_host"],
+                  "depth": pc.add(outlinks["_depth"], 1),
+                  "page_no": outlinks["_page_no"]})
+    g = (t.filter(pc.is_valid(t["host"]))
+         .group_by(["url", "url_hash", "host"], use_threads=False)
+         .aggregate([("depth", "min"), ("page_no", "min")])
+         .sort_by("url"))
+    n = g.num_rows
+    return pa.table(
+        [g["url"], g["url_hash"], g["host"],
+         pc.cast(g["depth_min"], pa.float64()), g["depth_min"],
+         pa.array(np.full(n, round_no, dtype=np.int64)), g["page_no_min"]],
+        schema=_FRONTIER_ARROW)
 
 
 def _u64(int64_array):
@@ -1269,9 +1297,9 @@ class CrawlEngine:
         kernel = self._fetch_extract_phase(dequeued, n_dequeued, round_no)
         commit = (self._commit_round_driver if plan.commit_driver
                   else self._commit_round_cluster)
-        stats, outlink_rows, started, ended = commit(kernel, round_no,
-                                                     n_dequeued)
-        n_new = self._new_urls_phase(plan, outlink_rows, round_no)
+        stats, outlinks, started, ended = commit(kernel, round_no,
+                                                 n_dequeued)
+        n_new = self._new_urls_phase(plan, outlinks, round_no)
         return self._tail_phase(round_no, t0, n_dequeued, stats, n_new,
                                 started, ended)
 
@@ -1462,9 +1490,18 @@ class CrawlEngine:
         keys = [F.col("host")]
         if live_factory is None:
             keys.append(F.floor((F.col("_host_seq") - 1) / SALT_ROWS))
+        # each outlink's identity, computed in the kernel's own job by
+        # the same JVM expressions as the seeds': url (canonicalized
+        # when asked), xxhash64 and host (read on outlink rows only)
+        out_url = F.col("_outlink")
+        if self.canonicalize_outlinks:
+            out_url = self._canon_expr(out_url)
         return (work.repartition(n_fetch_parts, *keys)
                 .sortWithinPartitions("_host_seq", "host")
-                .mapInArrow(fetch_extract, out_schema))
+                .mapInArrow(fetch_extract, out_schema)
+                .withColumn("_out_url", out_url)
+                .withColumns({"_out_hash": F.xxhash64("_out_url"),
+                              "_out_host": _host_col("_out_url")}))
 
     def _fold_live_hosts(self, rows):
         """Fold the kernel's (host, robots body, last request time) rows
@@ -1498,14 +1535,15 @@ class CrawlEngine:
 
     def _commit_round_driver(self, kernel, round_no, n_dequeued):
         """Driver-side round commit: ONE job runs the fetch/extract kernel
-        and collects its html-free output as Arrow — the JVM xxhash64
-        rides along as a column so no hash is ever recomputed off-JVM.
-        Items, fetched (+ fetch_seq), host stats and the round metrics
-        derive driver-side from that table; the outlink rows come back
-        as a LOCAL relation so the new-url job never re-runs the kernel.
-        When html is retained the kernel output is cached first, its
-        html appended to debug_pages, and the rest collected from the
-        cache. Returns (stats, outlink rows, started, ended)."""
+        and collects its html-free output as Arrow — the JVM xxhash64 of
+        every page and outlink (and each outlink's host) rides along as
+        a column, so no hash or host is ever computed off-JVM. Items,
+        fetched (+ fetch_seq), host stats, the round metrics and the
+        grouped new frontier rows (_frontier_rows) derive driver-side
+        from that table. When html is retained the kernel output is
+        cached first, its html appended to debug_pages, and the rest
+        collected from the cache. Returns (stats, frontier candidates
+        as an Arrow table, started, ended)."""
         started = datetime.now(timezone.utc)
         if self._retain_html:
             kernel = self._cache(kernel)
@@ -1539,10 +1577,7 @@ class CrawlEngine:
                   "n_items": pc.sum(fetched["n_items"]).as_py(),
                   "n_errors": pc.sum(fetched["n_errors"]).as_py()}]
         ot = coll.filter(pc.equal(coll["_kind"], "outlink"))
-        outlinks = self.spark.createDataFrame(
-            ot.select(["_outlink", "_depth", "_page_no"]).to_pandas(),
-            "_outlink string, _depth long, _page_no long")
-        return stats, outlinks, started, ended
+        return stats, _frontier_rows(ot, round_no), started, ended
 
     def _commit_items_driver(self, coll, round_no):
         """Items append from the collected kernel output: one parquet
@@ -1662,33 +1697,29 @@ class CrawlEngine:
                 {"round": round_no}, coalesce=1)
             self._mark("host_stats")
         seq_sorted.unpersist()
-        outlinks = result.filter("_kind = 'outlink'").select(
-            "_outlink", "_depth", "_page_no")
-        return stats, outlinks, started, ended
-
-    def _new_urls_phase(self, plan, outlink_rows, round_no):
-        """outlinks → seen-set → new frontier rows; returns n_new."""
-        out_url = F.col("_outlink")
-        if self.canonicalize_outlinks:
-            out_url = self._canon_expr(out_url)
-        outlinks = (outlink_rows
-                    .select(out_url.alias("url"),
-                            (F.col("_depth") + 1).alias("depth"),
-                            F.col("_page_no").alias("page_no"))
-                    .groupBy("url").agg(F.min("depth").alias("depth"),
-                                        F.min("page_no").alias("page_no"))
-                    .withColumn("url_hash", F.xxhash64("url"))
-                    .withColumn("host", _host_col())
-                    # a link without a host (opaque like http:x, or not a
-                    # valid URL at all) has no politeness or robots
-                    # identity: it is never enqueued
-                    .filter(F.col("host").isNotNull())
+        # the rows _frontier_rows makes on the driver side, by one
+        # Spark groupBy over the kernel's precomputed identity columns
+        outlinks = (result.filter("_kind = 'outlink'")
+                    .filter(F.col("_out_host").isNotNull())
+                    .groupBy(F.col("_out_url").alias("url"),
+                             F.col("_out_hash").alias("url_hash"),
+                             F.col("_out_host").alias("host"))
+                    .agg(F.min(F.col("_depth") + 1).alias("depth"),
+                         F.min("_page_no").alias("page_no"))
                     .withColumn("priority", F.col("depth").cast("double"))
                     .withColumn("discovered_round",
                                 F.lit(round_no).cast("long"))
                     .select(*FRONTIER_COLS))
-        if plan.new_urls_driver:
-            return self._commit_new_urls_driver(outlinks, round_no)
+        return stats, outlinks, started, ended
+
+    def _new_urls_phase(self, plan, outlinks, round_no):
+        """Frontier candidates (FRONTIER rows, one per url: an Arrow
+        table from the driver commit, else a DataFrame) → seen-set →
+        new frontier rows; returns n_new."""
+        if isinstance(outlinks, pa.Table):
+            if plan.new_urls_driver:
+                return self._commit_new_urls_driver(outlinks, round_no)
+            outlinks = self.spark.createDataFrame(outlinks, FRONTIER_SCHEMA)
         # WRITE-FIRST commit: the new-url set is appended straight to the
         # frontier (ONE job — no count() pass, no cache); n_new comes
         # from the written parquet footers, and the seen append + slab
@@ -1701,15 +1732,15 @@ class CrawlEngine:
         self._commit_seen(round_no, n_new, files=new_files)
         return n_new
 
-    def _commit_new_urls_driver(self, outlinks, round_no):
-        """Driver-side new-url commit: one Spark job aggregates the
-        outlinks and collects them (hash/host/canonicalization computed
-        by the SAME Spark expressions as the cluster side); the
-        Bloom+cuckoo flag, the exact seen confirm (url membership over
-        the driver-read seen files — stricter-equivalent to the
-        [url_hash, url] anti-join) and the frontier/seen/slab appends
-        then run driver-side. Returns n_new."""
-        t = outlinks.toArrow()
+    def _commit_new_urls_driver(self, t, round_no):
+        """Driver-side new-url commit, no Spark job: `t` is the round's
+        frontier candidates as _frontier_rows grouped them (their hash,
+        host and canonical url computed in the kernel job by the SAME
+        Spark expressions as the cluster side). The Bloom+cuckoo flag,
+        the exact seen confirm (url membership over the driver-read
+        seen files — stricter-equivalent to the [url_hash, url]
+        anti-join) and the frontier/seen/slab appends run driver-side.
+        Returns n_new."""
         maybe = _maybe_seen(t.column("url_hash"), self.n_slabs,
                             _filter_loader(_latest_blobs(self._slab_latest())))
         keep = ~maybe
@@ -1722,7 +1753,7 @@ class CrawlEngine:
             # are false positives — keep them (never drop a real URL)
             keep |= ~pc.is_in(t.column("url"), value_set=seen_urls) \
                 .to_numpy(zero_copy_only=False)
-        new = t.filter(pa.array(keep)).cast(_FRONTIER_ARROW)
+        new = t.filter(pa.array(keep))
         if new.num_rows:
             self._append_host_keyed(self.t_frontier, new, round_no)
         else:

@@ -1,17 +1,21 @@
 """The round plan: one size policy picks the side of every phase, and
 both sides agree on the edge cases the driver side used to handle
-differently (NULL-host outlinks, parquet timestamp types)."""
+differently (NULL-host outlinks, parquet timestamp types, outlink
+grouping); a driver-plan round keeps to its Spark job budget."""
 
+import threading
 from contextlib import nullcontext
 from datetime import datetime, timezone
+from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pyarrow.parquet as pq
 import pytest
 
-from conftest import small_buckets
+from conftest import PLANS, force_plan, small_buckets
 from goskyr_spark.spark import crawl
 from goskyr_spark.spark.crawl import CrawlEngine, FRONTIER_SCHEMA
 from goskyr_spark.synth import event_scraper
+from perfbench.jobledger import JobLedger
 
 NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
 HOST = "h0.test"
@@ -133,8 +137,6 @@ def test_item_timestamps_one_physical_type(spark, pages, tmp_path,
     """Items written by the driver commit (pyarrow) and by the cluster
     commit (Spark) store the date field with one parquet physical type,
     so one items table never mixes INT96 and INT64 timestamps."""
-    from conftest import force_plan
-
     types = set()
     for name in ("driver", "cluster"):
         force_plan(monkeypatch, name)
@@ -163,3 +165,161 @@ def test_size_policy_thresholds():
     assert not part.slabs_driver and not part.new_urls_driver
     assert not plan(seen_bytes=crawl.BROADCAST_JOIN_BYTES + 1) \
         .broadcast_seen
+
+
+# --- outlink grouping: one result on every plan -------------------------------
+
+def _list_page(items, nxt=None):
+    body = "".join(_event(t, href) for t, href in items)
+    if nxt:
+        body += f'<a class="next" href="{nxt}">next</a>'
+    return f"<html>{body}</html>".encode()
+
+
+X = "https://x.test/list/9"
+
+
+def test_outlink_grouping_same_on_every_plan(spark, tmp_path, monkeypatch):
+    """Every plan writes the same frontier rows from one set of outlinks:
+    X reaches round 1 three times, as the pagination link of a depth-0
+    page (depth 1, page 2) and as an item url plus the pagination link
+    of a depth-1 page (depth 2, pages 1 and 2), and keeps the min of
+    each. Links without a host as Spark parses it (opaque http:x,
+    underscore and non-ASCII hosts) are dropped; IPv6 and mixed-case
+    hosts take the host Spark parses. per_host_budget=1 holds the second
+    b.test seed back a round, so pages of depth 0 and 1 are fetched
+    together."""
+    rows = [
+        ("https://a.test/list/1", _list_page([
+            ("s", "https://c.test/list/1"), ("opaque", "http:x"),
+            ("v6", "http://[::1]/v6"),
+            ("under", "http://under_score.test/u"),
+            ("idn", "http://bücher.test/b"),
+            ("idn-up", "https://ÜBER.test/ü"),
+            ("mixed", "https://MiXeD.Test/m")])),
+        ("https://b.test/list/1", _list_page([])),
+        ("https://b.test/list/2", _list_page([], nxt=X)),
+        ("https://c.test/list/1", _list_page([("x", X)], nxt=X)),
+        (X, _list_page([])),
+    ]
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    seeds = ["https://a.test/list/1", "https://b.test/list/1",
+             "https://b.test/list/2"]
+    got = {}
+    for name in PLANS:
+        force_plan(monkeypatch, name)
+        eng = CrawlEngine(spark, str(tmp_path / name), pages, event_scraper,
+                          seeds, now=NOW, fetch_partitions=2,
+                          per_host_budget=1)
+        eng.run(max_rounds=10)
+        got[name] = sorted(
+            tuple(r) for r in
+            eng.t_frontier.read(spark, schema=FRONTIER_SCHEMA)
+            .select("url", "url_hash", "host", "depth", "page_no",
+                    "priority", "discovered_round").collect())
+    ref = got.pop("driver")
+    assert all(rows == ref for rows in got.values()), got
+    by_url = {r[0]: r for r in ref}
+    assert by_url[X][2:] == ("x.test", 1, 1, 1.0, 1)
+    assert by_url["http://[::1]/v6"][2:4] == ("[::1]", 1)
+    assert by_url["https://MiXeD.Test/m"][2] == "mixed.test"
+    assert sorted(by_url) == sorted(seeds + [
+        "https://c.test/list/1", X, "http://[::1]/v6",
+        "https://MiXeD.Test/m"])
+
+
+# --- job budget: a driver-plan round's Spark jobs ----------------------------
+
+def _round_jobs(spark, eng, max_rounds):
+    """Spark jobs of each non-empty round of eng.run(), by job group."""
+    ledger, jobs = JobLedger(spark, f"budget-{id(eng)}"), []
+    run_round = eng.run_round
+
+    def counted(r):
+        with ledger.group(f"round{r}") as gid:
+            s = run_round(r)
+        if s["n_dequeued"]:
+            jobs.append(ledger.counts(gid)[0])
+        return s
+
+    eng.run_round = counted
+    eng.run(max_rounds=max_rounds)
+    return jobs
+
+
+def test_driver_round_job_budget_mock(spark, tmp_path, monkeypatch):
+    """A driver-plan mock round launches at most 4 Spark jobs: the
+    fetch/extract kernel's collect, whose query stages AQE runs as
+    jobs of their own. The outlinks' hash, host and grouping add none
+    (the separate new-url aggregation cost 2 more). The first round
+    also fills the engine's mock robots.txt cache, so it is not
+    counted."""
+    from goskyr_spark.synth import SynthSpec, host_name, synth_pages_df
+
+    force_plan(monkeypatch, "driver")
+    spec = SynthSpec(n_hosts=8, pages_per_host=2, items_per_page=12,
+                     hot_hosts=1, hot_factor=4)
+    pages = synth_pages_df(spark, spec, include_fixtures=False,
+                           num_partitions=4).cache()
+    pages.count()
+    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
+                      [f"https://{host_name(h)}/list/1" for h in range(8)],
+                      now=NOW, fetch_partitions=4)
+    try:
+        jobs = _round_jobs(spark, eng, 3)
+    finally:
+        pages.unpersist()
+    assert len(jobs) == 3 and max(jobs[1:]) <= 4, jobs
+
+
+class _LoopbackSite(BaseHTTPRequestHandler):
+    def do_GET(self):
+        body = {"/robots.txt": b"User-agent: *\n",
+                "/list/1": b'<div class="e"><span class="t">a</span>'
+                           b'<a class="more" href="/list/2">m</a></div>'
+                }.get(self.path, b'<div class="e"><span class="t">b</span>'
+                                 b'</div>')
+        self.send_response(200)
+        self.end_headers()
+        self.wfile.write(body)
+
+    def log_message(self, *a):
+        pass
+
+
+LIVE_CFG = """
+scrapers:
+  - name: live
+    url: x
+    item: div.e
+    fields:
+      - name: t
+        location: {selector: span.t}
+      - name: link
+        type: url
+        can_be_empty: true
+        location: {selector: a.more, attr: href}
+"""
+
+
+def test_driver_round_job_budget_live(spark, tmp_path, monkeypatch):
+    """A driver-plan live round over loopback launches at most 2 Spark
+    jobs (the kernel's shuffle and its collect)."""
+    from goskyr_spark.config import loads_config
+    from goskyr_spark.spark.fetchers import StaticFetcher
+
+    force_plan(monkeypatch, "driver")
+    scraper = loads_config(LIVE_CFG).scrapers[0]
+    srv = HTTPServer(("127.0.0.1", 0), _LoopbackSite)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        eng = CrawlEngine(spark, str(tmp_path / "wd"), None,
+                          lambda h: scraper,
+                          [f"http://127.0.0.1:{srv.server_port}/list/1"],
+                          now=NOW, fetch_partitions=2,
+                          live_fetcher=lambda: StaticFetcher(timeout=5))
+        jobs = _round_jobs(spark, eng, 4)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert len(jobs) == 2 and max(jobs) <= 2, jobs

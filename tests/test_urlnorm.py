@@ -116,7 +116,10 @@ def _crawl_messy(spark, tmp_path, name, canonicalize):
             .collect()]
 
 
-def test_engine_canonicalize_outlinks(spark, tmp_path):
+# the canon expression runs in the fetch/extract kernel's job; its
+# output reaches the frontier through both new-url commits
+@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+def test_engine_canonicalize_outlinks(spark, tmp_path, plan):
     # ON: the uppercase seed and both spellings of the detail link
     # normalize to one identity -> every fetch hits a real page
     on = _crawl_messy(spark, tmp_path, "on", True)
@@ -185,7 +188,9 @@ PCT_LIST_HTML = """<html><body><div class="listing">
 </div></body></html>"""
 
 
-def test_engine_full_canonicalize_merges_pct_spellings(spark, tmp_path):
+@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+def test_engine_full_canonicalize_merges_pct_spellings(spark, tmp_path,
+                                                       plan):
     """%7Euser and ~user outlink spellings land on ONE frontier row
     under canonicalize_outlinks='full' (VERDICT r3 #7) — and stay two
     rows (one 'missing') under syntax-only normalization."""

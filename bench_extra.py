@@ -49,7 +49,8 @@ def make_spark(cores):
 def profile_crawl(mode="default"):
     """Same spec as bench.py's bench_crawl, but reports per-round AND
     per-phase wall times (CrawlEngine.last_phases) and each round's
-    Spark job count (one job group per round)."""
+    Spark job count (one job group per round), bootstrap's (the pages
+    layout included) first."""
     from goskyr_spark.spark.crawl import CrawlEngine
     from goskyr_spark.synth import SynthSpec, event_scraper, host_name, \
         synth_pages_df
@@ -83,10 +84,15 @@ def profile_crawl(mode="default"):
             phase_tot = defaultdict(float)
             rounds = []
             last = eng.recover()
+            boot = None
             if last < 0 and not eng.t_frontier.exists():
                 tb = time.time()
-                eng.bootstrap()
+                with ledger.group(f"{attempt}.bootstrap") as gid:
+                    eng.bootstrap()
                 phase_tot["bootstrap"] = time.time() - tb
+                # the pages layout is bootstrap's first phase
+                boot = ([(n, round(x, 2)) for n, x in eng.last_phases],
+                        gid)
                 last = -1
             r = last + 1
             while r < 50:
@@ -106,6 +112,9 @@ def profile_crawl(mode="default"):
                 n = sum(x[1] for x in rounds)
                 print(f"\n=== crawl mode={mode} wall={wall:.2f}s "
                       f"urls={n} ({n / wall:.1f}/s) ===")
+                if boot:
+                    print(f" bootstrap: jobs={ledger.counts(boot[1])[0]}  "
+                          f"{boot[0]}")
                 for rr, nd, w, ph, gid in rounds:
                     print(f" round {rr}: n={nd} wall={w}s "
                           f"jobs={ledger.counts(gid)[0]}  {ph}")

@@ -7,10 +7,13 @@ a deterministic micro-batch over snapshot tables —
   dequeue  = per-host rank _host_seq by (priority, url) → per-host top-k
              → global ORDER BY (priority, url) LIMIT round_budget; the
              rank rides along as the politeness clock and salting key
-  fetch    = hash join against the pages table on url (the mock "web";
-             a real HTTP fetcher plugs in behind the same join contract),
+  fetch    = inside the Arrow kernel, over the dequeued rows only,
              repartitioned BY HOST so per-host politeness (crawl-delay
-             budgets from robots.txt) is enforceable inside one partition
+             budgets from robots.txt) is enforceable inside one
+             partition: a live crawl GETs each page, a mock crawl reads
+             it from the workdir's host-bucketed pages store (one
+             pyarrow read per Arrow batch of the batch's host buckets);
+             robots.txt comes the same way, once per host
   extract  = one Arrow kernel pass per fetched page: items + outlinks
              (pagination links depth+1 and item url fields), outlinks
              canonicalized by goskyr's URL-join during extraction (P7)
@@ -54,7 +57,9 @@ t ≡ b mod min(n, T) and, when n < T, keeps only the rows with
 crc32(host) mod T = t. Every host reaches exactly one task whatever
 moduli its files were written under (a linear-hashing split read), so
 a flat legacy workdir, a crash inside compact() or a modulus that grew
-between rounds all dequeue the same rows.
+between rounds all dequeue the same rows. A mock crawl's pages are laid
+out once per workdir the same way (the `pages` table: url, host, html,
+one row per url, each file sorted by url), M following the pages' bytes.
 
 Slabs: the driver reads slab metadata (each slab's latest file, round,
 count and capacity) with pyarrow from the stat columns of the live slab
@@ -74,16 +79,19 @@ Inside a fetch task rows run round-robin across hosts, sorted by
 (_host_seq, host); fetched rows are committed in (fetch_ts, host, url)
 order, so only the order of item rows inside a round's file follows it.
 
-Live mode: the engine, not the Python workers, holds each host's
-robots.txt body, its expiry and the wall time of the last request
-(CrawlEngine._live_hosts). Each round broadcasts it to the kernel; a
-task first resolves robots for every host of an Arrow batch (from the
-broadcast, or by GET when the host has no unexpired body), then fetches
-round-robin, so one host's crawl-delay sleep overlaps the other hosts'
-GETs, and every host's first request waits from its last request of an
-earlier round. The task reports one _kind='host' row per host it
-contacted (robots body it fetched, last request time), which the round
-commit folds back into the state.
+Host state: the engine, not the Python workers, holds each host's
+robots.txt body, its expiry and the time of the last request
+(CrawlEngine._live_hosts), in mock and live mode alike. Each round
+broadcasts it to the kernel; a task first resolves robots for every
+host of an Arrow batch (from the broadcast, or from
+{scheme}://{netloc}/robots.txt of the host's page when the host has no
+unexpired body), then fetches round-robin. The task reports one
+_kind='host' row per host it contacted (robots body it fetched, last
+request time), which the round commit folds back into the state. The
+clock is the one mode difference: a live crawl also sleeps out each
+host's crawl-delay from its last request, an earlier round's included,
+so one host's sleep overlaps the other hosts' GETs; a mock crawl keeps
+to the virtual clock and never sleeps.
 
 Skew: hot hosts (large news domains) are bounded by per_host_budget at
 dequeue. In mock mode the fetch stage also hash-partitions each host's
@@ -95,6 +103,7 @@ its wall-clock sleeps only hold while a host lives in one task.
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import time
@@ -120,8 +129,9 @@ from pyspark.sql.types import (
 from ..kernels.cuckoo import BloomFilter, CuckooFilter
 from ..kernels.filters import filter_item, initialize_filters
 from ..kernels.robots import parse_robots
-from .fetchers import FetchError
 from ..kernels.scrape import scrape_page
+from ..ops.urlnorm import percent_normalize_str, url_normalize_expr
+from .fetchers import FetchError, StoreFetcher
 from .pipeline import _field_columns, item_spark_schema
 from .store import SnapshotStore
 
@@ -132,13 +142,13 @@ logger = logging.getLogger("goskyr_spark.crawl")
 # UNREACHABLE (5xx / network error) MUST be assumed complete disallow.
 ROBOTS_DISALLOW_ALL = b"User-agent: *\nDisallow: /\n"
 
-# Live-mode robots.txt lifetime in the engine's host state: RFC 9309
+# robots.txt lifetime in the engine's host state: RFC 9309
 # §2.4 says crawlers SHOULD cache robots.txt up to 24 hours. Only
 # resolvable outcomes are cached (2xx bodies and 4xx allow-all);
 # 5xx/network-failure disallow-all holds for one round, so an
 # unreachable host is re-probed the next round.
 _ROBOTS_TTL_SECS = 24 * 3600.0
-# bound on the live host state; past it the least recently contacted
+# bound on the host state; past it the least recently contacted
 # half is dropped (those hosts fetch robots.txt again)
 _LIVE_HOSTS_MAX = 100_000
 # mock-mode fetch salting: each run of SALT_ROWS consecutive dequeue
@@ -498,6 +508,13 @@ def _host_bucket(hosts, mod):
     return codes[enc.indices.to_numpy(zero_copy_only=False)]
 
 
+def _bucket_mod(nbytes):
+    """M of a host-keyed write over `nbytes` of data: the smallest power
+    of two with nbytes / M ≤ BUCKET_BYTES."""
+    need = -(-nbytes // BUCKET_BYTES)
+    return 1 << max(0, need - 1).bit_length()
+
+
 def _dequeue_reads(buckets, n_tasks):
     """The cluster dequeue's read rule over buckets = {file: (b, n)}, a
     file written as crc32(host) bucket b of modulus n (powers of two):
@@ -559,6 +576,13 @@ def _frontier_rows(outlinks, round_no):
         schema=_FRONTIER_ARROW)
 
 
+def _robots_url(url):
+    """robots.txt of a page's own scheme and netloc (the host key strips
+    ports; the request must not)."""
+    sp = urlsplit(url)
+    return f"{sp.scheme or 'https'}://{sp.netloc}/robots.txt"
+
+
 def _u64(int64_array):
     return np.asarray(int64_array, dtype=np.int64).view(np.uint64)
 
@@ -577,18 +601,19 @@ class CrawlEngine:
         self.store = SnapshotStore(workdir)
         self.pages = pages_df
         # live mode: pages_df=None + a zero-arg factory returning a
-        # Fetcher (e.g. lambda: StaticFetcher()). The fetch stage then
-        # performs real HTTP GETs inside the Arrow kernel — same plan,
-        # same politeness identities; the virtual clock stays the
-        # deterministic ORDER key while real sleeps pace requests
-        # (host-hash partitioning keeps a host inside one task, so
-        # per-host crawl-delay is enforceable with wall-clock sleeps;
-        # _live_hosts carries it from one round's task to the next).
+        # Fetcher (e.g. lambda: StaticFetcher()); mock mode fetches from
+        # pages_df, laid out once as the workdir's `pages` table, through
+        # a StoreFetcher. Both run the same kernel: the virtual clock
+        # stays the deterministic ORDER key, and only live mode paces
+        # its requests with real sleeps (host-hash partitioning keeps a
+        # host inside one task, so per-host crawl-delay is enforceable
+        # with wall-clock sleeps; _live_hosts carries it from one
+        # round's task to the next).
         self.live_fetcher = live_fetcher
-        # live per-host state, {host: (robots.txt body, its expiry, wall
-        # time of the last request)}: broadcast to each round's kernel,
-        # which reports back what it fetched and when (_kind='host'
-        # rows), so robots.txt is fetched once per host per TTL and the
+        # per-host state, {host: (robots.txt body, its expiry, time of
+        # the last request)}: broadcast to each round's kernel, which
+        # reports back what it fetched and when (_kind='host' rows), so
+        # robots.txt is fetched once per host per TTL and the
         # crawl-delay holds across round boundaries. In memory only: a
         # resumed engine fetches each host's robots.txt again.
         self._live_hosts = {}
@@ -633,14 +658,18 @@ class CrawlEngine:
         # percent-encoding pass (§6.2.2.2, Arrow-vectorized kernel —
         # %7E and ~ spellings land on ONE frontier row). Opt-in:
         # goskyr's own URL-join output is the reference identity, so
-        # normalization changes crawl digests by design.
+        # normalization changes crawl digests by design. The percent
+        # pass runs in Python (the kernel's, for outlinks) before the
+        # syntax passes' column expression.
         self.canonicalize_outlinks = canonicalize_outlinks
         if canonicalize_outlinks:
-            sdf = spark.createDataFrame([(s,) for s in self.seeds],
-                                        "url string")
+            pct = canonicalize_outlinks == "full"
+            sdf = spark.createDataFrame(
+                [(percent_normalize_str(s) if pct else s,)
+                 for s in self.seeds], "url string")
             self.seeds = sorted({
                 r["url"] for r in sdf.select(
-                    self._canon_expr(F.col("url")).alias("url"))
+                    url_normalize_expr(F.col("url")).alias("url"))
                 .collect()})
         # one schema for all hosts: factory must produce field-compatible
         # scrapers (heterogeneous configs get engine instances per config)
@@ -659,10 +688,10 @@ class CrawlEngine:
         # (reference fetcher.go:80-111), debug mode appends the fetched
         # (ok) pages to a debug_pages snapshot table with round lineage.
         # The kernel emits their html as an extra output column and the
-        # round commit persists it, in mock and live mode alike. Live
-        # mode fetches html inside the kernel, so on_subpage there also
-        # implies retention — without it items_final could never join
-        # the detail-page html back.
+        # round commit persists it, in mock and live mode alike. A live
+        # crawl has no pages table, so on_subpage there also implies
+        # retention — without it items_final could never join the
+        # detail-page html back.
         self._retain_html = debug or (pages_df is None and
                                       self._has_subpage)
         if pages_df is None and self._has_subpage and not debug:
@@ -680,7 +709,7 @@ class CrawlEngine:
         self._file_cache = {}
         # the last _measure_sizes(): round_plan() inputs, and the
         # dequeue bytes that set the modulus M of the HOST-HASH BUCKETED
-        # frontier, fetched and host_stats (_bucket_mod): small crawls
+        # frontier, fetched and host_stats (_hostpart_write): small crawls
         # write one plain file per append, large ones one file per
         # bucket, so the cluster dequeue is a task-local job with no
         # per-round shuffle of the full pending set — the dominant
@@ -696,6 +725,7 @@ class CrawlEngine:
         self.t_metrics = self.store.table("metrics")
         self.t_rounds = self.store.table("rounds")
         self.t_host_stats = self.store.table("host_stats")
+        self.t_pages = self.store.table("pages")
 
     def _files_bytes(self, table, rel_files=None):
         """On-disk bytes of a table's (or a subset of its) files —
@@ -709,16 +739,6 @@ class CrawlEngine:
             except OSError:
                 pass
         return total
-
-    def _canon_expr(self, col):
-        """URL-canonicalization Column for the configured mode: syntax
-        passes only (True) or syntax + percent-encoding kernel
-        ("full")."""
-        from ..ops.urlnorm import url_normalize_expr, url_normalize_full_expr
-
-        if self.canonicalize_outlinks == "full":
-            return url_normalize_full_expr(col)
-        return url_normalize_expr(col)
 
     def _bc(self, value):
         """Create a round-scoped SparkContext broadcast. Handles are
@@ -760,36 +780,65 @@ class CrawlEngine:
 
     # ---------------------------------------------- host-bucketed layout
 
-    def _bucket_mod(self):
-        """M of every host-keyed write: the smallest power of two with
-        dequeue_bytes / M ≤ BUCKET_BYTES, dequeue_bytes as
-        _measure_sizes() took it at round start (or at compact())."""
-        need = -(-self._sizes.get("dequeue_bytes", 0) // BUCKET_BYTES)
-        return 1 << max(0, need - 1).bit_length()
-
     def _hostpart_write(self, table, df, meta, mode="append",
-                        coalesce=None):
+                        coalesce=None, mod=None, within=None):
         """Spark append/overwrite (or "append_counted") of a host-keyed
-        table under _bucket_mod() M: at M = 1 a plain write (coalesced
-        when asked), else one file per crc32(host) mod M bucket, each
-        file's (bucket, M) in the manifest, repartitioned by bucket
-        WITHOUT a pinned partition count — AQE coalesces the exchange
-        by size, so a 65-row tail round shuffles into one task while a
-        fat round still spreads."""
-        mod = self._bucket_mod()
-        if mod == 1:
-            return getattr(table, mode)(
-                df.coalesce(coalesce) if coalesce else df, meta)
-        df = df.withColumn("_bucket", F.pmod(
-            F.crc32(F.col("host")), F.lit(mod))).repartition("_bucket")
-        return getattr(table, mode)(df, dict(meta or {}, bucket_mod=mod),
-                                    partition_by="_bucket")
+        table under M = mod, by default _bucket_mod of the dequeue input
+        as _measure_sizes() took it at round start (or at compact()),
+        the frontier, fetched and host_stats modulus: at M = 1 a plain
+        write (coalesced when asked), else one file per crc32(host) mod
+        M bucket, each file's (bucket, M) in the manifest, repartitioned
+        by bucket WITHOUT a pinned partition count — AQE coalesces the
+        exchange by size, so a 65-row tail round shuffles into one task
+        while a fat round still spreads. within(df, keys), when given,
+        maps the partitioned rows before the write; keys is [] at M = 1,
+        else ["_bucket"]."""
+        mod = mod or _bucket_mod(self._sizes.get("dequeue_bytes", 0))
+        keys = [] if mod == 1 else ["_bucket"]
+        if keys:
+            df = df.withColumn("_bucket", F.pmod(
+                F.crc32(F.col("host")), F.lit(mod))).repartition("_bucket")
+            meta = dict(meta or {}, bucket_mod=mod)
+        elif coalesce:
+            df = df.coalesce(coalesce)
+        return getattr(table, mode)(within(df, keys) if within else df, meta,
+                                    partition_by=keys[0] if keys else None)
+
+    def _layout_pages(self):
+        """Lay pages_df out once per workdir as the `pages` table the
+        kernel's StoreFetcher reads: (url, host, html as binary — a
+        string html column is stored as its UTF-8 bytes), rows without a
+        host dropped, in crc32(host) mod M buckets with M = _bucket_mod
+        of the pages' bytes, each file sorted by url and holding one row
+        per url: the latest warc_ts when pages_df has one, then the
+        largest html (a url's captures share a host, so the pick needs
+        no shuffle past the bucket one). A workdir that has the table (a
+        resumed crawl) reuses it."""
+        if self.pages is None or self.t_pages.exists():
+            return
+        nbytes = self.pages.select(F.sum(F.octet_length("url")
+                                         + F.octet_length("html"))).first()[0]
+        order = [F.desc(c) for c in ("warc_ts", "html")
+                 if c in self.pages.columns]
+
+        def latest(df, keys):
+            w = Window.partitionBy(*keys, "url").orderBy(*order)
+            return (df.withColumn("_rn", F.row_number().over(w))
+                    .filter("_rn = 1").select("url", "host", "html", *keys))
+
+        pages = self.pages.withColumns({
+            "host": _host_col(), "html": F.col("html").cast("binary")})
+        self._hostpart_write(self.t_pages,
+                             pages.filter(F.col("host").isNotNull()), {},
+                             mod=_bucket_mod(nbytes or 0), within=latest)
+        self._mark("pages_layout")
 
     def _append_host_keyed(self, table, tbl, round_no):
         """Driver-side append of a host-keyed Arrow table under the
         Spark writer's rule: one file at M = 1, else one file per
-        crc32(host) mod M bucket."""
-        mod, meta = self._bucket_mod(), {"round": round_no}
+        crc32(host) mod M bucket (M as _hostpart_write's default)."""
+        mod = _bucket_mod(self._sizes.get("dequeue_bytes", 0))
+        meta = {"round": round_no}
         if mod == 1:
             table.append_arrow(tbl, meta)
             return
@@ -974,11 +1023,14 @@ class CrawlEngine:
         return last
 
     def bootstrap(self):
-        """Round -1: seed the frontier + seen set. ONE Spark job (the
+        """Round -1: lay out the pages (mock mode, _layout_pages), then
+        seed the frontier + seen set. ONE Spark job for the seeds (the
         frontier write, which computes the JVM xxhash64); the seen copy
         and slab build derive from the written files driver-side. A
         seed's host comes from the outlinks' expression; a seed without
         one is dropped, like an outlink."""
+        self.last_phases, self._mark_t = [], time.time()
+        self._layout_pages()
         self._sizes = self._measure_sizes()
         rows = [(u, None, None, 0.0, 0, -1, 1) for u in self.seeds]
         df = (self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
@@ -1211,36 +1263,6 @@ class CrawlEngine:
                            .otherwise(0)).alias("n_ok"),
                      F.sum("n_items").alias("n_items")))
 
-    def _robots_df(self):
-        """Per-host robots.txt bodies — computed once per engine and
-        cached (it is a tiny per-host table; rescanning pages per round
-        would be a full-table scan). Any pages row whose path is
-        /robots.txt with no query counts, at any scheme or port, as live
-        mode reads robots from the page's own scheme and netloc; of
-        several for one host, https wins over http, then the smallest
-        url."""
-        if getattr(self, "_robots_cache_df", None) is None:
-            def part(name):
-                return F.expr(f"try_parse_url(url, '{name}')")
-
-            # StringEndsWith pushes down to the parquet scan; the parsed
-            # path/query checks (not pushdown-able) then only refine the
-            # ~one-row-per-host remainder
-            rows = (self.pages.filter(F.col("url").endswith("/robots.txt"))
-                    .filter((part("PATH") == "/robots.txt")
-                            & part("QUERY").isNull()))
-            pick = F.min(F.struct(
-                (F.lower(part("PROTOCOL")) != "https").alias("_http"),
-                F.col("url"), F.col("html")))
-            self._robots_cache_df = (
-                # group key is the LOWERCASED host — must agree with
-                # _host_col() (seeds and outlinks), else a mixed-case
-                # host splits into two robots/politeness identities
-                rows.groupBy(_host_col().alias("host"))
-                .agg(pick["html"].alias("_robots"))).cache()
-        return self._robots_cache_df
-
-
     # ------------------------------------------------------------------ round
 
     def _mark(self, name):
@@ -1315,43 +1337,38 @@ class CrawlEngine:
 
     def _fetch_extract_phase(self, dequeued, n_dequeued, round_no):
         """The fetch/extract kernel over the dequeued rows, as a lazy
-        DataFrame of _crawl_schema() rows (_kind fetch/item/outlink).
-        The politeness clock is the dequeue's per-host rank _host_seq,
-        so it does not depend on physical partitioning."""
-        if self.pages is not None:
-            robots_df = self._robots_df()
-            work = (dequeued
-                    .join(self.pages.select(F.col("url"),
-                                            F.col("html").alias("_html")),
-                          on="url", how="left")
-                    .join(robots_df, on="host", how="left"))
-        else:  # live mode: html + robots arrive inside the kernel
-            work = (dequeued
-                    .withColumn("_html", F.lit(None).cast("binary"))
-                    .withColumn("_robots", F.lit(None).cast("binary")))
-
+        DataFrame of _crawl_schema() rows (_kind fetch/item/outlink/host).
+        Each task fetches through its own fetcher: the live factory's, or
+        a StoreFetcher over the pages table. The politeness clock is the
+        dequeue's per-host rank _host_seq, so it does not depend on
+        physical partitioning; only live mode also sleeps."""
         scraper_factory = self.scraper_factory
-        live_factory = self.live_fetcher
+        wall_clock = self.live_fetcher is not None
+        fetcher_factory = self.live_fetcher or functools.partial(
+            StoreFetcher, {os.path.join(self.t_pages.dir, f): bn
+                           for f, bn in self.t_pages.bucket_map().items()})
+        pct = (percent_normalize_str
+               if self.canonicalize_outlinks == "full" else (lambda u: u))
         now = self.now
-        proto = self._proto
         out_schema = self._crawl_schema()
         arrow_out = to_arrow_schema(out_schema)
-        fcols = _field_columns(proto)
+        fcols = _field_columns(self._proto)
         retain_html = self._retain_html
         round_base = float(round_no) * 1e6
-        live_hosts = None
-        if live_factory is not None:
-            self._live_since = time.time()
-            live_hosts = self._bc(self._live_hosts)
+        self._live_since = time.time()
+        live_hosts = self._bc(self._live_hosts)
 
         def fetch_extract(batches):
             scrapers = {}
             robots_cache = {}  # host -> parsed rules, for this task
-            fetcher = live_factory() if live_factory is not None else None
+            fetcher = fetcher_factory()
+            # one read per Arrow batch for a fetcher that serves a batch
+            # at a time (StoreFetcher)
+            prefetch = getattr(fetcher, "prefetch", None)
             # robots.txt groups are matched against the User-Agent the
-            # live fetcher sends; mock mode reads the "*" group
+            # fetcher sends; the pages store reads the "*" group
             user_agent = getattr(fetcher, "user_agent", None) or "*"
-            known = live_hosts.value if live_hosts is not None else {}
+            known = live_hosts.value
             last_at = {}  # host -> wall time of this task's last request
             robots_out = {}  # host -> cacheable robots body fetched here
 
@@ -1360,17 +1377,16 @@ class CrawlEngine:
                 # (host-hash partitioning), so a local sleep enforces the
                 # crawl-delay budget; the first request to a host waits
                 # from its last request of an earlier round
-                prev = last_at.get(
-                    host, known.get(host, (None, 0.0, float("-inf")))[2])
-                wait = prev + delay - time.time()
-                if wait > 0:
-                    time.sleep(wait)
+                if wall_clock:
+                    prev = last_at.get(
+                        host, known.get(host, (None, 0.0, float("-inf")))[2])
+                    wait = prev + delay - time.time()
+                    if wait > 0:
+                        time.sleep(wait)
                 last_at[host] = time.time()
                 return fetcher.fetch(u)
 
-            def resolve_robots(host, url, rb):
-                if fetcher is None or rb is not None:
-                    return parse_robots(rb or b"", user_agent)
+            def resolve_robots(host, url):
                 body, expiry, _ = known.get(host, (None, 0.0, None))
                 if body is not None and expiry > time.time():
                     return parse_robots(body, user_agent)
@@ -1378,13 +1394,9 @@ class CrawlEngine:
                 # crawl-delay
                 delay = (parse_robots(body, user_agent).crawl_delay or 0.0
                          if body is not None else 0.0)
-                # robots URL keeps the original NETLOC (the host key
-                # strips ports; the request must not)
-                sp = urlsplit(url)
-                scheme = sp.scheme or "https"
                 try:
-                    body = polite_get(host, f"{scheme}://{sp.netloc}"
-                                      "/robots.txt", delay).encode()
+                    body = polite_get(host, _robots_url(url),
+                                      delay).encode()
                     robots_out[host] = body
                 except FetchError as e:
                     # RFC 9309: 4xx (unavailable) ⇒ allow-all
@@ -1401,13 +1413,16 @@ class CrawlEngine:
 
             for batch in batches:
                 d = batch.to_pydict()
+                if prefetch is not None:
+                    prefetch(d["url"] + [_robots_url(u) for u in d["url"]],
+                             d["host"])
                 # pass 1: robots for every host of the batch before any
                 # page GET, so pass 2 (rows round-robin across hosts by
                 # the (_host_seq, host) sort) never waits on a robots GET
                 # and one host's crawl-delay overlaps the others' GETs
-                for host, url, rb in zip(d["host"], d["url"], d["_robots"]):
+                for host, url in zip(d["host"], d["url"]):
                     if host not in robots_cache:
-                        robots_cache[host] = resolve_robots(host, url, rb)
+                        robots_cache[host] = resolve_robots(host, url)
                 rows = []
                 for r in range(batch.num_rows):
                     url = d["url"][r]
@@ -1421,20 +1436,14 @@ class CrawlEngine:
                     path = urlsplit(url).path or "/"
                     if not rules.allowed(path):
                         rows.append(_fetch_row(url, host, fetch_ts,
-                                               "robots", 0, 0, fcols))
+                                               "robots", 0, 0))
                         continue
-                    html = d["_html"][r]
-                    if html is None and fetcher is not None:
-                        try:
-                            html = polite_get(host, url, delay)
-                        except Exception:
-                            html = None
-                    if html is None:
+                    try:
+                        html = polite_get(host, url, delay)
+                    except Exception:
                         rows.append(_fetch_row(url, host, fetch_ts,
-                                               "missing", 0, 0, fcols))
+                                               "missing", 0, 0))
                         continue
-                    if isinstance(html, bytes):
-                        html = html.decode("utf-8", errors="replace")
                     if host not in scrapers:
                         sc = scraper_factory(host)
                         scrapers[host] = (sc, initialize_filters(sc, now=now))
@@ -1456,27 +1465,27 @@ class CrawlEngine:
                                 v = item.get(f.name)
                                 if v:
                                     rows.append(_outlink_row(
-                                        url, host, v, depth, 1, fcols))
+                                        url, host, pct(v), depth, 1))
                     # pagination outlink: page page_no+1, capped by
                     # paginator.max_pages (0 = unbounded; reference
                     # scraper.go:574,600)
                     mp = scraper.paginator.max_pages
                     if pr.next_page_url and (mp == 0 or page_no < mp):
-                        rows.append(_outlink_row(url, host, pr.next_page_url,
-                                                 depth, page_no + 1, fcols))
+                        rows.append(_outlink_row(
+                            url, host, pct(pr.next_page_url), depth,
+                            page_no + 1))
                     rows.append(_fetch_row(url, host, fetch_ts, "ok",
-                                           n_items, pr.nr_errors, fcols,
-                                           html=html if retain_html
-                                           else None))
+                                           n_items, pr.nr_errors,
+                                           html if retain_html else None))
                 if rows:
-                    yield _crawl_batch(rows, arrow_out)
+                    yield pa.RecordBatch.from_pylist(rows, schema=arrow_out)
             # one row per host this task contacted, folded into the
-            # engine's live host state by the round commit
+            # engine's host state by the round commit
             hosts = [{"_kind": "host", "_host": h, "_last_at": at,
                       "_robots_out": robots_out.get(h)}
                      for h, at in last_at.items()]
             if hosts:
-                yield _crawl_batch(hosts, arrow_out)
+                yield pa.RecordBatch.from_pylist(hosts, schema=arrow_out)
 
         # partition count adapts to the round size (a 700-url round must
         # not pay 64 task launches). Live politeness needs host-locality,
@@ -1488,15 +1497,16 @@ class CrawlEngine:
         n_fetch_parts = max(1, min(self.fetch_partitions,
                                    (n_dequeued + 15) // 16))
         keys = [F.col("host")]
-        if live_factory is None:
+        if not wall_clock:
             keys.append(F.floor((F.col("_host_seq") - 1) / SALT_ROWS))
         # each outlink's identity, computed in the kernel's own job by
-        # the same JVM expressions as the seeds': url (canonicalized
-        # when asked), xxhash64 and host (read on outlink rows only)
+        # the same JVM expressions as the seeds': url (its syntax
+        # passes when asked), xxhash64 and host (read on outlink rows
+        # only)
         out_url = F.col("_outlink")
         if self.canonicalize_outlinks:
-            out_url = self._canon_expr(out_url)
-        return (work.repartition(n_fetch_parts, *keys)
+            out_url = url_normalize_expr(out_url)
+        return (dequeued.repartition(n_fetch_parts, *keys)
                 .sortWithinPartitions("_host_seq", "host")
                 .mapInArrow(fetch_extract, out_schema)
                 .withColumn("_out_url", out_url)
@@ -1505,7 +1515,7 @@ class CrawlEngine:
 
     def _fold_live_hosts(self, rows):
         """Fold the kernel's (host, robots body, last request time) rows
-        into the live host state: a fetched body is cached for
+        into the host state: a fetched body is cached for
         _ROBOTS_TTL_SECS from the broadcast's time (before its GET); a
         NULL body keeps the host's earlier one."""
         expiry = self._live_since + _ROBOTS_TTL_SECS
@@ -1551,11 +1561,9 @@ class CrawlEngine:
             kernel = kernel.drop("_html_out")
         coll = (kernel.withColumn("_url_hash", F.xxhash64("_page_url"))
                 .toArrow())
-        if self.live_fetcher is not None:
-            h = coll.filter(pc.equal(coll["_kind"], "host"))
-            self._fold_live_hosts(zip(
-                *(h[c].to_pylist() for c in
-                  ("_host", "_robots_out", "_last_at"))))
+        h = coll.filter(pc.equal(coll["_kind"], "host"))
+        self._fold_live_hosts(zip(*(h[c].to_pylist() for c in
+                                    ("_host", "_robots_out", "_last_at"))))
         self._commit_items_driver(coll, round_no)
         self._mark("fetch_extract+items")
         fetched = self._fetched_from_arrow(coll, round_no)
@@ -1633,10 +1641,9 @@ class CrawlEngine:
         self._mark("fetch_extract+items")
         if self._retain_html:
             self._append_html(result, round_no, n_dequeued)
-        if self.live_fetcher is not None:
-            self._fold_live_hosts(
-                tuple(r) for r in result.filter("_kind = 'host'")
-                .select("_host", "_robots_out", "_last_at").collect())
+        self._fold_live_hosts(
+            tuple(r) for r in result.filter("_kind = 'host'")
+            .select("_host", "_robots_out", "_last_at").collect())
 
         fetch_base = (result.filter("_kind = 'fetch'")
                       .select(F.col("_page_url").alias("url"),
@@ -1796,6 +1803,8 @@ class CrawlEngine:
         if last < 0 and not self.t_frontier.exists():
             self.bootstrap()
             last = -1
+        else:  # resumed: lays out the pages if the workdir has none
+            self._layout_pages()
         summaries = []
         r = last + 1
         while r < max_rounds:
@@ -1938,9 +1947,8 @@ class CrawlEngine:
         ]
         if self._retain_html:
             fields.append(StructField("_html_out", StringType()))
-        if self.live_fetcher is not None:  # _kind='host' rows only
-            fields += [StructField("_robots_out", BinaryType()),
-                       StructField("_last_at", DoubleType())]
+        fields += [StructField("_robots_out", BinaryType()),  # _kind='host'
+                   StructField("_last_at", DoubleType())]
         for f in item_spark_schema(self._proto).fields:
             if f.name not in ("page_url", "item_idx", "nr_errors"):
                 fields.append(f)
@@ -1949,32 +1957,24 @@ class CrawlEngine:
 
 
 
-def _blank_fields(fcols):
-    return {name: None for name, _ in fcols}
+# kernel output rows: dicts keyed by _crawl_schema() names;
+# RecordBatch.from_pylist makes every column a row leaves out NULL (and
+# drops _html_out when the engine does not retain html)
 
-
-def _fetch_row(url, host, ts, status, n_items, n_errors, fcols, html=None):
-    # _html_out only exists in the output schema when the engine retains
-    # html (debug / live on_subpage); _crawl_batch drops unknown keys
+def _fetch_row(url, host, ts, status, n_items, n_errors, html=None):
     return {"_kind": "fetch", "_page_url": url, "_host": host,
             "_fetch_ts": ts, "_status": status, "_n_items": n_items,
-            "_n_errors": n_errors, "_item_idx": None, "_outlink": None,
-            "_depth": None, "_page_no": None, "_html_out": html,
-            **_blank_fields(fcols)}
+            "_n_errors": n_errors, "_html_out": html}
 
 
-def _outlink_row(url, host, outlink, depth, page_no, fcols):
+def _outlink_row(url, host, outlink, depth, page_no):
     return {"_kind": "outlink", "_page_url": url, "_host": host,
-            "_fetch_ts": None, "_status": None, "_n_items": None,
-            "_n_errors": None, "_item_idx": None, "_outlink": outlink,
-            "_depth": depth, "_page_no": page_no, **_blank_fields(fcols)}
+            "_outlink": outlink, "_depth": depth, "_page_no": page_no}
 
 
 def _item_row(url, host, idx, item, fcols):
     row = {"_kind": "item", "_page_url": url, "_host": host,
-           "_fetch_ts": None, "_status": None, "_n_items": None,
-           "_n_errors": None, "_item_idx": idx, "_outlink": None,
-           "_depth": None, "_page_no": None}
+           "_item_idx": idx}
     for name, kind in fcols:
         v = item.get(name)
         if kind == "ts" and v is not None:
@@ -1982,13 +1982,3 @@ def _item_row(url, host, idx, item, fcols):
                  else v.replace(tzinfo=timezone.utc))
         row[name] = v
     return row
-
-
-def _crawl_batch(rows, arrow_schema):
-    cols = {f.name: [] for f in arrow_schema}
-    for r in rows:
-        for k in cols:
-            cols[k].append(r.get(k))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(cols[f.name], type=f.type) for f in arrow_schema],
-        schema=arrow_schema)

@@ -1,32 +1,40 @@
 """Fetcher strategies — parity with /root/reference/internal/fetch/.
 
-The crawl engine's contract is "urls in → (url, html) out"; in the
-distributed plan that is a join against a pages table (mock mode, the
-test/bench path). These classes provide the same strategy surface as the
-reference factory (fetcher.go:17-78) for live use:
+The crawl engine's contract is "url in → html text out, or FetchError":
+the fetch/extract kernel creates one fetcher per fetch task and calls
+``fetch`` for every page and robots.txt it needs. These classes provide
+the same strategy surface as the reference factory (fetcher.go:17-78):
 
 - StaticFetcher: HTTP GET with the default goskyr User-Agent and
   ``Accept: */*``; non-200 → error (staticfetcher.go:24-54).
 - DynamicFetcher: headless-browser fetcher — NOT implementable in this
   container (no Chrome); the class preserves the interface and raises.
 - MockFetcher: url→content map from config mock_pages
-  (mockfetcher.go:15-35).
+  (mockfetcher.go:15-35); a url it does not hold is a 404.
 
-In live mode the crawl engine's fetch kernel creates one fetcher per
-fetch task and enforces the per-host crawl-delay with real sleeps — the
-virtual-clock politeness used by the mock path becomes wall-clock there.
+StoreFetcher is the mock web of an offline crawl: the engine lays its
+pages table out once per workdir in crc32(host) buckets, and the
+fetcher reads a whole Arrow batch's pages and robots.txt files with one
+pyarrow read of the batch's buckets (``prefetch``) before the kernel
+asks for them one by one; a url the store lacks is a 404.
+
 The engine, not the fetcher, keeps each host's robots.txt body and last
-request time across tasks and rounds (``CrawlEngine._live_hosts``).
+request time across tasks and rounds (``CrawlEngine._live_hosts``), and
+the kernel paces the HTTP fetchers with real crawl-delay sleeps; the
+store is served on the virtual clock and never sleeps.
 StaticFetcher decodes bodies (pages and robots.txt) with the
 Content-Type charset when there is one, else as UTF-8 with replacement,
-the way mock pages are decoded.
+the way stored pages are decoded.
 """
 
 from __future__ import annotations
 
 import logging
+import zlib
 from dataclasses import dataclass, field as dc_field
 from email.message import Message
+
+import pyarrow.parquet as pq
 
 logger = logging.getLogger("goskyr_spark.fetchers")
 
@@ -225,10 +233,44 @@ class MockFetcher:
 
     def fetch(self, url: str, opts: FetchOpts = None) -> str:
         if url not in self.pages:
-            raise FetchError(f"page {url} not found in mock pages")
+            raise FetchError(f"page {url} not found in mock pages",
+                             status=404)
         if self.debug_dir:  # -d parity: dump fetched HTML like static
             write_html_debug(url, self.pages[url], self.debug_dir)
         return self.pages[url]
+
+
+def store_files(buckets, hosts):
+    """The read rule of a host-bucketed store, buckets = {file: (b, n)}
+    (a file written as crc32(host) mod n bucket b): the files that can
+    hold rows of `hosts`, i.e. (b, n) with crc32(h) mod n = b for one
+    of them, sorted."""
+    crcs = {zlib.crc32(h.encode()) for h in set(hosts)}
+    mods = {n for _, n in buckets.values()}
+    keep = {(c % n, n) for c in crcs for n in mods}
+    return sorted(f for f, bn in buckets.items() if bn in keep)
+
+
+class StoreFetcher(MockFetcher):
+    """MockFetcher over the crawl engine's pages table, {file: (b, n)}
+    of its (url, host, html) files: ``prefetch`` makes one pyarrow read
+    per Arrow batch, of the files of the batch's hosts' buckets filtered
+    to the urls asked for, and ``fetch`` serves what it read — a url the
+    store lacks is a 404 (a missing page, or a host without robots.txt:
+    allow-all)."""
+
+    def __init__(self, buckets):
+        super().__init__([])
+        self.buckets = buckets
+
+    def prefetch(self, urls, hosts):
+        files = store_files(self.buckets, hosts)
+        rows = pq.read_table(
+            files, columns=["url", "html"], partitioning=None,
+            filters=[("url", "in", sorted(set(urls)))]).to_pylist() \
+            if files else []
+        self.pages = {r["url"]: r["html"].decode("utf-8", errors="replace")
+                      for r in rows}
 
 
 def new_fetcher(fetcher_config):

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from goskyr_spark.spark.crawl import (CrawlEngine, FETCHED_SCHEMA,
-                                      FRONTIER_SCHEMA)
+                                      FRONTIER_SCHEMA, _bucket_mod)
 from goskyr_spark.spark.session import get_spark
 from goskyr_spark.synth import event_scraper
 
@@ -74,7 +74,7 @@ def rule_layout(eng):
                       (eng.t_fetched, FETCHED_SCHEMA)):
         eng._hostpart_write(t, t.read(spark, schema=schema), {"round": 0},
                             mode="overwrite")
-    return eng._bucket_mod()
+    return _bucket_mod(eng._sizes["dequeue_bytes"])
 
 
 def history_phase():

@@ -157,30 +157,68 @@ def test_bucketed_dequeue_no_pending_shuffle(spark, tmp_path):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_fetch_extract_phase_has_no_window(spark, tmp_path):
-    """The fetch/extract phase of a driver-dequeued mock round takes its
-    politeness clock (_host_seq) from the dequeue as it stands: no
-    Window over host re-ranks the dequeued rows."""
+def _kernel_plan(spark, pages, workdir, **kw):
+    """The formatted physical plan of the fetch/extract phase of round 0
+    of a mock crawl over `pages` seeded with the first list page of its
+    3 synth hosts, dequeued on the driver."""
     from datetime import datetime, timezone
 
     from goskyr_spark.spark.crawl import CrawlEngine, round_plan
-    from goskyr_spark.synth import (SynthSpec, event_scraper, host_name,
-                                    synth_pages_df)
+    from goskyr_spark.synth import event_scraper, host_name
 
-    spec = SynthSpec(n_hosts=3, pages_per_host=2, items_per_page=2,
-                     hot_hosts=0, hot_factor=1)
-    pages = synth_pages_df(spark, spec, include_fixtures=False)
-    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
+    eng = CrawlEngine(spark, workdir, pages, event_scraper,
                       [f"https://{host_name(h)}/list/1" for h in range(3)],
-                      now=datetime(2026, 3, 1, tzinfo=timezone.utc))
+                      now=datetime(2026, 3, 1, tzinfo=timezone.utc), **kw)
     eng.bootstrap()
     eng._sizes = eng._measure_sizes()
     plan = round_plan(**eng._sizes)
     assert plan.dequeue_driver
     dequeued, n = eng._dequeue_phase(plan)
     assert n == 3
-    plan_text = _plan(eng._fetch_extract_phase(dequeued, n, 0))
+    return _plan(eng._fetch_extract_phase(dequeued, n, 0))
+
+
+def _synth_pages(spark, tmp_path):
+    """A 3-host synth pages table read from parquet, and its path."""
+    from goskyr_spark.synth import SynthSpec, synth_pages_df
+
+    path = str(tmp_path / "pages")
+    synth_pages_df(spark, SynthSpec(n_hosts=3, pages_per_host=2,
+                                    items_per_page=2, hot_hosts=0,
+                                    hot_factor=1),
+                   include_fixtures=False).write.parquet(path)
+    return spark.read.parquet(path), path
+
+
+def test_fetch_extract_phase_has_no_window(spark, tmp_path):
+    """The fetch/extract phase of a driver-dequeued mock round takes its
+    politeness clock (_host_seq) from the dequeue as it stands: no
+    Window over host re-ranks the dequeued rows."""
+    pages, _ = _synth_pages(spark, tmp_path)
+    plan_text = _kernel_plan(spark, pages, str(tmp_path / "wd"))
     assert "Window" not in plan_text, plan_text
+    assert "MapInArrow" in plan_text, plan_text
+
+
+def test_mock_kernel_reads_no_pages(spark, tmp_path):
+    """A mock round's kernel holds no join and no scan of pages_df: its
+    input is the dequeued rows alone, and each fetch task reads its
+    hosts' buckets of the workdir's pages table itself."""
+    pages, path = _synth_pages(spark, tmp_path)
+    plan_text = _kernel_plan(spark, pages, str(tmp_path / "wd"))
+    assert "Join" not in plan_text, plan_text
+    assert "Scan parquet" not in plan_text, plan_text
+    assert os.path.basename(path) not in plan_text, plan_text
+
+
+def test_full_canonicalize_kernel_runs_no_python_udf(spark, tmp_path):
+    """canonicalize_outlinks="full": the percent pass runs inside the
+    kernel on outlinks only, so the kernel's plan evaluates no Python
+    UDF over its output rows (only the syntax passes' expression)."""
+    pages, _ = _synth_pages(spark, tmp_path)
+    plan_text = _kernel_plan(spark, pages, str(tmp_path / "wd"),
+                             canonicalize_outlinks="full")
+    assert "EvalPython" not in plan_text, plan_text
     assert "MapInArrow" in plan_text, plan_text
 
 

@@ -11,9 +11,10 @@ a deterministic micro-batch over snapshot tables —
              repartitioned BY HOST so per-host politeness (crawl-delay
              budgets from robots.txt) is enforceable inside one
              partition: a live crawl GETs each page, a mock crawl reads
-             it from the workdir's host-bucketed pages store (one
-             pyarrow read per Arrow batch of the batch's host buckets);
-             robots.txt comes the same way, once per host
+             it from the workdir's host-bucketed pages store (per Arrow
+             batch, the row groups of the batch's host buckets that can
+             hold its urls); robots.txt comes the same way, once per
+             host
   extract  = one Arrow kernel pass per fetched page: items + outlinks
              (pagination links depth+1 and item url fields), outlinks
              canonicalized by goskyr's URL-join during extraction (P7)
@@ -36,10 +37,16 @@ Spark job over the host buckets. The kernel job also computes each
 outlink's identity: one projection after the kernel adds its url
 (canonicalized when asked), xxhash64 and host, all JVM expressions.
 Rounds of at most DRIVER_ROWS URLs commit items, fetched, host_stats
-and new URLs from one collected Arrow table: the driver groups the
-outlinks in pyarrow, so the new-url commit launches no Spark job;
-larger rounds commit through Spark writes with a range-partitioned
-fetch_seq and group the outlinks with one Spark groupBy.
+and new URLs from one Arrow table of the kernel's output: the driver
+groups the outlinks in pyarrow, so the new-url commit launches no Spark
+job; larger rounds commit through Spark writes with a range-partitioned
+fetch_seq and group the outlinks with one Spark groupBy. A mock round
+that dequeues on the driver and has at most KERNEL_DRIVER_ROWS URLs
+runs the kernel in the driver process, the function mapInArrow runs in
+a task called on the driver's dequeued rows, and evaluates the same
+identity projection over a LocalRelation of its outlinks, which Spark
+folds on the driver: the round launches no Spark job. A live round
+keeps the kernel in tasks, where GETs to different hosts overlap.
 The seen-set test broadcasts all slab filters until their estimated size
 passes SEEN_BROADCAST_BYTES, then runs partition-aligned; join sides
 under BROADCAST_JOIN_BYTES get a broadcast hint. Both sides of every
@@ -59,7 +66,9 @@ moduli its files were written under (a linear-hashing split read), so
 a flat legacy workdir, a crash inside compact() or a modulus that grew
 between rounds all dequeue the same rows. A mock crawl's pages are laid
 out once per workdir the same way (the `pages` table: url, host, html,
-one row per url, each file sorted by url), M following the pages' bytes.
+one row per url, each file sorted by url in row groups of about
+PAGES_ROW_GROUP_BYTES), M following the pages' bytes; a fetch reads only
+the row groups whose url min/max statistics hold a url it needs.
 
 Slabs: the driver reads slab metadata (each slab's latest file, round,
 count and capacity) with pyarrow from the stat columns of the live slab
@@ -82,8 +91,9 @@ order, so only the order of item rows inside a round's file follows it.
 Host state: the engine, not the Python workers, holds each host's
 robots.txt body, its expiry and the time of the last request
 (CrawlEngine._live_hosts), in mock and live mode alike. Each round
-broadcasts it to the kernel; a task first resolves robots for every
-host of an Arrow batch (from the broadcast, or from
+hands it to the kernel (a broadcast to Spark tasks, the dict itself in
+the driver process); the kernel first resolves robots for every
+host of an Arrow batch (from that state, or from
 {scheme}://{netloc}/robots.txt of the host's page when the host has no
 unexpired body), then fetches round-robin. The task reports one
 _kind='host' row per host it contacted (robots body it fetched, last
@@ -159,6 +169,9 @@ SALT_ROWS = 512
 # host-keyed writes use the smallest power-of-two modulus that keeps a
 # bucket under it, so one bucket's pending rows fit a task
 BUCKET_BYTES = 4 << 20
+# parquet row group bound of the pages table: a page read decodes the
+# html of the row groups holding its url, not of its whole bucket file
+PAGES_ROW_GROUP_BYTES = 256 << 10
 
 # --- the size policy: read by round_plan() only ------------------------------
 # dequeued (or new) URLs per round up to which the round commits on the
@@ -173,6 +186,10 @@ SEEN_BROADCAST_BYTES = 64 << 20
 # join sides up to this many on-disk bytes get an explicit broadcast hint
 # (Catalyst overestimates multi-file unioned parquet reads)
 BROADCAST_JOIN_BYTES = 32 << 20
+# dequeued URLs per mock round up to which the kernel runs in the driver
+# process (no Spark job): a tail round's few pages scrape in tens of ms,
+# less than one job launch
+KERNEL_DRIVER_ROWS = 128
 
 
 @dataclass(frozen=True)
@@ -182,6 +199,7 @@ class RoundPlan:
     only."""
     dequeue_driver: bool
     commit_driver: bool      # items/fetched/host_stats from one collect
+    kernel_driver: bool      # fetch/extract kernel in the driver process
     new_urls_driver: bool    # outlink flag + seen confirm + appends
     seen_copy_driver: bool   # seen rows copied from the new frontier files
     slabs_driver: bool       # Bloom+cuckoo slab update
@@ -190,18 +208,23 @@ class RoundPlan:
 
 
 def round_plan(dequeue_bytes=0, seen_bytes=0, slab_bytes=0, n_dequeued=0,
-               n_new=0):
+               n_new=0, live=False):
     """The one size policy. Bytes are on-disk parquet sizes of the
     dequeue input (live frontier + post-compaction fetched + adaptive
     host_stats) and of the seen table; slab_bytes is the slabs'
     estimated filter size. n_dequeued and n_new are this round's counts,
-    passed once known."""
+    passed once known. live: the round GETs its pages over the network
+    (its GETs overlap across the cluster's tasks, so its kernel never
+    runs on the driver) rather than reading the pages store."""
     partitioned = slab_bytes > SEEN_BROADCAST_BYTES
     small_round = n_dequeued <= DRIVER_ROWS
     small_new = n_new <= DRIVER_ROWS
+    dequeue_driver = dequeue_bytes <= DRIVER_STATE_BYTES
     return RoundPlan(
-        dequeue_driver=dequeue_bytes <= DRIVER_STATE_BYTES,
+        dequeue_driver=dequeue_driver,
         commit_driver=small_round,
+        kernel_driver=(dequeue_driver and small_round and not live
+                       and n_dequeued <= KERNEL_DRIVER_ROWS),
         new_urls_driver=(small_round and not partitioned
                          and seen_bytes <= DRIVER_STATE_BYTES),
         seen_copy_driver=small_new,
@@ -256,6 +279,13 @@ SEEN_SCHEMA = StructType([
     StructField("round", LongType()),
 ])
 
+# the workdir's pages store (_layout_pages): one row per url
+PAGES_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("host", StringType()),
+    StructField("html", BinaryType()),
+])
+
 DEBUG_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("host", StringType()),
@@ -304,6 +334,8 @@ DEQUEUED_SCHEMA = StructType(FRONTIER_SCHEMA.fields +
 FRONTIER_COLS = FRONTIER_SCHEMA.names
 DEQUEUED_COLS = DEQUEUED_SCHEMA.names
 _FRONTIER_ARROW = to_arrow_schema(FRONTIER_SCHEMA)
+_DEQUEUED_ARROW = to_arrow_schema(DEQUEUED_SCHEMA)
+_DEBUG_ARROW = to_arrow_schema(DEBUG_SCHEMA)
 _FETCHED_ARROW = to_arrow_schema(FETCHED_SCHEMA)
 _HOST_STATS_ARROW = to_arrow_schema(HOST_STATS_SCHEMA)
 _SEEN_ARROW = to_arrow_schema(SEEN_SCHEMA)
@@ -545,11 +577,12 @@ def _read_share(files, schema, t, n_tasks):
 
 
 def _host_col(col="url"):
-    """The one host identity of a url column: its lowercased HOST as
+    """The one host identity of a url column (a name or a Column): its
+    lowercased HOST as
     Spark parses it (IPv6 keeps its brackets; NULL when there is none).
     Seeds, outlinks and the mock robots.txt join all key on it, so one
     site never splits into two politeness/robots identities."""
-    return F.lower(F.expr(f"try_parse_url({col}, 'HOST')"))
+    return F.lower(F.try_parse_url(col, F.lit("HOST")))
 
 
 def _frontier_rows(outlinks, round_no):
@@ -781,7 +814,7 @@ class CrawlEngine:
     # ---------------------------------------------- host-bucketed layout
 
     def _hostpart_write(self, table, df, meta, mode="append",
-                        coalesce=None, mod=None, within=None):
+                        coalesce=None, mod=None, within=None, options=None):
         """Spark append/overwrite (or "append_counted") of a host-keyed
         table under M = mod, by default _bucket_mod of the dequeue input
         as _measure_sizes() took it at round start (or at compact()),
@@ -792,7 +825,7 @@ class CrawlEngine:
         exchange by size, so a 65-row tail round shuffles into one task
         while a fat round still spreads. within(df, keys), when given,
         maps the partitioned rows before the write; keys is [] at M = 1,
-        else ["_bucket"]."""
+        else ["_bucket"]. options go to the parquet writer."""
         mod = mod or _bucket_mod(self._sizes.get("dequeue_bytes", 0))
         keys = [] if mod == 1 else ["_bucket"]
         if keys:
@@ -802,7 +835,8 @@ class CrawlEngine:
         elif coalesce:
             df = df.coalesce(coalesce)
         return getattr(table, mode)(within(df, keys) if within else df, meta,
-                                    partition_by=keys[0] if keys else None)
+                                    partition_by=keys[0] if keys else None,
+                                    options=options)
 
     def _layout_pages(self):
         """Lay pages_df out once per workdir as the `pages` table the
@@ -812,8 +846,11 @@ class CrawlEngine:
         of the pages' bytes, each file sorted by url and holding one row
         per url: the latest warc_ts when pages_df has one, then the
         largest html (a url's captures share a host, so the pick needs
-        no shuffle past the bucket one). A workdir that has the table (a
-        resumed crawl) reuses it."""
+        no shuffle past the bucket one). Row groups are bounded by
+        PAGES_ROW_GROUP_BYTES, so their url min/max statistics let a
+        StoreFetcher read only the row groups holding the urls it is
+        asked for. A workdir that has the table (a resumed crawl) reuses
+        it."""
         if self.pages is None or self.t_pages.exists():
             return
         nbytes = self.pages.select(F.sum(F.octet_length("url")
@@ -828,9 +865,10 @@ class CrawlEngine:
 
         pages = self.pages.withColumns({
             "host": _host_col(), "html": F.col("html").cast("binary")})
-        self._hostpart_write(self.t_pages,
-                             pages.filter(F.col("host").isNotNull()), {},
-                             mod=_bucket_mod(nbytes or 0), within=latest)
+        self._hostpart_write(
+            self.t_pages, pages.filter(F.col("host").isNotNull()), {},
+            mod=_bucket_mod(nbytes or 0), within=latest,
+            options={"parquet.block.size": PAGES_ROW_GROUP_BYTES})
         self._mark("pages_layout")
 
     def _append_host_keyed(self, table, tbl, round_no):
@@ -1301,7 +1339,8 @@ class CrawlEngine:
     def _plan(self, **counts):
         """This round's plan from its start-of-round sizes and the
         counts known so far (n_dequeued, n_new)."""
-        return round_plan(**self._sizes, **counts)
+        return round_plan(live=self.live_fetcher is not None, **self._sizes,
+                          **counts)
 
     def run_round(self, round_no: int):
         t0 = time.time()
@@ -1316,32 +1355,46 @@ class CrawlEngine:
                 ROUNDS_SCHEMA, {"round": round_no})
             return {"round": round_no, "n_dequeued": 0}
         plan = self._plan(n_dequeued=n_dequeued)
-        kernel = self._fetch_extract_phase(dequeued, n_dequeued, round_no)
-        commit = (self._commit_round_driver if plan.commit_driver
-                  else self._commit_round_cluster)
-        stats, outlinks, started, ended = commit(kernel, round_no,
-                                                 n_dequeued)
+        if plan.commit_driver:
+            started = datetime.now(timezone.utc)
+            coll = (self._kernel_driver(dequeued, round_no)
+                    if plan.kernel_driver else self._collect_kernel(
+                        self._fetch_extract_phase(dequeued, n_dequeued,
+                                                  round_no),
+                        round_no, n_dequeued))
+            stats, outlinks, ended = self._commit_round_driver(coll,
+                                                               round_no)
+        else:
+            stats, outlinks, started, ended = self._commit_round_cluster(
+                self._fetch_extract_phase(dequeued, n_dequeued, round_no),
+                round_no, n_dequeued)
         n_new = self._new_urls_phase(plan, outlinks, round_no)
         return self._tail_phase(round_no, t0, n_dequeued, stats, n_new,
                                 started, ended)
 
     def _dequeue_phase(self, plan):
-        """(dequeued DataFrame of DEQUEUED_SCHEMA rows, row count)."""
+        """(dequeued rows, row count): an Arrow table of _DEQUEUED_ARROW
+        rows from the driver dequeue, else a cached DataFrame of
+        DEQUEUED_SCHEMA rows from the cluster one."""
         if plan.dequeue_driver:
-            pdf = self._dequeue_driver()
-            df = (self.spark.createDataFrame(pdf, DEQUEUED_SCHEMA)
-                  if len(pdf) else None)
-            return df, len(pdf)
+            t = pa.Table.from_pandas(self._dequeue_driver(),
+                                     schema=_DEQUEUED_ARROW,
+                                     preserve_index=False)
+            return t, t.num_rows
         df = self._cache(self._dequeue_cluster())
         return df, df.count()
 
-    def _fetch_extract_phase(self, dequeued, n_dequeued, round_no):
-        """The fetch/extract kernel over the dequeued rows, as a lazy
-        DataFrame of _crawl_schema() rows (_kind fetch/item/outlink/host).
-        Each task fetches through its own fetcher: the live factory's, or
-        a StoreFetcher over the pages table. The politeness clock is the
-        dequeue's per-host rank _host_seq, so it does not depend on
-        physical partitioning; only live mode also sleeps."""
+    def _kernel_fn(self, round_no, host_state):
+        """The fetch/extract kernel of one round: a function from Arrow
+        batches of dequeued rows, sorted by (_host_seq, host), to Arrow
+        batches of _crawl_schema() rows (_kind fetch/item/outlink/host).
+        The cluster hands it to mapInArrow and the driver calls it on
+        its own dequeued rows. host_state() returns the engine's host
+        state (a broadcast's value inside a task). Each call fetches
+        through its own fetcher: the live factory's, or a StoreFetcher
+        over the pages table. The politeness clock is the dequeue's
+        per-host rank _host_seq, so it does not depend on physical
+        partitioning; only live mode also sleeps."""
         scraper_factory = self.scraper_factory
         wall_clock = self.live_fetcher is not None
         fetcher_factory = self.live_fetcher or functools.partial(
@@ -1350,13 +1403,11 @@ class CrawlEngine:
         pct = (percent_normalize_str
                if self.canonicalize_outlinks == "full" else (lambda u: u))
         now = self.now
-        out_schema = self._crawl_schema()
-        arrow_out = to_arrow_schema(out_schema)
+        arrow_out = to_arrow_schema(self._crawl_schema())
         fcols = _field_columns(self._proto)
         retain_html = self._retain_html
         round_base = float(round_no) * 1e6
         self._live_since = time.time()
-        live_hosts = self._bc(self._live_hosts)
 
         def fetch_extract(batches):
             scrapers = {}
@@ -1368,7 +1419,7 @@ class CrawlEngine:
             # robots.txt groups are matched against the User-Agent the
             # fetcher sends; the pages store reads the "*" group
             user_agent = getattr(fetcher, "user_agent", None) or "*"
-            known = live_hosts.value
+            known = host_state()
             last_at = {}  # host -> wall time of this task's last request
             robots_out = {}  # host -> cacheable robots body fetched here
 
@@ -1487,6 +1538,28 @@ class CrawlEngine:
             if hosts:
                 yield pa.RecordBatch.from_pylist(hosts, schema=arrow_out)
 
+        return fetch_extract
+
+    def _identity_cols(self):
+        """Each _outlink's identity as one projection, by the JVM
+        expressions the seeds get: _out_url (its syntax passes when
+        canonicalize_outlinks asks), _out_hash = its xxhash64 and
+        _out_host (read on outlink rows only)."""
+        url = F.col("_outlink")
+        if self.canonicalize_outlinks:
+            url = url_normalize_expr(url)
+        return [url.alias("_out_url"), F.xxhash64(url).alias("_out_hash"),
+                _host_col(url).alias("_out_host")]
+
+    def _fetch_extract_phase(self, dequeued, n_dequeued, round_no):
+        """The kernel as a Spark job over the dequeued rows (an Arrow
+        table the driver holds, or a DataFrame), a lazy DataFrame of
+        _crawl_schema() rows with each outlink's identity
+        (_identity_cols) computed in the same job."""
+        if isinstance(dequeued, pa.Table):
+            dequeued = self.spark.createDataFrame(dequeued, DEQUEUED_SCHEMA)
+        bc = self._bc(self._live_hosts)
+        fetch_extract = self._kernel_fn(round_no, lambda: bc.value)
         # partition count adapts to the round size (a 700-url round must
         # not pay 64 task launches). Live politeness needs host-locality,
         # which hash-partitioning on host gives at any width, so live
@@ -1497,21 +1570,51 @@ class CrawlEngine:
         n_fetch_parts = max(1, min(self.fetch_partitions,
                                    (n_dequeued + 15) // 16))
         keys = [F.col("host")]
-        if not wall_clock:
+        if self.live_fetcher is None:
             keys.append(F.floor((F.col("_host_seq") - 1) / SALT_ROWS))
-        # each outlink's identity, computed in the kernel's own job by
-        # the same JVM expressions as the seeds': url (its syntax
-        # passes when asked), xxhash64 and host (read on outlink rows
-        # only)
-        out_url = F.col("_outlink")
-        if self.canonicalize_outlinks:
-            out_url = url_normalize_expr(out_url)
         return (dequeued.repartition(n_fetch_parts, *keys)
                 .sortWithinPartitions("_host_seq", "host")
-                .mapInArrow(fetch_extract, out_schema)
-                .withColumn("_out_url", out_url)
-                .withColumns({"_out_hash": F.xxhash64("_out_url"),
-                              "_out_host": _host_col("_out_url")}))
+                .mapInArrow(fetch_extract, self._crawl_schema())
+                .select("*", *self._identity_cols()))
+
+    def _kernel_driver(self, dequeued, round_no):
+        """The kernel in the driver process, no Spark job: the driver's
+        dequeued Arrow rows, sorted as a fetch task sorts its rows, go
+        through _kernel_fn with the host state as it stands; then each
+        outlink's identity (_outlink_identity) and each row's _url_hash,
+        the dequeued row's url_hash (xxhash64 of its url). Returns the
+        table a driver commit collects from the Spark kernel."""
+        rows = dequeued.take(pc.sort_indices(dequeued, sort_keys=[
+            ("_host_seq", "ascending"), ("host", "ascending")]))
+        fetch_extract = self._kernel_fn(round_no, lambda: self._live_hosts)
+        out = pa.Table.from_batches(
+            list(fetch_extract(rows.to_batches())),
+            schema=to_arrow_schema(self._crawl_schema()))
+        self._mark("kernel_driver")
+        out = self._outlink_identity(out)
+        at = pc.index_in(out["_page_url"], value_set=dequeued["url"])
+        out = out.append_column("_url_hash",
+                                pc.take(dequeued["url_hash"], at))
+        self._mark("identity")
+        return out
+
+    def _outlink_identity(self, out):
+        """out plus the _identity_cols() columns, evaluated by Spark over
+        a LocalRelation of the distinct outlink strings: the optimizer
+        folds the projection on the driver (ConvertToLocalRelation), so
+        collect() launches no job (toArrow() would launch one)."""
+        links = pc.unique(pc.drop_null(out["_outlink"]))
+        rows = self.spark.createDataFrame(pa.table({"_outlink": links})) \
+            .select("_outlink", *self._identity_cols()).collect() \
+            if len(links) else []
+        at = pc.index_in(out["_outlink"], value_set=pa.array(
+            [r[0] for r in rows], pa.string()))
+        for i, (name, typ) in enumerate((("_out_url", pa.string()),
+                                         ("_out_hash", pa.int64()),
+                                         ("_out_host", pa.string())), 1):
+            out = out.append_column(name, pc.take(
+                pa.array([r[i] for r in rows], typ), at))
+        return out
 
     def _fold_live_hosts(self, rows):
         """Fold the kernel's (host, robots body, last request time) rows
@@ -1530,42 +1633,63 @@ class CrawlEngine:
             self._live_hosts = {h: state[h]
                                 for h in keep[-_LIVE_HOSTS_MAX // 2:]}
 
-    def _append_html(self, result, round_no, n_dequeued):
+    def _append_html(self, result, round_no, n_files=1):
         """html retention (debug sink / live on_subpage stage-2
         source): the ok pages' html from the kernel's output rows, the
-        one debug_pages writer for mock and live mode."""
+        one debug_pages writer for mock and live mode. `result` is a
+        DataFrame (a Spark write) or an Arrow table the driver holds (a
+        pyarrow write of the same rows)."""
+        if isinstance(result, pa.Table):
+            f = result.filter(pc.and_(pc.equal(result["_kind"], "fetch"),
+                                      pc.equal(result["_status"], "ok")))
+            self.t_debug.append_arrow(pa.table(
+                [f["_page_url"], f["_host"],
+                 pc.cast(f["_html_out"], pa.binary()),
+                 pa.array(np.full(f.num_rows, round_no, dtype=np.int64))],
+                schema=_DEBUG_ARROW), {"round": round_no})
+            return
         dbg = (result.filter("_kind = 'fetch'")
                .filter(F.col("_status") == "ok")
                .select(F.col("_page_url").alias("url"),
                        F.col("_host").alias("host"),
                        F.encode(F.col("_html_out"), "UTF-8").alias("html"),
                        F.lit(round_no).cast("long").alias("round")))
-        self.t_debug.append(dbg.coalesce(n_dequeued // 50_000 + 1),
-                            {"round": round_no})
+        self.t_debug.append(dbg.coalesce(n_files), {"round": round_no})
 
-    def _commit_round_driver(self, kernel, round_no, n_dequeued):
-        """Driver-side round commit: ONE job runs the fetch/extract kernel
-        and collects its html-free output as Arrow — the JVM xxhash64 of
-        every page and outlink (and each outlink's host) rides along as
-        a column, so no hash or host is ever computed off-JVM. Items,
-        fetched (+ fetch_seq), host stats, the round metrics and the
-        grouped new frontier rows (_frontier_rows) derive driver-side
-        from that table. When html is retained the kernel output is
-        cached first, its html appended to debug_pages, and the rest
-        collected from the cache. Returns (stats, frontier candidates
-        as an Arrow table, started, ended)."""
-        started = datetime.now(timezone.utc)
+    def _collect_kernel(self, kernel, round_no, n_dequeued):
+        """The Spark kernel's output collected as Arrow for the driver
+        commit, with each row's _url_hash (the JVM xxhash64 of its page
+        url): ONE job. When html is retained the output is cached first
+        and its html appended to debug_pages by a Spark write, so pages
+        never reach the driver; the rest is collected from the
+        cache."""
         if self._retain_html:
             kernel = self._cache(kernel)
-            self._append_html(kernel, round_no, n_dequeued)
+            self._append_html(kernel, round_no, n_dequeued // 50_000 + 1)
             kernel = kernel.drop("_html_out")
         coll = (kernel.withColumn("_url_hash", F.xxhash64("_page_url"))
                 .toArrow())
+        self._mark("fetch_extract")
+        return coll
+
+    def _commit_round_driver(self, coll, round_no):
+        """Driver-side round commit from the kernel's output rows as an
+        Arrow table — run in the driver process (_kernel_driver) or
+        collected from the Spark kernel (_collect_kernel); both carry
+        the JVM xxhash64 of every page and outlink (and each outlink's
+        host), so no hash or host is ever computed off-JVM. html still
+        in the table goes to debug_pages. Items, fetched (+ fetch_seq),
+        host stats, the round metrics and the grouped new frontier rows
+        (_frontier_rows) derive driver-side from that table. Returns
+        (stats, frontier candidates as an Arrow table, ended)."""
+        if "_html_out" in coll.column_names:
+            self._append_html(coll, round_no)
+            coll = coll.drop_columns(["_html_out"])
         h = coll.filter(pc.equal(coll["_kind"], "host"))
         self._fold_live_hosts(zip(*(h[c].to_pylist() for c in
                                     ("_host", "_robots_out", "_last_at"))))
         self._commit_items_driver(coll, round_no)
-        self._mark("fetch_extract+items")
+        self._mark("items")
         fetched = self._fetched_from_arrow(coll, round_no)
         self._append_host_keyed(self.t_fetched, fetched, round_no)
         ended = datetime.now(timezone.utc)
@@ -1585,7 +1709,7 @@ class CrawlEngine:
                   "n_items": pc.sum(fetched["n_items"]).as_py(),
                   "n_errors": pc.sum(fetched["n_errors"]).as_py()}]
         ot = coll.filter(pc.equal(coll["_kind"], "outlink"))
-        return stats, _frontier_rows(ot, round_no), started, ended
+        return stats, _frontier_rows(ot, round_no), ended
 
     def _commit_items_driver(self, coll, round_no):
         """Items append from the collected kernel output: one parquet
@@ -1640,7 +1764,7 @@ class CrawlEngine:
         self.t_items.append(items.coalesce(out_files), {"round": round_no})
         self._mark("fetch_extract+items")
         if self._retain_html:
-            self._append_html(result, round_no, n_dequeued)
+            self._append_html(result, round_no, out_files)
         self._fold_live_hosts(
             tuple(r) for r in result.filter("_kind = 'host'")
             .select("_host", "_robots_out", "_last_at").collect())
@@ -1913,8 +2037,11 @@ class CrawlEngine:
                                                       F.lit(0)), self._proto,
                                      now=self.now)
         raw = items.withColumn("nr_errors", F.lit(0).cast("long"))
-        pages = self.pages
-        if pages is None:
+        if self.pages is not None:
+            # the one capture per url the crawl fetched (_layout_pages)
+            pages = self.t_pages.read(self.spark, schema=PAGES_SCHEMA) \
+                .select("url", "html")
+        else:
             # live mode: the crawled detail-page html was retained in
             # debug_pages (_retain_html is forced on for on_subpage
             # configs); re-fetched pages keep the LATEST round's bytes

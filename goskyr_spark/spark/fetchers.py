@@ -13,10 +13,12 @@ the same strategy surface as the reference factory (fetcher.go:17-78):
   (mockfetcher.go:15-35); a url it does not hold is a 404.
 
 StoreFetcher is the mock web of an offline crawl: the engine lays its
-pages table out once per workdir in crc32(host) buckets, and the
-fetcher reads a whole Arrow batch's pages and robots.txt files with one
-pyarrow read of the batch's buckets (``prefetch``) before the kernel
-asks for them one by one; a url the store lacks is a 404.
+pages table out once per workdir in crc32(host) buckets, each file
+sorted by url in bounded row groups, and the fetcher reads a whole
+Arrow batch's pages and robots.txt files (``prefetch``) from the
+batch's buckets, only the row groups whose url statistics can hold one
+of them, before the kernel asks for them one by one; a url the store
+lacks is a 404.
 
 The engine, not the fetcher, keeps each host's robots.txt body and last
 request time across tasks and rounds (``CrawlEngine._live_hosts``), and
@@ -31,9 +33,12 @@ from __future__ import annotations
 
 import logging
 import zlib
+from bisect import bisect_left
 from dataclasses import dataclass, field as dc_field
 from email.message import Message
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 logger = logging.getLogger("goskyr_spark.fetchers")
@@ -251,26 +256,51 @@ def store_files(buckets, hosts):
     return sorted(f for f, bn in buckets.items() if bn in keep)
 
 
+def row_groups_holding(meta, col, want):
+    """Indices of the row groups of a parquet file (meta: its
+    FileMetaData) whose min/max statistics of leaf column `col` can
+    hold one of the sorted strings `want` (a bisect per row group); a
+    row group without statistics is always kept."""
+    keep = []
+    for i in range(meta.num_row_groups):
+        st = meta.row_group(i).column(col).statistics
+        if st is not None and st.has_min_max:
+            j = bisect_left(want, st.min)
+            if j == len(want) or want[j] > st.max:
+                continue
+        keep.append(i)
+    return keep
+
+
 class StoreFetcher(MockFetcher):
     """MockFetcher over the crawl engine's pages table, {file: (b, n)}
-    of its (url, host, html) files: ``prefetch`` makes one pyarrow read
-    per Arrow batch, of the files of the batch's hosts' buckets filtered
-    to the urls asked for, and ``fetch`` serves what it read — a url the
-    store lacks is a 404 (a missing page, or a host without robots.txt:
-    allow-all)."""
+    of its (url, host, html) files, each sorted by url: ``prefetch``
+    reads, per Arrow batch, the files of the batch's hosts' buckets —
+    of each only the row groups whose url statistics hold a url asked
+    for — filtered to those urls, and ``fetch`` serves what it read. A
+    url the store lacks is a 404 (a missing page, or a host without
+    robots.txt: allow-all)."""
 
     def __init__(self, buckets):
         super().__init__([])
         self.buckets = buckets
 
     def prefetch(self, urls, hosts):
-        files = store_files(self.buckets, hosts)
-        rows = pq.read_table(
-            files, columns=["url", "html"], partitioning=None,
-            filters=[("url", "in", sorted(set(urls)))]).to_pylist() \
-            if files else []
-        self.pages = {r["url"]: r["html"].decode("utf-8", errors="replace")
-                      for r in rows}
+        want = sorted(set(urls))
+        value_set = pa.array(want, pa.string())
+        self.pages = {}
+        for path in store_files(self.buckets, hosts):
+            with pq.ParquetFile(path) as pf:
+                groups = row_groups_holding(
+                    pf.metadata, pf.schema_arrow.get_field_index("url"),
+                    want)
+                if not groups:
+                    continue
+                t = pf.read_row_groups(groups, columns=["url", "html"])
+            t = t.filter(pc.is_in(t["url"], value_set=value_set))
+            self.pages.update(
+                (u, h.decode("utf-8", errors="replace"))
+                for u, h in zip(t["url"].to_pylist(), t["html"].to_pylist()))
 
 
 def new_fetcher(fetcher_config):

@@ -85,8 +85,9 @@ class SnapshotTable:
 
     # --- data -------------------------------------------------------------------
 
-    def _write_files(self, df, snap_hint, partition_by=None):
-        """Write df's files into the table. With ``partition_by`` the
+    def _write_files(self, df, snap_hint, partition_by=None, options=None):
+        """Write df's files into the table, with the writer ``options``
+        (e.g. parquet.block.size) when given. With ``partition_by`` the
         write is hash-bucketed Iceberg-style: one directory per bucket
         value (the partition column itself is NOT stored in the files),
         each file belongs to exactly one bucket, and the file→bucket map
@@ -97,8 +98,9 @@ class SnapshotTable:
         try:
             d = os.path.join(tmp, "d")
             out, buckets = [], {}
+            writer = df.write.options(**(options or {})).mode("overwrite")
             if partition_by is None:
-                df.write.mode("overwrite").parquet(d)
+                writer.parquet(d)
                 for fn in sorted(os.listdir(d)):
                     if fn.endswith(".parquet"):
                         dst = (f"part-{snap_hint:06d}-"
@@ -107,7 +109,7 @@ class SnapshotTable:
                                     os.path.join(self.files_dir, dst))
                         out.append(os.path.join("files", dst))
                 return out, None
-            df.write.mode("overwrite").partitionBy(partition_by).parquet(d)
+            writer.partitionBy(partition_by).parquet(d)
             for dirn in sorted(os.listdir(d)):
                 if not dirn.startswith(partition_by + "="):
                     continue
@@ -125,14 +127,14 @@ class SnapshotTable:
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
-    def append(self, df, meta=None, partition_by=None):
+    def append(self, df, meta=None, partition_by=None, options=None):
         files, buckets = self._write_files(df, self.head() + 1,
-                                           partition_by)
+                                           partition_by, options)
         if buckets is not None:
             meta = dict(meta or {}, file_buckets=buckets)
         return self._commit(files, meta, "append")
 
-    def append_counted(self, df, meta=None, partition_by=None):
+    def append_counted(self, df, meta=None, partition_by=None, options=None):
         """Append and return (n_rows, absolute_paths) of the NEW files.
         The row count comes from the written parquet footers (driver-side
         metadata, no extra Spark job); when the append turns out empty
@@ -141,7 +143,7 @@ class SnapshotTable:
         import pyarrow.parquet as pq
 
         files, buckets = self._write_files(df, self.head() + 1,
-                                           partition_by)
+                                           partition_by, options)
         n = 0
         for f in files:
             n += pq.ParquetFile(
@@ -236,9 +238,9 @@ class SnapshotTable:
         return self._commit(files, dict(meta or {}, file_buckets=buckets),
                             "append")
 
-    def overwrite(self, df, meta=None, partition_by=None):
+    def overwrite(self, df, meta=None, partition_by=None, options=None):
         files, buckets = self._write_files(df, self.head() + 1,
-                                           partition_by)
+                                           partition_by, options)
         if buckets is not None:
             meta = dict(meta or {}, file_buckets=buckets)
         return self._commit(files, meta, "overwrite")

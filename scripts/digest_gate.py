@@ -1,19 +1,20 @@
 """Digest gate: run the exact bench-spec crawl in three configurations
 — default; small buckets (bench.small_buckets(): BUCKET_BYTES patched
 so the host-bucket modulus grows 1 → 32 mid-crawl); adaptive — each
-on the driver and on the cluster side of every round phase and on the
-two mixed plans the size policy produces first (cluster dequeue +
-driver commit; driver commit + cluster new-url commit with the
-partition-aligned seen test), and assert the historical state digest
-768bf8d782fb251d (fetch order + statuses + seen set, unchanged since
-round 1) for every run, and that the four plans of a configuration
-write the same slab rows (bench.slab_digest). Run after any
-crawl-engine change (`make digest`). Uses bench.py's own spec/digest
-code so the gate can never drift from the frozen measurement."""
+on the driver and on the cluster side of every round phase, on the
+driver plan with the kernel as a Spark job, and on the two mixed plans
+the size policy produces first (cluster dequeue + driver commit;
+driver commit + cluster new-url commit with the partition-aligned seen
+test), and assert the historical state digest 768bf8d782fb251d (fetch
+order + statuses + seen set, unchanged since round 1) for every run,
+and that the five plans of a configuration write the same slab rows
+(bench.slab_digest). Run after any crawl-engine change (`make
+digest`). Uses bench.py's own spec/digest code so the gate can never
+drift from the frozen measurement."""
 import os
 import sys
 from contextlib import nullcontext
-from dataclasses import fields
+from dataclasses import fields, replace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
@@ -36,6 +37,10 @@ if __name__ == "__main__":
     plans = {
         "driver": whole_round(True),
         "cluster": whole_round(False),
+        # the driver commit over the Spark kernel (a round past
+        # KERNEL_DRIVER_ROWS)
+        "driver_spark_kernel": replace(whole_round(True),
+                                       kernel_driver=False),
         "dequeue_cluster": policy(
             dequeue_bytes=crawl.DRIVER_STATE_BYTES + 1),
         "seen_partitioned": policy(

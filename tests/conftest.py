@@ -10,19 +10,24 @@ import bench  # noqa: E402
 from goskyr_spark.spark import crawl  # noqa: E402
 
 _CLUSTER = crawl.RoundPlan(
-    dequeue_driver=False, commit_driver=False, new_urls_driver=False,
-    seen_copy_driver=False, slabs_driver=False, seen_partitioned=False,
-    broadcast_seen=False)
+    dequeue_driver=False, commit_driver=False, kernel_driver=False,
+    new_urls_driver=False, seen_copy_driver=False, slabs_driver=False,
+    seen_partitioned=False, broadcast_seen=False)
+_DRIVER = crawl.RoundPlan(
+    dequeue_driver=True, commit_driver=True, kernel_driver=True,
+    new_urls_driver=True, seen_copy_driver=True, slabs_driver=True,
+    seen_partitioned=False, broadcast_seen=True)
 
 # Plans forced on every round whatever the table sizes (the real size
 # policy picks "driver" for every phase at test scale): whole-round
 # plans with every phase on one side, then mixed ones.
 PLANS = {
-    "driver": crawl.RoundPlan(
-        dequeue_driver=True, commit_driver=True, new_urls_driver=True,
-        seen_copy_driver=True, slabs_driver=True, seen_partitioned=False,
-        broadcast_seen=True),
+    "driver": _DRIVER,
     "cluster": _CLUSTER,
+    # every phase on the driver but the kernel, a Spark job whose output
+    # the driver commit collects (a live round's plan, and a mock round's
+    # past KERNEL_DRIVER_ROWS)
+    "driver_spark_kernel": replace(_DRIVER, kernel_driver=False),
     # partition-aligned seen test; the seen copy stays on the driver, so
     # the cluster slab update takes its input from driver-held hashes
     "cluster_partitioned": replace(

@@ -1,12 +1,15 @@
 """The mock web's pages table: laid out once per workdir in crc32(host)
 buckets with one row per url, read by the kernel's StoreFetcher one
-Arrow batch at a time from the batch's buckets only; and the fetchers'
-misses, which are 404s (a missing page, or allow-all robots)."""
+Arrow batch at a time from the batch's buckets only, and of those only
+the row groups that can hold the batch's urls; items_final's stage 2
+reads the same one capture per url; and the fetchers' misses, which are
+404s (a missing page, or allow-all robots)."""
 
 import os
 import zlib
 from datetime import datetime, timezone
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -14,7 +17,8 @@ from goskyr_spark.config import loads_config
 from goskyr_spark.spark import crawl
 from goskyr_spark.spark.crawl import CrawlEngine, FETCHED_SCHEMA
 from goskyr_spark.spark.fetchers import (FetchError, MockFetcher,
-                                         StoreFetcher, store_files)
+                                         StoreFetcher, row_groups_holding,
+                                         store_files)
 from goskyr_spark.synth import event_scraper
 
 NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
@@ -108,6 +112,123 @@ def test_one_capture_per_url(spark, tmp_path, with_ts):
     assert states[0] == states[1]
     assert states[0] == ([(url, 1, "ok")],
                          ["newest"] if with_ts else ["older"])
+
+
+def test_items_final_one_capture_per_url(spark, tmp_path):
+    """items_final joins the detail html of the one capture per url the
+    crawl fetched (the pages table), not every capture in pages_df: a
+    detail url with two captures gives one item, with the latest
+    capture's on_subpage field."""
+    detail = "https://s.test/event/1"
+    rows = [("https://s.test/list/1", datetime(2026, 1, 1),
+             _page("a").replace(b"/list/1", b"/event/1"))]
+    rows += [(detail, datetime(2026, 1, d),
+              f'<html><div class="desc">{t}</div></html>'.encode())
+             for d, t in ((1, "old"), (2, "new"))]
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary")
+    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages,
+                      lambda h: event_scraper(h, subpage=True),
+                      ["https://s.test/list/1"], now=NOW)
+    eng.run(max_rounds=3)
+    assert sorted((r["title"], r["desc"])
+                  for r in eng.items_final().collect()) == [("a", "new")]
+
+
+def _read_groups(monkeypatch):
+    """Record the row groups every ParquetFile.read_row_groups call
+    reads, as (file's row-group count, sorted indices)."""
+    calls = []
+    read = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *a, **kw):
+        calls.append((self.metadata.num_row_groups, sorted(row_groups)))
+        return read(self, row_groups, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    return calls
+
+
+def _whole_file_pages(paths, urls):
+    """{url: html} of `urls` from a whole-file read of `paths`."""
+    t = pa.concat_tables(pq.read_table(p, columns=["url", "html"])
+                         for p in paths)
+    return {u: h.decode() for u, h in zip(t["url"].to_pylist(),
+                                          t["html"].to_pylist())
+            if u in set(urls)}
+
+
+def test_prefetch_reads_only_row_groups_holding_urls(spark, tmp_path,
+                                                     monkeypatch):
+    """On pages files of several row groups, prefetch reads only the
+    row groups whose url min/max statistics hold a requested url, and
+    serves the same pages as a whole-file read."""
+    monkeypatch.setattr(crawl, "_bucket_mod", lambda nbytes: 2)
+    monkeypatch.setattr(crawl, "PAGES_ROW_GROUP_BYTES", 32 << 10)
+    pad = b"<!--" + b"x" * 1500 + b"-->"
+    rows = [(f"https://{h}/list/{p:03d}", _page(f"{h}{p}") + pad)
+            for h in HOSTS for p in range(60)]
+    eng = CrawlEngine(spark, str(tmp_path / "wd"),
+                      spark.createDataFrame(rows, "url string, html binary"),
+                      event_scraper, [], now=NOW)
+    eng._layout_pages()
+    buckets = {os.path.join(eng.t_pages.dir, f): bn
+               for f, bn in eng.t_pages.bucket_map().items()}
+    stats = {}
+    for f in buckets:
+        md = pq.ParquetFile(f).metadata
+        assert md.num_row_groups > 2, f
+        stats[f] = [(md.row_group(i).column(0).statistics.min,
+                     md.row_group(i).column(0).statistics.max)
+                    for i in range(md.num_row_groups)]
+    hosts = HOSTS[:3]
+    asked = [f"https://{h}/list/{p:03d}" for h in hosts for p in (0, 31)]
+    asked += [f"https://{hosts[0]}/gone", f"https://{hosts[0]}/robots.txt"]
+    calls = _read_groups(monkeypatch)
+    fetcher = StoreFetcher(buckets)
+    fetcher.prefetch(asked, hosts)
+    files = store_files(buckets, hosts)
+    expect = [(len(stats[f]), [i for i, (lo, hi) in enumerate(stats[f])
+                               if any(lo <= u <= hi for u in asked)])
+              for f in files]
+    assert calls == [c for c in expect if c[1]]
+    assert sum(len(g) for _, g in calls) < sum(n for n, _ in calls)
+    assert fetcher.pages == _whole_file_pages(files, asked)
+    assert len(fetcher.pages) == 6
+
+
+def test_prefetch_without_url_statistics(tmp_path, monkeypatch):
+    """A file written without column statistics has every row group
+    read whole, and serves the same pages as a whole-file read."""
+    urls = [f"https://n.test/list/{p:03d}" for p in range(40)]
+    path = str(tmp_path / "nostats.parquet")
+    pq.write_table(pa.table({"url": urls, "host": ["n.test"] * 40,
+                             "html": [_page(u) for u in urls]}),
+                   path, row_group_size=10, write_statistics=False)
+    md = pq.ParquetFile(path).metadata
+    assert md.num_row_groups == 4
+    assert row_groups_holding(md, 0, [urls[3]]) == [0, 1, 2, 3]
+    calls = _read_groups(monkeypatch)
+    fetcher = StoreFetcher({path: (0, 1)})
+    fetcher.prefetch([urls[3], urls[25]], ["n.test"])
+    assert calls == [(4, [0, 1, 2, 3])]
+    assert fetcher.pages == _whole_file_pages([path], [urls[3], urls[25]])
+
+
+def test_row_groups_holding():
+    """The bisect keeps exactly the row groups whose [min, max] holds a
+    requested string (groups u00-u09, u10-u19, u20-u29)."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table({"url": [f"u{i:02d}" for i in range(30)]}),
+                   buf, row_group_size=10)
+    md = pq.ParquetFile(pa.BufferReader(buf.getvalue())).metadata
+    assert md.num_row_groups == 3
+    assert row_groups_holding(md, 0, []) == []
+    assert row_groups_holding(md, 0, ["u05"]) == [0]
+    # below, between and above the groups' ranges
+    assert row_groups_holding(md, 0, ["a", "u095", "u2", "v"]) == []
+    assert row_groups_holding(md, 0, ["u09", "u10", "u29"]) == [0, 1, 2]
+    assert row_groups_holding(md, 0, ["u195", "u25"]) == [2]
 
 
 @pytest.mark.parametrize("has_table", [True, False],

@@ -1,7 +1,9 @@
 """The round plan: one size policy picks the side of every phase, and
 both sides agree on the edge cases the driver side used to handle
 differently (NULL-host outlinks, parquet timestamp types, outlink
-grouping); a driver-plan round keeps to its Spark job budget."""
+grouping); the kernel's two placements on the driver side (in the
+driver process, or a Spark job the driver collects) write the same
+rows; a driver-plan round keeps to its Spark job budget."""
 
 import threading
 from contextlib import nullcontext
@@ -158,6 +160,18 @@ def test_size_policy_thresholds():
     assert not plan(dequeue_bytes=crawl.DRIVER_STATE_BYTES + 1) \
         .dequeue_driver
     assert not plan(seen_bytes=crawl.DRIVER_STATE_BYTES + 1).new_urls_driver
+    small = plan(n_dequeued=crawl.KERNEL_DRIVER_ROWS)
+    assert small.kernel_driver and small.commit_driver
+    past = plan(n_dequeued=crawl.KERNEL_DRIVER_ROWS + 1)
+    assert not past.kernel_driver and past.commit_driver
+    # the in-process kernel runs on the driver's own dequeued rows
+    assert not plan(dequeue_bytes=crawl.DRIVER_STATE_BYTES + 1,
+                    n_dequeued=1).kernel_driver
+    # a live round's GETs overlap across tasks: never in-process
+    assert not any(plan(n_dequeued=n, live=True).kernel_driver
+                   for n in (0, 1, crawl.KERNEL_DRIVER_ROWS,
+                             crawl.DRIVER_ROWS, crawl.DRIVER_ROWS + 1))
+    assert plan(n_dequeued=1, live=True).commit_driver
     many_new = plan(n_new=crawl.DRIVER_ROWS + 1)
     assert not many_new.seen_copy_driver and not many_new.slabs_driver
     part = plan(slab_bytes=crawl.SEEN_BROADCAST_BYTES + 1)
@@ -228,10 +242,68 @@ def test_outlink_grouping_same_on_every_plan(spark, tmp_path, monkeypatch):
         "https://MiXeD.Test/m"])
 
 
+# --- the kernel's placements: in the driver process or a Spark job -----------
+
+_DENY = b"User-agent: *\nDisallow: /private/\n"
+
+
+def _detail(text):
+    return f'<html><div class="desc">{text}</div></html>'.encode()
+
+
+def test_kernel_placements_write_same_rows(spark, tmp_path, monkeypatch):
+    """The driver commit writes the same fetched, items, frontier, seen,
+    slab and debug_pages rows whether the kernel runs in the driver
+    process or as a Spark job, with canonicalize_outlinks="full" (%7E
+    and ~ spellings, an upper-case host with a default port and a dot
+    segment meet on one frontier row), debug=True, a robots-blocked and
+    a missing page, and a host without robots.txt."""
+    rows = [
+        ("https://p.test/robots.txt", _DENY),
+        ("https://p.test/list/1", _list_page(
+            [("a", "/event/1"), ("b", "/private/2"), ("c", "/event/%7Eu"),
+             ("d", "/event/~u"), ("e", "/event/gone")],
+            nxt="/list/2")),
+        ("https://p.test/list/2", _list_page(
+            [("f", "https://P.TEST:443/event/./1")])),
+        ("https://p.test/event/1", _detail("one")),
+        ("https://p.test/private/2", _detail("private")),
+        ("https://p.test/event/~u", _detail("tilde")),
+        ("https://q.test/list/1", _list_page([("g", "/event/9")])),
+        ("https://q.test/event/9", _detail("nine")),
+    ]
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    seeds = ["https://p.test/list/1", "https://q.test/list/1"]
+    tables = ("fetched", "items", "frontier", "seen", "slabs", "debug")
+    got = {}
+    for name in ("driver", "driver_spark_kernel"):
+        force_plan(monkeypatch, name)
+        eng = CrawlEngine(spark, str(tmp_path / name), pages, event_scraper,
+                          seeds, now=NOW, fetch_partitions=2, debug=True,
+                          canonicalize_outlinks="full")
+        eng.run(max_rounds=10)
+        got[name] = {t: sorted((tuple(r) for r in getattr(eng, f"t_{t}")
+                                .read(spark).collect()), key=repr)
+                     for t in tables}
+    ref = got["driver_spark_kernel"]
+    for t in tables:
+        assert got["driver"][t] == ref[t], t
+    status = {r[0]: r[6] for r in ref["fetched"]}
+    assert status == {
+        "https://p.test/list/1": "ok", "https://p.test/list/2": "ok",
+        "https://p.test/event/1": "ok", "https://p.test/private/2": "robots",
+        "https://p.test/event/~u": "ok", "https://p.test/event/gone":
+        "missing", "https://q.test/list/1": "ok",
+        "https://q.test/event/9": "ok"}
+    assert sorted(r[0] for r in ref["debug"]) == sorted(
+        u for u, s in status.items() if s == "ok")
+
+
 # --- job budget: a driver-plan round's Spark jobs ----------------------------
 
 def _round_jobs(spark, eng, max_rounds):
-    """Spark jobs of each non-empty round of eng.run(), by job group."""
+    """(URLs dequeued, Spark jobs) of each non-empty round of eng.run(),
+    jobs counted by job group."""
     ledger, jobs = JobLedger(spark, f"budget-{id(eng)}"), []
     run_round = eng.run_round
 
@@ -239,7 +311,7 @@ def _round_jobs(spark, eng, max_rounds):
         with ledger.group(f"round{r}") as gid:
             s = run_round(r)
         if s["n_dequeued"]:
-            jobs.append(ledger.counts(gid)[0])
+            jobs.append((s["n_dequeued"], ledger.counts(gid)[0]))
         return s
 
     eng.run_round = counted
@@ -247,14 +319,15 @@ def _round_jobs(spark, eng, max_rounds):
     return jobs
 
 
-def test_driver_round_job_budget_mock(spark, tmp_path, monkeypatch):
-    """A driver-plan mock round launches at most 2 Spark jobs, as a live
-    one does (the kernel's shuffle and its collect): the kernel fetches
-    from the pages table laid out at bootstrap, so no round joins or
-    scans pages_df. The outlinks' hash, host and grouping add none."""
+def test_driver_round_job_budget_mock(spark, tmp_path):
+    """Under the size policy, a mock round of at most KERNEL_DRIVER_ROWS
+    URLs launches no Spark job: the kernel runs in the driver process
+    on the driver's dequeued rows, each outlink's hash and host come
+    from a projection Spark folds on the driver, and the commit is
+    pyarrow. A larger round keeps the kernel's two jobs (its shuffle
+    and the collect)."""
     from goskyr_spark.synth import SynthSpec, host_name, synth_pages_df
 
-    force_plan(monkeypatch, "driver")
     spec = SynthSpec(n_hosts=8, pages_per_host=2, items_per_page=12,
                      hot_hosts=1, hot_factor=4)
     pages = synth_pages_df(spark, spec, include_fixtures=False,
@@ -267,7 +340,11 @@ def test_driver_round_job_budget_mock(spark, tmp_path, monkeypatch):
         jobs = _round_jobs(spark, eng, 3)
     finally:
         pages.unpersist()
-    assert len(jobs) == 3 and max(jobs) <= 2, jobs
+    assert len(jobs) == 3, jobs
+    assert all(j == 0 for n, j in jobs if n <= crawl.KERNEL_DRIVER_ROWS), \
+        jobs
+    assert all(j <= 2 for n, j in jobs), jobs
+    assert jobs[0][0] <= crawl.KERNEL_DRIVER_ROWS, jobs
 
 
 class _LoopbackSite(BaseHTTPRequestHandler):
@@ -300,13 +377,13 @@ scrapers:
 """
 
 
-def test_driver_round_job_budget_live(spark, tmp_path, monkeypatch):
-    """A driver-plan live round over loopback launches at most 2 Spark
-    jobs (the kernel's shuffle and its collect)."""
+def test_driver_round_job_budget_live(spark, tmp_path):
+    """Under the size policy, a live round over loopback commits on the
+    driver but keeps its kernel on the cluster: 1 or 2 Spark jobs (the
+    kernel's shuffle and its collect)."""
     from goskyr_spark.config import loads_config
     from goskyr_spark.spark.fetchers import StaticFetcher
 
-    force_plan(monkeypatch, "driver")
     scraper = loads_config(LIVE_CFG).scrapers[0]
     srv = HTTPServer(("127.0.0.1", 0), _LoopbackSite)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
@@ -320,4 +397,4 @@ def test_driver_round_job_budget_live(spark, tmp_path, monkeypatch):
     finally:
         srv.shutdown()
         srv.server_close()
-    assert len(jobs) == 2 and max(jobs) <= 2, jobs
+    assert len(jobs) == 2 and all(1 <= j <= 2 for _, j in jobs), jobs

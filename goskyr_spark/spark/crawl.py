@@ -187,9 +187,13 @@ SEEN_BROADCAST_BYTES = 64 << 20
 # (Catalyst overestimates multi-file unioned parquet reads)
 BROADCAST_JOIN_BYTES = 32 << 20
 # dequeued URLs per mock round up to which the kernel runs in the driver
-# process (no Spark job): a tail round's few pages scrape in tens of ms,
-# less than one job launch
-KERNEL_DRIVER_ROWS = 128
+# process (no Spark job). The crossover with the Spark kernel on local[4]
+# (4 vCPU, fetch_partitions=4, one round of n URLs, 5 runs each) falls
+# at n = 96 for the costliest mix measured, one new host per URL and
+# half of them list pages (round wall 0.31 s both ways; the driver wins
+# 4/5 at n = 80, 1/5 at n = 128). Detail pages of 5 hosts, like
+# crawl_wide's tail rounds, stay 4x faster on the driver up to n = 160.
+KERNEL_DRIVER_ROWS = 96
 
 
 @dataclass(frozen=True)

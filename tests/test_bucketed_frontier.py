@@ -126,7 +126,8 @@ def test_bucketed_resume(spark, pages, tmp_path, bucketed_engine):
     assert _digest(eng2, spark) == _digest(full, spark)
 
 
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 @pytest.mark.parametrize("first_small", [True, False],
                          ids=["small_then_default", "default_then_small"])
 def test_resume_across_modulus_change(spark, pages, tmp_path, ref_engine,

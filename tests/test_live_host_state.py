@@ -134,7 +134,8 @@ def _crawl(spark, workdir, seeds, **kw):
 ROBOTS = "User-agent: *\nDisallow: /secret/\n"
 
 
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 def test_robots_once_per_host_5xx_every_round(plan, web, spark, tmp_path):
     """A's 3-page chain makes one robots.txt GET over its three rounds
     (the body reaches rounds 1 and 2 through the commit's fold and the
@@ -153,7 +154,8 @@ def test_robots_once_per_host_5xx_every_round(plan, web, spark, tmp_path):
     assert {status[w.url(A, f"/list/{n}")] for n in (1, 2, 3)} == {"ok"}
 
 
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 def test_robots_refetched_each_round_at_zero_ttl(plan, web, spark, tmp_path,
                                                  monkeypatch):
     monkeypatch.setattr(crawl, "_ROBOTS_TTL_SECS", 0.0)
@@ -165,7 +167,8 @@ def test_robots_refetched_each_round_at_zero_ttl(plan, web, spark, tmp_path,
     assert set(status.values()) == {"ok"}
 
 
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 def test_crawl_delay_holds_across_rounds(plan, web, spark, tmp_path):
     """Every request to the host, robots.txt included, arrives at least
     one crawl-delay (within 10%) after the previous one, although each

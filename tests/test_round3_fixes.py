@@ -168,7 +168,8 @@ def subpage_site():
     srv.shutdown()
 
 
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 def test_live_crawl_on_subpage_items_final(subpage_site, spark, tmp_path,
                                            plan):
     """Live mode with an on_subpage config retains fetched html in

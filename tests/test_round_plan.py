@@ -61,7 +61,8 @@ def _crawl(spark, pages, workdir, **kw):
     return eng
 
 
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 @pytest.mark.parametrize("bucketed", [False, True],
                          ids=["window", "bucketed"])
 def test_null_host_outlink_never_enqueued(spark, pages, tmp_path, plan,

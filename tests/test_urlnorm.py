@@ -118,7 +118,8 @@ def _crawl_messy(spark, tmp_path, name, canonicalize):
 
 # the canon expression runs in the fetch/extract kernel's job; its
 # output reaches the frontier through both new-url commits
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 def test_engine_canonicalize_outlinks(spark, tmp_path, plan):
     # ON: the uppercase seed and both spellings of the detail link
     # normalize to one identity -> every fetch hits a real page
@@ -188,7 +189,8 @@ PCT_LIST_HTML = """<html><body><div class="listing">
 </div></body></html>"""
 
 
-@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
+                         indirect=True)
 def test_engine_full_canonicalize_merges_pct_spellings(spark, tmp_path,
                                                        plan):
     """%7Euser and ~user outlink spellings land on ONE frontier row

@@ -31,6 +31,10 @@ digest:	# crawl digest 768bf8d782fb251d: default/small-bucket/adaptive x driver/
 floor:	# fixed cost of a Python task: trivial mapInArrow job wall + launch -> UDF call wait
 	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-$$(nproc)} $(PY) scripts/python_task_floor.py
 
+.PHONY: kernel-cpu
+kernel-cpu:	# no Spark: loads_config ms/call per YAML loader, cuckoo insert_many s at 812/6,500/50,000 hashes
+	$(PY) scripts/kernel_cpu_bench.py
+
 .PHONY: bench-history
 bench-history:	# per-round dequeue cost vs crawl history (flatness gate)
 	$(PY) scripts/dequeue_scale_bench.py history

@@ -20,6 +20,12 @@ from typing import Optional
 
 import yaml
 
+# libyaml's safe loader when PyYAML was built with it (several times
+# faster per parse; a crawl kernel builds one scraper per host it meets),
+# else the pure-Python one. Both build the same objects and refuse
+# python/* tags.
+_LOADER = getattr(yaml, "CSafeLoader", yaml.SafeLoader)
+
 
 class ConfigError(ValueError):
     pass
@@ -344,34 +350,33 @@ def load_config(path):
                             "config files must only contain max. one global config")
     else:
         config = _load_one(path)
+    return _finish(config)
 
+
+def _finish(config):
+    """Post-parse defaults shared by load_config and loads_config: the
+    global user_agent/debug_dir go to scrapers that don't set their own,
+    and the writer defaults to stdout."""
     if config.global_ is not None:
         for s in config.scrapers:
             if s.fetcher.user_agent == "" and config.global_.user_agent != "":
                 s.fetcher.user_agent = config.global_.user_agent
             if s.fetcher.debug_dir == "" and config.global_.debug_dir != "":
                 s.fetcher.debug_dir = config.global_.debug_dir
-
     if config.writer.type == "":
         config.writer.type = "stdout"
     return config
 
 
+def _parse(stream):
+    return yaml.load(stream, Loader=_LOADER) or {}
+
+
 def _load_one(path):
     with open(path, "r", encoding="utf-8") as f:
-        data = yaml.safe_load(f) or {}
-    return ScraperConfig.from_dict(data)
+        return ScraperConfig.from_dict(_parse(f))
 
 
 def loads_config(text):
     """Parse a single YAML config string (driver-side convenience)."""
-    cfg = ScraperConfig.from_dict(yaml.safe_load(text) or {})
-    if cfg.writer.type == "":
-        cfg.writer.type = "stdout"
-    if cfg.global_ is not None:
-        for s in cfg.scrapers:
-            if s.fetcher.user_agent == "" and cfg.global_.user_agent != "":
-                s.fetcher.user_agent = cfg.global_.user_agent
-            if s.fetcher.debug_dir == "" and cfg.global_.debug_dir != "":
-                s.fetcher.debug_dir = cfg.global_.debug_dir
-    return cfg
+    return _finish(ScraperConfig.from_dict(_parse(text)))

@@ -8,9 +8,12 @@ critically — a filter hit NEVER drops a URL by itself (false positives
 fall through to the exact join; see spark/crawl.py), so the seen set
 stays exact.
 
-Pure numpy, serializable to bytes, deterministic: all hashing derives
-from the 64-bit url_hash computed once Spark-side (xxhash64), salted
-with a fixed engine seed. No reference-code analog exists (goskyr's only
+Numpy plus one Python-int loop, serializable to bytes, deterministic:
+all hashing derives from the 64-bit url_hash computed once Spark-side
+(xxhash64), salted with a fixed engine seed. Membership tests are fully
+vectorized; CuckooFilter.insert_many hashes the batch in numpy and runs
+only placement and eviction (inherently sequential) on Python ints over
+the table in place. No reference-code analog exists (goskyr's only
 dedup is a per-item memo map, scraper.go:394) — this is new machinery
 per SURVEY §2.8.
 """
@@ -33,6 +36,45 @@ def _mix(h: np.ndarray) -> np.ndarray:
     h *= _M2
     h ^= h >> np.uint64(33)
     return h
+
+
+_U64 = 0xFFFFFFFFFFFFFFFF
+_SALT = int(SALT)
+
+
+def _mix_int(h: int) -> int:
+    """_mix on one Python int (the eviction loop's scalar path)."""
+    h ^= h >> 33
+    h = (h * 0xFF51AFD7ED558CCD) & _U64
+    h ^= h >> 33
+    h = (h * 0xC4CEB9FE1A85EC53) & _U64
+    return h ^ (h >> 33)
+
+
+def _put(t, i: int, fp: int) -> bool:
+    """fp into the first empty slot of bucket i of the flat table t."""
+    j = i * CuckooFilter.SLOTS
+    for s in range(j, j + CuckooFilter.SLOTS):
+        if not t[s]:
+            t[s] = fp
+            return True
+    return False
+
+
+def _evict(t, key: int, fp: int, i: int, mask: int) -> bool:
+    """Cuckoo kicks from full bucket i: swap fp into a slot picked by the
+    key-seeded state, move the victim to its alternate bucket
+    (i XOR H(victim)), repeat. False after 500 kicks, with the last
+    victim dropped."""
+    state = _mix_int(key)
+    for _ in range(500):
+        state = _mix_int(state)
+        s = i * CuckooFilter.SLOTS + state % CuckooFilter.SLOTS
+        fp, t[s] = t[s], fp
+        i = (i ^ _mix_int(fp ^ _SALT)) & mask
+        if _put(t, i, fp):
+            return True
+    return False
 
 
 class BloomFilter:
@@ -117,56 +159,6 @@ class CuckooFilter:
     def sized_for(cls, n_items: int, load: float = 0.84):
         return cls(max(8, int(n_items / (cls.SLOTS * load)) + 1))
 
-    def _fp_and_index(self, h: int):
-        h = np.uint64(h) ^ SALT
-        m = int(_mix(np.array([h], dtype=np.uint64))[0])
-        fp = (m >> 48) & 0xFFFF
-        if fp == 0:
-            fp = 1
-        i1 = m & int(self.mask)
-        return np.uint16(fp), i1
-
-    def _alt_index(self, i: int, fp: int) -> int:
-        # hash the fingerprint with the same mixer, XOR into the index
-        fph = int(_mix(np.array([fp], dtype=np.uint64) ^ SALT)[0])
-        return (i ^ fph) & int(self.mask)
-
-    def contains(self, h: int) -> bool:
-        fp, i1 = self._fp_and_index(h)
-        if fp in self.table[i1]:
-            return True
-        i2 = self._alt_index(i1, int(fp))
-        return fp in self.table[i2]
-
-    def insert(self, h: int) -> bool:
-        """Insert; returns False only when the filter is over-full (the
-        caller then falls back to exact-join-only for those keys)."""
-        fp, i1 = self._fp_and_index(h)
-        i2 = self._alt_index(i1, int(fp))
-        for i in (i1, i2):
-            row = self.table[i]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                self.count += 1
-                return True
-        # evict: deterministic kick sequence seeded by the key hash
-        i = i1 if (int(fp) & 1) == 0 else i2
-        cur = int(fp)
-        state = int(_mix(np.array([h], dtype=np.uint64))[0])
-        for _ in range(500):
-            state = int(_mix(np.array([state], dtype=np.uint64))[0])
-            slot = state % self.SLOTS
-            cur, self.table[i][slot] = int(self.table[i][slot]), np.uint16(cur)
-            i = self._alt_index(i, cur)
-            row = self.table[i]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = np.uint16(cur)
-                self.count += 1
-                return True
-        return False
-
     def contains_many(self, hashes) -> np.ndarray:
         """Vectorized membership for uint64 hash arrays."""
         if len(hashes) == 0:
@@ -183,12 +175,33 @@ class CuckooFilter:
                 (self.table[i2] == fpc).any(axis=1))
 
     def insert_many(self, hashes) -> int:
-        """Scalar loop insert (inserts are rare relative to tests);
-        returns number actually inserted."""
+        """Insert uint64 hashes in order; returns the number inserted.
+
+        Fingerprints and both candidate buckets come from numpy for the
+        whole batch; placement and eviction then run on Python ints over
+        a flat 'H' view of the table, in place. A key goes to the first
+        empty slot of i1, then of i2; when both are full it evicts with a
+        deterministic kick sequence (state _mix(h), 500 kicks), and if
+        that overflows the last displaced fingerprint is dropped and the
+        key does not count — the caller then rebuilds (spark/crawl.py).
+        """
+        h = np.asarray(hashes, dtype=np.uint64)
+        if len(h) == 0:
+            return 0
+        m = _mix(h ^ SALT)
+        fp = (m >> np.uint64(48)) & np.uint64(0xFFFF)
+        fp[fp == 0] = 1
+        i1 = m & self.mask
+        i2 = (i1 ^ _mix(fp ^ SALT)) & self.mask
+        mask = int(self.mask)
         n = 0
-        for h in hashes:
-            if self.insert(int(h)):
-                n += 1
+        with memoryview(self.table).cast("B").cast("H") as t:
+            for key, f, a, b in zip(h.tolist(), fp.tolist(), i1.tolist(),
+                                    i2.tolist()):
+                if (_put(t, a, f) or _put(t, b, f)
+                        or _evict(t, key, f, a if f & 1 == 0 else b, mask)):
+                    n += 1
+        self.count += n
         return n
 
     def to_bytes(self) -> bytes:

@@ -625,6 +625,17 @@ def _u64(int64_array):
 
 
 class CrawlEngine:
+    """Round-based crawl over a mock web (pages_df) or a live fetcher.
+
+    scraper_factory(host) -> Scraper is called once per host per kernel
+    call (each Spark task, or the driver-placed kernel, builds its own),
+    plus once at construction for the item schema. It must be a pure
+    function of the host: the same host gives an equal scraper in every
+    task and round, in an executor or in the driver. Its cost is paid
+    per host per task per round (synth.event_scraper parses one YAML
+    per call).
+    """
+
     def __init__(self, spark, workdir, pages_df, scraper_factory, seeds,
                  per_host_budget=64, round_budget=100_000, n_slabs=8,
                  slab_capacity=4096, now=None, fetch_partitions=None,

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from goskyr_spark.kernels.cuckoo import BloomFilter, CuckooFilter
+from goskyr_spark.kernels.cuckoo import SALT, BloomFilter, CuckooFilter, _mix
 from goskyr_spark.kernels.robots import parse_robots
 
 
@@ -37,13 +37,116 @@ def test_cuckoo_membership_and_roundtrip():
     assert cf2.contains_many(present).all()
 
 
+# --- scalar reference: the one-key-at-a-time insert and membership test the
+# engine shipped before insert_many was vectorized, kept as its oracle ---------
+
+def _ref_fp_and_index(cf, h):
+    m = int(_mix(np.array([np.uint64(h) ^ SALT], dtype=np.uint64))[0])
+    fp = (m >> 48) & 0xFFFF
+    if fp == 0:
+        fp = 1
+    return np.uint16(fp), m & int(cf.mask)
+
+
+def _ref_alt_index(cf, i, fp):
+    fph = int(_mix(np.array([fp], dtype=np.uint64) ^ SALT)[0])
+    return (i ^ fph) & int(cf.mask)
+
+
+def _ref_contains(cf, h):
+    fp, i1 = _ref_fp_and_index(cf, h)
+    if fp in cf.table[i1]:
+        return True
+    return fp in cf.table[_ref_alt_index(cf, i1, int(fp))]
+
+
+def _ref_insert(cf, h):
+    fp, i1 = _ref_fp_and_index(cf, h)
+    i2 = _ref_alt_index(cf, i1, int(fp))
+    for i in (i1, i2):
+        row = cf.table[i]
+        empty = np.where(row == 0)[0]
+        if len(empty):
+            row[empty[0]] = fp
+            cf.count += 1
+            return True
+    i = i1 if (int(fp) & 1) == 0 else i2
+    cur = int(fp)
+    state = int(_mix(np.array([h], dtype=np.uint64))[0])
+    for _ in range(500):
+        state = int(_mix(np.array([state], dtype=np.uint64))[0])
+        slot = state % cf.SLOTS
+        cur, cf.table[i][slot] = int(cf.table[i][slot]), np.uint16(cur)
+        i = _ref_alt_index(cf, i, cur)
+        row = cf.table[i]
+        empty = np.where(row == 0)[0]
+        if len(empty):
+            row[empty[0]] = np.uint16(cur)
+            cf.count += 1
+            return True
+    return False
+
+
+def _ref_insert_many(cf, hashes):
+    return sum(_ref_insert(cf, int(h)) for h in hashes)
+
+
+def _keys(n, seed):
+    rng = np.random.default_rng(seed)
+    return np.sort(rng.integers(0, 2**64, n, dtype=np.uint64))
+
+
+def _assert_same_fill(make, hashes):
+    """insert_many and the scalar reference, each on its own filter from
+    make(), return the same count and leave the same bytes."""
+    vec, ref = make(), make()
+    n = vec.insert_many(hashes)
+    assert n == _ref_insert_many(ref, hashes)
+    assert vec.count == ref.count
+    assert vec.to_bytes() == ref.to_bytes()
+    return n
+
+
+@pytest.mark.parametrize("n", [812, 6500, 50_000])
+def test_cuckoo_insert_many_matches_scalar_reference(n):
+    keys = _keys(n, n)
+    assert _assert_same_fill(lambda: CuckooFilter.sized_for(n), keys) == n
+
+
+def test_cuckoo_insert_many_edge_cases_match_reference():
+    assert _assert_same_fill(lambda: CuckooFilter(8),
+                             np.zeros(0, dtype=np.uint64)) == 0
+    # duplicates: each copy takes a slot until both buckets are full,
+    # then evictions run, and past 500 kicks a copy is refused
+    dups = np.array([5] * 3 + [7] * 2 + [9] * 12, dtype=np.uint64)
+    assert _assert_same_fill(lambda: CuckooFilter(8), dups) < len(dups)
+    # a key whose fingerprint bits are 0 is stored as 1 (0 marks empty)
+    pool = _keys(1 << 20, 4)
+    zero_fp = pool[(_mix(pool ^ SALT) >> np.uint64(48)) == 0][:1]
+    assert len(zero_fp) == 1
+    _assert_same_fill(lambda: CuckooFilter(8), zero_fp)
+    # over-full (load 1.05): evictions overflow and keys are refused
+    over = _keys(4000, 1)
+    n = _assert_same_fill(lambda: CuckooFilter(int(4000 / (4 * 1.05))), over)
+    assert 0 < n < len(over)
+
+
+def test_cuckoo_insert_many_into_prefilled_matches_reference():
+    base = CuckooFilter.sized_for(6000)
+    base.insert_many(_keys(3000, 2))
+    blob = base.to_bytes()
+    more = _keys(2500, 3)
+    assert _assert_same_fill(lambda: CuckooFilter.from_bytes(blob),
+                             more) == len(more)
+
+
 def test_cuckoo_scalar_vector_agree():
     rng = np.random.default_rng(3)
     keys = rng.integers(0, 2**63, 500, dtype=np.int64).view(np.uint64)
     cf = CuckooFilter.sized_for(1000)
     cf.insert_many(keys[:250])
     vec = cf.contains_many(keys)
-    scal = np.array([cf.contains(int(k)) for k in keys])
+    scal = np.array([_ref_contains(cf, int(k)) for k in keys])
     assert (vec == scal).all()
 
 

@@ -85,7 +85,7 @@ def profile_crawl(mode="default"):
             rounds = []
             last = eng.recover()
             boot = None
-            if last < 0 and not eng.t_frontier.exists():
+            if last is None:  # run()'s rule: no complete bootstrap
                 tb = time.time()
                 with ledger.group(f"{attempt}.bootstrap") as gid:
                     eng.bootstrap()

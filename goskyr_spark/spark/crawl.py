@@ -25,7 +25,9 @@ a deterministic micro-batch over snapshot tables —
              with round metadata; a final `rounds` row marks the round
              complete. Resume rolls every table back to the last complete
              round (snapshot isolation makes rollback free), so a crash
-             mid-round replays identically.
+             mid-round replays identically; a workdir whose bootstrap
+             (round -1) wrote no rounds row is emptied and bootstrapped
+             again.
 
 Round plan: each phase has at most one driver and one cluster
 implementation, and which one runs is decided once per round by
@@ -33,9 +35,13 @@ round_plan(), the single size policy, from numbers the driver already
 holds (manifest file bytes, slab stats, the round's dequeued and new
 URL counts). The dequeue runs on the driver (pandas over the live files)
 while its input is under DRIVER_STATE_BYTES, else as one shuffle-free
-Spark job over the host buckets. The kernel job also computes each
-outlink's identity: one projection after the kernel adds its url
-(canonicalized when asked), xxhash64 and host, all JVM expressions.
+Spark job over the host buckets. A url's identity (its url,
+canonicalized when asked, xxhash64 and host, all JVM expressions) is
+computed in one place, _identity_cols: the kernel job projects it over
+each outlink, and every later use carries it along (a fetched page keeps
+its dequeued frontier row's url_hash). Seeds are round -1's outlinks:
+bootstrap gives them the same identity step and new-url commit, so no
+Spark job runs for them.
 Rounds of at most DRIVER_ROWS URLs commit items, fetched, host_stats
 and new URLs from one Arrow table of the kernel's output: the driver
 groups the outlinks in pyarrow, so the new-url commit launches no Spark
@@ -584,8 +590,9 @@ def _host_col(col="url"):
     """The one host identity of a url column (a name or a Column): its
     lowercased HOST as
     Spark parses it (IPv6 keeps its brackets; NULL when there is none).
-    Seeds, outlinks and the mock robots.txt join all key on it, so one
-    site never splits into two politeness/robots identities."""
+    Seeds and outlinks (_identity_cols) and the pages store
+    (_layout_pages) all key on it, so one site never splits into two
+    politeness/robots identities."""
     return F.lower(F.try_parse_url(col, F.lit("HOST")))
 
 
@@ -707,18 +714,12 @@ class CrawlEngine:
         # %7E and ~ spellings land on ONE frontier row). Opt-in:
         # goskyr's own URL-join output is the reference identity, so
         # normalization changes crawl digests by design. The percent
-        # pass runs in Python (the kernel's, for outlinks) before the
-        # syntax passes' column expression.
+        # pass (_pct) runs in Python — in the kernel for outlinks, in
+        # bootstrap for seeds — before the syntax passes' column
+        # expression (_identity_cols), which seeds and outlinks share.
         self.canonicalize_outlinks = canonicalize_outlinks
-        if canonicalize_outlinks:
-            pct = canonicalize_outlinks == "full"
-            sdf = spark.createDataFrame(
-                [(percent_normalize_str(s) if pct else s,)
-                 for s in self.seeds], "url string")
-            self.seeds = sorted({
-                r["url"] for r in sdf.select(
-                    url_normalize_expr(F.col("url")).alias("url"))
-                .collect()})
+        self._pct = (percent_normalize_str if canonicalize_outlinks == "full"
+                     else (lambda u: u))
         # one schema for all hosts: factory must produce field-compatible
         # scrapers (heterogeneous configs get engine instances per config)
         self._proto = scraper_factory("proto.invalid")
@@ -1028,30 +1029,40 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ state
 
-    def last_complete_round(self) -> int:
-        df = self.t_rounds.read(self.spark, schema=ROUNDS_SCHEMA)
-        row = df.agg(F.max("round").alias("r")).collect()[0]
-        return int(row["r"]) if row["r"] is not None else -1
+    def last_complete_round(self):
+        """The highest round with a `rounds` row: -1 once bootstrap has
+        committed, None when it never did. A pyarrow read of the rounds
+        files' round column, no Spark job."""
+        files = self.t_rounds.manifest()["files"]
+        if not files:
+            return None
+        t = _read_parquet([os.path.join(self.t_rounds.dir, f) for f in files],
+                          pa.schema([("round", pa.int64())]))
+        return pc.max(t["round"]).as_py()
 
     def _rollback_table(self, table, round_no):
         """Point the table back at its last snapshot with meta.round <=
-        round_no (free under snapshot isolation)."""
-        snaps = table.snapshots()
+        round_no (free under snapshot isolation); round_no None empties
+        it."""
         target = None
-        for m in snaps:
-            r = m["meta"].get("round", -1)
-            if r <= round_no:
-                target = m
+        if round_no is not None:
+            for m in table.snapshots():
+                if m["meta"].get("round", -1) <= round_no:
+                    target = m
         if target is None:
             if table.head() != 0:
-                table._commit([], {"round": round_no}, "overwrite")
+                table._commit([], {"round": round_no}
+                              if round_no is not None else {}, "overwrite")
         elif target["snapshot"] != table.head():
             table._commit(target["files"], {"round": round_no}, "overwrite",
                           parent=table.head())
 
     def recover(self):
         """Roll every table back to the last COMPLETE round; makes resume
-        after a mid-round crash replay identically."""
+        after a mid-round crash replay identically. A workdir whose
+        bootstrap never wrote its rounds row (a crash inside it) is
+        rolled back to empty and returns None: run() bootstraps it
+        again."""
         last = self.last_complete_round()
         tables = [self.t_frontier, self.t_fetched, self.t_seen,
                   self.t_slabs, self.t_items, self.t_metrics,
@@ -1065,7 +1076,8 @@ class CrawlEngine:
         # round stays incremental. Non-adaptive resumes skip this (the
         # table is only consumed by the adaptive dequeue).
         if (self.adaptive_priority and not self.t_host_stats.exists()
-                and self.t_fetched.exists() and last >= 0):
+                and self.t_fetched.exists() and last is not None
+                and last >= 0):
             fetched = self.t_fetched.read(self.spark,
                                           schema=FETCHED_SCHEMA)
             self._hostpart_write(
@@ -1077,28 +1089,29 @@ class CrawlEngine:
 
     def bootstrap(self):
         """Round -1: lay out the pages (mock mode, _layout_pages), then
-        seed the frontier + seen set. ONE Spark job for the seeds (the
-        frontier write, which computes the JVM xxhash64); the seen copy
-        and slab build derive from the written files driver-side. A
-        seed's host comes from the outlinks' expression; a seed without
-        one is dropped, like an outlink."""
+        commit the seeds as round -1's new urls, outlinks of depth -1:
+        the outlinks' percent pass and identity step
+        (_outlink_identity), _frontier_rows (priority 0, depth 0, page
+        1, one row per canonical url) and the new-url commit. Under the
+        size policy no Spark job runs for them. A seed without a host is
+        dropped, like an outlink."""
         self.last_phases, self._mark_t = [], time.time()
         self._layout_pages()
         self._sizes = self._measure_sizes()
-        rows = [(u, None, None, 0.0, 0, -1, 1) for u in self.seeds]
-        df = (self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-              .withColumn("host", _host_col())
-              .filter(F.col("host").isNotNull())
-              .withColumn("url_hash", F.xxhash64("url")))
-        n, files = self._hostpart_write(self.t_frontier, df, {"round": -1},
-                                        mode="append_counted")
-        if n < len(rows):
+        n = len(self.seeds)
+        seeds = self._outlink_identity(pa.table({
+            "_outlink": pa.array([self._pct(u) for u in self.seeds],
+                                 pa.string()),
+            "_depth": pa.array(np.full(n, -1, dtype=np.int64)),
+            "_page_no": pa.array(np.ones(n, dtype=np.int64))}))
+        self._mark("identity")
+        if seeds["_out_host"].null_count:
             logger.warning("dropped %d seed(s) without a host",
-                           len(rows) - n)
-        if n:
-            self._commit_seen(-1, n, files=files)
+                           seeds["_out_host"].null_count)
+        n_new = self._new_urls_phase(self._plan(),
+                                     _frontier_rows(seeds, -1), -1)
         self.t_rounds.append_rows(
-            [(-1, 0, 0, 0, 0, n, 0.0)], ROUNDS_SCHEMA, {"round": -1})
+            [(-1, 0, 0, 0, 0, n_new, 0.0)], ROUNDS_SCHEMA, {"round": -1})
         self._release_round()
 
     # ------------------------------------------------------------------ seen
@@ -1415,8 +1428,7 @@ class CrawlEngine:
         fetcher_factory = self.live_fetcher or functools.partial(
             StoreFetcher, {os.path.join(self.t_pages.dir, f): bn
                            for f, bn in self.t_pages.bucket_map().items()})
-        pct = (percent_normalize_str
-               if self.canonicalize_outlinks == "full" else (lambda u: u))
+        pct = self._pct
         now = self.now
         arrow_out = to_arrow_schema(self._crawl_schema())
         fcols = _field_columns(self._proto)
@@ -1492,6 +1504,7 @@ class CrawlEngine:
                 rows = []
                 for r in range(batch.num_rows):
                     url = d["url"][r]
+                    url_hash = d["url_hash"][r]
                     host = d["host"][r]
                     depth = d["depth"][r]
                     page_no = d["page_no"][r] or 1
@@ -1501,14 +1514,14 @@ class CrawlEngine:
                     fetch_ts = round_base + (host_seq - 1) * delay
                     path = urlsplit(url).path or "/"
                     if not rules.allowed(path):
-                        rows.append(_fetch_row(url, host, fetch_ts,
-                                               "robots", 0, 0))
+                        rows.append(_fetch_row(url, url_hash, host,
+                                               fetch_ts, "robots", 0, 0))
                         continue
                     try:
                         html = polite_get(host, url, delay)
                     except Exception:
-                        rows.append(_fetch_row(url, host, fetch_ts,
-                                               "missing", 0, 0))
+                        rows.append(_fetch_row(url, url_hash, host,
+                                               fetch_ts, "missing", 0, 0))
                         continue
                     if host not in scrapers:
                         sc = scraper_factory(host)
@@ -1540,8 +1553,8 @@ class CrawlEngine:
                         rows.append(_outlink_row(
                             url, host, pct(pr.next_page_url), depth,
                             page_no + 1))
-                    rows.append(_fetch_row(url, host, fetch_ts, "ok",
-                                           n_items, pr.nr_errors,
+                    rows.append(_fetch_row(url, url_hash, host, fetch_ts,
+                                           "ok", n_items, pr.nr_errors,
                                            html if retain_html else None))
                 if rows:
                     yield pa.RecordBatch.from_pylist(rows, schema=arrow_out)
@@ -1556,10 +1569,11 @@ class CrawlEngine:
         return fetch_extract
 
     def _identity_cols(self):
-        """Each _outlink's identity as one projection, by the JVM
-        expressions the seeds get: _out_url (its syntax passes when
-        canonicalize_outlinks asks), _out_hash = its xxhash64 and
-        _out_host (read on outlink rows only)."""
+        """Each _outlink's identity as one projection, the one place a
+        url's identity is computed (seeds are round -1's outlinks; a
+        fetched page keeps its dequeued row's url_hash): _out_url (its
+        syntax passes when canonicalize_outlinks asks), _out_hash = its
+        xxhash64 and _out_host (read on outlink rows only)."""
         url = F.col("_outlink")
         if self.canonicalize_outlinks:
             url = url_normalize_expr(url)
@@ -1596,9 +1610,8 @@ class CrawlEngine:
         """The kernel in the driver process, no Spark job: the driver's
         dequeued Arrow rows, sorted as a fetch task sorts its rows, go
         through _kernel_fn with the host state as it stands; then each
-        outlink's identity (_outlink_identity) and each row's _url_hash,
-        the dequeued row's url_hash (xxhash64 of its url). Returns the
-        table a driver commit collects from the Spark kernel."""
+        outlink's identity (_outlink_identity). Returns the table a
+        driver commit collects from the Spark kernel."""
         rows = dequeued.take(pc.sort_indices(dequeued, sort_keys=[
             ("_host_seq", "ascending"), ("host", "ascending")]))
         fetch_extract = self._kernel_fn(round_no, lambda: self._live_hosts)
@@ -1607,9 +1620,6 @@ class CrawlEngine:
             schema=to_arrow_schema(self._crawl_schema()))
         self._mark("kernel_driver")
         out = self._outlink_identity(out)
-        at = pc.index_in(out["_page_url"], value_set=dequeued["url"])
-        out = out.append_column("_url_hash",
-                                pc.take(dequeued["url_hash"], at))
         self._mark("identity")
         return out
 
@@ -1673,8 +1683,7 @@ class CrawlEngine:
 
     def _collect_kernel(self, kernel, round_no, n_dequeued):
         """The Spark kernel's output collected as Arrow for the driver
-        commit, with each row's _url_hash (the JVM xxhash64 of its page
-        url): ONE job. When html is retained the output is cached first
+        commit: ONE job. When html is retained the output is cached first
         and its html appended to debug_pages by a Spark write, so pages
         never reach the driver; the rest is collected from the
         cache."""
@@ -1682,8 +1691,7 @@ class CrawlEngine:
             kernel = self._cache(kernel)
             self._append_html(kernel, round_no, n_dequeued // 50_000 + 1)
             kernel = kernel.drop("_html_out")
-        coll = (kernel.withColumn("_url_hash", F.xxhash64("_page_url"))
-                .toArrow())
+        coll = kernel.toArrow()
         self._mark("fetch_extract")
         return coll
 
@@ -1691,8 +1699,9 @@ class CrawlEngine:
         """Driver-side round commit from the kernel's output rows as an
         Arrow table — run in the driver process (_kernel_driver) or
         collected from the Spark kernel (_collect_kernel); both carry
-        the JVM xxhash64 of every page and outlink (and each outlink's
-        host), so no hash or host is ever computed off-JVM. html still
+        each outlink's identity (_identity_cols) and each page's url_hash
+        from its dequeued row, so no hash or host is ever computed
+        off-JVM. html still
         in the table goes to debug_pages. Items, fetched (+ fetch_seq),
         host stats, the round metrics and the grouped new frontier rows
         (_frontier_rows) derive driver-side from that table. Returns
@@ -1786,12 +1795,12 @@ class CrawlEngine:
 
         fetch_base = (result.filter("_kind = 'fetch'")
                       .select(F.col("_page_url").alias("url"),
+                              F.col("_url_hash").alias("url_hash"),
                               F.col("_host").alias("host"),
                               F.col("_fetch_ts").alias("fetch_ts"),
                               F.col("_status").alias("status"),
                               F.col("_n_items").alias("n_items"),
                               F.col("_n_errors").alias("n_errors"))
-                      .withColumn("url_hash", F.xxhash64("url"))
                       .withColumn("round", F.lit(round_no).cast("long")))
         started = datetime.now(timezone.utc)
         n_seq_parts = max(1, min(self.fetch_partitions,
@@ -1937,9 +1946,7 @@ class CrawlEngine:
     def run(self, max_rounds=100):
         """Bootstrap-or-resume, then crawl until the frontier drains."""
         last = self.recover()
-        # bootstrap keys on the frontier table: a rounds row without a
-        # frontier (half-written state) must still bootstrap
-        if last < 0 and not self.t_frontier.exists():
+        if last is None:  # no complete bootstrap (recover emptied it)
             self.bootstrap()
             last = -1
         else:  # resumed: lays out the pages if the workdir has none
@@ -2077,6 +2084,9 @@ class CrawlEngine:
         fields = [
             StructField("_kind", StringType()),
             StructField("_page_url", StringType()),
+            # _kind='fetch': the dequeued row's url_hash, computed by
+            # _identity_cols when the url was enqueued
+            StructField("_url_hash", LongType()),
             StructField("_host", StringType()),
             StructField("_fetch_ts", DoubleType()),
             StructField("_status", StringType()),
@@ -2103,10 +2113,11 @@ class CrawlEngine:
 # RecordBatch.from_pylist makes every column a row leaves out NULL (and
 # drops _html_out when the engine does not retain html)
 
-def _fetch_row(url, host, ts, status, n_items, n_errors, html=None):
-    return {"_kind": "fetch", "_page_url": url, "_host": host,
-            "_fetch_ts": ts, "_status": status, "_n_items": n_items,
-            "_n_errors": n_errors, "_html_out": html}
+def _fetch_row(url, url_hash, host, ts, status, n_items, n_errors,
+               html=None):
+    return {"_kind": "fetch", "_page_url": url, "_url_hash": url_hash,
+            "_host": host, "_fetch_ts": ts, "_status": status,
+            "_n_items": n_items, "_n_errors": n_errors, "_html_out": html}
 
 
 def _outlink_row(url, host, outlink, depth, page_no):

@@ -2,16 +2,20 @@
 politeness timestamps, robots enforcement, resume-from-checkpoint
 equivalence, and parallelism invariance (FIXTURES.md §7)."""
 
+import logging
+import os
 import shutil
 from datetime import datetime, timezone
 from urllib.parse import urlsplit
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from goskyr_spark.kernels.robots import parse_robots
 from goskyr_spark.kernels.scrape import scrape_page
 from goskyr_spark.kernels.filters import filter_item, initialize_filters
-from goskyr_spark.spark.crawl import CrawlEngine
+from goskyr_spark.spark.crawl import CrawlEngine, _host_col
 from goskyr_spark.synth import SynthSpec, event_scraper, host_name, synth_pages_df
 
 NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
@@ -228,6 +232,70 @@ def test_resume_equivalence(spark, pages, spec, engine_run, tmp_path_factory):
         assert la == lb, f"table {t} differs after resume"
 
 
+def _table_rows(table):
+    """Sorted rows of a snapshot table's current files (pyarrow)."""
+    rows = []
+    for f in table.manifest()["files"]:
+        t = pq.read_table(os.path.join(table.dir, f))
+        rows += [tuple(sorted(r.items())) for r in t.to_pylist()]
+    return sorted(rows)
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("plan", ["driver", "cluster"], indirect=True)
+@pytest.mark.parametrize("at", ["_commit_seen", "_update_slabs"],
+                         ids=["after_frontier", "after_seen"])
+def test_resume_after_bootstrap_crash(spark, pages, spec, engine_run,
+                                      tmp_path, plan, at, monkeypatch):
+    """A crash inside bootstrap, after the seeds' frontier commit or
+    after their seen commit, leaves no rounds row: a fresh engine's
+    run() rolls the workdir back to empty and bootstraps again, so
+    seen, slabs, frontier and fetched equal an uninterrupted run."""
+    wd = str(tmp_path / "wd")
+    e1 = CrawlEngine(spark, wd, pages, event_scraper, seeds_for(spec),
+                     now=NOW, fetch_partitions=3)
+
+    def crash(*a, **kw):
+        raise _Crash(at)
+
+    monkeypatch.setattr(e1, at, crash)
+    with pytest.raises(_Crash):
+        e1.run(max_rounds=20)
+    assert e1.last_complete_round() is None
+    e2 = CrawlEngine(spark, wd, pages, event_scraper, seeds_for(spec),
+                     now=NOW, fetch_partitions=5)
+    e2.run(max_rounds=20)
+    ref, _ = engine_run
+    for t in ("seen", "slabs", "frontier", "fetched"):
+        assert _table_rows(getattr(e2, f"t_{t}")) == \
+            _table_rows(getattr(ref, f"t_{t}")), t
+
+
+def test_one_url_identity(spark, pages, spec, tmp_path, plan):
+    """Seeds, outlinks and fetched pages share one identity: every
+    frontier, fetched and seen row has url_hash = xxhash64(url), and
+    every frontier row has host = _host_col(url). Two spellings of a
+    seed, canonicalized with the percent pass, are one frontier row."""
+    seeds = seeds_for(spec) + ["HTTPS://%68ost0000.TEST:443/list/1"]
+    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
+                      seeds, now=NOW, fetch_partitions=3,
+                      canonicalize_outlinks="full")
+    eng.run(max_rounds=20)
+    for t in ("frontier", "fetched", "seen"):
+        rows = (getattr(eng, f"t_{t}").read(spark)
+                .select("url_hash", F.xxhash64("url").alias("want"))
+                .collect())
+        assert rows and all(r[0] == r[1] for r in rows), t
+    rows = (eng.t_frontier.read(spark)
+            .select("host", _host_col("url").alias("want")).collect())
+    assert all(r[0] is not None and r[0] == r[1] for r in rows)
+    boot = eng.t_rounds.read(spark).filter("round = -1").collect()
+    assert [r["n_new_urls"] for r in boot] == [spec.n_hosts]
+
+
 def test_parallelism_invariance_crawl(spark, pages, spec, engine_run,
                                       tmp_path_factory):
     """Different fetch partitioning → identical crawl order + seen set."""
@@ -252,18 +320,21 @@ def _crawl_pages(spark, wd, rows, seeds, **kw):
     return eng, status
 
 
-def test_seed_host_matches_robots_host(spark, tmp_path):
+def test_seed_host_matches_robots_host(spark, tmp_path, caplog):
     """A seed's host comes from the same parser as the outlinks' and the
     robots.txt join's: an IPv6 seed keeps its brackets, so its robots
     rules apply; a seed Spark finds no host in is dropped, as an outlink
-    would be."""
+    would be, and the drop is logged."""
     v6 = "https://[::1]/list/1"
-    _, status = _crawl_pages(
-        spark, str(tmp_path / "wd"),
-        [("https://[::1]/robots.txt", b"User-agent: *\nDisallow: /list/1\n"),
-         (v6, b"<p>x</p>"), ("https://h_x.test/a", b"<p>x</p>")],
-        [v6, "https://h_x.test/a"])
+    with caplog.at_level(logging.WARNING, logger="goskyr_spark.crawl"):
+        _, status = _crawl_pages(
+            spark, str(tmp_path / "wd"),
+            [("https://[::1]/robots.txt",
+              b"User-agent: *\nDisallow: /list/1\n"),
+             (v6, b"<p>x</p>"), ("https://h_x.test/a", b"<p>x</p>")],
+            [v6, "https://h_x.test/a"])
     assert status == {v6: ("[::1]", "robots")}
+    assert "dropped 1 seed(s) without a host" in caplog.messages
 
 
 def test_debug_pages_hold_fetched_pages_only(spark, tmp_path):

@@ -303,10 +303,17 @@ def test_kernel_placements_write_same_rows(spark, tmp_path, monkeypatch):
 # --- job budget: a driver-plan round's Spark jobs ----------------------------
 
 def _round_jobs(spark, eng, max_rounds):
-    """(URLs dequeued, Spark jobs) of each non-empty round of eng.run(),
-    jobs counted by job group."""
+    """(Spark jobs of run()'s recover() plus bootstrap(), [(URLs
+    dequeued, Spark jobs) of each non-empty round of eng.run()]), jobs
+    counted by job group."""
     ledger, jobs = JobLedger(spark, f"budget-{id(eng)}"), []
     run_round = eng.run_round
+
+    def in_boot_group(fn):
+        def call():
+            with ledger.group("bootstrap"):
+                return fn()
+        return call
 
     def counted(r):
         with ledger.group(f"round{r}") as gid:
@@ -316,8 +323,10 @@ def _round_jobs(spark, eng, max_rounds):
         return s
 
     eng.run_round = counted
+    eng.recover = in_boot_group(eng.recover)
+    eng.bootstrap = in_boot_group(eng.bootstrap)
     eng.run(max_rounds=max_rounds)
-    return jobs
+    return ledger.counts(f"budget-{id(eng)}:bootstrap")[0], jobs
 
 
 def test_driver_round_job_budget_mock(spark, tmp_path):
@@ -338,7 +347,7 @@ def test_driver_round_job_budget_mock(spark, tmp_path):
                       [f"https://{host_name(h)}/list/1" for h in range(8)],
                       now=NOW, fetch_partitions=4)
     try:
-        jobs = _round_jobs(spark, eng, 3)
+        _, jobs = _round_jobs(spark, eng, 3)
     finally:
         pages.unpersist()
     assert len(jobs) == 3, jobs
@@ -381,7 +390,10 @@ scrapers:
 def test_driver_round_job_budget_live(spark, tmp_path):
     """Under the size policy, a live round over loopback commits on the
     driver but keeps its kernel on the cluster: 1 or 2 Spark jobs (the
-    kernel's shuffle and its collect)."""
+    kernel's shuffle and its collect). recover() and bootstrap() launch
+    none: the rounds table is read with pyarrow, and the seeds take the
+    outlinks' identity step (folded on the driver) and driver-side
+    new-url commit."""
     from goskyr_spark.config import loads_config
     from goskyr_spark.spark.fetchers import StaticFetcher
 
@@ -394,8 +406,9 @@ def test_driver_round_job_budget_live(spark, tmp_path):
                           [f"http://127.0.0.1:{srv.server_port}/list/1"],
                           now=NOW, fetch_partitions=2,
                           live_fetcher=lambda: StaticFetcher(timeout=5))
-        jobs = _round_jobs(spark, eng, 4)
+        boot_jobs, jobs = _round_jobs(spark, eng, 4)
     finally:
         srv.shutdown()
         srv.server_close()
+    assert boot_jobs == 0
     assert len(jobs) == 2 and all(1 <= j <= 2 for _, j in jobs), jobs

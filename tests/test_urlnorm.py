@@ -95,7 +95,8 @@ LIST_HTML = """<html><body><div class="listing">
 DETAIL_HTML = "<html><body><h1>detail</h1></body></html>"
 
 
-def _crawl_messy(spark, tmp_path, name, canonicalize):
+def _crawl_messy(spark, tmp_path, name, canonicalize,
+                 seeds=("HTTPS://h0.TEST/list/1",)):
     from datetime import datetime, timezone
 
     from goskyr_spark.spark.crawl import CrawlEngine
@@ -106,14 +107,14 @@ def _crawl_messy(spark, tmp_path, name, canonicalize):
          ("https://h0.test/event/1/1", DETAIL_HTML)],
         "url string, html string")
     eng = CrawlEngine(spark, str(tmp_path / name), pages, event_scraper,
-                      ["HTTPS://h0.TEST/list/1"],
+                      list(seeds),
                       now=datetime(2026, 3, 1, tzinfo=timezone.utc),
                       fetch_partitions=2,
                       canonicalize_outlinks=canonicalize)
     eng.run(max_rounds=5)
-    return [(r["url"], r["status"]) for r in
-            eng.t_fetched.read(spark).orderBy("round", "fetch_seq")
-            .collect()]
+    return eng, [(r["url"], r["status"]) for r in
+                 eng.t_fetched.read(spark).orderBy("round", "fetch_seq")
+                 .collect()]
 
 
 # the canon expression runs in the fetch/extract kernel's job; its
@@ -121,16 +122,23 @@ def _crawl_messy(spark, tmp_path, name, canonicalize):
 @pytest.mark.parametrize("plan", ["driver", "cluster", "driver_spark_kernel"],
                          indirect=True)
 def test_engine_canonicalize_outlinks(spark, tmp_path, plan):
-    # ON: the uppercase seed and both spellings of the detail link
-    # normalize to one identity -> every fetch hits a real page
-    on = _crawl_messy(spark, tmp_path, "on", True)
+    # ON: both spellings of the seed and both spellings of the detail
+    # link normalize to one identity -> every fetch hits a real page;
+    # the two seeds are one round -1 frontier row
+    eng, on = _crawl_messy(
+        spark, tmp_path, "on", True,
+        ("HTTPS://h0.TEST/list/1", "https://h0.test/list/1"))
     assert ("https://h0.test/list/1", "ok") in on
     assert on.count(("https://h0.test/event/1/1", "ok")) == 1
     assert all(st == "ok" for _, st in on)
     assert len(on) == 2
+    seeded = eng.t_frontier.read(spark).filter("discovered_round = -1")
+    assert [r["url"] for r in seeded.collect()] == ["https://h0.test/list/1"]
+    boot = eng.t_rounds.read(spark).filter("round = -1").collect()
+    assert [r["n_new_urls"] for r in boot] == [1]
     # OFF: the dot-segment spelling stays a distinct frontier row and
     # misses the pages table; the mixed-case seed misses entirely
-    off = _crawl_messy(spark, tmp_path, "off", False)
+    _, off = _crawl_messy(spark, tmp_path, "off", False)
     assert ("HTTPS://h0.TEST/list/1", "missing") in off
 
 

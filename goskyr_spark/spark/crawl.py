@@ -33,7 +33,7 @@ Round plan: each phase has at most one driver and one cluster
 implementation, and which one runs is decided once per round by
 round_plan(), the single size policy, from numbers the driver already
 holds (manifest file bytes, slab stats, the round's dequeued and new
-URL counts). The dequeue runs on the driver (pandas over the live files)
+URL counts). The dequeue runs on the driver (pyarrow over the live files)
 while its input is under DRIVER_STATE_BYTES, else as one shuffle-free
 Spark job over the host buckets. A url's identity (its url,
 canonicalized when asked, xxhash64 and host, all JVM expressions) is
@@ -129,7 +129,6 @@ from datetime import datetime, timezone
 from urllib.parse import urlsplit
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -184,8 +183,11 @@ PAGES_ROW_GROUP_BYTES = 256 << 10
 # driver: 8 B/hash, so 100k new URLs are 800 KB of slab input
 DRIVER_ROWS = 100_000
 # on-disk bytes of dequeue input (or of the seen table) the driver reads
-# itself: ~64 MB ≈ 10^6 pending rows, the crossover where one pandas
-# sort still beats a Spark job launch
+# itself. Not a measured crossover: at 2,000,000 frontier rows over
+# 20,000 hosts, 32-64 MB on disk (scripts/dequeue_scale_bench.py,
+# local[4], 4 vCPU), the driver dequeue took 1.9-2.5 s with its parquet
+# reads, the cluster dequeue 1.8-2.0 s over a flat layout and 0.8-1.0 s
+# over the rule-written one
 DRIVER_STATE_BYTES = 64 << 20
 # estimated slab filter bytes up to which the seen test broadcasts them
 SEEN_BROADCAST_BYTES = 64 << 20
@@ -342,7 +344,6 @@ DEQUEUED_SCHEMA = StructType(FRONTIER_SCHEMA.fields +
                              [StructField("_host_seq", LongType())])
 
 FRONTIER_COLS = FRONTIER_SCHEMA.names
-DEQUEUED_COLS = DEQUEUED_SCHEMA.names
 _FRONTIER_ARROW = to_arrow_schema(FRONTIER_SCHEMA)
 _DEQUEUED_ARROW = to_arrow_schema(DEQUEUED_SCHEMA)
 _DEBUG_ARROW = to_arrow_schema(DEBUG_SCHEMA)
@@ -505,7 +506,7 @@ def _slab_build(groups, prev, caps, round_no):
         [dict(zip(_SLAB_ARROW.names, r)) for r in rows], schema=_SLAB_ARROW)
 
 
-# --- dequeue: the pandas arithmetic, once --------------------------------------
+# --- dequeue: the arithmetic, once -------------------------------------------
 
 def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
     """The dequeue over Arrow tables, run by the driver over all live
@@ -513,27 +514,45 @@ def _dequeue_frame(frontier, fetched, host_stats, per_host, budget, weights):
     pending = frontier rows whose url is not in `fetched`; _eff =
     priority plus, with weights = (error, yield), the adaptive per-host
     adjustment from the host_stats deltas (integer sums then one float64
-    expression, so every task computes a host's value bit-identically);
-    per-host top-k by (_eff, url), ranked 1..k per host as _host_seq;
-    then the round budget. pandas, (_eff, url) order."""
-    pdf = frontier.to_pandas()
+    expression, so every task computes a host's value bit-identically;
+    a host with no stats, or a NaN adjustment, adds 0.0); per-host top-k
+    by (_eff, url), ranked 1..k per host as _host_seq; then the round
+    budget. A _DEQUEUED_ARROW table plus _eff, in (_eff, url) order."""
     if fetched is not None and fetched.num_rows:
-        pdf = pdf[~pdf["url"].isin(set(fetched.column("url").to_pylist()))]
-    eff = pdf["priority"].to_numpy(dtype="float64")
+        frontier = frontier.filter(pc.invert(pc.is_in(
+            frontier["url"], value_set=fetched["url"].combine_chunks())))
+    eff = frontier["priority"].to_numpy().astype(np.float64)
     if weights is not None and host_stats is not None \
             and host_stats.num_rows:
-        g = host_stats.to_pandas().groupby("host", sort=False).agg(
-            _nf=("n_fetched", "sum"), _nok=("n_ok", "sum"),
-            _ni=("n_items", "sum"))
-        nf, nok, ni = (g[c].to_numpy(dtype="float64")
-                       for c in ("_nf", "_nok", "_ni"))
-        adj = (weights[0] * ((nf - nok) / nf)
-               - weights[1] * np.minimum(1.0, ni / np.maximum(nok, 1.0)))
-        eff = eff + pdf["host"].map(dict(zip(g.index, adj))) \
-            .fillna(0.0).to_numpy(dtype="float64")
-    pdf = pdf.assign(_eff=eff).sort_values(["_eff", "url"])
-    pdf = pdf.assign(_host_seq=pdf.groupby("host", sort=False).cumcount() + 1)
-    return pdf[pdf["_host_seq"] <= per_host].head(budget)
+        g = host_stats.group_by("host", use_threads=False).aggregate(
+            [("n_fetched", "sum"), ("n_ok", "sum"), ("n_items", "sum")])
+        nf, nok, ni = (g[c].to_numpy().astype(np.float64) for c in
+                       ("n_fetched_sum", "n_ok_sum", "n_items_sum"))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            adj = (weights[0] * ((nf - nok) / nf)
+                   - weights[1] * np.minimum(1.0, ni / np.maximum(nok, 1.0)))
+        # a row's host index into g, len(g) (adjustment 0.0) when absent
+        at = pc.index_in(frontier["host"],
+                         value_set=g["host"].combine_chunks(), skip_nulls=True)
+        adj = np.append(np.where(np.isnan(adj), 0.0, adj), 0.0)
+        eff = eff + adj[pc.fill_null(at, len(g)).to_numpy()]
+    t = frontier.append_column("_eff", pa.array(eff)).sort_by(
+        [("_eff", "ascending"), ("url", "ascending")])
+    # rank within host: a stable sort by host keeps each host's rows in
+    # (_eff, url) order, so a row's rank is its distance from its run's
+    # start
+    codes = pc.fill_null(t["host"].combine_chunks().dictionary_encode()
+                         .indices, -1).to_numpy()
+    by_host = np.argsort(codes, kind="stable")
+    sc = codes[by_host]
+    pos = np.arange(len(sc))
+    run = np.ones(len(sc), bool)
+    run[1:] = sc[1:] != sc[:-1]
+    starts = np.maximum.accumulate(np.where(run, pos, 0))
+    seq = np.empty(len(sc), np.int64)
+    seq[by_host] = pos - starts + 1
+    t = t.add_column(len(_FRONTIER_ARROW), "_host_seq", pa.array(seq))
+    return t.filter(pa.array(seq <= per_host)).slice(0, budget)
 
 
 # --- the host-bucketed layout: one write rule, one read rule -----------------
@@ -946,50 +965,49 @@ class CrawlEngine:
         return (float(self.adaptive_error_weight),
                 float(self.adaptive_yield_weight))
 
+    def _dequeue_inputs(self):
+        """The dequeue's input files, relative to their tables:
+        [(frontier, its live files), (fetched, the post-compaction files
+        the anti-join reads), (host_stats, its files when adaptive, else
+        none)]. round_plan() measures these bytes, and both dequeues
+        read these files."""
+        return [(self.t_frontier, self.t_frontier.manifest()["files"]),
+                (self.t_fetched, self._antijoin_fetched_files()[0]),
+                (self.t_host_stats, self.t_host_stats.manifest()["files"]
+                 if self.adaptive_priority else [])]
+
     def _dequeue_driver(self):
-        """Driver-side dequeue: _dequeue_frame once over all live
-        frontier files, the post-compaction fetched files and (adaptive)
-        the host_stats files — zero Spark jobs. pandas, DEQUEUED_COLS."""
-        fr = self.t_frontier.manifest()["files"]
+        """Driver-side dequeue: _dequeue_frame once over all the
+        _dequeue_inputs() files, read with pyarrow — zero Spark jobs. A
+        _DEQUEUED_ARROW table (empty when there is no frontier)."""
+        (ft, fr), (at, aj), (ht, hs) = self._dequeue_inputs()
         if not fr:
-            return pd.DataFrame(columns=DEQUEUED_COLS)
-        aj, _c = self._antijoin_fetched_files()
-        hs = (self.t_host_stats.manifest()["files"]
-              if self.adaptive_priority else [])
+            return _DEQUEUED_ARROW.empty_table()
 
         def read(table, files, schema):
             return pa.concat_tables(
                 [self._read_file_cached(table.dir, f, schema)
                  for f in files]) if files else None
 
-        pdf = _dequeue_frame(read(self.t_frontier, fr, _FRONTIER_ARROW),
-                             read(self.t_fetched, aj, _URL_ARROW),
-                             read(self.t_host_stats, hs, _HOST_SUMS_ARROW),
-                             self.per_host_budget, self.round_budget,
-                             self._adaptive_weights())
-        return pdf[DEQUEUED_COLS].reset_index(drop=True)
+        return _dequeue_frame(read(ft, fr, _FRONTIER_ARROW),
+                              read(at, aj, _URL_ARROW),
+                              read(ht, hs, _HOST_SUMS_ARROW),
+                              self.per_host_budget, self.round_budget,
+                              self._adaptive_weights()).drop_columns("_eff")
 
     def _dequeue_cluster(self):
         """Shuffle-free cluster dequeue: T tasks (a power of two, sized
         by the bytes they read and fetch_partitions), task t reading its
-        share (_dequeue_reads) of the live frontier, the post-compaction
-        fetched and (adaptive) host_stats files with pyarrow and running
-        _dequeue_frame over it; the only exchange is the final global
-        TakeOrdered merge over ≤ T × round_budget survivors. A host's
-        rows reach exactly one task whatever moduli its files were
-        written under, so the rows equal the driver dequeue's."""
-        # anti-join only needs fetched files newer than the effective
-        # frontier compaction — task memory and read volume track work
-        # since the last compaction, not history
-        aj = set(self._antijoin_fetched_files()[0])
-
-        def files(table, keep=None):
-            return {os.path.join(table.dir, f): bn
-                    for f, bn in table.bucket_map().items()
-                    if keep is None or f in keep}
-
-        maps = [files(self.t_frontier), files(self.t_fetched, aj),
-                files(self.t_host_stats) if self.adaptive_priority else {}]
+        share (_dequeue_reads) of the _dequeue_inputs() files with
+        pyarrow and running _dequeue_frame over it; the only exchange is
+        the final global TakeOrdered merge over ≤ T × round_budget
+        survivors. A host's rows reach exactly one task whatever moduli
+        its files were written under, so the rows equal the driver
+        dequeue's."""
+        maps = []
+        for table, rel in self._dequeue_inputs():
+            bm = table.bucket_map()
+            maps.append({os.path.join(table.dir, f): bm[f] for f in rel})
         if not maps[0]:
             return self.spark.createDataFrame([], DEQUEUED_SCHEMA)
         # task count from the BYTES the tasks will read (driver-side
@@ -1005,7 +1023,6 @@ class CrawlEngine:
         weights = self._adaptive_weights()
         out_spark = StructType(DEQUEUED_SCHEMA.fields +
                                [StructField("_eff", DoubleType())])
-        out_arrow = to_arrow_schema(out_spark)
 
         def kernel(batches):
             for batch in batches:
@@ -1013,14 +1030,10 @@ class CrawlEngine:
                     frontier, fetched, host_stats = (
                         _read_share(reads[t], s, t, n_tasks)
                         for reads, s in zip(bc.value, schemas))
-                    if frontier is None:
-                        continue
-                    pdf = _dequeue_frame(frontier, fetched, host_stats,
-                                         per_host, budget, weights)
-                    if len(pdf):
-                        yield pa.RecordBatch.from_pandas(
-                            pdf[out_arrow.names], schema=out_arrow,
-                            preserve_index=False)
+                    if frontier is not None:
+                        yield from _dequeue_frame(
+                            frontier, fetched, host_stats, per_host,
+                            budget, weights).to_batches()
 
         # one task id per partition: task t runs in partition t
         return (self.spark.range(0, n_tasks, 1, n_tasks)
@@ -1239,7 +1252,7 @@ class CrawlEngine:
         sid = F.pmod(F.col("url_hash"), F.lit(n_slabs))
         if hashes is not None:
             new = spark.createDataFrame(
-                pd.DataFrame({"url_hash": np.asarray(hashes, np.int64)}),
+                pa.table({"url_hash": np.asarray(hashes, np.int64)}),
                 "url_hash long")
         else:
             new = spark.read.parquet(*files).select("url_hash")
@@ -1346,12 +1359,8 @@ class CrawlEngine:
         whose files are no longer among these live inputs or the live
         slab files (compacted away, or pruned from the dequeue
         anti-join)."""
-        aj, _c = self._antijoin_fetched_files()
-        hs = (self.t_host_stats.manifest()["files"]
-              if self.adaptive_priority else [])
-        live = [(self.t_frontier, self.t_frontier.manifest()["files"]),
-                (self.t_fetched, aj), (self.t_host_stats, hs),
-                (self.t_seen, self.t_seen.manifest()["files"])]
+        live = self._dequeue_inputs() + [
+            (self.t_seen, self.t_seen.manifest()["files"])]
         slabs = (self.t_slabs, self.t_slabs.manifest()["files"])
         paths = {os.path.join(t.dir, f)
                  for t, files in live + [slabs] for f in files}
@@ -1405,9 +1414,7 @@ class CrawlEngine:
         rows from the driver dequeue, else a cached DataFrame of
         DEQUEUED_SCHEMA rows from the cluster one."""
         if plan.dequeue_driver:
-            t = pa.Table.from_pandas(self._dequeue_driver(),
-                                     schema=_DEQUEUED_ARROW,
-                                     preserve_index=False)
+            t = self._dequeue_driver()
             return t, t.num_rows
         df = self._cache(self._dequeue_cluster())
         return df, df.count()

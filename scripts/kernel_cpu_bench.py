@@ -1,4 +1,5 @@
-"""Per-call CPU cost of two kernel steps that run with no Spark at all.
+"""Per-call CPU cost of three driver or kernel steps that run with no
+Spark at all.
 
 ``python scripts/kernel_cpu_bench.py [REPEATS]`` (default 5) prints:
 
@@ -8,7 +9,11 @@
   ``yaml.CSafeLoader`` and the pure-Python ``yaml.SafeLoader``;
 - ``CuckooFilter.insert_many`` seconds at 812, 6,500 and 50,000 sorted
   random hashes into a fresh filter sized for them (load 0.84), the
-  fill a slab build runs (``spark/crawl.py`` ``_slab_build``).
+  fill a slab build runs (``spark/crawl.py`` ``_slab_build``);
+- ``_dequeue_frame`` ms at ``crawl_wide``'s tail-round shape (13,400
+  frontier rows over 505 hosts, 13,300 of their urls fetched, 8 rounds
+  of host_stats deltas, per-host budget 64), adaptive priority off and
+  on: the whole driver dequeue but its parquet reads.
 
 Each figure is the median of REPEATS timed runs after one warm-up."""
 import os
@@ -17,11 +22,14 @@ import sys
 import time
 
 import numpy as np
+import pyarrow as pa
 import yaml
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from goskyr_spark import config  # noqa: E402
 from goskyr_spark.kernels.cuckoo import CuckooFilter  # noqa: E402
+from goskyr_spark.spark.crawl import (  # noqa: E402
+    _FRONTIER_ARROW, _HOST_SUMS_ARROW, _URL_ARROW, _dequeue_frame)
 from goskyr_spark.synth import EVENT_SCRAPER_YAML  # noqa: E402
 
 
@@ -33,6 +41,27 @@ def median_s(fn, repeats):
         fn()
         out.append(time.perf_counter() - t0)
     return statistics.median(out)
+
+
+def tail_round_tables(rng, n=13_400, n_hosts=505, n_fetched=13_300,
+                      rounds=8):
+    """(frontier, fetched, host_stats) Arrow tables at crawl_wide's
+    tail-round shape, in the schemas the driver dequeue reads."""
+    host = [f"host{h}.test" for h in rng.integers(0, n_hosts, n)]
+    url = [f"https://{h}/event/{i}" for i, h in enumerate(host)]
+    depth = rng.integers(0, 4, n)
+    frontier = pa.table([url, rng.integers(-2**63, 2**63 - 1, n), host,
+                         depth.astype(np.float64), depth,
+                         np.zeros(n, np.int64), np.ones(n, np.int64)],
+                        schema=_FRONTIER_ARROW)
+    fetched = pa.table([rng.permutation(url)[:n_fetched].tolist()],
+                       schema=_URL_ARROW)
+    nf = rng.integers(1, 40, n_hosts * rounds)
+    ok = rng.integers(0, nf + 1)
+    host_stats = pa.table(
+        [[f"host{h % n_hosts}.test" for h in range(n_hosts * rounds)],
+         nf, ok, rng.integers(0, 12 * ok + 1)], schema=_HOST_SUMS_ARROW)
+    return frontier, fetched, host_stats
 
 
 def main(repeats):
@@ -58,6 +87,12 @@ def main(repeats):
         s = median_s(lambda: CuckooFilter.sized_for(n).insert_many(keys),
                      repeats)
         print(f"insert_many {n} hashes: {s:.4f} s")
+    tables = tail_round_tables(rng)
+    for label, weights in (("off", None), ("on", (2.0, 0.5))):
+        s = median_s(lambda: _dequeue_frame(*tables, 64, 10_000_000,
+                                            weights), repeats)
+        print(f"_dequeue_frame tail round, adaptive {label}: "
+              f"{1e3 * s:.2f} ms")
 
 
 if __name__ == "__main__":

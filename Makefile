@@ -32,7 +32,7 @@ floor:	# fixed cost of a Python task: trivial mapInArrow job wall + launch -> UD
 	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-$$(nproc)} $(PY) scripts/python_task_floor.py
 
 .PHONY: kernel-cpu
-kernel-cpu:	# no Spark: loads_config ms/call per YAML loader, cuckoo insert_many s at 812/6,500/50,000 hashes, _dequeue_frame ms at crawl_wide's tail-round shape
+kernel-cpu:	# no Spark: loads_config ms/call per YAML loader, cuckoo insert_many s at 812/6,500/50,000 hashes, _dequeue_frame ms and the driver slab probe ms at crawl_wide's tail-round shape
 	$(PY) scripts/kernel_cpu_bench.py
 
 .PHONY: bench-history

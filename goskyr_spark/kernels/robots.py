@@ -11,6 +11,7 @@ unmatched paths are allowed.
 from __future__ import annotations
 
 import re
+from urllib.parse import urlsplit
 
 
 class RobotsRules:
@@ -115,5 +116,9 @@ def parse_robots(text, user_agent: str = "*") -> RobotsRules:
         [(allow, pat, _compile_path(pat)) for allow, pat in rules], delay)
 
 
-def robots_url(host: str, scheme: str = "https") -> str:
-    return f"{scheme}://{host}/robots.txt"
+def robots_url(url: str) -> str:
+    """robots.txt of a page's own scheme and netloc: the port is kept (a
+    host key strips it; the request must not), and a url without a
+    scheme gets https."""
+    sp = urlsplit(url)
+    return f"{sp.scheme or 'https'}://{sp.netloc}/robots.txt"

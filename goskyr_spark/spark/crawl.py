@@ -84,7 +84,11 @@ one builder, _slab_build, makes every slab row — in-process while the
 round's new URLs are under DRIVER_ROWS and the seen test broadcasts,
 else once per partition of a slab-aligned shuffle whose tasks read and
 write the blobs themselves. Hashes are sorted before insert, so every
-plan writes the same slab rows.
+plan writes the same slab rows. Every blob read goes through one
+loader, _slab_blobs: a consumer (the driver probe, the broadcast the
+driver builds, a partitioned seen task, a slab build) asks for the slab
+ids it holds and reads each file holding their latest rows once, pruned
+to those ids; nothing is cached across calls.
 
 Determinism: every ordering is an explicit sort key (priority, url,
 host); the virtual politeness clock is a pure function of the dequeue
@@ -143,7 +147,7 @@ from pyspark.sql.types import (
 
 from ..kernels.cuckoo import BloomFilter, CuckooFilter
 from ..kernels.filters import filter_item, initialize_filters
-from ..kernels.robots import parse_robots
+from ..kernels.robots import parse_robots, robots_url
 from ..kernels.scrape import scrape_page
 from ..ops.urlnorm import percent_normalize_str, url_normalize_expr
 from .fetchers import FetchError, StoreFetcher
@@ -177,6 +181,11 @@ BUCKET_BYTES = 4 << 20
 # parquet row group bound of the pages table: a page read decodes the
 # html of the row groups holding its url, not of its whole bucket file
 PAGES_ROW_GROUP_BYTES = 256 << 10
+# adaptive_priority's weights: a host's error rate (failed fetches per
+# fetch) delays its rows, its item yield (items per ok fetch, at most 1)
+# brings them forward
+ADAPTIVE_ERROR_WEIGHT = 2.0
+ADAPTIVE_YIELD_WEIGHT = 0.5
 
 # --- the size policy: read by round_plan() only ------------------------------
 # dequeued (or new) URLs per round up to which the round commits on the
@@ -369,64 +378,49 @@ def _read_parquet(paths, schema):
 
 
 # --- slab blob access (executors and driver) ----------------------------------
-# Process-local cache of deserialization inputs: one (file, slab, round)
-# triple is read at most once per Python worker (or driver) per slab
-# generation. The parquet read prunes to the single matching row
-# (predicate pushdown on slab_id/round), so a task touches only its own
-# slabs' bytes — never the whole filter set.
-_SLAB_BLOB_CACHE = {}
+
+def _slab_blobs(latest, sids):
+    """{sid: (bloom, cuckoo) bytes} of the latest rows of the slabs
+    `sids`, where latest is a _slab_latest() map {sid: (path, round,
+    ...)} or a subset of it. Each file holding a requested latest row is
+    read once, pruned to its requested slab ids (predicate pushdown), so
+    a reader touches only its own slabs' bytes; an id without a row is
+    absent."""
+    by_file = {}
+    for sid in sids:
+        if sid in latest:
+            by_file.setdefault(latest[sid][0], []).append(sid)
+    out = {}
+    for path, ids in by_file.items():
+        t = pq.read_table(path, columns=["slab_id", "round", "bloom", "cuckoo"],
+                          filters=[("slab_id", "in", ids)])
+        for sid, rnd, bloom, cuckoo in zip(*t.to_pydict().values()):
+            if rnd == latest[sid][1]:
+                out[sid] = (bloom, cuckoo)
+    return out
 
 
-def _read_slab_blobs(path, sid, round_no):
-    key = (path, int(sid), int(round_no))
-    hit = _SLAB_BLOB_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t = pq.read_table(path, columns=["slab_id", "round", "bloom", "cuckoo"],
-                      filters=[("slab_id", "==", int(sid)),
-                               ("round", "==", int(round_no))])
-    if t.num_rows == 0:
-        return None
-    val = (t.column("bloom")[0].as_py(), t.column("cuckoo")[0].as_py())
-    if len(_SLAB_BLOB_CACHE) > 64:  # bound worker memory across rounds
-        _SLAB_BLOB_CACHE.clear()
-    _SLAB_BLOB_CACHE[key] = val
-    return val
+def _decode(blobs):
+    """{sid: (BloomFilter, CuckooFilter)} of {sid: (bloom, cuckoo) bytes}."""
+    return {sid: (BloomFilter.from_bytes(b), CuckooFilter.from_bytes(c))
+            for sid, (b, c) in blobs.items()}
 
 
-def _latest_blobs(latest):
-    """blobs(sid) over a _slab_latest() map {sid: (path, round, ...)}:
-    the (bloom, cuckoo) bytes of that slab's latest row, or None."""
-    def blobs(sid):
-        at = latest.get(sid)
-        return None if at is None else _read_slab_blobs(at[0], sid, at[1])
-
-    return blobs
+def _slab_ids(hashes, n_slabs):
+    """The distinct slab ids (url_hash mod n_slabs) of int64 hashes."""
+    return set(np.unique(_u64(hashes) % np.uint64(n_slabs)).tolist())
 
 
-def _filter_loader(blobs):
-    """get(sid) → decoded (BloomFilter, CuckooFilter) or None, decoding
-    each slab once; blobs(sid) → its (bloom, cuckoo) bytes or None."""
-    loaded = {}
-
-    def get(sid):
-        if sid not in loaded:
-            v = blobs(sid)
-            loaded[sid] = None if v is None else (
-                BloomFilter.from_bytes(v[0]), CuckooFilter.from_bytes(v[1]))
-        return loaded[sid]
-
-    return get
-
-
-def _maybe_seen(hashes, n_slabs, get_filters):
+def _maybe_seen(hashes, n_slabs, filters):
     """Bool mask over int64 url hashes: bloom 'absent' ⇒ definitely new;
-    cuckoo refines bloom positives."""
+    cuckoo refines bloom positives. filters = {sid: (BloomFilter,
+    CuckooFilter)}; a slab absent from it has no row, so its hashes are
+    new."""
     arr = _u64(hashes)
     sids = (arr % np.uint64(n_slabs)).astype(np.int64)
     maybe = np.zeros(len(arr), dtype=bool)
     for sid in np.unique(sids):
-        pair = get_filters(int(sid))
+        pair = filters.get(int(sid))
         if pair is not None:
             sel = sids == sid
             maybe[sel] = (pair[0].contains_many(arr[sel])
@@ -489,7 +483,7 @@ def _slab_build(groups, prev, caps, round_no):
     builder, run in-process by the driver and once per partition by the
     cluster kernel. groups = {sid: int64 hashes}; a sid with a capacity
     in caps is built fresh from its hashes at it, any other inserts them
-    into prev(sid), its previous (bloom, cuckoo) blobs. Hashes are
+    into prev[sid], its previous (bloom, cuckoo) blobs. Hashes are
     sorted first, so a row depends only on the slab's hash set, previous
     blobs and capacity, never on arrival order. An insert whose cuckoo
     overflows gives a row with NULL blobs."""
@@ -498,7 +492,7 @@ def _slab_build(groups, prev, caps, round_no):
         arr = np.sort(_u64(groups[sid]))
         cap = caps.get(sid)
         f = (_fresh_filters(arr, cap) if cap is not None
-             else _insert_filters(prev(sid), arr))
+             else _insert_filters(prev[sid], arr))
         rows.append((sid, round_no, None, None, 0, 0) if f is None else
                     (sid, round_no, f[0].to_bytes(), f[1].to_bytes(),
                      f[1].count, f[1].nbuckets * CuckooFilter.SLOTS))
@@ -639,13 +633,6 @@ def _frontier_rows(outlinks, round_no):
         schema=_FRONTIER_ARROW)
 
 
-def _robots_url(url):
-    """robots.txt of a page's own scheme and netloc (the host key strips
-    ports; the request must not)."""
-    sp = urlsplit(url)
-    return f"{sp.scheme or 'https'}://{sp.netloc}/robots.txt"
-
-
 def _u64(int64_array):
     return np.asarray(int64_array, dtype=np.int64).view(np.uint64)
 
@@ -667,9 +654,7 @@ class CrawlEngine:
                  slab_capacity=4096, now=None, fetch_partitions=None,
                  debug=False,
                  live_fetcher=None, compact_every=None,
-                 adaptive_priority=False,
-                 adaptive_yield_weight=0.5, adaptive_error_weight=2.0,
-                 canonicalize_outlinks=False):
+                 adaptive_priority=False, canonicalize_outlinks=False):
         assert n_slabs & (n_slabs - 1) == 0, "n_slabs must be a power of two"
         self.spark = spark
         self.store = SnapshotStore(workdir)
@@ -718,11 +703,9 @@ class CrawlEngine:
         # politeness — is untouched; only cross-host selection/order
         # changes. Default OFF: the classic digest is bit-identical.
         #   eff_priority = priority
-        #       + error_weight * (n_fetched - n_ok) / n_fetched
-        #       - yield_weight * min(1, n_items / max(n_ok, 1))
+        #       + ADAPTIVE_ERROR_WEIGHT * (n_fetched - n_ok) / n_fetched
+        #       - ADAPTIVE_YIELD_WEIGHT * min(1, n_items / max(n_ok, 1))
         self.adaptive_priority = adaptive_priority
-        self.adaptive_yield_weight = adaptive_yield_weight
-        self.adaptive_error_weight = adaptive_error_weight
         # canonicalize_outlinks=True applies RFC 3986 syntax-based
         # normalization (ops/urlnorm.py — lowercase scheme/host, default
         # ports, dot segments, fragments) to every outlink AND seed
@@ -962,8 +945,7 @@ class CrawlEngine:
     def _adaptive_weights(self):
         if not self.adaptive_priority:
             return None
-        return (float(self.adaptive_error_weight),
-                float(self.adaptive_yield_weight))
+        return ADAPTIVE_ERROR_WEIGHT, ADAPTIVE_YIELD_WEIGHT
 
     def _dequeue_inputs(self):
         """The dequeue's input files, relative to their tables:
@@ -1227,8 +1209,9 @@ class CrawlEngine:
 
     def _slabs_driver(self, round_no, caps, rebuild, latest, hashes, files):
         """_slab_build in-process over the driver-held hashes and, for
-        the `rebuild` slabs, their seen slices read by pyarrow; one
-        pyarrow append of the rows that did not overflow."""
+        the `rebuild` slabs, their seen slices read by pyarrow, with the
+        insert slabs' previous blobs from _slab_blobs; one pyarrow
+        append of the rows that did not overflow."""
         groups = _by_slab(hashes, self.n_slabs)
         if rebuild:
             seen = _read_parquet(
@@ -1236,8 +1219,9 @@ class CrawlEngine:
                  for f in self.t_seen.manifest()["files"]], _HASH_ARROW)
             by_sid = _by_slab(seen.column(0).to_numpy(), self.n_slabs)
             groups.update({sid: by_sid[sid] for sid in rebuild})
-        t = _slab_build({sid: groups[sid] for sid in caps},
-                        _latest_blobs(latest), caps, round_no)
+        prev = _slab_blobs(latest, [s for s in caps if caps[s] is None])
+        t = _slab_build({sid: groups[sid] for sid in caps}, prev, caps,
+                        round_no)
         self.t_slabs.append_arrow(t.filter(pc.is_valid(t["cuckoo"])),
                                   {"round": round_no})
 
@@ -1245,9 +1229,9 @@ class CrawlEngine:
         """_slab_build in Spark tasks, once per partition of a
         slab-aligned shuffle of the new hashes (driver-held, or re-read
         from `files`) and, for the `rebuild` slabs, their seen slices. Each
-        task reads its slabs' previous blobs from slab parquet and the
-        rows are written from the executors: blobs never reach the
-        driver."""
+        task reads its insert slabs' previous blobs with _slab_blobs (one
+        pruned read per slab file) and the rows are written from the
+        executors: blobs never reach the driver."""
         spark, n_slabs = self.spark, self.n_slabs
         sid = F.pmod(F.col("url_hash"), F.lit(n_slabs))
         if hashes is not None:
@@ -1267,9 +1251,10 @@ class CrawlEngine:
             hs = [np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64) for b in batches]
             if hs:
+                groups = _by_slab(np.concatenate(hs), n_slabs)
                 yield from _slab_build(
-                    _by_slab(np.concatenate(hs), n_slabs),
-                    _latest_blobs(bc.value), caps, round_no).to_batches()
+                    groups, _slab_blobs(bc.value, groups), caps,
+                    round_no).to_batches()
 
         n_parts = max(1, min(n_slabs, self.fetch_partitions))
         self.t_slabs.append(inp.repartition(n_parts, sid)
@@ -1300,13 +1285,15 @@ class CrawlEngine:
         return definitely_new.unionByName(confirmed_new)
 
     def _flag_seen(self, candidates, partitioned):
-        """Append maybe_seen to the candidates. Broadcast: every task
-        gets all slab blobs (no shuffle of the candidates; right up to
-        tens of MB of filter bytes — broadcast, not closure capture, or
-        the blobs would be pickled into every task). Partitioned (the
-        10^10-URL path): candidates shuffle by slab id and each task
-        loads ONLY its slabs' blobs from slab parquet (worker-cached,
-        predicate-pushdown read)."""
+        """Append maybe_seen to the candidates. Broadcast: the driver
+        reads all slab blobs (_slab_blobs) and every task gets them (no
+        shuffle of the candidates; right up to tens of MB of filter
+        bytes — broadcast, not closure capture, or the blobs would be
+        pickled into every task). Partitioned (the 10^10-URL path):
+        candidates shuffle by slab id and each task reads ONLY its
+        slabs' blobs from slab parquet, per Arrow batch the ones it has
+        not read yet, one pruned read per file. Either way a task
+        decodes each slab once."""
         n_slabs = self.n_slabs
         flag_schema = StructType(candidates.schema.fields +
                                  [StructField("maybe_seen", LongType())])
@@ -1319,14 +1306,17 @@ class CrawlEngine:
                                                      F.lit(n_slabs)))
                           .repartition(n_parts, "_sid").drop("_sid"))
         else:
-            blobs = _latest_blobs(latest)
-            bc = self._bc({sid: blobs(sid) for sid in latest})
+            bc = self._bc(_slab_blobs(latest, latest))
 
         def flag(batches):
-            get = _filter_loader(_latest_blobs(bc.value) if partitioned
-                                 else bc.value.get)
+            filters = {}
             for batch in batches:
-                maybe = _maybe_seen(batch.column("url_hash"), n_slabs, get)
+                hashes = batch.column("url_hash")
+                need = _slab_ids(hashes, n_slabs) - filters.keys()
+                filters.update(_decode(
+                    _slab_blobs(bc.value, need) if partitioned else
+                    {s: bc.value[s] for s in need if s in bc.value}))
+                maybe = _maybe_seen(hashes, n_slabs, filters)
                 yield pa.RecordBatch.from_arrays(
                     [*batch.columns, pa.array(maybe.astype(np.int64))],
                     names=[*batch.schema.names, "maybe_seen"])
@@ -1480,7 +1470,7 @@ class CrawlEngine:
                 delay = (parse_robots(body, user_agent).crawl_delay or 0.0
                          if body is not None else 0.0)
                 try:
-                    body = polite_get(host, _robots_url(url),
+                    body = polite_get(host, robots_url(url),
                                       delay).encode()
                     robots_out[host] = body
                 except FetchError as e:
@@ -1499,7 +1489,7 @@ class CrawlEngine:
             for batch in batches:
                 d = batch.to_pydict()
                 if prefetch is not None:
-                    prefetch(d["url"] + [_robots_url(u) for u in d["url"]],
+                    prefetch(d["url"] + [robots_url(u) for u in d["url"]],
                              d["host"])
                 # pass 1: robots for every host of the batch before any
                 # page GET, so pass 2 (rows round-robin across hosts by
@@ -1903,8 +1893,9 @@ class CrawlEngine:
         seen files — stricter-equivalent to the [url_hash, url]
         anti-join) and the frontier/seen/slab appends run driver-side.
         Returns n_new."""
-        maybe = _maybe_seen(t.column("url_hash"), self.n_slabs,
-                            _filter_loader(_latest_blobs(self._slab_latest())))
+        hashes = t.column("url_hash")
+        maybe = _maybe_seen(hashes, self.n_slabs, _decode(_slab_blobs(
+            self._slab_latest(), _slab_ids(hashes, self.n_slabs))))
         keep = ~maybe
         if maybe.any() and self.t_seen.exists():
             seen_urls = pa.concat_tables(

@@ -1,4 +1,4 @@
-"""Per-call CPU cost of three driver or kernel steps that run with no
+"""Per-call CPU cost of four driver or kernel steps that run with no
 Spark at all.
 
 ``python scripts/kernel_cpu_bench.py [REPEATS]`` (default 5) prints:
@@ -13,23 +13,31 @@ Spark at all.
 - ``_dequeue_frame`` ms at ``crawl_wide``'s tail-round shape (13,400
   frontier rows over 505 hosts, 13,300 of their urls fetched, 8 rounds
   of host_stats deltas, per-host budget 64), adaptive priority off and
-  on: the whole driver dequeue but its parquet reads.
+  on: the whole driver dequeue but its parquet reads;
+- the driver's seen-set probe in ms per call at ``crawl_wide``'s
+  tail-round shape (8 slabs of 1,700 hashes each, built at the default
+  slab capacity and written as one slab file, probed with 65 candidate
+  hashes): ``_slab_blobs`` (the file's parquet read), the filters'
+  decode and ``_maybe_seen`` together.
 
 Each figure is the median of REPEATS timed runs after one warm-up."""
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 import yaml
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from goskyr_spark import config  # noqa: E402
 from goskyr_spark.kernels.cuckoo import CuckooFilter  # noqa: E402
 from goskyr_spark.spark.crawl import (  # noqa: E402
-    _FRONTIER_ARROW, _HOST_SUMS_ARROW, _URL_ARROW, _dequeue_frame)
+    _FRONTIER_ARROW, _HOST_SUMS_ARROW, _URL_ARROW, _decode, _dequeue_frame,
+    _maybe_seen, _slab_blobs, _slab_build, _slab_ids)
 from goskyr_spark.synth import EVENT_SCRAPER_YAML  # noqa: E402
 
 
@@ -64,6 +72,24 @@ def tail_round_tables(rng, n=13_400, n_hosts=505, n_fetched=13_300,
     return frontier, fetched, host_stats
 
 
+def slab_probe_ms(rng, repeats, n_slabs=8, per_slab=1_700, n_probe=65):
+    """ms per driver seen probe over one slab file of n_slabs slabs."""
+    hashes = rng.integers(-2**63, 2**63 - 1, n_slabs * per_slab)
+    sids = hashes % n_slabs
+    slabs = _slab_build({s: hashes[sids == s] for s in range(n_slabs)}, {},
+                        {s: 4096 for s in range(n_slabs)}, 0)
+    probe = pa.array(rng.integers(-2**63, 2**63 - 1, n_probe))
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "slabs.parquet")
+        pq.write_table(slabs, path)
+        latest = {r["slab_id"]: (path, 0, r["count"], r["capacity"])
+                  for r in slabs.select(["slab_id", "count", "capacity"])
+                  .to_pylist()}
+        s = median_s(lambda: _maybe_seen(probe, n_slabs, _decode(
+            _slab_blobs(latest, _slab_ids(probe, n_slabs)))), repeats)
+    return 1e3 * s
+
+
 def main(repeats):
     text = EVENT_SCRAPER_YAML.format(host="bench.test")
     calls = 200
@@ -93,6 +119,8 @@ def main(repeats):
                                             weights), repeats)
         print(f"_dequeue_frame tail round, adaptive {label}: "
               f"{1e3 * s:.2f} ms")
+    print(f"slab probe tail round (8 slabs, 65 hashes): "
+          f"{slab_probe_ms(rng, repeats):.2f} ms/call")
 
 
 if __name__ == "__main__":

@@ -10,6 +10,7 @@ from datetime import datetime, timezone
 import pytest
 
 from conftest import small_buckets
+from goskyr_spark.spark import crawl
 from goskyr_spark.spark.crawl import CrawlEngine
 from goskyr_spark.synth import (SynthSpec, host_name, mixed_yield_factory,
                                 synth_pages_df)
@@ -40,13 +41,18 @@ def pages(spark):
     return df
 
 
-def run_crawl(spark, pages, wd, **kw):
-    seeds = [f"https://{host_name(h)}/list/1" for h in range(3)]
+@pytest.fixture(autouse=True)
+def yield_weight(monkeypatch):
     # yield weight 2.0: the item-yield bonus can outweigh a full depth
     # tier, so the zero-yield host's demotion is unambiguous
+    monkeypatch.setattr(crawl, "ADAPTIVE_YIELD_WEIGHT", 2.0)
+
+
+def run_crawl(spark, pages, wd, **kw):
+    seeds = [f"https://{host_name(h)}/list/1" for h in range(3)]
     eng = CrawlEngine(spark, str(wd), pages, mixed_factory, seeds,
                       now=NOW, per_host_budget=1, round_budget=2,
-                      fetch_partitions=4, adaptive_yield_weight=2.0, **kw)
+                      fetch_partitions=4, **kw)
     eng.run(max_rounds=40)
     rows = (eng.t_fetched.read(spark)
             .orderBy("round", "fetch_seq").collect())

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 
 from goskyr_spark.kernels.cuckoo import SALT, BloomFilter, CuckooFilter, _mix
-from goskyr_spark.kernels.robots import parse_robots
+from goskyr_spark.kernels.robots import parse_robots, robots_url
 
 
 def test_bloom_no_false_negatives_and_low_fp():
@@ -182,6 +182,74 @@ def test_robots_empty_and_garbage():
     assert parse_robots(b"\x00garbage no colons", "*").allowed("/") is True
     r = parse_robots("User-agent: *\nDisallow:\n", "*")
     assert r.allowed("/anything") is True  # empty Disallow = allow all
+
+
+def test_robots_url():
+    # the port is part of the request target, unlike the host key
+    assert robots_url("http://a.test:8080/x/y") == \
+        "http://a.test:8080/robots.txt"
+    # no scheme: https
+    assert robots_url("//a.test/p") == "https://a.test/robots.txt"
+    # query and fragment are the page's, not robots.txt's
+    assert robots_url("https://a.test/list?page=2#top") == \
+        "https://a.test/robots.txt"
+
+
+def _write_slab_rows(path, sids, round_no, seed):
+    """One slab file holding a fresh row per slab id, as a round writes
+    it; returns {sid: (bloom, cuckoo) bytes} of its rows."""
+    import pyarrow.parquet as pq
+
+    from goskyr_spark.spark.crawl import _slab_build
+
+    rng = np.random.default_rng(seed)
+    groups = {s: rng.integers(-2**63, 2**63 - 1, 20) for s in sids}
+    t = _slab_build(groups, {}, {s: 64 for s in sids}, round_no)
+    pq.write_table(t, path)
+    return {r["slab_id"]: (r["bloom"], r["cuckoo"]) for r in t.to_pylist()}
+
+
+def test_slab_blobs_reads_each_file_once(tmp_path, monkeypatch):
+    """_slab_blobs returns each requested slab's latest-round row, one
+    pruned read per file; ids without a row are absent and a file no
+    manifest lists (its round rolled back) is never read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from goskyr_spark.spark import crawl
+
+    a, b, gone = (str(tmp_path / n) for n in ("a.parquet", "b.parquet",
+                                              "rolled_back.parquet"))
+    r0 = _write_slab_rows(a, [0, 1, 2], 0, seed=1)
+    # b holds two generations of slab 0 (as after a compaction that kept
+    # both) and round 1 of slab 1
+    older = _write_slab_rows(str(tmp_path / "old.parquet"), [0], 0, seed=2)
+    r1 = _write_slab_rows(str(tmp_path / "new.parquet"), [0, 1], 1, seed=3)
+    pq.write_table(pa.concat_tables([
+        pq.read_table(str(tmp_path / "old.parquet")),
+        pq.read_table(str(tmp_path / "new.parquet"))]), b)
+    _write_slab_rows(gone, [0, 1, 2], 2, seed=4)
+    latest = {0: (b, 1, 20, 64), 1: (b, 1, 20, 64), 2: (a, 0, 20, 64)}
+    assert older[0] != r1[0]
+
+    reads = []
+    real = pq.read_table
+
+    def counted(path, *args, **kw):
+        reads.append(path)
+        return real(path, *args, **kw)
+
+    monkeypatch.setattr(crawl.pq, "read_table", counted)
+    got = crawl._slab_blobs(latest, [0, 1, 2, 5])
+    assert got == {0: r1[0], 1: r1[1], 2: r0[2]}
+    assert sorted(reads) == sorted([a, b])
+    reads.clear()
+    assert crawl._slab_blobs(latest, [2]) == {2: r0[2]}
+    assert reads == [a]
+    reads.clear()
+    assert crawl._slab_blobs(latest, [5, 7]) == {}
+    assert crawl._slab_blobs({}, [0]) == {}
+    assert reads == []
 
 
 def test_snapshot_store(tmp_path):

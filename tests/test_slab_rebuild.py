@@ -2,12 +2,13 @@
 doubling rebuild path must trigger and the seen set must stay exact
 (no false negatives ever → no URL refetched or re-enqueued)."""
 
+import os
 from datetime import datetime, timezone
 
 import pytest
 
 from goskyr_spark.kernels.cuckoo import CuckooFilter
-from goskyr_spark.spark.crawl import CrawlEngine, _read_slab_blobs
+from goskyr_spark.spark.crawl import CrawlEngine, _slab_blobs
 from goskyr_spark.synth import SynthSpec, event_scraper, host_name, synth_pages_df
 
 NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
@@ -15,8 +16,8 @@ NOW = datetime(2026, 3, 1, tzinfo=timezone.utc)
 
 def _blobs(eng):
     """{sid: (bloom, cuckoo) bytes} of each slab's latest row."""
-    return {sid: _read_slab_blobs(at[0], sid, at[1])
-            for sid, at in eng._slab_latest().items()}
+    latest = eng._slab_latest()
+    return _slab_blobs(latest, latest)
 
 
 @pytest.fixture(scope="session")
@@ -232,3 +233,87 @@ def test_auto_compaction_mid_run_equivalent(spark, tmp_path):
                        fetch_partitions=4, compact_every=2)
     assert _latest_slabs(_state(ref, spark)) == \
         _latest_slabs(_state(auto, spark))
+
+
+def _count_slab_reads(monkeypatch, eng):
+    """Record (consumer, path) of every parquet read of a slab file made
+    while the driver's new-url commit ("probe") or its slab update
+    ("slabs", nested in it) runs; returns the list."""
+    from goskyr_spark.spark import crawl
+
+    reads, consumer = [], []
+    real = crawl.pq.read_table
+
+    def counted(path, *args, **kw):
+        if consumer and str(path).startswith(eng.t_slabs.dir):
+            reads.append((consumer[-1], str(path)))
+        return real(path, *args, **kw)
+
+    def tagged(name, method):
+        def run(self, *args, **kw):
+            consumer.append(name)
+            try:
+                return method(self, *args, **kw)
+            finally:
+                consumer.pop()
+        return run
+
+    monkeypatch.setattr(crawl.pq, "read_table", counted)
+    monkeypatch.setattr(CrawlEngine, "_commit_new_urls_driver",
+                        tagged("probe", CrawlEngine._commit_new_urls_driver))
+    monkeypatch.setattr(CrawlEngine, "_update_slabs",
+                        tagged("slabs", CrawlEngine._update_slabs))
+    return reads
+
+
+@pytest.mark.parametrize("plan", ["driver"], indirect=True)
+def test_driver_round_reads_each_slab_file_once(spark, tmp_path, plan,
+                                                monkeypatch):
+    """A driver round's seen probe and slab update each read a slab file
+    at most once, however many of its slabs they need (a read per slab
+    id made 8 of one file per round at n_slabs=8)."""
+    from collections import Counter
+
+    spec = SynthSpec(n_hosts=4, pages_per_host=3, items_per_page=4,
+                     hot_hosts=1, hot_factor=2)
+    pages = synth_pages_df(spark, spec, include_fixtures=False).cache()
+    seeds = [f"https://{host_name(h)}/list/1" for h in range(spec.n_hosts)]
+    eng = CrawlEngine(spark, str(tmp_path / "wd"), pages, event_scraper,
+                      seeds, now=NOW, fetch_partitions=4)
+    reads = _count_slab_reads(monkeypatch, eng)
+    eng.recover()
+    eng.bootstrap()
+    per_round = []
+    for r in range(4):
+        reads.clear()
+        eng.run_round(r)
+        per_round.append(Counter(reads))
+    # every round probed and inserted into slabs written before
+    assert all({k[0] for k in c} == {"probe", "slabs"} for c in per_round)
+    assert max(n for c in per_round for n in c.values()) == 1
+
+
+def test_rolled_back_slab_files_never_read(spark, tmp_path, monkeypatch):
+    """After a rollback the latest rows come from the manifest's files
+    only: a slab file of a rolled-back round is never read."""
+    from goskyr_spark.spark import crawl
+
+    eng = _run_engine(spark, tmp_path, "rb", n_slabs=2, slab_capacity=16,
+                      fetch_partitions=4)
+    files = eng.t_slabs.manifest()["files"]
+    eng._rollback_table(eng.t_slabs, 1)
+    kept = eng.t_slabs.manifest()["files"]
+    gone = {os.path.join(eng.t_slabs.dir, f) for f in set(files) - set(kept)}
+    assert gone
+    reads = []
+    real = crawl.pq.read_table
+
+    def counted(path, *args, **kw):
+        reads.append(str(path))
+        return real(path, *args, **kw)
+
+    monkeypatch.setattr(crawl.pq, "read_table", counted)
+    latest = eng._slab_latest()
+    blobs = _slab_blobs(latest, [0, 1])
+    assert reads and not gone & set(reads)
+    assert set(blobs) == {0, 1} and all(at[1] <= 1 for at in latest.values())
